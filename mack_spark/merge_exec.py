@@ -18,15 +18,23 @@ Execution shape mirrors Delta's real MERGE two-phase plan:
 * **phase 1 — ambiguity probe**: one inner join projected down to
   ``__tid`` + the condition's columns (Catalyst column-prunes the scan
   to just the join keys), grouped to detect a target row matched by
-  multiple source rows. This is the cheap, key-only pass.
+  multiple source rows. Callers that can prove the merge unambiguous
+  skip it (``assume_unambiguous=True``):
+  :meth:`~mack_spark.sources.delta_log.DeltaProtocolTable.merge` does
+  so when the source rows it already collected are unique on the
+  columns of the condition's top-level equalities
+  (:func:`equi_source_columns`, :func:`rows_unique`). The probe still
+  runs when the condition has no such equality, when a compared
+  column is not atomic or its type differs from the target column's,
+  when a float key holds NaN, and when the source outgrows the
+  collect cap.
 * **phase 2 — single rewrite join**: ONE ``full_outer`` join with
   presence markers on both sides; every output branch (updated /
   kept-matched / delete-dropped / unmatched-target / inserted) is a
   CASE over that one join, and the target-schema casts are folded into
-  the same single projection. The touched data moves through exactly
-  one join, where the previous interpreter executed the target×source
-  join four times (inner + probe + two anti joins) and stacked
-  O(2·width) ``withColumn`` cast projections on top.
+  the same single projection. The projection is SQL text applied by
+  one ``selectExpr`` (:class:`_ClauseSql`): one parse on the JVM
+  instead of a py4j round trip per ``Column`` call.
 
 Two consumers: tests/test_backend_seam.py verifies that interpreting
 ``scd2_keyed_merge`` equals ``scd2_post_state`` on arbitrary inputs,
@@ -35,12 +43,144 @@ executes descriptors through it as phase 2 of a real, file-pruned
 Delta-protocol MERGE commit.
 """
 
+from typing import Dict, List, Optional
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DateType,
+    MapType,
+    NumericType,
+    StringType,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 # marker columns; stripped from the output projection
 _TID = "__mack_merge_tid"
 _SRC = "__mack_merge_src"
+
+
+def quote_ident(name: str) -> str:
+    """One identifier part, backtick-quoted."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _str(s: str) -> str:
+    """A SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_type(dt) -> str:
+    """SQL text of a Spark type for ``CAST(... AS <type>)``: nested
+    field names are quoted, so ``struct<`a b`:int>`` parses."""
+    if isinstance(dt, StructType):
+        fields = ",".join(
+            f"{quote_ident(f.name)}:{_sql_type(f.dataType)}"
+            for f in dt.fields
+        )
+        return f"struct<{fields}>"
+    if isinstance(dt, ArrayType):
+        return f"array<{_sql_type(dt.elementType)}>"
+    if isinstance(dt, MapType):
+        return f"map<{_sql_type(dt.keyType)},{_sql_type(dt.valueType)}>"
+    return dt.simpleString()
+
+
+def _applies(present: bool, cond: Optional[str]) -> str:
+    """Whether a clause applies to a row: absent → false, no condition
+    → true, else its condition with NULL read as false."""
+    if not present:
+        return "false"
+    if cond is None:
+        return "true"
+    return f"coalesce(({cond}), false)"
+
+
+class _ClauseSql:
+    """SQL text of a KeyedMerge's branch predicates and per-column
+    branch values over the full-outer join of the target (alias
+    ``target_alias``, marker ``_TID``) and the source (alias
+    ``source_alias``, marker ``_SRC``). Every predicate is two-valued:
+    the presence tests and the clause conditions never yield NULL.
+
+    ``update``/``delete``: matched rows taking the update clause, and
+    those taking the delete clause. ``kept``: matched rows neither
+    clause applies to. ``nms_update``/``nms_delete``/``nms_kept``: the
+    same for target rows no source row matched
+    (whenNotMatchedBySource). ``insert``: source rows matching no
+    target row that the insert clause takes."""
+
+    def __init__(self, km):
+        self.km = km
+        self.src_cols = set(km.source.columns)
+        t, s = km.target_alias, km.source_alias
+        self.tp = tp = f"{t}.{quote_ident(_TID)} IS NOT NULL"
+        sp = f"{s}.{quote_ident(_SRC)} IS NOT NULL"
+        md = km.matched_delete
+        upd = _applies(km.matched_update is not None,
+                       km.matched_update_condition)
+        dele = _applies(md is not None, None if md is True else md)
+        nms_d = getattr(km, "not_matched_by_source_delete", None)
+        nupd = _applies(
+            getattr(km, "not_matched_by_source_update", None) is not None,
+            getattr(km, "not_matched_by_source_update_condition", None),
+        )
+        ndel = _applies(nms_d is not None, None if nms_d is True else nms_d)
+        self.update = f"{tp} AND {sp} AND {upd}"
+        self.delete = f"{tp} AND {sp} AND NOT {upd} AND {dele}"
+        self.kept = f"{tp} AND {sp} AND NOT {upd} AND NOT {dele}"
+        self.nms_update = f"{tp} AND NOT {sp} AND {nupd}"
+        self.nms_delete = f"{tp} AND NOT {sp} AND NOT {nupd} AND {ndel}"
+        self.nms_kept = f"{tp} AND NOT {sp} AND NOT {nupd} AND NOT {ndel}"
+        ins_cond = getattr(km, "not_matched_condition", None) or None
+        self.insert = (
+            "false" if km.not_matched_insert is None
+            else f"NOT {tp} AND {sp} AND {_applies(True, ins_cond)}"
+        )
+
+    def pre(self, c: str) -> str:
+        return f"{self.km.target_alias}.{quote_ident(c)}"
+
+    def _src_or(self, c: str, other: str) -> str:
+        if c in self.src_cols:
+            return f"{self.km.source_alias}.{quote_ident(c)}"
+        return other
+
+    def post(self, c: str) -> str:
+        # UPDATE SET * (whenMatchedUpdateAll): same-named source column
+        # when the source carries one, else the target value
+        upd = self.km.matched_update
+        if upd == "*":
+            return self._src_or(c, self.pre(c))
+        if c in (upd or {}):
+            return f"({upd[c]})"
+        return self.pre(c)
+
+    def nms_post(self, c: str) -> str:
+        upd = getattr(self.km, "not_matched_by_source_update", None) or {}
+        return f"({upd[c]})" if c in upd else self.pre(c)
+
+    def ins(self, c: str) -> str:
+        # INSERT *: by-name; target columns the source lacks are NULL
+        # (delta's insert-all rule — e.g. after evolution the source
+        # may not carry every target column). Explicit-values INSERT:
+        # unspecified columns are NULL.
+        ins = self.km.not_matched_insert
+        if ins == "*":
+            return self._src_or(c, "NULL")
+        return f"({ins[c]})" if c in ins else "NULL"
+
+
+def _join(base: DataFrame, km) -> DataFrame:
+    tb = base.withColumn(_TID, F.monotonically_increasing_id())
+    src = km.source.withColumn(_SRC, F.lit(True))
+    return tb.alias(km.target_alias).join(
+        src.alias(km.source_alias), F.expr(km.condition), "full_outer"
+    )
 
 
 def interpret_keyed_merge(
@@ -48,21 +188,19 @@ def interpret_keyed_merge(
 ) -> DataFrame:
     """``assume_unambiguous=True`` skips the phase-1 probe; callers pass
     it when they have already PROVEN no target row can match two source
-    rows (e.g. :meth:`DeltaProtocolTable.merge` observes all-unique
-    source keys under a condition that implies key equality)."""
+    rows (e.g. :meth:`DeltaProtocolTable.merge` observes source rows
+    unique on the condition's equality columns)."""
     t, s = km.target_alias, km.source_alias
-    out_cols = base.columns
-    tb = base.withColumn(_TID, F.monotonically_increasing_id()).alias(t)
-    src = km.source.withColumn(_SRC, F.lit(True)).alias(s)
-    on = F.expr(km.condition)
 
     # phase 1: ambiguity probe. groupBy(__tid).count() only references
     # the join condition's columns, so Catalyst prunes both scans to the
     # key columns — this is the "touched-key detect" pass, not a second
     # read of the data columns.
     if not assume_unambiguous:
+        tb = base.withColumn(_TID, F.monotonically_increasing_id())
         dup = (
-            tb.join(src, on, "inner")
+            tb.alias(t)
+            .join(km.source.alias(s), F.expr(km.condition), "inner")
             .groupBy(_TID)
             .count()
             .filter(F.col("count") > 1)
@@ -75,109 +213,29 @@ def interpret_keyed_merge(
                 " source rows"
             )
 
-    # phase 2: one full-outer rewrite join
-    joined = tb.join(src, on, "full_outer")
-    t_present = F.col(f"{t}.`{_TID}`").isNotNull()
-    s_present = F.col(f"{s}.`{_SRC}`").isNotNull()
-
-    if km.matched_update is None:
-        upd_applies = F.lit(False)
-    elif km.matched_update_condition is None:
-        upd_applies = F.lit(True)
-    else:
-        upd_applies = F.coalesce(
-            F.expr(km.matched_update_condition), F.lit(False)
-        )
-    if km.matched_delete is None:
-        del_applies = F.lit(False)
-    elif km.matched_delete is True:
-        del_applies = F.lit(True)
-    else:
-        del_applies = F.coalesce(F.expr(km.matched_delete), F.lit(False))
-
-    is_update = t_present & s_present & upd_applies
-    kept_matched = t_present & s_present & ~upd_applies & ~del_applies
-    target_only = t_present & ~s_present
-
-    # whenNotMatchedBySource clauses (delta-spark 2.3+): target rows no
-    # source row matched take the first applicable of update → delete;
-    # rows matching neither clause are kept verbatim
-    nms_update = getattr(km, "not_matched_by_source_update", None)
-    nms_update_cond = getattr(
-        km, "not_matched_by_source_update_condition", None
-    )
-    nms_delete = getattr(km, "not_matched_by_source_delete", None)
-    if nms_update is None:
-        nms_upd_applies = F.lit(False)
-    elif nms_update_cond is None:
-        nms_upd_applies = F.lit(True)
-    else:
-        nms_upd_applies = F.coalesce(F.expr(nms_update_cond), F.lit(False))
-    if nms_delete is None:
-        nms_del_applies = F.lit(False)
-    elif nms_delete is True:
-        nms_del_applies = F.lit(True)
-    else:
-        nms_del_applies = F.coalesce(F.expr(nms_delete), F.lit(False))
-    nms_is_update = target_only & nms_upd_applies
-    nms_kept = target_only & ~nms_upd_applies & ~nms_del_applies
-
-    if km.not_matched_insert is None:
-        insert_ok = F.lit(False)
-    else:
-        insert_ok = ~t_present & s_present
-        cond = getattr(km, "not_matched_condition", None)
-        if cond:
-            insert_ok = insert_ok & F.coalesce(F.expr(cond), F.lit(False))
-
-    src_cols = set(km.source.columns)
-
-    def _insert_expr(c):
-        if km.not_matched_insert == "*":
-            # INSERT *: by-name; target columns the source lacks are
-            # NULL (delta's insert-all rule — e.g. after evolution the
-            # source may not carry every target column)
-            return F.col(f"{s}.`{c}`") if c in src_cols else F.lit(None)
-        if c in km.not_matched_insert:
-            return F.expr(km.not_matched_insert[c])
-        # Delta's explicit-values INSERT: unspecified columns are NULL
-        return F.lit(None)
-
-    def _upd_expr(c):
-        # UPDATE SET * (whenMatchedUpdateAll): same-named source column
-        # when the source carries one, else the target value
-        if km.matched_update == "*":
-            return (
-                F.col(f"{s}.`{c}`") if c in src_cols
-                else F.col(f"{t}.`{c}`")
-            )
-        if c in (km.matched_update or {}):
-            return F.expr(km.matched_update[c])
-        return F.col(f"{t}.`{c}`")
-
-    # single projection: per-row CASE picks the branch value, cast to
-    # the target schema like Delta's write path does (matched clause
-    # expressions, e.g. "false" or "staged.`eff`", parse untyped)
-    fields = {f.name: f for f in base.schema.fields}
-    cols = []
-    for c in out_cols:
-        upd_expr = _upd_expr(c)
-        nms_upd_expr = (
-            F.expr(nms_update[c])
-            if c in (nms_update or {})
-            else F.col(f"{t}.`{c}`")
-        )
+    # phase 2: one full-outer rewrite join. Single projection: per-row
+    # CASE picks the branch value, cast to the target schema like
+    # Delta's write path does (matched clause expressions, e.g. "false"
+    # or "staged.`eff`", parse untyped)
+    cs = _ClauseSql(km)
+    exprs = []
+    for f in base.schema.fields:
+        c = f.name
         val = (
-            F.when(is_update, upd_expr)
-            .when(nms_is_update, nms_upd_expr)
-            .when(t_present, F.col(f"{t}.`{c}`"))
+            f"CASE WHEN {cs.update} THEN {cs.post(c)}"
+            f" WHEN {cs.nms_update} THEN {cs.nms_post(c)}"
+            f" WHEN {cs.tp} THEN {cs.pre(c)}"
         )
         if km.not_matched_insert is not None:
-            val = val.otherwise(_insert_expr(c))
-        cols.append(val.cast(fields[c].dataType).alias(c))
-
-    keep = is_update | kept_matched | nms_is_update | nms_kept | insert_ok
-    return joined.where(keep).select(*cols)
+            val += f" ELSE {cs.ins(c)}"
+        exprs.append(
+            f"CAST({val} END AS {_sql_type(f.dataType)}) AS {quote_ident(c)}"
+        )
+    keep = " OR ".join(
+        f"({p})" for p in
+        (cs.update, cs.kept, cs.nms_update, cs.nms_kept, cs.insert)
+    )
+    return _join(base, km).where(keep).selectExpr(*exprs)
 
 
 def merge_changes(base: DataFrame, km, change_type_col: str = "_change_type") -> DataFrame:
@@ -193,122 +251,121 @@ def merge_changes(base: DataFrame, km, change_type_col: str = "_change_type") ->
     writing both the merged table AND the change feed should persist
     ``base`` (and the source) so the two joins share their inputs.
     """
-    t, s = km.target_alias, km.source_alias
-    out_cols = base.columns
-    tb = base.withColumn(_TID, F.monotonically_increasing_id()).alias(t)
-    src = km.source.withColumn(_SRC, F.lit(True)).alias(s)
-    joined = tb.join(src, F.expr(km.condition), "full_outer")
-    t_present = F.col(f"{t}.`{_TID}`").isNotNull()
-    s_present = F.col(f"{s}.`{_SRC}`").isNotNull()
+    cs = _ClauseSql(km)
+    fields = base.schema.fields
 
-    if km.matched_update is None:
-        upd_applies = F.lit(False)
-    elif km.matched_update_condition is None:
-        upd_applies = F.lit(True)
-    else:
-        upd_applies = F.coalesce(
-            F.expr(km.matched_update_condition), F.lit(False)
+    def entry(kind: str, value_for) -> str:
+        vals = ", ".join(
+            f"{_str(f.name)}, CAST({value_for(f.name)}"
+            f" AS {_sql_type(f.dataType)})"
+            for f in fields
         )
-    if km.matched_delete is None:
-        del_applies = F.lit(False)
-    elif km.matched_delete is True:
-        del_applies = F.lit(True)
-    else:
-        del_applies = F.coalesce(F.expr(km.matched_delete), F.lit(False))
+        return f"named_struct({vals}, {_str(change_type_col)}, {_str(kind)})"
 
-    is_update = t_present & s_present & upd_applies
-    is_delete = t_present & s_present & ~upd_applies & del_applies
-    target_only = t_present & ~s_present
-    nms_update = getattr(km, "not_matched_by_source_update", None)
-    nms_update_cond = getattr(
-        km, "not_matched_by_source_update_condition", None
-    )
-    nms_delete = getattr(km, "not_matched_by_source_delete", None)
-    if nms_update is None:
-        nms_upd_applies = F.lit(False)
-    elif nms_update_cond is None:
-        nms_upd_applies = F.lit(True)
-    else:
-        nms_upd_applies = F.coalesce(F.expr(nms_update_cond), F.lit(False))
-    if nms_delete is None:
-        nms_del_applies = F.lit(False)
-    elif nms_delete is True:
-        nms_del_applies = F.lit(True)
-    else:
-        nms_del_applies = F.coalesce(F.expr(nms_delete), F.lit(False))
-    nms_is_update = target_only & nms_upd_applies
-    nms_is_delete = target_only & ~nms_upd_applies & nms_del_applies
-    if km.not_matched_insert is None:
-        insert_ok = F.lit(False)
-    else:
-        insert_ok = ~t_present & s_present
-        cond = getattr(km, "not_matched_condition", None)
-        if cond:
-            insert_ok = insert_ok & F.coalesce(F.expr(cond), F.lit(False))
-
-    fields = {f.name: f for f in base.schema.fields}
-
-    def _entry(kind: str, value_for):
-        vals = [
-            value_for(c).cast(fields[c].dataType).alias(c) for c in out_cols
-        ]
-        return F.struct(
-            F.lit(kind).alias(change_type_col), *vals
-        )
-
-    def _pre(c):
-        return F.col(f"{t}.`{c}`")
-
-    src_cols = set(km.source.columns)
-
-    def _post(c):
-        if km.matched_update == "*":
-            return (
-                F.col(f"{s}.`{c}`") if c in src_cols
-                else F.col(f"{t}.`{c}`")
-            )
-        if c in (km.matched_update or {}):
-            return F.expr(km.matched_update[c])
-        return F.col(f"{t}.`{c}`")
-
-    def _ins(c):
-        if km.not_matched_insert == "*":
-            return F.col(f"{s}.`{c}`") if c in src_cols else F.lit(None)
-        if c in km.not_matched_insert:
-            return F.expr(km.not_matched_insert[c])
-        return F.lit(None)
-
-    def _nms_post(c):
-        if c in (nms_update or {}):
-            return F.expr(nms_update[c])
-        return F.col(f"{t}.`{c}`")
-
-    # the otherwise branch must be an EMPTY array of the same struct
-    # type; a zero-length slice of a typed one-entry array names the
-    # type without spelling it out
-    empty = F.slice(F.array(_entry("insert", _pre)), 1, 0)
+    # the ELSE branch must be an EMPTY array of the same struct type; a
+    # zero-length slice of a typed one-entry array names the type
+    # without spelling it out
+    empty = f"slice(array({entry('insert', cs.pre)}), 1, 0)"
     # build the insert entry only when an insert clause exists — a
     # merge without one (update/delete-only, nms-only) must not
     # dereference the absent clause while constructing a branch that
     # can never fire
-    ins_branch = (
-        F.array(_entry("insert", _ins))
+    ins = (
+        f"array({entry('insert', cs.ins)})"
         if km.not_matched_insert is not None
         else empty
     )
     changes = (
-        F.when(is_update, F.array(_entry("update_preimage", _pre),
-                                  _entry("update_postimage", _post)))
-        .when(is_delete, F.array(_entry("delete", _pre)))
-        .when(nms_is_update,
-              F.array(_entry("update_preimage", _pre),
-                      _entry("update_postimage", _nms_post)))
-        .when(nms_is_delete, F.array(_entry("delete", _pre)))
-        .when(insert_ok, ins_branch)
-        .otherwise(empty)
+        f"CASE WHEN {cs.update} THEN array("
+        f"{entry('update_preimage', cs.pre)},"
+        f" {entry('update_postimage', cs.post)})"
+        f" WHEN {cs.delete} THEN array({entry('delete', cs.pre)})"
+        f" WHEN {cs.nms_update} THEN array("
+        f"{entry('update_preimage', cs.pre)},"
+        f" {entry('update_postimage', cs.nms_post)})"
+        f" WHEN {cs.nms_delete} THEN array({entry('delete', cs.pre)})"
+        f" WHEN {cs.insert} THEN {ins}"
+        f" ELSE {empty} END"
     )
-    ex = joined.select(F.explode(changes).alias("__c"))
-    return ex.select(
-        *[F.col(f"__c.`{c}`").alias(c) for c in out_cols],
-        F.col(f"__c.`{change_type_col}`").alias(change_type_col),
+    return _join(base, km).selectExpr(f"explode({changes}) AS __c").select(
+        "__c.*"
     )
+
+
+# Source column types whose collected Python values are equal exactly
+# when Spark's ``=`` says so (NaN aside, which rows_unique checks per
+# value). Collated strings, binary, intervals and nested types are out.
+def _proof_type(dt) -> bool:
+    if isinstance(dt, StringType):
+        return dt.collation == "UTF8_BINARY"
+    return isinstance(
+        dt, (NumericType, BooleanType, DateType, TimestampType,
+             TimestampNTZType)
+    )
+
+
+def _attr(e) -> Optional[tuple]:
+    """Name parts of a parsed ``UnresolvedAttribute``, else None."""
+    if e.nodeName() != "UnresolvedAttribute":
+        return None
+    parts = e.nameParts()
+    return tuple(parts.apply(i) for i in range(parts.length()))
+
+
+def equi_source_columns(
+    km, target_schema: StructType
+) -> Optional[Dict[str, bool]]:
+    """Source columns of ``km.condition``'s top-level conjuncts of the
+    form ``t.x = s.y`` or ``t.x <=> s.y`` (either side first), mapped
+    to whether some ``=`` conjunct uses them (a NULL there matches
+    nothing). Source rows unique on these columns cannot match one
+    target row twice.
+
+    None — the ambiguity probe must run — when there is no such
+    conjunct, or when a compared column is missing, is not of a type
+    :func:`_proof_type` accepts, or differs in type from the target
+    column it is compared with (an implicit cast can make distinct
+    source values equal)."""
+    t, s = km.target_alias, km.source_alias
+    parser = km.source.sparkSession._jsparkSession.sessionState().sqlParser()
+    stack = [parser.parseExpression(km.condition)]
+    src_types = {f.name: f.dataType for f in km.source.schema.fields}
+    tgt_types = {f.name: f.dataType for f in target_schema.fields}
+    cols: Dict[str, bool] = {}
+    while stack:
+        e = stack.pop()
+        kind = e.nodeName()
+        if kind == "And":
+            stack += [e.left(), e.right()]
+            continue
+        if kind not in ("EqualTo", "EqualNullSafe"):
+            continue
+        sides = {}
+        for a in (_attr(e.left()), _attr(e.right())):
+            if a is not None and len(a) == 2:
+                sides[a[0]] = a[1]
+        if t == s or set(sides) != {t, s}:
+            continue
+        sdt, tdt = src_types.get(sides[s]), tgt_types.get(sides[t])
+        if sdt is None or not _proof_type(sdt) or sdt != tdt:
+            return None
+        cols[sides[s]] = cols.get(sides[s], False) or kind == "EqualTo"
+    return cols or None
+
+
+def rows_unique(rows: List[tuple], rejects_null: List[bool]) -> bool:
+    """Whether ``rows`` (tuples of the :func:`equi_source_columns`
+    values, in the order of ``rejects_null``) are pairwise distinct.
+    Tuples with a NULL in a column some ``=`` compares match no target
+    row and are skipped. A NaN makes the answer False: Spark's ``=``
+    holds for NaN = NaN, Python's does not."""
+    seen = set()
+    for tup in rows:
+        if any(v is None and rej for v, rej in zip(tup, rejects_null)):
+            continue
+        if any(isinstance(v, float) and v != v for v in tup):
+            return False
+        if tup in seen:
+            return False
+        seen.add(tup)
+    return True

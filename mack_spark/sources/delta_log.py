@@ -316,6 +316,7 @@ def _collect_file_stats(abs_path: str, stat_cols: List[str]) -> str:
     columns. Columns whose physical stats are absent or non-JSON-able
     are simply omitted (allowed by the spec; skipping falls back to
     'cannot prune')."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(abs_path).metadata
@@ -335,9 +336,16 @@ def _collect_file_stats(abs_path: str, stat_cols: List[str]) -> str:
             if cs is None or not cs.has_min_max:
                 have = False
                 break
+            try:
+                cmin, cmax = cs.min, cs.max
+            except pa.ArrowNotImplementedError:
+                # pyarrow cannot decode some physical/logical pairs
+                # (e.g. a decimal(10,2) Spark stores as INT64)
+                have = False
+                break
             nn += cs.null_count if cs.null_count is not None else 0
-            lo = cs.min if lo is None or cs.min < lo else lo
-            hi = cs.max if hi is None or cs.max > hi else hi
+            lo = cmin if lo is None or cmin < lo else lo
+            hi = cmax if hi is None or cmax > hi else hi
         if not have:
             continue
         jlo, jhi = _json_stat_value(lo), _json_stat_value(hi)
@@ -3359,11 +3367,13 @@ class DeltaProtocolTable:
         per-write plan probe — sum the sizes, and price ``extra_rows``
         incoming source rows at the touched set's observed bytes/row.
         ``include_base=False`` prices only the extra rows (add-only
-        commits: insert-only merges). Returns None (caller falls back
-        to the plan probe) when any size is missing or the row width
-        cannot be derived."""
+        commits: insert-only merges). The bytes/row comes only from
+        files whose stats record ``numRecords``. Returns None (caller
+        falls back to the plan probe) when any size is missing or the
+        row width cannot be derived."""
         total = 0
         rows = 0
+        row_bytes = 0  # bytes of the files counted in ``rows``
         for p in paths:
             a = snap.files.get(p) or {}
             s = a.get("size")
@@ -3375,11 +3385,12 @@ class DeltaProtocolTable:
                 nr = st.get("numRecords")
                 if nr:
                     rows += int(nr)
+                    row_bytes += int(s)
         est = total if include_base else 0
         if extra_rows:
-            if not rows or not total:
+            if not rows or not row_bytes:
                 return None
-            est += int(extra_rows * (total / rows))
+            est += int(extra_rows * (row_bytes / rows))
         return est or None
 
     def _write_data_files(
@@ -5916,12 +5927,23 @@ class DeltaProtocolTable:
         Column-mapped tables evolve too — new fields get fresh mapping
         ids and ``col-<uuid>`` physical names.
 
+        A target row matched by two source rows raises ``ValueError``
+        before anything commits. The check is a probe join (phase 1
+        of :func:`~mack_spark.merge_exec.interpret_keyed_merge`),
+        skipped when the source rows collected for pruning are unique
+        on the columns of the condition's top-level ``t.x = s.y`` /
+        ``t.x <=> s.y`` conjuncts. The probe still runs when the
+        condition has no such conjunct (e.g. a top-level ``OR``), when
+        a compared column is nested, non-atomic or typed differently
+        from its target column, when a float column holds NaN, and
+        when the source has more than ``MERGE_KEY_CAP`` rows.
+
         Returns ``{touched_files, total_files, version}`` so callers
-        can observe the pruning.
+        can observe the pruning. The commit's ``operationMetrics``
+        carry ``numSourceRows`` whenever the source key set was
+        collected exactly.
         """
         import dataclasses
-
-        from mack_spark.merge_exec import interpret_keyed_merge
 
         if not km.target_key_col or not km.source_key_col:
             raise ValueError(
@@ -6058,7 +6080,12 @@ class DeltaProtocolTable:
         extra_config: Optional[Dict[str, str]] = None,
         evolve_meta: Optional[dict] = None,
     ) -> dict:
-        from mack_spark.merge_exec import interpret_keyed_merge
+        from mack_spark.merge_exec import (
+            equi_source_columns,
+            interpret_keyed_merge,
+            quote_ident,
+            rows_unique,
+        )
 
         def _config_actions() -> List[dict]:
             # extra_config (and schema evolution's metaData) ride the
@@ -6069,43 +6096,73 @@ class DeltaProtocolTable:
             config = dict(snap.metadata.get("configuration") or {})
             config.update(extra_config)
             return [{"metaData": dict(snap.metadata, configuration=config)}]
-        # ONE job collects the exact source key set AND per-key
-        # multiplicities (bounded collect: merge batches are small
-        # relative to the table by contract; past the cap the skip
-        # degrades to the min/max envelope, never to wrong rows).
-        # Multiplicity matters because the contract says ``condition``
-        # implies key equality: two source rows can only match the same
-        # target row if they share a key, so all-unique source keys
-        # prove the merge unambiguous and the interpreter's ambiguity
-        # probe join is skipped outright.
+        insert_only = (
+            km.matched_update is None
+            and km.matched_delete is None
+            and km.not_matched_insert is not None
+            and km.not_matched_by_source_update is None
+            and km.not_matched_by_source_delete is None
+        )
+        # ONE bounded collect of the source's key and equality columns
+        # (merge batches are small relative to the table by contract)
+        # settles the exact key set for pruning, the source row count,
+        # and whether the merge is unambiguous: source rows unique on
+        # the condition's top-level equality columns cannot match one
+        # target row twice, so the interpreter's ambiguity probe join
+        # is skipped. Past the cap, one grouped collect keeps the key
+        # set exact while the distinct keys fit, and past that the skip
+        # degrades to the min/max envelope, never to wrong rows; the
+        # probe then always runs.
         key_cap = MERGE_KEY_CAP
-        key_dtype = km.source.schema[
-            km.source_key_col
-        ].dataType.simpleString()
-        grouped = km.source.groupBy(
-            F.col(km.source_key_col).alias("__k")
-        ).agg(F.count(F.lit(1)).alias("__n"))
-        if key_dtype == "timestamp":
-            # collect the INTERNAL UTC micros, not the datetime: Python
-            # collect() round-trips timestamps through the driver
-            # machine's time zone, which need not match the UTC
-            # instants in parquet footers — comparing those silently
-            # mis-prunes files and drops matched updates. Micros are
-            # tz-free; both sides become naive-UTC datetimes.
-            grouped = grouped.select(F.unix_micros("__k").alias("__k"), "__n")
-        key_rows = grouped.limit(key_cap + 1).collect()
-        exact = len(key_rows) <= key_cap
-        keys = [r[0] for r in key_rows if r[0] is not None]
-        null_count = sum(r[1] for r in key_rows if r[0] is None)
+        key = km.source_key_col
+        key_dtype = km.source.schema[key].dataType.simpleString()
+        # collect timestamp keys as their INTERNAL UTC micros, not the
+        # datetime: Python collect() round-trips timestamps through the
+        # driver machine's time zone, which need not match the UTC
+        # instants in parquet footers — comparing those silently
+        # mis-prunes files and drops matched updates. Micros are
+        # tz-free; both sides become naive-UTC datetimes.
+        key_sql = (
+            f"unix_micros({quote_ident(key)})" if key_dtype == "timestamp"
+            else quote_ident(key)
+        )
+        eq_cols = (
+            None if insert_only else equi_source_columns(km, snap.schema)
+        )
+        cols = [key] + [c for c in eq_cols or () if c != key]
+        rows = km.source.selectExpr(
+            key_sql, *[quote_ident(c) for c in cols[1:]]
+        ).limit(key_cap + 1).collect()
+        unambiguous = False
+        if len(rows) <= key_cap:
+            exact = True
+            n_source: Optional[int] = len(rows)
+            keys = [r[0] for r in rows if r[0] is not None]
+            null_count = sum(1 for r in rows if r[0] is None)
+            if eq_cols:
+                idx = [cols.index(c) for c in eq_cols]
+                unambiguous = rows_unique(
+                    [tuple(r[i] for i in idx) for r in rows],
+                    list(eq_cols.values()),
+                )
+        else:
+            key_rows = (
+                km.source.groupBy(F.expr(key_sql).alias("__k"))
+                .agg(F.count(F.lit(1)).alias("__n"))
+                .limit(key_cap + 1)
+                .collect()
+            )
+            exact = len(key_rows) <= key_cap
+            n_source = sum(r[1] for r in key_rows) if exact else None
+            keys = [r[0] for r in key_rows if r[0] is not None]
+            null_count = sum(r[1] for r in key_rows if r[0] is None)
         if not exact:
             # the LIMIT-truncated sample's min/max is NOT the true key
             # envelope — pruning against it would silently drop matched
             # rows in files outside the sample's range. One aggregate
             # over ALL source keys gives the exact envelope (and the
             # true NULL presence, which the sample may also miss).
-            kc = F.col(km.source_key_col)
-            if key_dtype == "timestamp":
-                kc = F.unix_micros(kc)
+            kc = F.expr(key_sql)
             row = km.source.agg(
                 F.min(kc).alias("lo"),
                 F.max(kc).alias("hi"),
@@ -6113,25 +6170,22 @@ class DeltaProtocolTable:
             ).collect()[0]
             null_count = int(row["nnull"] or 0)
             keys = [v for v in (row["lo"], row["hi"]) if v is not None]
-        max_mult = max((r[1] for r in key_rows), default=0)
-        if not km.null_safe:
-            # NULL source keys never match under ``=``; they cannot
-            # create ambiguity
-            max_mult = max(
-                (r[1] for r in key_rows if r[0] is not None), default=0
-            )
-        unambiguous = exact and max_mult <= 1
         if key_dtype == "timestamp":
             epoch = datetime.datetime(1970, 1, 1)
             keys = [epoch + datetime.timedelta(microseconds=k) for k in keys]
         keys.sort()
+        keys = [k for i, k in enumerate(keys) if not i or k != keys[i - 1]]
+        # Delta's MERGE metric; known whenever the key set is exact
+        source_metrics = (
+            {} if n_source is None else {"numSourceRows": n_source}
+        )
         import bisect
 
         nms_active = (
             km.not_matched_by_source_update is not None
             or km.not_matched_by_source_delete is not None
         )
-        if not key_rows and not nms_active:
+        if not rows and not nms_active:
             # empty source: no matches, no inserts — a true no-op, no
             # data commit (Delta's merge with an empty source changes
             # nothing; with a whenNotMatchedBySource clause an empty
@@ -6192,12 +6246,6 @@ class DeltaProtocolTable:
                 hit = True  # incomparable stats: don't prune
             if hit:
                 touched.append(p)
-        insert_only = (
-            km.matched_update is None
-            and km.matched_delete is None
-            and km.not_matched_insert is not None
-            and not nms_active
-        )
         gen_ids: List[str] = []
         full_ids: Dict[str, dict] = {}
         if insert_only:
@@ -6356,11 +6404,10 @@ class DeltaProtocolTable:
                     # the plan probe over the anti-join
                     size_hint=(
                         self._rewrite_size_hint(
-                            snap, touched,
-                            extra_rows=sum(r[1] for r in key_rows),
+                            snap, touched, extra_rows=n_source,
                             include_base=False,
                         )
-                        if exact else None
+                        if n_source is not None else None
                     ),
                 )
             finally:
@@ -6389,6 +6436,7 @@ class DeltaProtocolTable:
                         "operationMetrics": {
                             "numTargetFilesRemoved": 0,
                             "numTargetFilesAdded": len(adds),
+                            **source_metrics,
                         },
                     }}
                 ]
@@ -6450,11 +6498,8 @@ class DeltaProtocolTable:
         # wrong anyway. Falls back to the probe when the source key
         # collect was capped (source row count then unknown).
         merge_hint = (
-            self._rewrite_size_hint(
-                snap, touched,
-                extra_rows=sum(r[1] for r in key_rows),
-            )
-            if exact else None
+            self._rewrite_size_hint(snap, touched, extra_rows=n_source)
+            if n_source is not None else None
         )
         adds = self._write_data_files(
             merged, snap.partition_columns, snap=snap,
@@ -6514,6 +6559,7 @@ class DeltaProtocolTable:
                     "operationMetrics": {
                         "numTargetFilesRemoved": len(touched),
                         "numTargetFilesAdded": len(adds),
+                        **source_metrics,
                     },
                 }}
             ]

@@ -193,6 +193,54 @@ class TestMergeKeyCapOverflow:
         for k in keys:
             assert out[k] == f"NEW{k}", f"update for key {k} was dropped"
 
+    def test_rows_over_cap_keys_within_stay_exact(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """More source ROWS than the cap but fewer distinct KEYS: the
+        grouped fallback collect still yields the exact key set, so
+        pruning touches only the file holding the keys, as it does
+        under the default cap."""
+        from mack_spark.tables import KeyedMerge
+
+        base = (
+            spark.range(100)
+            .select(
+                (F.col("id") / 4).cast("int").alias("pkey"),
+                (F.col("id") % 4).cast("int").alias("b"),
+                F.lit("old").alias("attr"),
+            )
+            .repartitionByRange(4, "pkey")
+            .sortWithinPartitions("pkey")
+        )
+        t = DeltaProtocolTable.create(spark, str(tmp_path / "rc"), base)
+        assert len(t.snapshot().files) == 4
+        src = spark.createDataFrame(
+            [(k, b, "new") for k in (1, 2, 3) for b in range(3)],
+            "pkey int, b int, attr string",
+        )
+
+        def km():
+            return KeyedMerge(
+                source=src,
+                condition="t.pkey = s.pkey AND t.b = s.b",
+                matched_update={"attr": "s.attr"},
+                target_key_col="pkey",
+                source_key_col="pkey",
+            )
+
+        monkeypatch.setattr(delta_log, "MERGE_KEY_CAP", 5)  # 9 rows, 3 keys
+        res = t.merge(km())
+        assert res["touched_files"] == 1
+        assert t.history()[0]["operationMetrics"]["numSourceRows"] == 9
+        got = sorted(
+            (r["pkey"], r["b"])
+            for r in t.to_df().where("attr = 'new'").collect()
+        )
+        assert got == [(k, b) for k in (1, 2, 3) for b in range(3)]
+        # the same merge under the default cap touches the same file
+        monkeypatch.undo()
+        assert t.merge(km())["touched_files"] == 1
+
     def test_overflow_with_timestamp_keys(self, spark, tmp_path, monkeypatch):
         from mack_spark.tables import KeyedMerge
 

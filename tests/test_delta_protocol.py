@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from mack_spark.sources.delta_log import (
     CHECKPOINT_INTERVAL,
     DeltaProtocolTable,
+    DeltaSnapshot,
 )
 from mack_spark.tables import ConcurrentModificationError
 
@@ -228,6 +229,51 @@ class TestMerge:
         )
         assert got == want
         assert [h["operation"] for h in t.history()][0] == "MERGE"
+
+
+class TestMergeMetrics:
+    def test_history_reports_num_source_rows(self, spark, tmp_path):
+        from mack_spark.tables import KeyedMerge
+
+        t = _mk(spark, tmp_path, [(1, "a"), (2, "b")])
+        src = spark.createDataFrame(
+            [(2, "B"), (3, "c"), (None, "n")], "pkey int, attr string"
+        )
+        t.merge(KeyedMerge(
+            source=src, condition="t.pkey = s.pkey",
+            matched_update={"attr": "s.attr"}, not_matched_insert="*",
+            target_key_col="pkey", source_key_col="pkey",
+        ))
+        m = t.history()[0]["operationMetrics"]
+        assert m["numSourceRows"] == 3
+        # insert-only merges commit add-only, with the same metric
+        t.merge(KeyedMerge(
+            source=src.where("pkey IS NOT NULL"),
+            condition="t.pkey = s.pkey", not_matched_insert="*",
+            target_key_col="pkey", source_key_col="pkey",
+        ))
+        m = t.history()[0]["operationMetrics"]
+        assert m["numSourceRows"] == 2
+        assert m["numTargetFilesRemoved"] == 0
+
+    def test_size_hint_prices_rows_from_files_with_stats(self):
+        """A file without ``numRecords`` adds its bytes to the rewrite
+        but must not dilute the bytes/row that prices incoming rows."""
+        snap = DeltaSnapshot(
+            1, {}, {},
+            {
+                "a": {"size": 1000, "stats": json.dumps({"numRecords": 10})},
+                "b": {"size": 5000},
+            },
+            [],
+        )
+        hint = DeltaProtocolTable._rewrite_size_hint
+        assert hint(None, snap, ["a", "b"], extra_rows=10) == 7000
+        assert hint(
+            None, snap, ["a", "b"], extra_rows=10, include_base=False
+        ) == 1000
+        assert hint(None, snap, ["b"], extra_rows=10) is None
+        assert hint(None, snap, ["a", "b"]) == 6000
 
 
 class TestSchemaEnforcement:

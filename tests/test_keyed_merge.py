@@ -262,3 +262,164 @@ def test_randomized_keyed_vs_full_rewrite(spark, tmp_path):
                 "is_current", "effective_time", "end_time",
             )
         assert_df_equality(keyed.toDF(), twin.toDF())
+
+
+# ---- DeltaProtocolTable.merge: source uniqueness skips the probe ----
+
+
+@pytest.fixture
+def probe_spy(monkeypatch):
+    """The ``assume_unambiguous`` of every interpreter call: True means
+    the ambiguity probe join was skipped."""
+    import mack_spark.merge_exec as me
+
+    calls = []
+    real = me.interpret_keyed_merge
+
+    def spy(base, km, assume_unambiguous=False):
+        calls.append(assume_unambiguous)
+        return real(base, km, assume_unambiguous=assume_unambiguous)
+
+    monkeypatch.setattr(me, "interpret_keyed_merge", spy)
+    return calls
+
+
+def _protocol_table(spark, path, rows, schema):
+    from mack_spark.sources.delta_log import DeltaProtocolTable
+
+    return DeltaProtocolTable.create(
+        spark, str(path), spark.createDataFrame(rows, schema)
+    )
+
+
+def _update_w(src, condition):
+    return KeyedMerge(
+        source=src, condition=condition,
+        matched_update={"w": "s.w"},
+        target_key_col="k", source_key_col="k",
+    )
+
+
+AB = "k int, b int, w string"
+
+
+def test_unique_composite_tuples_skip_probe(spark, tmp_path, probe_spy):
+    # k repeats in the source, (k, b) does not
+    t = _protocol_table(
+        spark, tmp_path / "u", [(1, 1, "x"), (1, 2, "y"), (2, 1, "z")], AB
+    )
+    src = spark.createDataFrame([(1, 1, "X"), (1, 2, "Y")], AB)
+    t.merge(_update_w(src, "t.k = s.k AND t.b = s.b"))
+    assert probe_spy == [True]
+    got = sorted(map(tuple, t.to_df().collect()))
+    assert got == [(1, 1, "X"), (1, 2, "Y"), (2, 1, "z")]
+
+
+def test_duplicate_tuples_still_raise(spark, tmp_path, probe_spy):
+    t = _protocol_table(spark, tmp_path / "d", [(1, 1, "x")], AB)
+    src = spark.createDataFrame([(1, 1, "X"), (1, 1, "Y")], AB)
+    v0 = t.snapshot().version
+    with pytest.raises(ValueError, match="ambiguous"):
+        t.merge(_update_w(src, "s.b = t.b AND t.k = s.k"))
+    assert probe_spy == [False]
+    assert t.snapshot().version == v0
+
+
+def test_nan_tuples_run_probe(spark, tmp_path, probe_spy):
+    # Spark's NaN = NaN holds, so both source rows match the one target
+    # row; Python's NaN != NaN would call the tuples distinct
+    schema = "k int, x double, w string"
+    nan = float("nan")
+    t = _protocol_table(spark, tmp_path / "n", [(1, nan, "a")], schema)
+    src = spark.createDataFrame([(1, nan, "P"), (1, nan, "Q")], schema)
+    with pytest.raises(ValueError, match="ambiguous"):
+        t.merge(_update_w(src, "t.k = s.k AND t.x = s.x"))
+    assert probe_spy == [False]
+
+
+def test_cross_type_equality_runs_probe(spark, tmp_path, probe_spy):
+    # '1' and '01' are distinct strings but both equal the int 1
+    t = _protocol_table(spark, tmp_path / "c", [(1, 1, "a")], AB)
+    src = spark.createDataFrame(
+        [(1, "1", "P"), (1, "01", "Q")], "k int, b string, w string"
+    )
+    with pytest.raises(ValueError, match="ambiguous"):
+        t.merge(_update_w(src, "t.k = s.k AND t.b = s.b"))
+    assert probe_spy == [False]
+
+
+def test_or_condition_runs_probe(spark, tmp_path, probe_spy):
+    t = _protocol_table(
+        spark, tmp_path / "o", [(1, 1, "x"), (1, 2, "y")], AB
+    )
+    src = spark.createDataFrame([(1, 1, "X"), (1, 2, "Y")], AB)
+    t.merge(_update_w(
+        src,
+        "(t.k = s.k AND t.b = s.b)"
+        " OR (t.k = s.k AND t.b IS NULL AND s.b IS NULL)",
+    ))
+    assert probe_spy == [False]
+    got = sorted(map(tuple, t.to_df().collect()))
+    assert got == [(1, 1, "X"), (1, 2, "Y")]
+
+
+def test_nested_field_equality_runs_probe(spark, tmp_path, probe_spy):
+    schema = "k int, st struct<a:int>, w string"
+    t = _protocol_table(
+        spark, tmp_path / "s", [(1, (1,), "x"), (1, (2,), "y")], schema
+    )
+    src = spark.createDataFrame([(1, (1,), "X"), (1, (2,), "Y")], schema)
+    t.merge(_update_w(src, "t.k = s.k AND t.st.a = s.st.a"))
+    assert probe_spy == [False]
+    got = sorted((r["st"]["a"], r["w"]) for r in t.to_df().collect())
+    assert got == [(1, "X"), (2, "Y")]
+
+
+def test_projection_types_round_trip(spark, tmp_path):
+    """The rewrite's CAST types are SQL text: decimals keep their
+    scale, timestamp_ntz stays zone-free, and struct field names that
+    need backticks still parse — on the table and in its change feed."""
+    import datetime
+    from decimal import Decimal
+
+    from mack_spark.sources.delta_log import DeltaProtocolTable
+
+    schema = (
+        "k int, amt decimal(10,2), ts timestamp_ntz,"
+        " st struct<`a b`:int,`x``y`:string>"
+    )
+    ts0 = datetime.datetime(2024, 1, 2, 3, 4, 5)
+    ts1 = datetime.datetime(2025, 6, 7, 8, 9, 10)
+    t = DeltaProtocolTable.create(
+        spark, str(tmp_path / "ty"),
+        spark.createDataFrame(
+            [(1, Decimal("1.50"), ts0, (1, "p")),
+             (2, Decimal("2.25"), ts0, (2, "q"))], schema,
+        ),
+        properties={"delta.enableChangeDataFeed": "true"},
+    )
+    src = spark.createDataFrame(
+        [(2, Decimal("9.99"), ts1, (20, "Q")),
+         (3, Decimal("3.10"), ts1, (30, "r"))], schema,
+    )
+    t.merge(KeyedMerge(
+        source=src, condition="t.k = s.k",
+        matched_update="*", not_matched_insert="*",
+        target_key_col="k", source_key_col="k",
+    ))
+    assert t.to_df().schema == spark.createDataFrame([], schema).schema
+    got = sorted(map(tuple, t.to_df().collect()))
+    assert got == [
+        (1, Decimal("1.50"), ts0, (1, "p")),
+        (2, Decimal("9.99"), ts1, (20, "Q")),
+        (3, Decimal("3.10"), ts1, (30, "r")),
+    ]
+    changes = sorted(
+        (r["_change_type"], r["k"], r["amt"], r["ts"], tuple(r["st"]))
+        for r in t.table_changes(starting_version=1).collect()
+    )
+    assert changes == [
+        ("insert", 3, Decimal("3.10"), ts1, (30, "r")),
+        ("update_postimage", 2, Decimal("9.99"), ts1, (20, "Q")),
+        ("update_preimage", 2, Decimal("2.25"), ts0, (2, "q")),
+    ]
