@@ -830,24 +830,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         import tempfile
 
         from mack_spark.sources.delta_log import DeltaProtocolTable
-        from mack_spark.tables import KeyedMerge
 
-        li = _t(spark, sf_dir, "lineitem")
         path = tempfile.mkdtemp(prefix="mack-delta-kill-") + "/t"
-        t = DeltaProtocolTable.create(spark, path, li)
-        dup_cols = ["l_partkey", "l_suppkey"]
-        dup_keys = (
-            li.groupBy(*dup_cols).count().filter(F.col("count") > 1)
-            .drop("count")
-        )
-        km = KeyedMerge(
-            source=dup_keys,
-            condition=" AND ".join(f"t.`{c}` = s.`{c}`" for c in dup_cols),
-            matched_delete=True,
-            target_key_col=dup_cols[0],
-            source_key_col=dup_cols[0],
-        )
-        t.merge(km)
+        t = DeltaProtocolTable.create(spark, path, _t(spark, sf_dir, "lineitem"))
+        dedup.kill_duplicates(t, ["l_partkey", "l_suppkey"])
         return t.to_df()
 
     q["delta_kill_duplicates"] = q_kill_delta
@@ -2073,9 +2059,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_incremental_rollup(spark, sf_dir):
         # Batch incremental-view maintenance: a rollup table follows a
-        # source ManagedTable through create → append → delete using
-        # only the change feed (rollup.py), never a full rescan. The
-        # oracle aggregates the equivalent final state directly.
+        # source table through create → append → delete using only the
+        # change feed (rollup.py), never a full rescan. The oracle
+        # aggregates the equivalent final state directly.
         import tempfile
 
         from mack_spark.rollup import (
@@ -2083,27 +2069,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             refresh_rollup_incremental,
             rollup_as_view,
         )
-        from mack_spark.tables import ManagedTable
+        from mack_spark.sources.delta_log import DeltaProtocolTable
 
         tmp = tempfile.mkdtemp(prefix="rollup_inc_")
         gcols = ["event_hour", "event_type"]
         ev = _t(spark, sf_dir, "events").withColumn(
             "event_hour", F.date_trunc("hour", F.col("ts"))
         ).select("user_id", "event_type", "value", "event_hour")
-        src = ManagedTable.create(
-            spark, f"{tmp}/src", ev.filter(F.col("user_id") % 3 == 0)
+        src = DeltaProtocolTable.create(
+            spark, f"{tmp}/src", ev.filter(F.col("user_id") % 3 == 0),
+            properties={"delta.enableChangeDataFeed": "true"},
         )
-        src.set_properties({"mack.retain_snapshots": "10"})
         rollup = create_rollup(src, f"{tmp}/rollup", gcols)
         src.append(ev.filter(F.col("user_id") % 3 == 1))
         refresh_rollup_incremental(rollup, src, gcols)
-        src.overwrite(
-            src.toDF().filter(
-                ~((F.col("user_id") % 3 == 0) & (F.col("event_type") == "click"))
-            ),
-            operation="DELETE",
-            schema_change=False,
-        )
+        src.delete_where("user_id % 3 = 0 AND event_type = 'click'")
         refresh_rollup_incremental(rollup, src, gcols)
         return rollup_as_view(rollup, gcols).orderBy("event_hour", "event_type")
 
@@ -2756,17 +2736,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_stream_scd2(spark, sf_dir):
         # Streaming SCD2: the SAME updates batch as type_2_scd_upsert,
         # but arriving through a real Structured Streaming source and
-        # applied by foreachBatch MERGE into a ManagedTable. One
+        # applied by foreachBatch MERGE into a DeltaProtocolTable. One
         # availableNow microbatch ⇒ the final table state must equal the
         # batch post-state, so the batch oracle gates the streaming path.
         import tempfile
 
         from mack_spark.sources import stream_table
+        from mack_spark.sources.delta_log import DeltaProtocolTable
         from mack_spark.streaming import foreach_batch_scd2
-        from mack_spark.tables import ManagedTable
 
         tmp = tempfile.mkdtemp(prefix="scd2_stream_")
-        table = ManagedTable.create(
+        table = DeltaProtocolTable.create(
             spark, f"{tmp}/scd2", _scd_base(spark, sf_dir)
         )
         c = stream_table(spark, sf_dir, "customer")
@@ -2793,7 +2773,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .start()
         )
         q.awaitTermination()
-        return table.toDF().select(
+        return table.to_df().select(
             *CUSTOMER_COLS, "is_current", "effective_time", "end_time"
         )
 
@@ -2875,8 +2855,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         import tempfile
 
         from mack_spark.sources import stream_table
+        from mack_spark.sources.delta_log import DeltaProtocolTable
         from mack_spark.streaming import foreach_batch_rollup
-        from mack_spark.tables import ManagedTable
 
         tmp = tempfile.mkdtemp(prefix="rollup_stream_")
         empty = spark.createDataFrame(
@@ -2884,7 +2864,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "event_hour timestamp, event_type string, n_events bigint,"
             " value_fp decimal(38,0)",
         )
-        table = ManagedTable.create(spark, f"{tmp}/rollup", empty)
+        table = DeltaProtocolTable.create(spark, f"{tmp}/rollup", empty)
         ev = stream_table(spark, sf_dir, "events").withColumn(
             "event_hour", F.date_trunc("hour", F.col("ts"))
         )
@@ -2898,7 +2878,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         sq.awaitTermination()
         return (
-            table.toDF()
+            table.to_df()
             .withColumn(
                 "total_value", F.col("value_fp").cast("double") / F.lit(10000.0)
             )
@@ -2917,7 +2897,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # constraints (base seed ∪ appended pass-rows).
         import tempfile
 
-        from mack_spark.appends import constraint_append_protocol
+        from mack_spark.appends import constraint_append
         from mack_spark.sources.delta_log import DeltaProtocolTable
 
         dirty = _dirty_lineitem(spark, sf_dir)
@@ -2934,7 +2914,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         quarantine = DeltaProtocolTable.create(
             spark, f"{tmp}/q", dirty.limit(0)
         )
-        constraint_append_protocol(target, batch, quarantine)
+        constraint_append(target, batch, quarantine)
         return target.to_df()
 
     q["delta_constraint_append"] = q_delta_constraint_append
@@ -3164,7 +3144,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_delta_inc_rollup(spark, sf_dir):
         # Incremental materialized-view maintenance driven by the REAL
-        # protocol Change Data Feed (rollup.py protocol path): the
+        # protocol Change Data Feed (rollup.py): the
         # rollup follows the source through append, UPDATE (pre/post
         # pair nets the exact value delta — impossible with a snapshot
         # diff), and DELETE, reading only table_changes() — O(changes),
@@ -3172,8 +3152,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         import tempfile
 
         from mack_spark.rollup import (
-            create_rollup_protocol,
-            refresh_rollup_incremental_protocol,
+            create_rollup,
+            refresh_rollup_incremental,
             rollup_as_view,
         )
         from mack_spark.sources.delta_log import DeltaProtocolTable
@@ -3187,11 +3167,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             spark, f"{tmp}/src", ev.filter(F.col("user_id") % 3 == 0),
             properties={"delta.enableChangeDataFeed": "true"},
         )
-        rollup = create_rollup_protocol(src, f"{tmp}/rollup", gcols, "value")
+        rollup = create_rollup(src, f"{tmp}/rollup", gcols, "value")
         src.append(ev.filter(F.col("user_id") % 3 == 1))
         src.update_where("event_type = 'view'", {"value": "value * 2"})
         src.delete_where("event_type = 'click' AND user_id % 2 = 0")
-        refresh_rollup_incremental_protocol(rollup, src, gcols, "value")
+        refresh_rollup_incremental(rollup, src, gcols, "value")
         return rollup_as_view(rollup, gcols).orderBy(
             "event_hour", "event_type"
         )
@@ -3241,11 +3221,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from mack_spark.sources.delta_log import DeltaProtocolTable
         from mack_spark.streaming import foreach_batch_scd2_cdf
         from mack_spark.streaming.delta_source import register
-        from mack_spark.tables import ManagedTable
 
         register(spark)
         tmp = tempfile.mkdtemp(prefix="scd2_cdf_")
-        dim = ManagedTable.create(
+        dim = DeltaProtocolTable.create(
             spark, f"{tmp}/dim", _scd_base(spark, sf_dir)
         )
         updates = _scd_updates(spark, sf_dir)
@@ -3269,7 +3248,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .start()
         )
         query.awaitTermination()
-        return dim.toDF().select(
+        return dim.to_df().select(
             *CUSTOMER_COLS, "is_current", "effective_time", "end_time"
         )
 

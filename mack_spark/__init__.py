@@ -1,20 +1,19 @@
 """mack_spark — a PySpark-native table-operations and data-pipeline engine.
 
 Re-expresses the full capability surface of the reference library
-(MrPowers/mack, /root/reference/mack/__init__.py) as idiomatic PySpark:
-stateless functions over ``(ManagedTable | DataFrame)`` inputs, zero
-row-at-a-time UDFs in the core, every heavy operation delegated to
-Catalyst (predicate pushdown, column pruning, AQE, broadcast joins).
+(MrPowers/mack, ``mack/__init__.py``) as idiomatic PySpark:
+stateless functions over one table handle, zero row-at-a-time UDFs in
+the core, every heavy operation delegated to Catalyst (predicate
+pushdown, column pruning, AQE, broadcast joins).
 
 The reference depends on Delta Lake for its transactional substrate.
-This engine runs on any of two backends:
-
-* ``delta`` (when the ``delta-spark`` package is importable) — production
-  path: MERGE is executed by Delta's file-pruned rewrite.
-* versioned parquet (always available) — a minimal ACID-ish table layout
-  (``v=N`` snapshot dirs + a JSON meta pointer) used for tests and
-  environments without Delta. Operators express the *post-state* as a
-  single lazy DataFrame plan, so the physical commit is one write.
+This engine implements the Delta log protocol itself
+(:class:`DeltaProtocolTable`, :mod:`mack_spark.sources.delta_log`), and
+every row-level mutation of mack's functions is a call on it: ``merge``
+of a :class:`~mack_spark.tables.KeyedMerge` (file-pruned rewrite),
+``append`` or ``overwrite``. :class:`ManagedTable` is a versioned
+parquet layout that stores the engine's index tables (IVF, LSH,
+near-dup) and backs the copy, clone, vacuum and size helpers.
 
 Beyond the reference surface, :mod:`mack_spark.operators` adds the
 LLM-data-pipeline layer (exact/near dedup, similarity search, text
@@ -29,8 +28,6 @@ from mack_spark.tables import (
     ConcurrentModificationError,
     ManagedTable,
     copy_table,
-    delete_where,
-    update_where,
     rename_table,
     rename_catalog_table,
     latest_version,
@@ -38,7 +35,6 @@ from mack_spark.tables import (
     optimize_compact,
     vacuum,
     shallow_clone,
-    table_changes,
     show_file_sizes,
     delta_file_sizes,
     show_delta_file_sizes,
@@ -61,21 +57,16 @@ from mack_spark.dedup import (
 from mack_spark.appends import (
     validate_append,
     constraint_append,
-    constraint_append_protocol,
 )
 from mack_spark.rollup import (
     create_rollup,
     refresh_rollup_incremental,
-    create_rollup_protocol,
-    refresh_rollup_incremental_protocol,
     rollup_as_view,
 )
 
 __version__ = "0.1.0"
 
 __all__ = [
-    "update_where",
-    "delete_where",
     "ConcurrentModificationError",
     "ManagedTable",
     "DeltaProtocolTable",
@@ -87,11 +78,8 @@ __all__ = [
     "append_without_duplicates",
     "validate_append",
     "constraint_append",
-    "constraint_append_protocol",
     "create_rollup",
     "refresh_rollup_incremental",
-    "create_rollup_protocol",
-    "refresh_rollup_incremental_protocol",
     "rollup_as_view",
     "copy_table",
     "rename_table",
@@ -101,7 +89,6 @@ __all__ = [
     "optimize_compact",
     "vacuum",
     "shallow_clone",
-    "table_changes",
     "show_file_sizes",
     "delta_file_sizes",
     "show_delta_file_sizes",

@@ -1,7 +1,8 @@
 """Schema-gated and constraint-quarantine appends.
 
 Reference surface: ``validate_append`` (reference mack/__init__.py:328-380)
-and ``constraint_append`` (:630-693).
+and ``constraint_append`` (:630-693), over
+:class:`~mack_spark.sources.delta_log.DeltaProtocolTable`.
 
 Parity-critical semantics preserved (SURVEY §2c.6, §2c.10):
 
@@ -21,17 +22,17 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame
 
-from mack_spark.tables import ManagedTable
+from mack_spark.sources.delta_log import DeltaProtocolTable
 
 
 def validate_append(
-    table: ManagedTable,
+    table: DeltaProtocolTable,
     append_df: DataFrame,
     required_cols: List[str],
     optional_cols: List[str],
 ) -> None:
     """Append gated on a column contract (reference mack/__init__.py:328-380)."""
-    if not isinstance(table, ManagedTable):
+    if not isinstance(table, DeltaProtocolTable):
         raise TypeError("An existing delta table must be specified.")
     if not isinstance(append_df, DataFrame):
         raise TypeError("You must provide a DataFrame that is to be appended.")
@@ -41,7 +42,7 @@ def validate_append(
             raise TypeError(
                 f"The base Delta table has these columns {append_data_columns!r}, but these columns are required {required_cols!r}"
             )
-    table_columns = table.toDF().columns
+    table_columns = table.to_df().columns
     for column in append_data_columns:
         if column not in table_columns and column not in optional_cols:
             raise TypeError(
@@ -51,75 +52,27 @@ def validate_append(
     table.append(append_df, merge_schema=True)
 
 
-def harvested_constraints(table: ManagedTable) -> List[str]:
-    """Check constraints from table properties + NOT-NULL from declared
-    schema nullability (reference mack/__init__.py:658-667)."""
-    properties = table.detail()["properties"]
-    check_constraints = [
-        v for k, v in properties.items() if k.startswith("delta.constraints")
-    ]
-    null_constraints = [
-        f"{field.name} is not null"
-        for field in table.declared_schema.fields
-        if not field.nullable
-    ]
-    return check_constraints + null_constraints
-
-
 def constraint_append(
-    table: ManagedTable,
+    table: DeltaProtocolTable,
     append_df: DataFrame,
-    quarantine_table: Optional[ManagedTable],
+    quarantine_table: Optional[DeltaProtocolTable],
 ) -> None:
     """Split an append by the target's constraints (reference
     mack/__init__.py:630-693): passing rows → target, violating rows →
     quarantine (or dropped when ``quarantine_table`` is None).
+
+    Constraints are the table's ``delta.constraints.*`` configuration
+    (the writer-version-3 storage the protocol writer enforces on every
+    write) plus a NOT-NULL check per non-nullable field of the
+    committed schema (reference mack/__init__.py:658-667).
 
     SCALE: both branches are plain filters over the append source —
     predicate pushdown reaches the source scan when ``append_df`` is
     file-backed; the double evaluation of ``append_df`` matches the
     reference (no implicit cache).
     """
-    if not isinstance(table, ManagedTable):
-        raise TypeError("An existing delta table must be specified for delta_table.")
-    if not isinstance(append_df, DataFrame):
-        raise TypeError("You must provide a DataFrame that is to be appended.")
-    if quarantine_table is not None and not isinstance(quarantine_table, ManagedTable):
-        raise TypeError(
-            "An existing delta table must be specified for quarantine_table."
-        )
-    constraints = harvested_constraints(table)
-    if not constraints:
-        raise TypeError("There are no constraints present in the target delta table")
-
-    if quarantine_table:
-        quarantine_df = append_df.filter(
-            "not (" + " and ".join(constraints) + ")"
-        )
-        quarantine_table.append(quarantine_df, merge_schema=True)
-    filtered_df = append_df.filter(" and ".join(constraints))
-    table.append(filtered_df, merge_schema=True)
-
-
-def constraint_append_protocol(
-    table, append_df: DataFrame, quarantine_table=None
-) -> None:
-    """``constraint_append`` against open-protocol Delta tables
-    (reference mack/__init__.py:630-693, on the substrate the
-    reference actually runs on): constraints are harvested from the
-    table's REAL ``delta.constraints.*`` configuration (the writer-
-    version-3 storage this module's tables enforce on every write,
-    sources/delta_log.py ``add_constraint``) plus NOT-NULL fields of
-    the committed schema. Same split semantics as the ManagedTable
-    form: passing rows → target, violating rows → quarantine (dropped
-    when ``quarantine_table`` is None), three-valued NULL rows fall
-    out of BOTH appends, two independent commits (quarantine first)."""
-    from mack_spark.sources.delta_log import DeltaProtocolTable
-
     if not isinstance(table, DeltaProtocolTable):
-        raise TypeError(
-            "An existing delta table must be specified for delta_table."
-        )
+        raise TypeError("An existing delta table must be specified for delta_table.")
     if not isinstance(append_df, DataFrame):
         raise TypeError("You must provide a DataFrame that is to be appended.")
     if quarantine_table is not None and not isinstance(
@@ -132,20 +85,13 @@ def constraint_append_protocol(
     props = snap.metadata.get("configuration") or {}
     constraints = [
         v for k, v in props.items() if k.startswith("delta.constraints")
-    ] + [
-        f"{f.name} is not null"
-        for f in snap.schema.fields
-        if not f.nullable
-    ]
+    ] + [f"{f.name} is not null" for f in snap.schema.fields if not f.nullable]
     if not constraints:
-        raise TypeError(
-            "There are no constraints present in the target delta table"
-        )
+        raise TypeError("There are no constraints present in the target delta table")
+
     if quarantine_table is not None:
         quarantine_table.append(
             append_df.filter("not (" + " and ".join(constraints) + ")"),
             merge_schema=True,
         )
-    table.append(
-        append_df.filter(" and ".join(constraints)), merge_schema=True
-    )
+    table.append(append_df.filter(" and ".join(constraints)), merge_schema=True)

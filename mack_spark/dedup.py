@@ -4,28 +4,36 @@ Reference surface: ``kill_duplicates`` (reference mack/__init__.py:144-192),
 ``drop_duplicates_pkey`` (:195-255), ``drop_duplicates`` (:258-284),
 ``append_without_duplicates`` (:383-412).
 
-Each mutation is expressed as the post-state of the reference's
-detect-then-MERGE-delete pipeline and committed in one write (see
-mack_spark.tables.ManagedTable.merge_overwrite).
+Each mutation is the reference's own Delta operation on a
+:class:`~mack_spark.sources.delta_log.DeltaProtocolTable`: the two
+delete-MERGEs and the insert-only MERGE become one
+``DeltaProtocolTable.merge`` of a :class:`~mack_spark.tables.KeyedMerge`
+(file-pruned: only files holding a matched key are rewritten), and
+``drop_duplicates`` is the reference's full overwrite.
 
 SCALE notes per operator are on the functions. The common theme: the
 reference detects duplicates with an analytic window
 (``count("*") over (partition by dup_cols)``) which shuffles the entire
 table with no partial aggregation; this engine uses a groupBy (map-side
-combine shrinks the shuffle to one row per key) followed by a join back
-— at 100 TB the grouped key-set is orders of magnitude smaller than the
-windowed full table, and AQE turns the join-back into a broadcast when
-the duplicate key-set is small (the common case).
+combine shrinks the shuffle to one row per key) — at 100 TB the grouped
+key-set is orders of magnitude smaller than the windowed full table,
+and it is the MERGE source, so the merge touches only files holding a
+duplicate key.
+
+``kill_duplicates_post`` / ``drop_duplicates_pkey_post`` /
+``append_new_rows`` are the same mutations as pure read-only plans (the
+oracle harness runs them against parquet inputs).
 """
 
 from __future__ import annotations
 
-from typing import List, Union
+from typing import List
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mack_spark.tables import KeyedMerge, ManagedTable
+from mack_spark.sources.delta_log import DeltaProtocolTable
+from mack_spark.tables import KeyedMerge
 
 
 def _require_columns(df: DataFrame, required: List[str]) -> None:
@@ -68,74 +76,53 @@ def append_new_rows(target_df: DataFrame, append_df: DataFrame, p_keys: List[str
     )
 
 
-def duplicate_rows(df: DataFrame, duplication_columns: List[str]) -> DataFrame:
-    """All rows belonging to a duplicate group (the kill-set).
-
-    Matches the reference detection plan (window count > 1 + distinct,
-    reference mack/__init__.py:174-181) via groupBy + semi-join.
-    """
-    dup_keys = (
-        df.groupBy(*duplication_columns).count().filter(F.col("count") > 1).drop("count")
-    )
-    return df.join(dup_keys, duplication_columns, "left_semi").distinct()
-
-
-def kill_duplicates(table: ManagedTable, duplication_columns: List[str]) -> None:
+def kill_duplicates(table: DeltaProtocolTable, duplication_columns: List[str]) -> None:
     """Delete EVERY row belonging to a duplicate group — no survivor
     (reference mack/__init__.py:144-192; README.md:105-114).
 
-    Post-state: rows whose duplication-column group has exactly one row.
-    SCALE: groupBy+anti-join instead of a full-table window; the
-    duplicate key-set after aggregation is tiny → AQE broadcasts it.
+    One MERGE of the duplicate key set with ``whenMatchedDelete``.
+    SCALE: groupBy instead of a full-table window; the duplicate
+    key-set after aggregation is tiny and only files holding one of
+    its keys are rewritten.
     """
-    if not isinstance(table, ManagedTable):
+    if not isinstance(table, DeltaProtocolTable):
         raise TypeError("An existing delta table must be specified.")
     if not duplication_columns or len(duplication_columns) == 0:
         raise TypeError("Duplication columns must be specified")
-    df = table.toDF()
+    df = table.to_df()
     _require_columns(df, duplication_columns)
-    # File-pruned rewrite hint: only rows in duplicate groups change, so
-    # files whose key range misses every duplicate key survive as-is.
     dup_keys = (
         df.groupBy(*duplication_columns).count().filter(F.col("count") > 1).drop("count")
     )
-    table.merge_overwrite(
-        kill_duplicates_post(df, duplication_columns),
-        operation="MERGE-DELETE",
-        touched_keys=(duplication_columns[0], dup_keys.select(duplication_columns[0])),
-        # Delta form: MERGE on the duplicate key set, delete every match
-        # (reference mack/__init__.py:183-191 — whenMatchedDelete).
-        keyed_merge=KeyedMerge(
+    table.merge(
+        KeyedMerge(
             source=dup_keys,
             # plain equality, NOT <=>: the reference's merge condition
             # (mack/__init__.py:184-192, `old.col = new.col`) never
             # matches NULL-group rows, so NULL-keyed duplicates survive
-            # — kill_duplicates_post's on-name anti-join has the same
-            # three-valued behavior by construction
             condition=" AND ".join(
                 f"t.`{c}` = s.`{c}`" for c in duplication_columns
             ),
             matched_delete=True,
-            # the full condition implies t.dup0 = s.dup0, so files
-            # touched on the first column are a superset of true matches
             target_key_col=duplication_columns[0],
             source_key_col=duplication_columns[0],
-        ),
+        )
     )
 
 
 def drop_duplicates_pkey(
-    table: ManagedTable, primary_key: str, duplication_columns: List[str]
+    table: DeltaProtocolTable, primary_key: str, duplication_columns: List[str]
 ) -> None:
     """Delete all but one row per duplicate group; survivor = lowest
     primary key (reference mack/__init__.py:195-255, survivor rule :240).
 
-    Post-state: ``row_number() over (partition by dup_cols order by pk)
-    == 1``. The ranking window is unavoidable here (we need a survivor),
-    but it shuffles each group once and whole-stage codegen keeps it
-    JVM-side; skewed duplicate groups are split by AQE.
+    The non-survivors (``row_number() over (partition by dup_cols order
+    by pk) > 1``) are deleted by primary key in one MERGE. The ranking
+    window is unavoidable here (we need a survivor), but it shuffles
+    each group once and whole-stage codegen keeps it JVM-side; skewed
+    duplicate groups are split by AQE.
     """
-    if not isinstance(table, ManagedTable):
+    if not isinstance(table, DeltaProtocolTable):
         raise TypeError("An existing delta table must be specified.")
     if not primary_key:
         raise TypeError("A unique primary key must be specified.")
@@ -143,67 +130,62 @@ def drop_duplicates_pkey(
         raise TypeError("A duplication column must be specified.")
     if primary_key in duplication_columns:
         raise TypeError("Primary key must not be part of the duplication columns.")
-    df = table.toDF()
+    df = table.to_df()
     _require_columns(df, [primary_key] + duplication_columns)
-    dup_keys = (
-        df.groupBy(*duplication_columns).count().filter(F.col("count") > 1).drop("count")
-    )
-    # Delta form: the non-survivors (rank > 1 under the pkey order) are
-    # identified by primary key; MERGE deletes exactly those rows.
     w = Window.partitionBy(*duplication_columns).orderBy(primary_key)
     losers = (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") > 1)
         .select(primary_key)
     )
-    table.merge_overwrite(
-        drop_duplicates_pkey_post(df, [primary_key], duplication_columns),
-        operation="MERGE-DELETE",
-        touched_keys=(duplication_columns[0], dup_keys.select(duplication_columns[0])),
-        keyed_merge=KeyedMerge(
+    table.merge(
+        KeyedMerge(
             source=losers,
             condition=f"t.`{primary_key}` = s.`{primary_key}`",
             matched_delete=True,
             target_key_col=primary_key,
             source_key_col=primary_key,
-        ),
+        )
     )
 
 
-def drop_duplicates(table: ManagedTable, duplication_columns: List[str]) -> None:
+def drop_duplicates(table: DeltaProtocolTable, duplication_columns: List[str]) -> None:
     """Deduplicate by columns, arbitrary survivor, via full overwrite
     (reference mack/__init__.py:258-284 — README.md:160 itself flags the
     full rewrite as inefficient; kept for parity, ``drop_duplicates_pkey``
     is the scaled path)."""
-    if not isinstance(table, ManagedTable):
+    if not isinstance(table, DeltaProtocolTable):
         raise TypeError("An existing delta table must be specified.")
     if not duplication_columns or len(duplication_columns) == 0:
         raise TypeError("A duplication column must be specified.")
-    df = table.toDF()
+    df = table.to_df()
     _require_columns(df, duplication_columns)
-    dup_keys = (
-        df.groupBy(*duplication_columns).count().filter(F.col("count") > 1).drop("count")
-    )
-    table.merge_overwrite(
-        df.drop_duplicates(duplication_columns),
-        operation="WRITE",
-        touched_keys=(duplication_columns[0], dup_keys.select(duplication_columns[0])),
-    )
+    table.overwrite(df.drop_duplicates(duplication_columns))
 
 
 def append_without_duplicates(
-    table: ManagedTable, append_df: DataFrame, p_keys: List[str]
+    table: DeltaProtocolTable, append_df: DataFrame, p_keys: List[str]
 ) -> None:
     """Insert only rows whose keys are absent from the target; also
-    dedupe within the batch (reference mack/__init__.py:383-412 —
-    ``whenNotMatchedInsertAll`` ≡ left-anti join + append).
+    dedupe within the batch (reference mack/__init__.py:383-412 — a
+    ``whenNotMatchedInsertAll`` MERGE of the batch deduped on
+    ``p_keys``).
 
-    SCALE: implemented literally as the anti-join + *append* — no table
-    rewrite at all. The target side of the anti-join prunes to its key
-    columns (column pruning reaches the parquet scan).
+    SCALE: an insert-only MERGE commits add-only — no target file is
+    rewritten — and reads only the files whose key range holds a batch
+    key. Unlike a plain append, the merge commit re-checks a
+    concurrent writer's new files for the batch's keys and raises
+    ``ConcurrentModificationError`` on a hit, so two racing ingests
+    can never insert the same key twice.
     """
-    if not isinstance(table, ManagedTable):
+    if not isinstance(table, DeltaProtocolTable):
         raise TypeError("An existing delta table must be specified.")
-    table.append(
-        append_new_rows(table.toDF(), append_df, p_keys), operation="MERGE-INSERT"
+    table.merge(
+        KeyedMerge(
+            source=append_df.drop_duplicates(p_keys),
+            condition=" AND ".join(f"t.`{k}` = s.`{k}`" for k in p_keys),
+            not_matched_insert="*",
+            target_key_col=p_keys[0],
+            source_key_col=p_keys[0],
+        )
     )

@@ -1,13 +1,13 @@
 """Pure-DataFrame interpreter for :class:`mack_spark.tables.KeyedMerge`.
 
-Executes the exact clause semantics ``DeltaTable.merge`` applies to the
-descriptor subset ``apply_keyed_merge`` emits (reference
-mack/__init__.py:125-139):
+Executes the exact clause semantics ``DeltaTable.merge`` applies to a
+descriptor's clauses (reference mack/__init__.py:125-139):
 
 * target rows matched by the ``condition`` get the FIRST applicable
-  matched clause, in the order apply_keyed_merge registers them
-  (update, then delete); a NULL clause condition means not-applicable
-  (three-valued SQL, same as Delta);
+  matched clause, in registration order (update, then delete —
+  ``whenMatchedUpdate`` before ``whenMatchedDelete`` in the
+  ``DeltaTable.merge`` clause chain); a NULL clause condition means
+  not-applicable (three-valued SQL, same as Delta);
 * a target row matched by MORE THAN ONE source row is an error
   (Delta's ``DeltaUnsupportedOperationException`` for ambiguous merges);
 * source rows matching no target row take the not-matched insert

@@ -1,22 +1,26 @@
 """Incremental materialized-aggregate maintenance — the batch twin of
 the streaming continuous rollup (``foreach_batch_rollup``): bring a
 rollup table (one row per group: ``n_events``, ``value_fp``) up to the
-source table's current version by applying only the CHANGE FEED since
-the last refresh, never rescanning the whole source.
+source table's current version by applying only the source's Change
+Data Feed since the last refresh, never rescanning the whole source.
 
-Count and fix-point-decimal sum are self-maintainable aggregates:
-an inserted row contributes ``(+1, +v)``, a deleted row ``(-1, -v)``,
-so the delta aggregate is one map-side-combined pass over the change
-rows (O(changes), not O(source)), and the commit is a keyed MERGE
-touching only the groups the changes hit — update existing groups,
-insert new ones, delete groups whose count reaches zero. The refresh
-watermark (the last applied source version) rides in the rollup's
-table properties, so refreshes are idempotent and resumable.
+Count and fix-point-decimal sum are self-maintainable aggregates: an
+``insert`` / ``update_postimage`` row contributes ``(+1, +v)``, a
+``delete`` / ``update_preimage`` row ``(-1, -v)``, so the delta
+aggregate is one map-side-combined pass over the change rows
+(O(changes), not O(source)), and the commit is ONE keyed MERGE touching
+only the groups the changes hit — update existing groups, insert new
+ones, delete groups whose count reaches zero. The refresh watermark
+(the last applied source version) rides in the rollup's table
+properties, written by the same commit as the data, so refreshes are
+idempotent and resumable.
+
+Both tables are :class:`~mack_spark.sources.delta_log.DeltaProtocolTable`;
+the source must have ``delta.enableChangeDataFeed=true``.
 
 SCALE: refresh cost is O(change feed) + a merge over O(touched
-groups); with a key-clustered rollup table the commit layer rewrites
-only the files those groups live in (tables.py pruned/keyed merge).
-The reference has no aggregate-maintenance surface (rebuild extension,
+groups); the merge rewrites only the files those groups live in. The
+reference has no aggregate-maintenance surface (rebuild extension,
 SURVEY.md §2d); the semantics mirror Delta-backed incremental
 materialized views maintained by MERGE.
 """
@@ -28,135 +32,11 @@ from typing import List, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mack_spark.tables import KeyedMerge, ManagedTable, table_changes
+from mack_spark.sources.delta_log import DeltaProtocolTable
+from mack_spark.tables import KeyedMerge
 
 SOURCE_VERSION_PROP = "mack.rollup.source_version"
 _FP = 10000.0
-
-
-def rollup_delta(changes: DataFrame, group_cols: List[str], value_col: str) -> DataFrame:
-    """Signed partial aggregate of a change feed: one row per touched
-    group with ``d_n`` (count delta) and ``d_fp`` (fix-point value
-    delta). Inserts count +, deletes count -."""
-    sign = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(F.lit(-1))
-    fp = F.floor(F.col(value_col) * F.lit(_FP)).cast("decimal(38,0)")
-    return changes.groupBy(*group_cols).agg(
-        F.sum(sign).cast("long").alias("d_n"),
-        F.sum(sign.cast("decimal(38,0)") * fp).alias("d_fp"),
-    )
-
-
-def create_rollup(
-    source: ManagedTable,
-    rollup_path: str,
-    group_cols: List[str],
-    value_col: str = "value",
-) -> ManagedTable:
-    """Materialize the initial rollup from the source's current version
-    and record that version as the refresh watermark."""
-    ver = source._read_meta()["version"]
-    init = (
-        source.toDF()
-        .groupBy(*group_cols)
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.sum(
-                F.floor(F.col(value_col) * F.lit(_FP)).cast("decimal(38,0)")
-            ).alias("value_fp"),
-        )
-    )
-    rollup = ManagedTable.create(source.spark, rollup_path, init)
-    rollup.set_properties({SOURCE_VERSION_PROP: str(ver)})
-    return rollup
-
-
-def refresh_rollup_incremental(
-    rollup: ManagedTable,
-    source: ManagedTable,
-    group_cols: List[str],
-    value_col: str = "value",
-    last_version: Optional[int] = None,
-) -> int:
-    """Apply the source's change feed since ``last_version`` (default:
-    the recorded watermark) and advance the watermark. Returns the
-    source version the rollup now reflects. No-op when already current.
-    """
-    if last_version is None:
-        prop = rollup.detail()["properties"].get(SOURCE_VERSION_PROP)
-        if prop is None:
-            raise ValueError(
-                f"rollup has no {SOURCE_VERSION_PROP} property and no "
-                "last_version was given — create it with create_rollup()"
-            )
-        last_version = int(prop)
-    cur_version = source._read_meta()["version"]
-    if cur_version == last_version:
-        return cur_version
-    delta = rollup_delta(
-        table_changes(source, last_version), group_cols, value_col
-    ).localCheckpoint(eager=True)
-
-    cur = rollup.toDF()
-    totals = (
-        cur.select(*group_cols, "n_events", "value_fp")
-        .unionByName(
-            delta.select(
-                *group_cols,
-                F.col("d_n").alias("n_events"),
-                F.col("d_fp").alias("value_fp"),
-            )
-        )
-        .groupBy(*group_cols)
-        .agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.sum("value_fp").cast("decimal(38,0)").alias("value_fp"),
-        )
-    )
-    # MERGE source: only groups the delta touched, INCLUDING groups whose
-    # count reached zero (they compile to the delete clause).
-    batch_totals = totals.join(
-        delta.select(*group_cols).distinct(), group_cols, "left_semi"
-    )
-    post_state = totals.filter(F.col("n_events") > 0)
-    rollup.merge_overwrite(
-        post_state,
-        operation="ROLLUP-REFRESH",
-        touched_keys=(group_cols[0], delta.select(group_cols[0])),
-        keyed_merge=KeyedMerge(
-            source=batch_totals,
-            condition=" AND ".join(f"t.`{c}` <=> s.`{c}`" for c in group_cols),
-            matched_update={
-                "n_events": "s.`n_events`",
-                "value_fp": "s.`value_fp`",
-            },
-            matched_update_condition="s.`n_events` > 0",
-            matched_delete=True,
-            not_matched_insert="*",
-            not_matched_condition="s.`n_events` > 0",
-            target_key_col=group_cols[0],
-            source_key_col=group_cols[0],
-            null_safe=True,
-        ),
-    )
-    rollup.set_properties({SOURCE_VERSION_PROP: str(cur_version)})
-    return cur_version
-
-
-def rollup_as_view(rollup: ManagedTable, group_cols: List[str]) -> DataFrame:
-    """Read the rollup with the fix-point sum decoded back to double."""
-    df = rollup.toDF() if hasattr(rollup, "toDF") else rollup.to_df()
-    return df.select(
-        *group_cols,
-        "n_events",
-        (F.col("value_fp").cast("double") / F.lit(_FP)).alias("total_value"),
-    )
-
-
-# ----------------------------------------------------------------------
-# Protocol-table rollup: maintained from the REAL Change Data Feed
-# (sources/delta_log.py table_changes) instead of a snapshot diff —
-# Delta's incremental-materialized-view pattern on its own substrate.
-# ----------------------------------------------------------------------
 
 
 def rollup_delta_cdf(
@@ -177,16 +57,42 @@ def rollup_delta_cdf(
     )
 
 
-def create_rollup_protocol(
-    source, rollup_path: str, group_cols: List[str], value_col: str = "value"
-):
-    """Materialize the initial rollup of a
-    :class:`~mack_spark.sources.delta_log.DeltaProtocolTable` and
-    record the source version watermark in the rollup's properties.
-    The source must have ``delta.enableChangeDataFeed=true`` (refresh
-    reads its change feed)."""
-    from mack_spark.sources.delta_log import DeltaProtocolTable
+def rollup_keyed_merge(delta: DataFrame, group_cols: List[str]) -> KeyedMerge:
+    """The MERGE that adds a signed partial aggregate ``delta`` (one
+    row per touched group: ``d_n``, ``d_fp``) to a rollup: matched
+    groups add the delta, groups whose count reaches zero delete, new
+    groups with a positive count insert. Group keys compare
+    null-safely — ``groupBy`` puts NULL keys in one group, and that
+    group must update in place, not insert a twin."""
+    return KeyedMerge(
+        source=delta,
+        condition=" AND ".join(f"t.`{g}` <=> s.`{g}`" for g in group_cols),
+        matched_update={
+            "n_events": "t.`n_events` + s.`d_n`",
+            "value_fp": "t.`value_fp` + s.`d_fp`",
+        },
+        matched_update_condition="t.`n_events` + s.`d_n` > 0",
+        matched_delete=True,
+        not_matched_insert={
+            **{g: f"s.`{g}`" for g in group_cols},
+            "n_events": "s.`d_n`",
+            "value_fp": "s.`d_fp`",
+        },
+        not_matched_condition="s.`d_n` > 0",
+        target_key_col=group_cols[0],
+        source_key_col=group_cols[0],
+        null_safe=True,
+    )
 
+
+def create_rollup(
+    source: DeltaProtocolTable,
+    rollup_path: str,
+    group_cols: List[str],
+    value_col: str = "value",
+) -> DeltaProtocolTable:
+    """Materialize the initial rollup from the source's current version
+    and record that version as the refresh watermark."""
     # pin the snapshot version BEFORE materializing: to_df() without a
     # version would take a second, possibly newer snapshot (a
     # concurrent source commit between the two would make the recorded
@@ -211,28 +117,25 @@ def create_rollup_protocol(
     )
 
 
-def refresh_rollup_incremental_protocol(
-    rollup,
-    source,
+def refresh_rollup_incremental(
+    rollup: DeltaProtocolTable,
+    source: DeltaProtocolTable,
     group_cols: List[str],
     value_col: str = "value",
     last_version: Optional[int] = None,
 ) -> int:
-    """Bring a protocol-table rollup up to the source's head by
-    applying ``source.table_changes(watermark+1, head)`` — O(changed
-    rows in range), never O(source) — and committing ONE keyed MERGE
-    over the touched groups. Handles updates natively (the CDF
-    pre/post pair), which the snapshot-diff ManagedTable path cannot.
-    Returns the source version the rollup now reflects."""
-    from mack_spark.tables import KeyedMerge
-
+    """Bring the rollup up to the source's head by applying
+    ``source.table_changes(watermark+1, head)`` — O(changed rows in
+    range), never O(source) — and committing ONE keyed MERGE over the
+    touched groups. Updates are handled natively (the CDF pre/post
+    pair). Returns the source version the rollup now reflects; a no-op
+    when already current."""
     if last_version is None:
         prop = rollup.detail()["properties"].get(SOURCE_VERSION_PROP)
         if prop is None:
             raise ValueError(
                 f"rollup has no {SOURCE_VERSION_PROP} property and no "
-                "last_version was given — create it with "
-                "create_rollup_protocol()"
+                "last_version was given — create it with create_rollup()"
             )
         last_version = int(prop)
     cur_version = source.snapshot().version
@@ -242,57 +145,24 @@ def refresh_rollup_incremental_protocol(
     delta = rollup_delta_cdf(changes, group_cols, value_col).localCheckpoint(
         eager=True
     )
-    if not delta.head(1):
-        # the range held no row-level changes (e.g. OPTIMIZE commits):
-        # advance the watermark alone so the next refresh doesn't
-        # rescan the same empty range — re-applying "nothing" is safe
-        # even if this commit races a crash
-        rollup.set_properties({SOURCE_VERSION_PROP: str(cur_version)})
-        return cur_version
-
-    cur = rollup.to_df()
-    totals = (
-        cur.select(*group_cols, "n_events", "value_fp")
-        .unionByName(
-            delta.select(
-                *group_cols,
-                F.col("d_n").alias("n_events"),
-                F.col("d_fp").alias("value_fp"),
-            )
-        )
-        .groupBy(*group_cols)
-        .agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.sum("value_fp").cast("decimal(38,0)").alias("value_fp"),
-        )
-    )
-    # only groups the delta touched reach the MERGE, including groups
-    # whose count reached zero (they compile to the delete clause)
-    batch_totals = totals.join(
-        delta.select(*group_cols).distinct(), group_cols, "left_semi"
-    )
     rollup.merge(
-        KeyedMerge(
-            source=batch_totals,
-            condition=" AND ".join(
-                f"t.`{c}` <=> s.`{c}`" for c in group_cols
-            ),
-            matched_update={
-                "n_events": "s.`n_events`",
-                "value_fp": "s.`value_fp`",
-            },
-            matched_update_condition="s.`n_events` > 0",
-            matched_delete="s.`n_events` <= 0",
-            not_matched_insert="*",
-            not_matched_condition="s.`n_events` > 0",
-            target_key_col=group_cols[0],
-            source_key_col=group_cols[0],
-            null_safe=True,
-        ),
+        rollup_keyed_merge(delta, group_cols),
         # the watermark rides the merge COMMIT itself: either the
         # applied changes and the new watermark both land or neither
         # does, so a crash can never leave a state that re-applies
-        # (double-counts) the same change range on the next refresh
+        # (double-counts) the same change range on the next refresh.
+        # A range without row-level changes (e.g. OPTIMIZE commits)
+        # is an empty merge source: the commit then advances the
+        # watermark alone.
         extra_config={SOURCE_VERSION_PROP: str(cur_version)},
     )
     return cur_version
+
+
+def rollup_as_view(rollup: DeltaProtocolTable, group_cols: List[str]) -> DataFrame:
+    """Read the rollup with the fix-point sum decoded back to double."""
+    return rollup.to_df().select(
+        *group_cols,
+        "n_events",
+        (F.col("value_fp").cast("double") / F.lit(_FP)).alias("total_value"),
+    )

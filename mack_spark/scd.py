@@ -3,11 +3,10 @@
 Reference semantics: ``type_2_scd_upsert`` / ``type_2_scd_generic_upsert``
 (reference mack/__init__.py:11-141). The reference stages a dual-row
 source (the Delta "mergeKey" idiom, :107-114) and hands it to Delta
-MERGE. Without a MERGE executor, this engine computes the identical
-*post-state* as one lazy DataFrame plan and commits it in a single
-write — the plan shape (one join of base against broadcast updates,
-plus an anti-join for brand-new keys) is the same work MERGE's internal
-find-touched-files + rewrite joins do.
+MERGE; this engine builds the same staged source as a
+:class:`~mack_spark.tables.KeyedMerge` (:func:`scd2_keyed_merge`) and
+commits it with ``DeltaProtocolTable.merge`` — one commit that
+rewrites only the files holding an updated key.
 
 Parity-critical semantics preserved (SURVEY §2c.1-2):
 
@@ -19,22 +18,20 @@ Parity-critical semantics preserved (SURVEY §2c.1-2):
 * exact sorted column-set validation with the reference's error text
   (reference mack/__init__.py:84-96).
 
-SCALE: the updates side of an SCD feed is normally ≪ the dimension
-table — it is broadcast-hinted, so closing changed rows costs one scan
-of the base with no base-side shuffle. At 100 TB the commit layer
-should be Delta MERGE (file-pruned rewrite of only touched files); the
-staged plan here transfers unchanged.
+:func:`scd2_post_state` is the same upsert as one read-only lazy plan
+(the oracle harness and the property tests compare the two).
 """
 
 from __future__ import annotations
 
 from functools import reduce
-from typing import List, Union
+from typing import List
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mack_spark.tables import KeyedMerge, ManagedTable
+from mack_spark.sources.delta_log import DeltaProtocolTable
+from mack_spark.tables import KeyedMerge
 
 
 def scd2_keyed_merge(
@@ -50,10 +47,10 @@ def scd2_keyed_merge(
     dual-row idiom verbatim (reference mack/__init__.py:99-140): each
     update row is staged twice, once with ``mergeKey = NULL`` when it
     closes a changed current row (NULL never matches, forcing the
-    insert clause) and once with ``mergeKey = primary_key``. On a Delta
-    backend this compiles to ``DeltaTable.merge`` and rewrites only
-    files containing matched keys; the parquet backend ignores it in
-    favor of the equivalent ``scd2_post_state`` plan.
+    insert clause) and once with ``mergeKey = primary_key``.
+    ``DeltaProtocolTable.merge`` executes it, rewriting only files
+    containing matched keys; :func:`scd2_post_state` is the equivalent
+    post-state plan.
     """
     changed_sql = " OR ".join(
         f"staged.`{a}` <> base.`{a}`" for a in attr_col_names
@@ -95,14 +92,14 @@ def scd2_keyed_merge(
         ),
         not_matched_insert=insert_values,
         # condition is exactly base.pk = staged.mergeKey — the file-
-        # skipping contract _merge_keyed_files needs
+        # skipping contract DeltaProtocolTable.merge needs
         target_key_col=primary_key,
         source_key_col="mergeKey",
     )
 
 
 def type_2_scd_upsert(
-    table: ManagedTable,
+    table: DeltaProtocolTable,
     updates_df: DataFrame,
     primary_key: str,
     attr_col_names: List[str],
@@ -199,7 +196,7 @@ def scd2_post_state(
 
 
 def type_2_scd_generic_upsert(
-    table: ManagedTable,
+    table: DeltaProtocolTable,
     updates_df: DataFrame,
     primary_key: str,
     attr_col_names: List[str],
@@ -208,7 +205,7 @@ def type_2_scd_generic_upsert(
     end_time_col_name: str,
 ) -> None:
     """Generic SCD2 upsert (reference mack/__init__.py:43-141)."""
-    base = table.toDF()
+    base = table.to_df()
     base_col_names = base.columns
     required_base_col_names = (
         [primary_key]
@@ -226,46 +223,8 @@ def type_2_scd_generic_upsert(
             f"The updates DataFrame has these columns {updates_col_names!r}, but these columns are required {required_updates_col_names!r}"
         )
 
-    post = scd2_post_state(
-        base,
-        updates_df,
-        primary_key,
-        attr_col_names,
-        is_current_col_name,
-        effective_time_col_name,
-        end_time_col_name,
-    )
-
-    # File-pruned rewrite: an SCD2 upsert can only change rows whose key
-    # appears in the updates (closed versions keep their partition — the
-    # SCD metadata columns aren't partitionable) plus the new versions
-    # from the updates themselves. When the table is partitioned on
-    # key/attribute columns, collect that small set of touched partition
-    # values (bounded by the partition count) and let the backend rewrite
-    # only those partitions — the equivalent of Delta MERGE touching only
-    # files with matching keys (reference mack/__init__.py:125-139).
-    touched = None
-    parts = table.detail()["partitionColumns"]
-    scd_meta_cols = {is_current_col_name, effective_time_col_name, end_time_col_name}
-    if parts and not (set(parts) & scd_meta_cols):
-        keys = F.broadcast(updates_df.select(primary_key).distinct())
-        touched_rows = (
-            base.join(keys, primary_key)
-            .select(*parts)
-            .unionByName(updates_df.select(*parts))
-            .distinct()
-            .collect()
-        )
-        touched = [row.asDict() for row in touched_rows]
-    # Unpartitioned tables get FILE-pruned rewrite instead: an SCD2
-    # upsert only touches rows whose primary key appears in the updates,
-    # so files whose key range misses every update key are hard-linked.
-    table.merge_overwrite(
-        post,
-        operation="MERGE",
-        touched_partitions=touched,
-        touched_keys=(primary_key, updates_df.select(primary_key)),
-        keyed_merge=scd2_keyed_merge(
+    table.merge(
+        scd2_keyed_merge(
             base,
             updates_df,
             primary_key,
@@ -273,5 +232,5 @@ def type_2_scd_generic_upsert(
             is_current_col_name,
             effective_time_col_name,
             end_time_col_name,
-        ),
+        )
     )

@@ -15,15 +15,17 @@ events_hourly (tumbling agg) :func:`tumbling_counts` (watermark +
 sessionize                   :func:`session_counts` (``session_window``
                              with the same gap semantics)
 type_2_scd_upsert            :func:`foreach_batch_scd2` (per-microbatch
-                             MERGE into a ManagedTable)
+                             MERGE into a DeltaProtocolTable)
 ===========================  =========================================
 
 SCALE: watermarks bound state (late rows beyond the watermark are
 dropped); ``dropDuplicatesWithinWatermark`` keeps only in-horizon keys
-in the state store. foreachBatch SCD2 is idempotent per epoch when the
-sink records the batch id — ManagedTable history stores
-``streaming_epoch`` so replayed microbatches can be skipped (the
-txnAppId/txnVersion pattern Delta uses).
+in the state store. The foreachBatch sinks are idempotent per epoch:
+each microbatch commits as ONE ``DeltaProtocolTable.merge`` whose
+commit also records the epoch id in the ``mack.streaming.epoch`` table
+property (an empty microbatch commits the epoch alone), and a replayed
+epoch at or below the recorded one is skipped (Delta's
+txnAppId/txnVersion rule).
 """
 
 from __future__ import annotations
@@ -33,8 +35,19 @@ from typing import Callable, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mack_spark.scd import scd2_keyed_merge, scd2_post_state
-from mack_spark.tables import KeyedMerge, ManagedTable
+from mack_spark.rollup import rollup_keyed_merge
+from mack_spark.scd import scd2_keyed_merge
+from mack_spark.sources.delta_log import DeltaProtocolTable
+
+STREAMING_EPOCH_PROP = "mack.streaming.epoch"
+
+
+def _epoch_applied(table: DeltaProtocolTable, epoch_id: int) -> bool:
+    """True when the table already holds microbatch ``epoch_id``: the
+    epoch recorded by the last sink commit is at or above it."""
+    config = table.snapshot().metadata.get("configuration") or {}
+    done = config.get(STREAMING_EPOCH_PROP)
+    return done is not None and epoch_id <= int(done)
 
 
 def drain_available_now(start_query, max_runs: int = 1000) -> int:
@@ -286,7 +299,7 @@ def latest_state_per_key(df: DataFrame, key_col: str, version_col: str) -> DataF
 
 
 def foreach_batch_scd2(
-    table: ManagedTable,
+    table: DeltaProtocolTable,
     primary_key: str,
     attr_col_names: List[str],
     is_current_col_name: str = "is_current",
@@ -294,11 +307,12 @@ def foreach_batch_scd2(
     end_time_col_name: str = "end_time",
 ):
     """Build a ``foreachBatch`` function applying each microbatch as an
-    SCD2 upsert into a ManagedTable.
+    SCD2 upsert (:func:`~mack_spark.scd.scd2_keyed_merge`) into a
+    DeltaProtocolTable.
 
-    Idempotent on retries: each applied epoch id is recorded in the
-    table history; a replayed microbatch with an already-applied epoch
-    is skipped (txnVersion pattern).
+    Idempotent on retries: the merge commit records the epoch id, and a
+    replayed microbatch whose epoch is at or below it is skipped
+    (txnVersion pattern).
 
     Usage::
 
@@ -308,14 +322,7 @@ def foreach_batch_scd2(
     """
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        applied = {
-            h.get("streaming_epoch")
-            for h in table.history()
-            if h.get("streaming_epoch") is not None
-        }
-        if epoch_id in applied:
-            return
-        if batch_df.isEmpty():
+        if _epoch_applied(table, epoch_id):
             return
         # Late/duplicate keys inside one microbatch: keep the latest
         # effective_time per key so the merge sees one row per key.
@@ -329,28 +336,12 @@ def foreach_batch_scd2(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        post = scd2_post_state(
-            table.toDF(),
-            deduped,
-            primary_key,
-            attr_col_names,
-            is_current_col_name,
-            effective_time_col_name,
-            end_time_col_name,
-        )
-        # File-pruned per-epoch commit: a micro-batch touches only its
-        # own keys, so on a key-clustered table each epoch rewrites only
-        # the files whose range the batch hits (tables.py footer-stats
-        # pruning); the keyed descriptor keeps that property on
-        # UNCLUSTERED layouts too (exact touched-file scan,
-        # tables.py _merge_keyed_files) — per-epoch MERGE cost stays
-        # proportional to batch size, not table size, at 100 TB.
-        table.merge_overwrite(
-            post,
-            operation="STREAMING-MERGE",
-            touched_keys=(primary_key, deduped.select(primary_key)),
-            keyed_merge=scd2_keyed_merge(
-                table.toDF(),
+        # a micro-batch touches only its own keys, so each epoch
+        # rewrites only the files holding them — per-epoch MERGE cost
+        # stays proportional to batch size, not table size
+        table.merge(
+            scd2_keyed_merge(
+                table.to_df(),
                 deduped,
                 primary_key,
                 attr_col_names,
@@ -358,16 +349,14 @@ def foreach_batch_scd2(
                 effective_time_col_name,
                 end_time_col_name,
             ),
+            extra_config={STREAMING_EPOCH_PROP: str(epoch_id)},
         )
-        meta = table._read_meta()
-        meta["history"][-1]["streaming_epoch"] = epoch_id
-        table._write_meta(meta)
 
     return apply_batch
 
 
 def foreach_batch_scd2_cdf(
-    table: ManagedTable,
+    table: DeltaProtocolTable,
     primary_key: str,
     attr_col_names: List[str],
     is_current_col_name: str = "is_current",
@@ -397,25 +386,23 @@ def foreach_batch_scd2_cdf(
     from the HIGHEST ``_commit_version`` wins (latest state), matching
     what a per-commit replay would converge to.
 
+    Each microbatch is ONE merge: the upserts are staged exactly as in
+    :func:`~mack_spark.scd.scd2_keyed_merge`, and each delete is one
+    more staged row that matches its key's current row, closes it at
+    ``_commit_timestamp`` and never takes the insert clause.
     Idempotent on retries via the same epoch-id txn pattern as
     :func:`foreach_batch_scd2`.
 
-    SCALE: each microbatch is O(changed rows); the merge commit prunes
-    to the touched keys' files (``merge_overwrite(touched_keys=...)``),
-    so following a 100 TB upstream costs the change volume, never a
-    table rescan.
+    SCALE: each microbatch is O(changed rows); the merge rewrites only
+    the files holding the touched keys, so following a 100 TB upstream
+    costs the change volume, never a table rescan.
     """
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        applied = {
-            h.get("streaming_epoch")
-            for h in table.history()
-            if h.get("streaming_epoch") is not None
-        }
-        if epoch_id in applied:
+        if _epoch_applied(table, epoch_id):
             return
-        if batch_df.isEmpty():
-            return
+        import dataclasses
+
         from pyspark.sql import Window
 
         changes = batch_df.filter(
@@ -435,20 +422,11 @@ def foreach_batch_scd2_cdf(
             .drop("__rn")
         ).persist()
         try:
-            table_cols = [
-                c for c in table.toDF().columns
-            ]
-            ups = latest.filter(
-                F.col("_change_type") != "delete"
-            ).select(
-                *[c for c in table_cols if c in latest.columns]
-            )
-            dels = latest.filter(F.col("_change_type") == "delete").select(
-                primary_key,
-                F.col("_commit_timestamp").alias("__close_ts"),
-            )
-            base = table.toDF()
-            post = scd2_post_state(
+            base = table.to_df()
+            upd_cols = [c for c in base.columns if c in latest.columns]
+            is_del = F.col("_change_type") == "delete"
+            ups = latest.filter(~is_del).select(*upd_cols)
+            km = scd2_keyed_merge(
                 base,
                 ups,
                 primary_key,
@@ -457,38 +435,38 @@ def foreach_batch_scd2_cdf(
                 effective_time_col_name,
                 end_time_col_name,
             )
-            # deletes: close the key's CURRENT row at the commit time;
-            # latest-wins above guarantees ups/dels keys are disjoint
-            closed = (
-                post.join(F.broadcast(dels), primary_key, "left")
-                .withColumn(
-                    end_time_col_name,
-                    F.when(
-                        F.col("__close_ts").isNotNull()
-                        & F.col(is_current_col_name),
-                        F.col("__close_ts"),
-                    ).otherwise(F.col(end_time_col_name)),
-                )
-                .withColumn(
-                    is_current_col_name,
-                    F.when(
-                        F.col("__close_ts").isNotNull(), F.lit(False)
-                    ).otherwise(F.col(is_current_col_name)),
-                )
-                .drop("__close_ts")
+            # every staged row carries its close time (__end) and
+            # whether it is a delete; latest-wins above keeps the
+            # upsert and delete key sets disjoint
+            staged = km.source.withColumn(
+                "__end", F.col(effective_time_col_name)
+            ).withColumn("__del", F.lit(False))
+            closes = latest.filter(is_del).select(
+                F.col(primary_key).alias("mergeKey"),
+                *upd_cols,
+                F.col("_commit_timestamp").alias("__end"),
+                F.lit(True).alias("__del"),
             )
-            table.merge_overwrite(
-                closed,
-                operation="STREAMING-CDF-SCD2",
-                touched_keys=(
-                    primary_key, latest.select(primary_key).distinct()
+            s = km.source_alias
+            table.merge(
+                dataclasses.replace(
+                    km,
+                    source=staged.unionByName(closes),
+                    matched_update={
+                        is_current_col_name: "false",
+                        end_time_col_name: f"{s}.__end",
+                    },
+                    matched_update_condition=(
+                        f"({km.matched_update_condition}) OR"
+                        f" ({km.target_alias}.`{is_current_col_name}`"
+                        f" = true AND {s}.__del)"
+                    ),
+                    not_matched_condition=f"NOT {s}.__del",
                 ),
+                extra_config={STREAMING_EPOCH_PROP: str(epoch_id)},
             )
         finally:
             latest.unpersist(blocking=False)
-        meta = table._read_meta()
-        meta["history"][-1]["streaming_epoch"] = epoch_id
-        table._write_meta(meta)
 
     return apply_batch
 
@@ -544,80 +522,35 @@ def stream_stream_attribution(
 
 
 def foreach_batch_rollup(
-    table: ManagedTable,
+    table: DeltaProtocolTable,
     group_cols: List[str],
 ):
     """Build a ``foreachBatch`` function maintaining a continuous
     aggregate (a "hypertable rollup"): the target table keeps one row
     per ``group_cols`` with running ``n_events`` / ``value_fp`` (the
     fix-pointed value sum), updated by MERGING each microbatch's
-    partial aggregate.
+    partial aggregate (:func:`~mack_spark.rollup.rollup_keyed_merge`).
 
     The incremental-view-maintenance pattern for streaming rollups:
     each microbatch is aggregated DOWN to one row per touched group
     first (count + decimal sum are mergeable partials), so the merge
     touches O(groups-in-batch) rows, not O(events). Replays are
-    idempotent via recorded epoch ids, the same txnVersion trick as
+    idempotent via the recorded epoch id, the same txnVersion rule as
     :func:`foreach_batch_scd2`.
     """
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        applied = {
-            h.get("streaming_epoch")
-            for h in table.history()
-            if h.get("streaming_epoch") is not None
-        }
-        if epoch_id in applied:
-            return
-        if batch_df.isEmpty():
+        if _epoch_applied(table, epoch_id):
             return
         partial = batch_df.groupBy(*group_cols).agg(
-            F.count("*").alias("n_events"),
+            F.count("*").alias("d_n"),
             F.sum(
                 F.floor(F.col("value") * F.lit(10000.0)).cast("decimal(38,0)")
-            ).alias("value_fp"),
+            ).alias("d_fp"),
         )
-        cur = table.toDF()
-        merged = (
-            cur.unionByName(partial)
-            .groupBy(*group_cols)
-            .agg(
-                F.sum("n_events").alias("n_events"),
-                F.sum("value_fp").alias("value_fp"),
-            )
+        table.merge(
+            rollup_keyed_merge(partial, group_cols),
+            extra_config={STREAMING_EPOCH_PROP: str(epoch_id)},
         )
-        # Groups absent from this batch aggregate to themselves —
-        # identity outside the batch's keys, so footer-stats pruning
-        # applies on a key-clustered rollup table; the keyed descriptor
-        # (update matched group totals, insert new groups) extends the
-        # per-epoch pruning to unclustered layouts.
-        batch_totals = merged.join(
-            partial.select(*group_cols).distinct(), group_cols, "left_semi"
-        )
-        table.merge_overwrite(
-            merged,
-            operation="STREAMING-ROLLUP",
-            touched_keys=(group_cols[0], partial.select(group_cols[0])),
-            keyed_merge=KeyedMerge(
-                source=batch_totals,
-                # null-safe: groupBy put NULL keys in one group, so the
-                # merge must match them too (plain = would insert a
-                # duplicate NULL-keyed group instead of updating it)
-                condition=" AND ".join(
-                    f"t.`{c}` <=> s.`{c}`" for c in group_cols
-                ),
-                matched_update={
-                    "n_events": "s.`n_events`",
-                    "value_fp": "s.`value_fp`",
-                },
-                not_matched_insert="*",
-                target_key_col=group_cols[0],
-                source_key_col=group_cols[0],
-                null_safe=True,
-            ),
-        )
-        meta = table._read_meta()
-        meta["history"][-1]["streaming_epoch"] = epoch_id
-        table._write_meta(meta)
 
     return apply_batch

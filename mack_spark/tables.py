@@ -1,17 +1,23 @@
-"""Versioned-parquet managed tables — the engine's transactional substrate.
+"""Versioned-parquet managed tables, the ``KeyedMerge`` descriptor and
+the table-level utilities.
 
-The reference (MrPowers/mack) is a library of operations over Delta Lake
-tables: ACID parquet + a ``_delta_log`` (reference mack/__init__.py:4 and
-all ``DeltaTable`` call sites). This environment has no delta-spark, so
-the engine supplies a minimal table layout with the same *observable*
-metadata surface the reference consumes:
+mack's row-level mutations (SCD2 upsert, the dedup family, guarded
+appends, rollups, the foreachBatch sinks) all commit through one
+substrate: the Delta-protocol table
+(:class:`mack_spark.sources.delta_log.DeltaProtocolTable`), whose
+``merge`` executes a :class:`KeyedMerge` with Delta's file-pruned
+rewrite (reference mack/__init__.py:125-139, :190-192).
+
+:class:`ManagedTable` is the store for the engine's index tables (IVF,
+LSH and near-dup indexes) and the target of the copy, clone, vacuum and
+size helpers. It supports create, read and time travel, append,
+overwrite, properties and ``optimize_compact``; it has no MERGE. It
+keeps the metadata surface those users consume:
 
 * a version counter + operation history  (→ ``latest_version``,
   reference mack/__init__.py:616-627)
-* table properties incl. check constraints (→ ``constraint_append``,
-  reference mack/__init__.py:658-661)
-* declared column nullability              (→ NOT-NULL constraint harvest,
-  reference mack/__init__.py:664-667)
+* table properties incl. check constraints
+* declared column nullability
 * partition columns + file statistics      (→ ``copy_table`` /
   ``delta_file_sizes``, reference mack/__init__.py:310, :469)
 
@@ -21,18 +27,9 @@ Layout::
     <path>/v=<K>/*.parquet      snapshot directory for commit K
 
 Appends add parquet files to the current snapshot directory (no rewrite,
-distributed write). Mutations (merge-like ops) materialize the post-state
-into a fresh ``v=K`` directory then atomically swing the meta pointer —
-readers never observe a half-written snapshot.
-
-SCALE: this layer is a test-environment stand-in. At 100 TB the same
-operator code paths run against Delta (``.write.format("delta")`` and
-``DeltaTable.merge``) — every operator in this package expresses its
-post-state / staged rows as a single lazy DataFrame plan, which is
-exactly what Delta MERGE consumes, so swapping the commit layer does not
-touch operator logic. The parquet backend's full-snapshot rewrite on
-merge is the one place Delta is strictly better (file-pruned rewrite);
-the plan shape (join → filter → union) is identical.
+distributed write). Overwrites materialize a fresh ``v=K`` directory
+then atomically swing the meta pointer — readers never observe a
+half-written snapshot.
 """
 
 from __future__ import annotations
@@ -41,15 +38,12 @@ import dataclasses
 import datetime
 import json
 import os
-import pathlib
 import shutil
 import time
 import uuid
 from typing import Dict, List, Optional, Union
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 META_FILE = "_mack_meta.json"
@@ -64,14 +58,13 @@ STALE_COMMIT_TTL_SECONDS = 300.0
 
 @dataclasses.dataclass
 class KeyedMerge:
-    """Declarative description of a keyed MERGE, for backends with a
-    native MERGE executor (Delta Lake). Operators that can express
-    their mutation as match/insert/delete clauses attach one of these
-    alongside the post-state plan; the parquet ManagedTable ignores it
-    (it commits the post-state), while DeltaBackedTable compiles it to
-    ``DeltaTable.merge`` — Delta then rewrites only files with matching
-    keys (reference mack/__init__.py:125-139), the file-pruned behavior
-    the reference gets for free.
+    """Declarative description of a keyed MERGE — the clauses of
+    ``DeltaTable.alias(...).merge(...)``. mack's mutating functions
+    build one and hand it to
+    :meth:`~mack_spark.sources.delta_log.DeltaProtocolTable.merge`,
+    which rewrites only the files holding matching keys (reference
+    mack/__init__.py:125-139); :mod:`mack_spark.merge_exec` holds the
+    clause semantics.
 
     ``condition`` and every expression string are SQL over
     ``target_alias`` / ``source_alias`` columns, exactly as
@@ -104,75 +97,15 @@ class KeyedMerge:
     not_matched_by_source_update: Optional[Dict[str, str]] = None
     not_matched_by_source_update_condition: Optional[str] = None
     not_matched_by_source_delete: Union[bool, str, None] = None
-    # Optional file-skipping contract: when set, the builder asserts
-    # that ``condition`` IMPLIES ``t.target_key_col = s.source_key_col``
-    # (``<=>`` when null_safe) — i.e. a target row can only match when
-    # its key equals some source key. ManagedTable then executes the
-    # descriptor natively with file-level pruning
-    # (:meth:`ManagedTable._merge_keyed_files`): exactly the files
-    # containing matched keys are rewritten, everything else is
-    # hard-linked — Delta MERGE's two-phase shape on parquet.
+    # File-skipping contract: the caller asserts that ``condition``
+    # IMPLIES ``t.target_key_col = s.source_key_col`` (``<=>`` when
+    # null_safe) — i.e. a target row can only match when its key
+    # equals some source key. DeltaProtocolTable.merge requires it and
+    # uses per-file key statistics to leave every file whose key range
+    # misses the source keys untouched — Delta MERGE's phase-1 skip.
     target_key_col: Optional[str] = None
     source_key_col: Optional[str] = None
     null_safe: bool = False
-
-
-def apply_keyed_merge(dt, km: KeyedMerge) -> None:
-    """Compile a :class:`KeyedMerge` onto a ``DeltaTable``-shaped merge
-    builder (``alias → merge → whenMatched*/whenNotMatched* → execute``).
-    Factored out of DeltaBackedTable so the clause construction is
-    testable without delta-spark on the classpath
-    (tests/test_backend_seam.py drives it with a recording fake)."""
-    m = dt.alias(km.target_alias).merge(
-        km.source.alias(km.source_alias), km.condition
-    )
-    if km.matched_update == "*":
-        if km.matched_update_condition:
-            m = m.whenMatchedUpdateAll(condition=km.matched_update_condition)
-        else:
-            m = m.whenMatchedUpdateAll()
-    elif km.matched_update:
-        if km.matched_update_condition:
-            m = m.whenMatchedUpdate(
-                condition=km.matched_update_condition, set=km.matched_update
-            )
-        else:
-            m = m.whenMatchedUpdate(set=km.matched_update)
-    if km.matched_delete:
-        if isinstance(km.matched_delete, str):
-            m = m.whenMatchedDelete(condition=km.matched_delete)
-        else:
-            m = m.whenMatchedDelete()
-    if km.not_matched_insert == "*":
-        if km.not_matched_condition:
-            m = m.whenNotMatchedInsertAll(condition=km.not_matched_condition)
-        else:
-            m = m.whenNotMatchedInsertAll()
-    elif isinstance(km.not_matched_insert, dict):
-        if km.not_matched_condition:
-            m = m.whenNotMatchedInsert(
-                condition=km.not_matched_condition, values=km.not_matched_insert
-            )
-        else:
-            m = m.whenNotMatchedInsert(values=km.not_matched_insert)
-    if km.not_matched_by_source_update:
-        if km.not_matched_by_source_update_condition:
-            m = m.whenNotMatchedBySourceUpdate(
-                condition=km.not_matched_by_source_update_condition,
-                set=km.not_matched_by_source_update,
-            )
-        else:
-            m = m.whenNotMatchedBySourceUpdate(
-                set=km.not_matched_by_source_update
-            )
-    if km.not_matched_by_source_delete:
-        if isinstance(km.not_matched_by_source_delete, str):
-            m = m.whenNotMatchedBySourceDelete(
-                condition=km.not_matched_by_source_delete
-            )
-        else:
-            m = m.whenNotMatchedBySourceDelete()
-    m.execute()
 
 
 class ConcurrentModificationError(RuntimeError):
@@ -711,190 +644,6 @@ class ManagedTable:
         for d in to_delete:
             shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
 
-    def _file_key_stats(self, files: List[str], key_col: str):
-        """Per-file (min, max, has_nulls) of ``key_col`` from parquet
-        footers — a driver-side metadata-only read, O(#files), the same
-        information Delta keeps per-file in its transaction log
-        (``stats.minValues/maxValues/nullCount``). Returns ``None`` for
-        a file whose statistics are missing (caller must disable
-        pruning — a range-less file voids the disjointness closure)."""
-        import pyarrow.parquet as pq
-
-        out = {}
-        for path in files:
-            try:
-                md = pq.ParquetFile(path).metadata
-            except Exception:
-                out[path] = None
-                continue
-            idx = None
-            if md.num_row_groups > 0:
-                rg0 = md.row_group(0)
-                for j in range(rg0.num_columns):
-                    if rg0.column(j).path_in_schema == key_col:
-                        idx = j
-                        break
-            if idx is None:
-                out[path] = None
-                continue
-            lo = hi = None
-            nulls = False
-            ok = True
-            for g in range(md.num_row_groups):
-                col = md.row_group(g).column(idx)
-                st = col.statistics
-                if st is None or not st.has_min_max:
-                    ok = False
-                    break
-                if st.null_count is None or st.null_count > 0:
-                    nulls = True
-                mn, mx = st.min, st.max
-                # Footers without a UTF8 annotation surface BYTE_ARRAY
-                # stats as bytes; normalize so they compare with the
-                # declared string type. (parquet truncates long string
-                # stats but keeps them valid bounds — min rounded down,
-                # max incremented — so pruning stays correct.)
-                if isinstance(mn, bytes):
-                    mn = mn.decode("utf-8", "surrogateescape")
-                if isinstance(mx, bytes):
-                    mx = mx.decode("utf-8", "surrogateescape")
-                lo = mn if lo is None else min(lo, mn)
-                hi = mx if hi is None else max(hi, mx)
-            out[path] = (lo, hi, nulls) if ok and lo is not None else None
-        return out
-
-    def _merge_file_pruned(
-        self, post_state: DataFrame, operation: str, meta: dict, touched_keys: tuple
-    ) -> bool:
-        """File-pruned rewrite for an unpartitioned table. Returns False
-        when pruning is impossible (missing stats, unsupported key type,
-        every file touched) — caller falls back to the full overwrite.
-
-        Correctness argument: after the range-overlap closure, every
-        untouched file's [min,max] is disjoint from every touched file's
-        range. The rewrite keeps exactly the post-state rows NOT covered
-        by an untouched interval — that region contains all rows of all
-        touched files, all inserted out-of-range keys, and (when any
-        file can hold NULL keys, those files are forced touched) all
-        NULL-key rows; untouched files are byte-identical hard links, so
-        no row is duplicated and none is lost.
-        """
-        from pyspark.sql.types import (
-            ByteType,
-            DateType,
-            DoubleType,
-            FloatType,
-            IntegerType,
-            LongType,
-            ShortType,
-            StringType,
-            StructField,
-            TimestampType,
-        )
-
-        key_col, keys_df = touched_keys
-        declared = StructType.fromJson(json.loads(meta["schema"]))
-        if key_col not in declared.fieldNames():
-            return False
-        key_type = declared[key_col].dataType
-        if not isinstance(
-            key_type,
-            (ByteType, ShortType, IntegerType, LongType, FloatType,
-             DoubleType, StringType, DateType, TimestampType),
-        ):
-            return False
-        files = self._data_files()
-        if len(files) < 2:
-            return False
-        stats = self._file_key_stats(files, key_col)
-        if any(s is None for s in stats.values()):
-            # A range-less file (unreadable footer, key column absent —
-            # e.g. written before a merge_schema append added the key —
-            # or writer-suppressed min/max) breaks the disjointness
-            # closure: its rows could fall inside an untouched file's
-            # [min,max] and be excluded by the rewrite filter while the
-            # file itself is never hard-linked. Pruning is only sound
-            # when every file has trustworthy stats.
-            return False
-        known = dict(stats)
-        touched = set()
-        # Which files can contain a touched key: broadcast the per-file
-        # ranges (one short row per file) and range-join the key set —
-        # the distributed twin of Delta's stats-vs-predicate file skip.
-        flist = sorted(known)
-        ranges_df = self.spark.createDataFrame(
-            [(i, known[f][0], known[f][1]) for i, f in enumerate(flist)],
-            StructType(
-                [
-                    StructField("fid", LongType()),
-                    StructField("lo", key_type),
-                    StructField("hi", key_type),
-                ]
-            ),
-        )
-        # Evaluate the caller's key plan ONCE: it is consumed twice here
-        # (range join + NULL probe) and may be arbitrarily expensive
-        # (e.g. a dup-detection aggregate over the whole table). The
-        # checkpointed relation is one narrow column of touched keys.
-        keys = (
-            keys_df.select(F.col(key_col).alias("__k"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        touched_ids = {
-            r.fid
-            for r in keys.join(
-                F.broadcast(ranges_df),
-                (F.col("__k") >= F.col("lo")) & (F.col("__k") <= F.col("hi")),
-            )
-            .select("fid")
-            .distinct()
-            .collect()
-        }
-        touched |= {flist[i] for i in touched_ids}
-        # NULL keys carry no min/max: any file that may hold them is
-        # rewritten so NULL-key rows live only in the rewrite region;
-        # a NULL in the touched-key set (possible for dedup group keys)
-        # likewise forces NULL rows into the rewrite.
-        null_files = {f for f, s in known.items() if s[2]}
-        keys_have_null = keys.filter(F.col("__k").isNull()).limit(1).count() > 0
-        include_nulls = bool(null_files) or keys_have_null
-        touched |= null_files
-        # Closure: untouched ranges must be disjoint from touched ones,
-        # else a touched file's row could fall inside an untouched
-        # interval and be dropped by the rewrite filter.
-        changed = True
-        while changed:
-            changed = False
-            tranges = [known[f][:2] for f in touched if f in known]
-            for f in flist:
-                if f in touched:
-                    continue
-                lo, hi = known[f][0], known[f][1]
-                if any(hi >= tlo and lo <= thi for tlo, thi in tranges):
-                    touched.add(f)
-                    changed = True
-        untouched = [f for f in files if f not in touched]
-        if not untouched:
-            return False
-        ivs = sorted((known[f][0], known[f][1]) for f in untouched)
-        merged = [list(ivs[0])]
-        for lo, hi in ivs[1:]:
-            if lo <= merged[-1][1]:
-                merged[-1][1] = max(merged[-1][1], hi)
-            else:
-                merged.append([lo, hi])
-        in_untouched = F.lit(False)
-        for lo, hi in merged:
-            in_untouched = in_untouched | F.col(key_col).between(F.lit(lo), F.lit(hi))
-        rewrite_cond = ~in_untouched
-        if include_nulls:
-            rewrite_cond = rewrite_cond | F.col(key_col).isNull()
-        self._commit_partial_rewrite(
-            meta, operation, post_state.filter(rewrite_cond), untouched
-        )
-        return True
-
     def _commit_partial_rewrite(
         self,
         meta: dict,
@@ -932,346 +681,6 @@ class ManagedTable:
         for d in to_delete:
             shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
 
-    def _execute_merge_clauses(
-        self, target: DataFrame, km: KeyedMerge, declared: StructType
-    ) -> DataFrame:
-        """Apply a :class:`KeyedMerge`'s clauses to ``target`` with
-        Delta's MERGE semantics: first applicable matched clause in
-        registration order (update, then delete), NULL clause condition
-        = not applicable, ambiguous multi-source match raises, source
-        rows matching nothing take the insert clause, every output
-        column cast to the declared schema. The independent verifier
-        for these semantics is tests/merge_interpreter.py (the two are
-        deliberately separate implementations)."""
-        t, s = km.target_alias, km.source_alias
-        out_cols = [f.name for f in declared.fields]
-        tb = target.withColumn("__tid", F.monotonically_increasing_id()).alias(t)
-        src = km.source.alias(s)
-        on = F.expr(km.condition)
-        pairs = tb.join(src, on, "inner")
-        ambiguous = (
-            pairs.groupBy("__tid").count().filter(F.col("count") > 1).limit(1).count()
-        )
-        if ambiguous:
-            raise ValueError(
-                "ambiguous merge: a target row is matched by multiple source rows"
-            )
-        if km.matched_update is None:
-            upd = F.lit(False)
-        elif km.matched_update_condition is None:
-            upd = F.lit(True)
-        else:
-            upd = F.coalesce(F.expr(km.matched_update_condition), F.lit(False))
-        if km.matched_delete is None:
-            dele = F.lit(False)
-        elif km.matched_delete is True:
-            dele = F.lit(True)
-        else:
-            dele = F.coalesce(F.expr(km.matched_delete), F.lit(False))
-        src_cols = set(km.source.columns)
-
-        def _upd_expr(c):
-            if km.matched_update == "*":
-                # UPDATE SET *: same-named source column when present,
-                # else the target value carries through
-                if c in src_cols:
-                    return F.col(f"{s}.`{c}`")
-                return F.col(f"{t}.`{c}`")
-            if c in (km.matched_update or {}):
-                return F.expr(km.matched_update[c])
-            return F.col(f"{t}.`{c}`")
-
-        updated = pairs.where(upd).select(
-            *[_upd_expr(c).alias(c) for c in out_cols]
-        )
-        kept = pairs.where(~upd & ~dele).select(
-            *[F.col(f"{t}.`{c}`").alias(c) for c in out_cols]
-        )
-        unmatched = tb.join(src, on, "left_anti").select(
-            *[F.col(f"`{c}`").alias(c) for c in out_cols]
-        )
-        result = updated.unionByName(kept).unionByName(unmatched)
-        if km.not_matched_insert is not None:
-            new_src = src.join(tb, on, "left_anti")
-            if km.not_matched_condition:
-                new_src = new_src.where(
-                    F.coalesce(F.expr(km.not_matched_condition), F.lit(False))
-                )
-            if km.not_matched_insert == "*":
-                inserts = new_src.select(
-                    *[
-                        (
-                            F.col(f"{s}.`{c}`") if c in src_cols
-                            else F.lit(None)
-                        ).alias(c)
-                        for c in out_cols
-                    ]
-                )
-            else:
-                inserts = new_src.select(
-                    *[
-                        (
-                            F.expr(km.not_matched_insert[c])
-                            if c in km.not_matched_insert else F.lit(None)
-                        ).alias(c)
-                        for c in out_cols
-                    ]
-                )
-            result = result.unionByName(inserts)
-        for f in declared.fields:
-            result = result.withColumn(f.name, F.col(f.name).cast(f.dataType))
-        return result
-
-    def _merge_keyed_files(
-        self, km: Optional[KeyedMerge], operation: str, meta: dict
-    ) -> bool:
-        """Native execution of a :class:`KeyedMerge` with Delta MERGE's
-        two-phase file-level shape, for unpartitioned tables. Returns
-        False when inapplicable — caller falls back.
-
-        Phase 1 (find touched files): footer min/max stats skip files
-        whose range misses every source key (no false negatives; files
-        with missing stats simply stay candidates — unlike the interval
-        rewrite there is NO disjointness closure to void, because
-        provenance is explicit); then the candidates' key column is
-        scanned with ``_metadata.file_path`` and semi-joined against the
-        distinct source keys — EXACTLY the files containing a matched
-        key survive (this is Delta MERGE job 1: a columnar key scan +
-        shuffle join, no full-width read). Phase 2 (rewrite): only the
-        touched files' rows flow through the merge clauses; every other
-        file is hard-linked byte-identical. Correctness rests on the
-        descriptor contract that ``condition`` implies key equality
-        (KeyedMerge.target_key_col), so a matched target row can only
-        live in a touched file, and source rows that match no touched
-        row match nothing — inserts computed against the touched subset
-        equal inserts against the full table.
-
-        This strictly beats the interval rewrite on UNCLUSTERED layouts:
-        overlapping ranges collapse the interval closure to a full
-        rewrite, while the exact key scan still prunes every file that
-        merely range-overlaps without containing a matched key.
-        """
-        if km is None or not km.target_key_col or not km.source_key_col:
-            return False
-        if (
-            km.not_matched_by_source_update
-            or km.not_matched_by_source_delete
-        ):
-            # not-matched-by-source clauses touch rows in ANY file —
-            # key pruning is invalid; fall back to the post-state path
-            return False
-        if meta["partition_columns"]:
-            return False
-        declared = StructType.fromJson(json.loads(meta["schema"]))
-        key_col = km.target_key_col
-        if key_col not in declared.fieldNames():
-            return False
-        files = self._data_files()
-        if len(files) < 2:
-            return False
-        # The source plan is consumed by key extraction, the pair join,
-        # and the insert anti-join; evaluate it once.
-        source = km.source.localCheckpoint(eager=True)
-        km = dataclasses.replace(km, source=source)
-        keys = source.select(F.col(km.source_key_col).alias("__k")).distinct()
-        nn_keys = keys.filter(F.col("__k").isNotNull()).localCheckpoint(eager=True)
-        keys_have_null = (
-            km.null_safe
-            and keys.filter(F.col("__k").isNull()).limit(1).count() > 0
-        )
-        stats = self._file_key_stats(files, key_col)
-        known = {f: s for f, s in stats.items() if s is not None}
-        cands = {f for f in files if stats[f] is None}
-        key_type = declared[key_col].dataType
-        from pyspark.sql.types import (
-            ByteType, DateType, DoubleType, FloatType, IntegerType,
-            LongType, ShortType, StringType, StructField, TimestampType,
-        )
-        rangeable = isinstance(
-            key_type,
-            (ByteType, ShortType, IntegerType, LongType, FloatType,
-             DoubleType, StringType, DateType, TimestampType),
-        )
-        if known and rangeable:
-            flist = sorted(known)
-            ranges_df = self.spark.createDataFrame(
-                [(i, known[f][0], known[f][1]) for i, f in enumerate(flist)],
-                StructType(
-                    [
-                        StructField("fid", LongType()),
-                        StructField("lo", key_type),
-                        StructField("hi", key_type),
-                    ]
-                ),
-            )
-            hit_ids = {
-                r.fid
-                for r in nn_keys.join(
-                    F.broadcast(ranges_df),
-                    (F.col("__k") >= F.col("lo")) & (F.col("__k") <= F.col("hi")),
-                )
-                .select("fid")
-                .distinct()
-                .collect()
-            }
-            cands |= {flist[i] for i in hit_ids}
-            if keys_have_null:
-                cands |= {f for f, s in known.items() if s[2]}
-        else:
-            cands |= set(known)
-        if cands:
-            scan = (
-                self.spark.read.schema(declared)
-                .parquet(*sorted(cands))
-                .select(
-                    F.col("_metadata.file_path").alias("__file"),
-                    F.col(key_col).alias("__tk"),
-                )
-            )
-            match = (
-                F.col("__tk").eqNullSafe(F.col("__k"))
-                if km.null_safe
-                else F.col("__tk") == F.col("__k")
-            )
-            touched_uris = {
-                r["__file"]
-                for r in scan.join(keys, match, "left_semi")
-                .select("__file")
-                .distinct()
-                .collect()
-            }
-        else:
-            touched_uris = set()
-        # _metadata.file_path is a URI; map back to local paths.
-        uri_of = {pathlib.Path(f).resolve().as_uri(): f for f in files}
-        touched = set()
-        for u in touched_uris:
-            if u in uri_of:
-                touched.add(uri_of[u])
-            else:  # pragma: no cover - non-file scheme or symlinked root
-                touched.add(unquote(urlparse(u).path))
-        untouched = [f for f in files if f not in touched]
-        if not untouched:
-            return False
-        if touched:
-            target_sub = self.spark.read.schema(declared).parquet(*sorted(touched))
-        else:
-            target_sub = self.spark.createDataFrame([], declared)
-        rewrite = self._execute_merge_clauses(target_sub, km, declared)
-        self._commit_partial_rewrite(meta, operation, rewrite, untouched)
-        return True
-
-    def merge_overwrite(
-        self,
-        post_state: DataFrame,
-        operation: str,
-        touched_partitions: Optional[List[dict]] = None,
-        touched_keys: Optional[tuple] = None,
-        keyed_merge: Optional[KeyedMerge] = None,
-    ) -> None:
-        """Commit a merge-style mutation expressed as a post-state plan.
-
-        ``keyed_merge`` is accepted (and ignored) for interface parity
-        with DeltaBackedTable, which compiles it to a native MERGE; the
-        parquet backend always commits the equivalent ``post_state``.
-
-        SCALE: when the caller knows which partitions the mutation can
-        touch (``touched_partitions``: list of ``{part_col: value}``
-        dicts), only those partitions are rewritten from ``post_state``
-        — the filter pushes down through the post-state plan to the
-        base scan, so untouched partitions are neither read nor written
-        (their files are hard-linked from the previous snapshot). This
-        is the parquet-backend equivalent of Delta MERGE's file-pruned
-        rewrite (reference mack/__init__.py:125-139); on the Delta
-        adapter the same hint becomes a ``replaceWhere`` overwrite.
-
-        For UNPARTITIONED tables, ``touched_keys=(key_col, keys_df)``
-        enables FILE-pruned rewrite: per-file min/max footer statistics
-        identify which files can contain a touched key; only those files
-        (plus any the transitive range-overlap closure pulls in) are
-        rewritten from ``post_state``, the rest are hard-linked
-        unchanged. Effective when the table is range-clustered on the
-        key (``optimize_compact(sort_by=key)`` / Z-order); on a randomly
-        laid-out table the overlap closure degrades gracefully to a full
-        rewrite — exactly Delta MERGE's behavior with unclustered data.
-        The caller contract is the MERGE contract: every row the
-        mutation deletes/changes and every row it inserts must carry a
-        ``key_col`` value present in ``keys_df`` (rows outside are
-        assumed identity).
-
-        Without any hint the lazy ``post_state`` plan — typically
-        (current ∪ staged) minus deleted rows via join/filter — executes
-        once, writing the next snapshot.
-        """
-        meta = self._read_meta()
-        parts = meta["partition_columns"]
-        if not parts and touched_keys is not None:
-            if self._merge_file_pruned(post_state, operation, meta, touched_keys):
-                return
-            # Interval rewrite refused (unclustered layout, missing
-            # stats, unsupported key type): the provenance-explicit
-            # keyed path still prunes — exact touched files via key
-            # scan, clause execution on just their rows.
-            if self._merge_keyed_files(keyed_merge, operation, meta):
-                return
-            self.overwrite(post_state, operation=operation, schema_change=False)
-            return
-        if not parts and keyed_merge is not None:
-            if self._merge_keyed_files(keyed_merge, operation, meta):
-                return
-        if not parts or touched_partitions is None:
-            self.overwrite(post_state, operation=operation, schema_change=False)
-            return
-        touched = {
-            tuple(_partition_value_str(t[c]) for c in parts)
-            for t in touched_partitions
-        }
-        cond = F.lit(False)
-        for t in touched_partitions:
-            this = F.lit(True)
-            for c in parts:
-                this = this & F.col(c).eqNullSafe(F.lit(t[c]))
-            cond = cond | this
-        old_snapshot = meta["current"]
-        new_snapshot = f"v={meta['version'] + 1}-{uuid.uuid4().hex[:8]}"
-        new_dir = os.path.join(self.path, new_snapshot)
-        from mack_spark.layout import optimize_write_partitions
-
-        (
-            optimize_write_partitions(post_state.filter(cond))
-            .write.mode("overwrite")
-            .partitionBy(*parts)
-            .parquet(new_dir)
-        )
-        # Untouched partitions: hard-link data files from the previous
-        # snapshot (same filesystem, zero copy); the old snapshot dir is
-        # removed after commit but the links keep the bytes alive.
-        old_dir = os.path.join(self.path, old_snapshot)
-        for root, _dirs, names in os.walk(old_dir):
-            rel = os.path.relpath(root, old_dir)
-            comps = [] if rel == "." else rel.split(os.sep)
-            if len(comps) != len(parts) or not all("=" in c for c in comps):
-                continue
-            key = tuple(unquote(c.split("=", 1)[1]) for c in comps)
-            if key in touched:
-                continue
-            dest = os.path.join(new_dir, rel)
-            os.makedirs(dest, exist_ok=True)
-            for n in names:
-                if n.endswith(".parquet") and not n.startswith(("_", ".")):
-                    try:
-                        os.link(os.path.join(root, n), os.path.join(dest, n))
-                    except OSError:
-                        shutil.copy2(os.path.join(root, n), os.path.join(dest, n))
-        to_delete = self._plan_retention(meta, old_snapshot)
-        try:
-            self._commit(meta, operation, new_snapshot=new_snapshot)
-        except ConcurrentModificationError:
-            shutil.rmtree(new_dir, ignore_errors=True)
-            raise
-        for d in to_delete:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-
     # ---------------------------------------------------------------- props
     def set_properties(self, props: Dict[str, str]) -> None:
         meta = self._read_meta()
@@ -1283,167 +692,10 @@ class ManagedTable:
         self.set_properties({f"delta.constraints.{name}": expression})
 
 
-# ---------------------------------------------------------------------------
-# Backend seam
-#
-# Operator code mutates tables through exactly two methods — ``append``
-# and ``merge_overwrite`` (tests/test_backend_seam.py enumerates the call
-# sites) — so the storage backend is swappable at construction: this
-# sandbox uses the versioned-parquet ManagedTable; a cluster with
-# delta-spark on the classpath gets ACID Delta commits through the same
-# interface, with no operator changes (reference substrate:
-# mack/__init__.py:4, :125-139, :190-192).
-# ---------------------------------------------------------------------------
-
-def _delta_table_cls():
-    """``delta.tables.DeltaTable`` when delta-spark is importable, else None."""
-    try:
-        from delta.tables import DeltaTable  # type: ignore
-
-        return DeltaTable
-    except ImportError:
-        return None
-
-
-class DeltaBackedTable:
-    """``ManagedTable``-interface adapter over a real Delta Lake table.
-
-    Only constructible when delta-spark is on the classpath (not in this
-    sandbox — the adapter is exercised for interface parity in
-    tests/test_backend_seam.py and live on a Delta-enabled cluster).
-    ``append`` maps to a Delta transactional append;
-    ``merge_overwrite`` maps to a Delta overwrite transaction — on a
-    real deployment, operators whose post-state is a keyed upsert can
-    be further specialized to ``DeltaTable.merge`` for file-pruned
-    rewrites (reference mack/__init__.py:125-139), which is the one
-    scale behavior this sandbox's backend cannot reproduce.
-    """
-
-    def __init__(self, spark: SparkSession, path: str):
-        dt = _delta_table_cls()
-        if dt is None:
-            raise ImportError("delta-spark is not installed")
-        self.spark = spark
-        self.path = os.path.abspath(path)
-        self._dt = dt.forPath(spark, self.path)
-
-    def toDF(self) -> DataFrame:
-        return self._dt.toDF()
-
-    @property
-    def declared_schema(self) -> StructType:
-        return self.toDF().schema
-
-    def detail(self) -> dict:
-        row = self._dt.detail().collect()[0].asDict()
-        return {
-            "location": row.get("location", self.path),
-            "partitionColumns": row.get("partitionColumns", []),
-            "properties": row.get("properties", {}),
-            "numFiles": row.get("numFiles", 0),
-            "sizeInBytes": row.get("sizeInBytes", 0),
-        }
-
-    def history(self) -> List[dict]:
-        return [r.asDict() for r in self._dt.history().collect()]
-
-    def append(self, df: DataFrame, merge_schema: bool = False,
-               operation: str = "WRITE") -> None:
-        (df.write.format("delta").mode("append")
-         .option("mergeSchema", str(merge_schema).lower()).save(self.path))
-
-    def merge_overwrite(
-        self,
-        post_state: DataFrame,
-        operation: str,
-        touched_partitions: Optional[List[dict]] = None,
-        touched_keys: Optional[tuple] = None,
-        keyed_merge: Optional[KeyedMerge] = None,
-    ) -> None:
-        if keyed_merge is not None:
-            # Native file-pruned path: Delta MERGE rewrites only files
-            # containing matching keys; the post_state plan is unused.
-            apply_keyed_merge(self._dt, keyed_merge)
-            return
-        w = post_state.write.format("delta").mode("overwrite")
-        if touched_partitions:
-            # Delta's native file-pruned overwrite: only partitions
-            # matching the predicate are replaced (and post_state is
-            # filtered to them by replaceWhere's constraint check).
-            def lit_sql(v):
-                if v is None:
-                    return "NULL"
-                if isinstance(v, bool):
-                    return "true" if v else "false"
-                if isinstance(v, (int, float)):
-                    return repr(v)
-                return "'" + str(v).replace("'", "''") + "'"
-
-            clauses = []
-            for t in touched_partitions:
-                ands = " AND ".join(
-                    f"`{c}` IS NULL" if v is None else f"`{c}` = {lit_sql(v)}"
-                    for c, v in t.items()
-                )
-                clauses.append(f"({ands})")
-            w = w.option("replaceWhere", " OR ".join(clauses))
-        w.save(self.path)
-
-    def overwrite(self, df: DataFrame, operation: str = "WRITE",
-                  partition_by: Optional[List[str]] = None,
-                  schema_change: bool = True,
-                  sized: bool = True) -> None:
-        # ``sized`` mirrors ManagedTable.overwrite; delta-spark applies
-        # its own optimized-write sizing, so the flag is accepted and
-        # ignored here.
-        w = df.write.format("delta").mode("overwrite")
-        if schema_change:
-            w = w.option("overwriteSchema", "true")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(self.path)
-
-    def set_properties(self, props: Dict[str, str]) -> None:
-        kv = ", ".join(f"'{k}' = '{v}'" for k, v in props.items())
-        self.spark.sql(
-            f"ALTER TABLE delta.`{self.path}` SET TBLPROPERTIES ({kv})"
-        )
-
-    def add_constraint(self, name: str, expression: str) -> None:
-        self.set_properties({f"delta.constraints.{name}": expression})
-
-    def delete(self, condition: str) -> None:
-        """Native ``DeltaTable.delete`` — Delta's log-driven file
-        pruning replaces the parquet backend's partition/footer
-        machinery."""
-        self._dt.delete(condition)
-
-    def update(self, condition: str, assignments: Dict[str, str]) -> None:
-        """Native ``DeltaTable.update`` (simultaneous SET semantics are
-        Delta's own)."""
-        self._dt.update(condition=condition, set=dict(assignments))
-
-
-def open_table(spark: SparkSession, path: str):
-    """Construct the right backend for ``path`` — the seam's single entry.
-
-    A directory with a ``_delta_log`` (and delta-spark importable) gets
-    the Delta adapter; a ``_mack_meta.json`` layout gets ManagedTable.
-    Everything downstream is backend-agnostic.
-    """
-    apath = os.path.abspath(path)
-    if (
-        _delta_table_cls() is not None
-        and os.path.isdir(os.path.join(apath, "_delta_log"))
-    ):
-        return DeltaBackedTable(spark, apath)
-    return ManagedTable(spark, apath)
-
-
 def _to_df(source: Union[ManagedTable, DataFrame]) -> DataFrame:
     if isinstance(source, DataFrame):
         return source
-    if hasattr(source, "toDF"):  # ManagedTable or DeltaBackedTable
+    if hasattr(source, "toDF"):  # ManagedTable
         return source.toDF()
     raise TypeError(f"expected a table or DataFrame, got {type(source)}")
 
@@ -1514,7 +766,7 @@ def shallow_clone(table: ManagedTable, target_path: str) -> ManagedTable:
     with the source's schema/partitioning/properties and an independent
     commit history; subsequent writes on either side never affect the
     other (mutations replace whole files, and hard-linked bytes survive
-    via inode refcounting — same invariant the pruned merge relies on).
+    via inode refcounting).
     Unlike Delta, there is no shared transaction log to dangle: deleting
     the source cannot break the clone.
     """
@@ -1555,32 +807,6 @@ def shallow_clone(table: ManagedTable, target_path: str) -> ManagedTable:
     clone.path = target_path
     clone._write_meta(new_meta)
     return ManagedTable(table.spark, target_path)
-
-
-def table_changes(
-    table: ManagedTable, from_version: int, to_version: Optional[int] = None
-) -> DataFrame:
-    """Row-level change feed between two readable versions — Delta
-    Change Data Feed's query surface (``table_changes(...)``), computed
-    by diffing snapshots instead of logging per-commit deltas: inserted
-    rows carry ``_change_type='insert'``, removed rows ``'delete'``; an
-    update appears as its delete+insert pair (CDF's
-    ``update_preimage``/``update_postimage`` without a row identity
-    contract, which a snapshot diff cannot infer).
-
-    Requires both endpoints readable: ``from_version`` retained (the
-    ``mack.retain_snapshots`` property) and ``to_version`` retained or
-    current (default: current). SCALE: one full-outer anti-join pair
-    over the two snapshots — exact, but O(both snapshots); a log-based
-    CDF (Delta's) is cheaper per query, which is why this is the
-    audit/backfill path, not a streaming source.
-    """
-    pre = table.toDF(version=from_version)
-    post = table.toDF(version=to_version) if to_version is not None else table.toDF()
-    cols = pre.columns
-    inserts = post.exceptAll(pre).withColumn("_change_type", F.lit("insert"))
-    deletes = pre.exceptAll(post).withColumn("_change_type", F.lit("delete"))
-    return inserts.unionByName(deletes).select(*cols, "_change_type")
 
 
 def vacuum(table: ManagedTable, dry_run: bool = False) -> List[str]:
@@ -1632,139 +858,6 @@ def vacuum(table: ManagedTable, dry_run: bool = False) -> List[str]:
                 except OSError:
                     pass
     return doomed
-
-
-def _predicate_references(spark: SparkSession, condition: str) -> List[str]:
-    """Column names referenced by a SQL predicate (Catalyst parser —
-    the same resolution DELETE itself uses, so no regex guessing)."""
-    expr = spark._jsparkSession.sessionState().sqlParser().parseExpression(condition)
-    it = expr.references().iterator()
-    names = []
-    while it.hasNext():
-        names.append(it.next().name())
-    return names
-
-
-def delete_where(
-    table: ManagedTable,
-    condition: str,
-    touched_keys: Optional[tuple] = None,
-) -> None:
-    """``DELETE FROM table WHERE condition`` for the parquet
-    ManagedTable — the generic mutation behind Delta's
-    ``DeltaTable.delete(condition)`` (the reference composes it only
-    inside kill_duplicates/drop_duplicates_pkey via MERGE,
-    mack/__init__.py:190-192, :253-255; this exposes it directly).
-
-    Semantics are SQL DELETE three-valued logic: rows where the
-    condition evaluates TRUE are removed; FALSE **and NULL** rows stay.
-
-    SCALE — pruned commits, chosen automatically:
-
-    * If the predicate references ONLY partition columns, it is
-      evaluated against the distinct partition-value tuples (a
-      partition-pruned scan of just those columns), and the commit
-      rewrites ONLY partitions where it can be TRUE — every other
-      partition is hard-linked untouched.
-    * On unpartitioned tables callers who know the touched key range
-      pass ``touched_keys=(key_col, keys_df)`` and get the footer-stats
-      file-pruned rewrite.
-    * Otherwise the commit is the plain full post-state overwrite —
-      exactly Delta's behavior when a delete predicate prunes nothing.
-    """
-    if isinstance(table, DeltaBackedTable):
-        table.delete(condition)
-        return
-    spark = table.spark
-    cond = F.expr(condition)
-    post_state = table.toDF().filter(~F.coalesce(cond, F.lit(False)))
-    meta = table._read_meta()
-    parts = meta["partition_columns"]
-    refs = _predicate_references(spark, condition)
-    touched_partitions = None
-    if parts and refs and set(refs) <= set(parts):
-        # a partition-only predicate is constant per partition: TRUE
-        # partitions rewrite (their matching rows delete), FALSE and
-        # NULL partitions keep every row and stay hard-linked. filter()
-        # keeps exactly the TRUE tuples.
-        tuples = table.toDF().select(*parts).distinct()
-        touched_partitions = [
-            {p: r[p] for p in parts} for r in tuples.filter(cond).collect()
-        ]
-        if not touched_partitions:
-            return  # predicate can match no partition: no-op, no commit
-    table.merge_overwrite(
-        post_state,
-        "DELETE",
-        touched_partitions=touched_partitions,
-        touched_keys=touched_keys,
-    )
-
-
-def update_where(
-    table: ManagedTable,
-    condition: str,
-    assignments: Dict[str, str],
-    touched_keys: Optional[tuple] = None,
-) -> None:
-    """``UPDATE table SET col = expr, ... WHERE condition`` — Delta's
-    ``DeltaTable.update`` on the parquet ManagedTable, with the same
-    automatic commit pruning as :func:`delete_where`.
-
-    ``assignments`` maps column name → SQL expression (evaluated
-    against the pre-update row, all assignments simultaneously, cast
-    back to the column's declared type — SQL UPDATE semantics). Rows
-    where the condition is FALSE or NULL are untouched.
-
-    Pruning guard: if any assignment targets a partition column, rows
-    can MOVE between partitions, so the partition-pruned path is
-    disabled and the commit is the full post-state overwrite (matching
-    Delta, where such updates rewrite across partitions).
-    """
-    if isinstance(table, DeltaBackedTable):
-        table.update(condition, assignments)
-        return
-    spark = table.spark
-    unknown = set(assignments) - set(table.toDF().columns)
-    if unknown:
-        raise ValueError(f"assignments target unknown columns: {sorted(unknown)}")
-    cond = F.coalesce(F.expr(condition), F.lit(False))
-    schema = table.declared_schema
-    types = {f.name: f.dataType for f in schema.fields}
-    cols = []
-    for c in table.toDF().columns:
-        if c in assignments:
-            cols.append(
-                F.when(cond, F.expr(assignments[c]).cast(types[c]))
-                .otherwise(F.col(c))
-                .alias(c)
-            )
-        else:
-            cols.append(F.col(c))
-    post_state = table.toDF().select(*cols)
-    meta = table._read_meta()
-    parts = meta["partition_columns"]
-    refs = _predicate_references(spark, condition)
-    touched_partitions = None
-    if (
-        parts
-        and refs
-        and set(refs) <= set(parts)
-        and not (set(assignments) & set(parts))
-    ):
-        tuples = table.toDF().select(*parts).distinct()
-        touched_partitions = [
-            {p: r[p] for p in parts}
-            for r in tuples.filter(F.expr(condition)).collect()
-        ]
-        if not touched_partitions:
-            return
-    table.merge_overwrite(
-        post_state,
-        "UPDATE",
-        touched_partitions=touched_partitions,
-        touched_keys=touched_keys,
-    )
 
 
 def rename_catalog_table(spark: SparkSession, old_name: str, new_name: str) -> None:
@@ -1822,11 +915,10 @@ def optimize_compact(
 
     ``sort_by`` range-clusters the rewrite on the given columns
     (``OPTIMIZE ... ZORDER BY``'s one-dimensional cousin): files get
-    disjoint key ranges, which is exactly what makes
-    ``merge_overwrite(touched_keys=...)``'s footer-stats file pruning
-    effective — run a keyed compaction once, and every subsequent keyed
-    merge rewrites only the files whose range the keys hit. For true
-    multi-column locality use :func:`mack_spark.operators.zorder_by`.
+    disjoint key ranges, so a scan filtered on the key skips every
+    file whose footer range misses it (the IVF index store probes
+    cells this way). For true multi-column locality use
+    :func:`mack_spark.operators.zorder_by`.
 
     ``selective=True`` is Delta ``OPTIMIZE``'s actual contract: only
     files smaller than ``min_file_bytes`` (default ``target / 2``) are

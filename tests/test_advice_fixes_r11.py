@@ -202,10 +202,10 @@ class TestRollupWatermarkTransactional:
         )
 
     def test_create_records_watermark_in_version_zero(self, spark, tmp_path):
-        from mack_spark.rollup import SOURCE_VERSION_PROP, create_rollup_protocol
+        from mack_spark.rollup import SOURCE_VERSION_PROP, create_rollup
 
         src = self._mk_source(spark, str(tmp_path / "src"))
-        roll = create_rollup_protocol(
+        roll = create_rollup(
             src, str(tmp_path / "roll"), ["grp"], "value"
         )
         snap = roll.snapshot()
@@ -219,12 +219,12 @@ class TestRollupWatermarkTransactional:
     ):
         from mack_spark.rollup import (
             SOURCE_VERSION_PROP,
-            create_rollup_protocol,
-            refresh_rollup_incremental_protocol,
+            create_rollup,
+            refresh_rollup_incremental,
         )
 
         src = self._mk_source(spark, str(tmp_path / "src2"))
-        roll = create_rollup_protocol(
+        roll = create_rollup(
             src, str(tmp_path / "roll2"), ["grp"], "value"
         )
         src.append(
@@ -234,7 +234,7 @@ class TestRollupWatermarkTransactional:
             )
         )
         v_before = roll.snapshot().version
-        refresh_rollup_incremental_protocol(roll, src, ["grp"], "value")
+        refresh_rollup_incremental(roll, src, ["grp"], "value")
         snap = roll.snapshot()
         # exactly ONE commit advanced the rollup
         assert snap.version == v_before + 1
@@ -258,16 +258,16 @@ class TestRollupWatermarkTransactional:
     def test_empty_change_range_advances_watermark(self, spark, tmp_path):
         from mack_spark.rollup import (
             SOURCE_VERSION_PROP,
-            create_rollup_protocol,
-            refresh_rollup_incremental_protocol,
+            create_rollup,
+            refresh_rollup_incremental,
         )
 
         src = self._mk_source(spark, str(tmp_path / "src3"))
-        roll = create_rollup_protocol(
+        roll = create_rollup(
             src, str(tmp_path / "roll3"), ["grp"], "value"
         )
         src.optimize()  # dataChange=false: no row-level changes
-        v = refresh_rollup_incremental_protocol(roll, src, ["grp"], "value")
+        v = refresh_rollup_incremental(roll, src, ["grp"], "value")
         assert v == src.snapshot().version
         assert (
             roll.detail()["properties"][SOURCE_VERSION_PROP] == str(v)

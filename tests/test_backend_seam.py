@@ -1,26 +1,25 @@
-"""The storage-backend seam: operators mutate tables ONLY through the
-two methods a Delta backend replaces (``append`` / ``merge_overwrite``),
-so swapping ManagedTable for a Delta-backed table is a construction-time
-choice, never an operator change (VERDICT r1 item 4; reference substrate
-mack/__init__.py:125-139, :190-192)."""
+"""The mutation seam: mack's table functions (dedup, appends, SCD2,
+rollups, the foreachBatch sinks) change rows ONLY through
+:class:`~mack_spark.sources.delta_log.DeltaProtocolTable`'s ``append``,
+``merge`` and ``overwrite`` — one substrate, one commit protocol
+(reference substrate mack/__init__.py:125-139, :190-192)."""
 
-import inspect
+import ast
 import os
 import re
 
 import pytest
 
 import mack_spark
-from mack_spark import tables
-from mack_spark.tables import DeltaBackedTable, ManagedTable, open_table
+from mack_spark.sources.delta_log import DeltaProtocolTable
 
 PKG_DIR = os.path.dirname(mack_spark.__file__)
 
 # Modules allowed to issue raw DataFrame writes:
-#  - tables.py IS the backend layer;
+#  - tables.py IS the ManagedTable storage layer (index tables);
 #  - sources/ is the user-facing sink module (writes plain files the
 #    user asked for, not managed-table mutations);
-#  - sources/delta_log.py IS a storage backend too (the open-protocol
+#  - sources/delta_log.py IS the mutation substrate (the open-protocol
 #    Delta writer commits parquet data files + _delta_log actions).
 _RAW_WRITE_ALLOWED = {
     "tables.py",
@@ -51,101 +50,47 @@ def test_no_raw_writes_outside_backend_and_sinks():
     )
 
 
+# mack's mutating modules, and the DeltaProtocolTable methods they may
+# call: the three mutations plus reads and CREATE.
+_MUTATING_MODULES = [
+    "dedup.py", "appends.py", "scd.py", "rollup.py",
+    os.path.join("streaming", "__init__.py"),
+]
+_MUTATIONS = {"append", "merge", "overwrite"}
+_READS = {"to_df", "snapshot", "detail", "table_changes", "create"}
+
+
 def test_mutations_route_through_append_or_merge_overwrite_only():
-    """Outside the backend layer, the only table-mutating calls are
-    ``.append(`` on a table object and ``.merge_overwrite(`` — never
-    ``.overwrite(`` (backend-internal) nor meta-file surgery."""
-    # sql_ddl.py is a statement→backend DISPATCHER, not an operator:
-    # CREATE OR REPLACE ... AS SELECT is literally the overwrite
-    # operation, so the front-end may name it (same standing as
-    # sql_dml.py routing MERGE/UPDATE/DELETE onto the backend methods)
-    dispatcher_allowed = {"sql_ddl.py"}
-    offenders = []
-    for rel, src in _py_sources():
-        if rel == "tables.py" or rel in dispatcher_allowed:
-            continue
-        for i, line in enumerate(src.splitlines(), 1):
-            if re.search(r"\btable\.overwrite\(|\._write_meta\(\s*\{", line):
-                offenders.append(f"{rel}:{i}: {line.strip()}")
+    """Enumerate every call of a DeltaProtocolTable method name in the
+    mutating modules: each is ``append``/``merge``/``overwrite`` or a
+    read — never ``delete_where``/``update_where``/``set_properties``,
+    a ManagedTable method, or meta-file surgery."""
+    table_methods = {
+        n for n in dir(DeltaProtocolTable) if not n.startswith("__")
+    }
+    seen, offenders = set(), []
+    for rel in _MUTATING_MODULES:
+        src = open(os.path.join(PKG_DIR, rel)).read()
+        for node in ast.walk(ast.parse(src)):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+            ):
+                continue
+            name = node.func.attr
+            if name in ("toDF", "merge_overwrite", "_read_meta", "_write_meta"):
+                offenders.append(f"{rel}:{node.lineno}: .{name}(")
+            elif name in table_methods:
+                seen.add(name)
+                if name not in _MUTATIONS | _READS:
+                    offenders.append(f"{rel}:{node.lineno}: .{name}(")
     assert offenders == [], (
-        "table mutations bypassing the seam:\n" + "\n".join(offenders)
+        "mutations bypassing append/merge/overwrite:\n" + "\n".join(offenders)
     )
-
-
-def test_open_table_picks_managed_backend_here(spark, tmp_path):
-    path = str(tmp_path / "t")
-    ManagedTable.create(
-        spark, path, df=spark.createDataFrame([(1, "a")], ["id", "v"])
-    )
-    t = open_table(spark, path)
-    assert isinstance(t, ManagedTable)
-    assert t.toDF().count() == 1
-
-
-def test_delta_adapter_matches_managed_interface():
-    """Every public method/property operators use on ManagedTable exists
-    on DeltaBackedTable with a compatible signature."""
-    needed = [
-        "toDF", "append", "merge_overwrite", "overwrite", "detail",
-        "history", "set_properties", "add_constraint", "declared_schema",
-    ]
-    for name in needed:
-        assert hasattr(DeltaBackedTable, name), f"adapter missing {name}"
-    for name in ("append", "merge_overwrite", "overwrite"):
-        m_sig = inspect.signature(getattr(ManagedTable, name))
-        d_sig = inspect.signature(getattr(DeltaBackedTable, name))
-        assert list(m_sig.parameters) == list(d_sig.parameters), name
-
-
-def test_delta_adapter_requires_delta(spark, tmp_path):
-    if tables._delta_table_cls() is not None:
-        pytest.skip("delta-spark installed; adapter is constructible")
-    with pytest.raises(ImportError):
-        DeltaBackedTable(spark, str(tmp_path))
+    assert _MUTATIONS <= seen
 
 
 # ------------------------------------------------------------- keyed merge
-# KeyedMerge clause construction, driven with a recording fake so the
-# Delta MERGE path is interface-tested without delta-spark installed.
-
-
-class _FakeBuilder:
-    def __init__(self, log):
-        self.log = log
-
-    def merge(self, source, condition):
-        self.log.append(("merge", condition))
-        return self
-
-    def whenMatchedUpdate(self, condition=None, set=None):
-        self.log.append(("whenMatchedUpdate", condition, dict(set)))
-        return self
-
-    def whenMatchedDelete(self, condition=None):
-        self.log.append(("whenMatchedDelete", condition))
-        return self
-
-    def whenNotMatchedInsertAll(self, condition=None):
-        self.log.append(("whenNotMatchedInsertAll", condition))
-        return self
-
-    def whenNotMatchedInsert(self, condition=None, values=None):
-        self.log.append(("whenNotMatchedInsert", condition, dict(values)))
-        return self
-
-    def execute(self):
-        self.log.append(("execute",))
-
-
-class _FakeDeltaTable:
-    def __init__(self):
-        self.log = []
-
-    def alias(self, a):
-        self.log.append(("alias", a))
-        return _FakeBuilder(self.log)
-
-
 def _scd_frames(spark):
     base = spark.createDataFrame(
         [(1, "A", True, None, None)],
@@ -158,8 +103,10 @@ def _scd_frames(spark):
 
 
 def test_scd2_keyed_merge_compiles_reference_clauses(spark):
+    """The SCD2 descriptor carries the reference's clause set
+    (mack/__init__.py:125-139): one conditional matched update that
+    closes the current row, one unconditional insert."""
     from mack_spark.scd import scd2_keyed_merge
-    from mack_spark.tables import apply_keyed_merge
 
     base, updates = _scd_frames(spark)
     km = scd2_keyed_merge(
@@ -171,51 +118,52 @@ def test_scd2_keyed_merge_compiles_reference_clauses(spark):
     staged = {(r["mergeKey"], r["attr"]) for r in km.source.collect()}
     assert staged == {(None, "A2"), (1, "A2")}
 
-    fake = _FakeDeltaTable()
-    apply_keyed_merge(fake, km)
-    ops = [e[0] for e in fake.log]
-    assert ops == ["alias", "merge", "whenMatchedUpdate", "whenNotMatchedInsert", "execute"]
-    assert fake.log[1][1] == "base.`pkey` = staged.mergeKey"
-    upd_cond, upd_set = fake.log[2][1], fake.log[2][2]
-    assert "base.`is_current` = true" in upd_cond and "staged.`attr` <> base.`attr`" in upd_cond
-    assert upd_set == {"is_current": "false", "end_time": "staged.`effective_time`"}
-    ins_cond, ins = fake.log[3][1], fake.log[3][2]
-    assert ins_cond is None  # reference scd2 has an unconditional insert
+    assert km.condition == "base.`pkey` = staged.mergeKey"
+    assert "base.`is_current` = true" in km.matched_update_condition
+    assert "staged.`attr` <> base.`attr`" in km.matched_update_condition
+    assert km.matched_update == {
+        "is_current": "false", "end_time": "staged.`effective_time`"
+    }
+    assert km.matched_delete is None
+    assert km.not_matched_condition is None  # unconditional insert
+    ins = km.not_matched_insert
     assert ins["pkey"] == "staged.`pkey`" and ins["is_current"] == "true"
     assert ins["end_time"] == "null"
+    assert (km.target_key_col, km.source_key_col) == ("pkey", "mergeKey")
 
 
-def test_kill_duplicates_keyed_merge_is_delete(spark):
-    from mack_spark.tables import KeyedMerge, apply_keyed_merge
-
-    src = spark.createDataFrame([(1,)], ["c1"])
-    km = KeyedMerge(source=src, condition="t.`c1` <=> s.`c1`", matched_delete=True)
-    fake = _FakeDeltaTable()
-    apply_keyed_merge(fake, km)
-    assert ("whenMatchedDelete", None) in fake.log
-    assert ("whenNotMatchedInsertAll",) not in fake.log
-
-
-def test_managed_table_ignores_keyed_merge(spark, tmp_path):
-    """The parquet backend commits the post-state even when a KeyedMerge
-    rides along (it has no MERGE executor)."""
+def test_kill_duplicates_keyed_merge_is_delete(spark, tmp_path, monkeypatch):
+    """kill_duplicates is one delete-only MERGE of the duplicate key set
+    under plain ``=`` (reference mack/__init__.py:183-192)."""
     import mack_spark as mk
 
-    t = ManagedTable.create(
+    seen = []
+    real = DeltaProtocolTable.merge
+
+    def spy(self, km, **kw):
+        seen.append(km)
+        return real(self, km, **kw)
+
+    monkeypatch.setattr(DeltaProtocolTable, "merge", spy)
+    t = DeltaProtocolTable.create(
         spark, str(tmp_path / "km"),
-        df=spark.createDataFrame([(1, "a"), (2, "a"), (3, "b")], ["pkey", "c1"]),
+        spark.createDataFrame([(1, "a"), (2, "a"), (3, "b")], ["pkey", "c1"]),
     )
     mk.kill_duplicates(t, ["c1"])
-    assert [r["c1"] for r in t.toDF().collect()] == ["b"]
+    [km] = seen
+    assert km.matched_delete is True
+    assert km.matched_update is None and km.not_matched_insert is None
+    assert km.condition == "t.`c1` = s.`c1`"
+    assert [r["c1"] for r in t.to_df().collect()] == ["b"]
 
 
 # -------------------------------------------------- descriptor semantics
-# The recording-fake tests above pin the SHAPE of the compiled clauses;
-# these pin their MEANING: interpreting the KeyedMerge descriptor with a
-# faithful pure-DataFrame MERGE executor (tests/merge_interpreter.py)
-# must reproduce scd2_post_state — the plan the parquet backend commits
-# — on randomized bases and update batches. A wrong clause set,
-# condition string, or staging expression diverges here.
+# The tests above pin the SHAPE of the descriptors; these pin their
+# MEANING: interpreting the KeyedMerge descriptor with a faithful
+# pure-DataFrame MERGE executor (tests/merge_interpreter.py) must
+# reproduce scd2_post_state — the same upsert as one read-only plan —
+# on randomized bases and update batches. A wrong clause set, condition
+# string, or staging expression diverges here.
 
 
 def _random_scd2_inputs(spark, seed):
@@ -316,13 +264,13 @@ def test_keyed_merge_interpreter_rejects_ambiguous_source(spark):
 
 def test_insert_condition_compiles_and_interprets(spark):
     """The rollup-refresh descriptor shape: conditional update, delete
-    for zero-count groups, CONDITIONAL insert. The native compile must
-    attach the insert condition; the interpreter must honor it (a new
-    group with n=0 appears nowhere)."""
+    for zero-count groups, CONDITIONAL insert. The interpreter must
+    honor the insert condition (a new group with n=0 appears
+    nowhere)."""
     from conftest import assert_df_equality
     from merge_interpreter import interpret_keyed_merge
 
-    from mack_spark.tables import KeyedMerge, apply_keyed_merge
+    from mack_spark.tables import KeyedMerge
 
     base = spark.createDataFrame(
         [("a", 2, 10), ("b", 1, 5)], "grp string, n_events int, fp int"
@@ -343,48 +291,8 @@ def test_insert_condition_compiles_and_interprets(spark):
         source_key_col="grp",
         null_safe=True,
     )
-    fake = _FakeDeltaTable()
-    apply_keyed_merge(fake, km)
-    ops = {e[0]: e for e in fake.log}
-    assert ops["whenNotMatchedInsertAll"][1] == "s.`n_events` > 0"
-    assert ops["whenMatchedUpdate"][1] == "s.`n_events` > 0"
-    assert ops["whenMatchedDelete"][1] is None
-
     out = interpret_keyed_merge(base, km)
     expected = spark.createDataFrame(
         [("a", 3, 12), ("d", 4, 7)], "grp string, n_events int, fp int"
     )
     assert_df_equality(out, expected)
-
-
-def test_delete_update_where_route_native_on_delta(spark):
-    """delete_where/update_where dispatch to the Delta adapter's native
-    DeltaTable.delete/update instead of the parquet post-state path."""
-    from mack_spark.tables import delete_where, update_where
-
-    class _Rec:
-        def __init__(self):
-            self.log = []
-
-        def delete(self, condition):
-            self.log.append(("delete", condition))
-
-        def update(self, condition=None, set=None):
-            self.log.append(("update", condition, dict(set)))
-
-    fake = DeltaBackedTable.__new__(DeltaBackedTable)
-    fake.spark = spark
-    fake.path = "/nowhere"
-    fake._dt = _Rec()
-
-    delete_where(fake, "k < 10")
-    update_where(fake, "k = 1", {"v": "upper(v)"})
-    assert fake._dt.log == [
-        ("delete", "k < 10"),
-        ("update", "k = 1", {"v": "upper(v)"}),
-    ]
-
-
-def test_delta_adapter_has_delete_update():
-    for name in ("delete", "update"):
-        assert hasattr(DeltaBackedTable, name)

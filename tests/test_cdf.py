@@ -371,7 +371,7 @@ class TestCdfPartitioned:
 
 class TestConstraintAppendProtocol:
     def test_split_semantics(self, spark, tmp_path):
-        from mack_spark.appends import constraint_append_protocol
+        from mack_spark.appends import constraint_append
 
         base = spark.createDataFrame([(1, "a", 10)], SCHEMA)
         t = DeltaProtocolTable.create(
@@ -384,7 +384,7 @@ class TestConstraintAppendProtocol:
         batch = spark.createDataFrame(
             [(2, "pass", 5), (3, "violate", -5), (4, "null", None)], SCHEMA
         )
-        constraint_append_protocol(t, batch, quar)
+        constraint_append(t, batch, quar)
         assert sorted(map(tuple, t.to_df().collect())) == [
             (1, "a", 10), (2, "pass", 5),
         ]
@@ -394,26 +394,26 @@ class TestConstraintAppendProtocol:
         ]
 
     def test_no_constraints_raises_typeerror(self, spark, tmp_path):
-        from mack_spark.appends import constraint_append_protocol
+        from mack_spark.appends import constraint_append
 
         t = DeltaProtocolTable.create(
             spark, str(tmp_path / "n"),
             spark.createDataFrame([(1, "a", 1)], SCHEMA),
         )
         with pytest.raises(TypeError, match="no constraints"):
-            constraint_append_protocol(
+            constraint_append(
                 t, spark.createDataFrame([(2, "b", 2)], SCHEMA), None
             )
 
     def test_none_quarantine_drops_violators(self, spark, tmp_path):
-        from mack_spark.appends import constraint_append_protocol
+        from mack_spark.appends import constraint_append
 
         t = DeltaProtocolTable.create(
             spark, str(tmp_path / "d"),
             spark.createDataFrame([(1, "a", 1)], SCHEMA),
             properties={"delta.constraints.val_pos": "val > 0"},
         )
-        constraint_append_protocol(
+        constraint_append(
             t,
             spark.createDataFrame([(2, "b", 2), (3, "bad", -3)], SCHEMA),
             None,

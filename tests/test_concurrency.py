@@ -238,9 +238,10 @@ def test_concurrent_keyed_ingest_with_retry_keeps_keys_unique(spark, tmp_path):
     import time as _time
 
     from mack_spark.dedup import append_without_duplicates
+    from mack_spark.sources.delta_log import DeltaProtocolTable
 
     base = spark.createDataFrame([(0, "seed")], ["k", "v"])
-    t = ManagedTable.create(spark, str(tmp_path / "t"), df=base)
+    t = DeltaProtocolTable.create(spark, str(tmp_path / "t"), base)
 
     batches = {
         "w0": spark.createDataFrame([(i, "w0") for i in range(1, 30)], ["k", "v"]),
@@ -264,7 +265,7 @@ def test_concurrent_keyed_ingest_with_retry_keeps_keys_unique(spark, tmp_path):
         th.join()
     assert not errors, errors
 
-    rows = t.toDF().collect()
+    rows = t.to_df().collect()
     keys = [r["k"] for r in rows]
     assert sorted(keys) == list(range(45))  # 0..44 exactly once each
     # overlap keys 15..29 were inserted by exactly one writer

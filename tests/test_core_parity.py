@@ -21,6 +21,7 @@ from pyspark.sql.types import (
 )
 
 import mack_spark as mk
+from mack_spark.sources.delta_log import DeltaProtocolTable
 from mack_spark.tables import ManagedTable
 from tests.conftest import assert_df_equality
 
@@ -28,6 +29,13 @@ from tests.conftest import assert_df_equality
 def make_table(spark, path, data, schema, **kw):
     df = spark.createDataFrame(data, schema)
     return ManagedTable.create(spark, str(path), df=df, **kw)
+
+
+def make_delta(spark, path, data, schema, **kw):
+    """The table mack's mutating functions take."""
+    return DeltaProtocolTable.create(
+        spark, str(path), spark.createDataFrame(data, schema), **kw
+    )
 
 
 TS = dt.datetime
@@ -60,7 +68,7 @@ def test_scd2_upsert_single_attribute(spark, tmp_path):
         (2, "beta", True, t0, None),
         (4, "delta", True, t0, None),
     ]
-    table = make_table(spark, tmp_path / "scd", base, SCD_SCHEMA)
+    table = make_delta(spark, tmp_path / "scd", base, SCD_SCHEMA)
     updates = spark.createDataFrame(
         [
             (2, "beta2", t1),   # changed attr -> close + insert
@@ -80,18 +88,18 @@ def test_scd2_upsert_single_attribute(spark, tmp_path):
         ],
         SCD_SCHEMA,
     )
-    assert_df_equality(table.toDF().select(*expected.columns), expected)
+    assert_df_equality(table.to_df().select(*expected.columns), expected)
 
 
 def test_scd2_upsert_is_idempotent(spark, tmp_path):
     # Re-sending current rows inserts nothing (reference tests:322-368).
     t0 = TS(2024, 1, 1)
     base = [(1, "alpha", True, t0, None), (2, "beta", True, t0, None)]
-    table = make_table(spark, tmp_path / "scd", base, SCD_SCHEMA)
+    table = make_delta(spark, tmp_path / "scd", base, SCD_SCHEMA)
     updates = spark.createDataFrame([(1, "alpha", TS(2024, 6, 1))], UPD_SCHEMA)
     mk.type_2_scd_upsert(table, updates, "pkey", ["attr"])
     expected = spark.createDataFrame(base, SCD_SCHEMA)
-    assert_df_equality(table.toDF().select(*expected.columns), expected)
+    assert_df_equality(table.to_df().select(*expected.columns), expected)
 
 
 def test_scd2_null_unsafe_change_detection(spark, tmp_path):
@@ -117,7 +125,7 @@ def test_scd2_null_unsafe_change_detection(spark, tmp_path):
         ]
     )
     base = [(1, "x", "y", True, t0, None), (2, "p", "q", True, t0, None)]
-    table = make_table(spark, tmp_path / "scd", base, schema)
+    table = make_delta(spark, tmp_path / "scd", base, schema)
     updates = spark.createDataFrame(
         [
             (1, "x", None, t1),      # only change is y->NULL: no-op
@@ -134,13 +142,13 @@ def test_scd2_null_unsafe_change_detection(spark, tmp_path):
         ],
         schema,
     )
-    assert_df_equality(table.toDF().select(*expected.columns), expected)
+    assert_df_equality(table.to_df().select(*expected.columns), expected)
 
 
 def test_scd2_rejects_schema_mismatch(spark, tmp_path):
     # Exact sorted column-set equality (reference mack/__init__.py:84-96).
     t0 = TS(2024, 1, 1)
-    table = make_table(spark, tmp_path / "scd", [(1, "a", True, t0, None)], SCD_SCHEMA)
+    table = make_delta(spark, tmp_path / "scd", [(1, "a", True, t0, None)], SCD_SCHEMA)
     bad_updates = spark.createDataFrame(
         [(1, "a", t0, "extra")],
         StructType(UPD_SCHEMA.fields + [StructField("extra", StringType(), True)]),
@@ -167,13 +175,13 @@ def test_scd2_generic_version_column(spark, tmp_path):
             StructField("ver", IntegerType(), True),
         ]
     )
-    table = make_table(spark, tmp_path / "scd", [(1, "a", True, 1, None)], schema)
+    table = make_delta(spark, tmp_path / "scd", [(1, "a", True, 1, None)], schema)
     updates = spark.createDataFrame([(1, "b", 2)], upd)
     mk.type_2_scd_generic_upsert(table, updates, "pkey", ["attr"], "cur", "ver", "endver")
     expected = spark.createDataFrame(
         [(1, "a", False, 1, 2), (1, "b", True, 2, None)], schema
     )
-    assert_df_equality(table.toDF().select(*expected.columns), expected)
+    assert_df_equality(table.to_df().select(*expected.columns), expected)
 
 
 # ---------------------------------------------------------------- dedup
@@ -197,14 +205,14 @@ def test_kill_duplicates_no_survivor(spark, tmp_path):
         (6, "D", "D"),
         (9, "B", "B"),
     ]
-    table = make_table(spark, tmp_path / "kill", data, DUP_SCHEMA)
+    table = make_delta(spark, tmp_path / "kill", data, DUP_SCHEMA)
     mk.kill_duplicates(table, ["c1", "c2"])
     expected = spark.createDataFrame([(2, "A", "B"), (6, "D", "D")], DUP_SCHEMA)
-    assert_df_equality(table.toDF().select("pkey", "c1", "c2"), expected)
+    assert_df_equality(table.to_df().select("pkey", "c1", "c2"), expected)
 
 
 def test_kill_duplicates_validations(spark, tmp_path):
-    table = make_table(spark, tmp_path / "kill", [(1, "A", "A")], DUP_SCHEMA)
+    table = make_delta(spark, tmp_path / "kill", [(1, "A", "A")], DUP_SCHEMA)
     with pytest.raises(TypeError, match="must be specified"):
         mk.kill_duplicates(table, [])
     with pytest.raises(TypeError, match="required"):
@@ -222,16 +230,16 @@ def test_drop_duplicates_pkey_min_pk_survives(spark, tmp_path):
         (5, "B", "B"),
         (4, "C", "C"),
     ]
-    table = make_table(spark, tmp_path / "ddp", data, DUP_SCHEMA)
+    table = make_delta(spark, tmp_path / "ddp", data, DUP_SCHEMA)
     mk.drop_duplicates_pkey(table, "pkey", ["c1", "c2"])
     expected = spark.createDataFrame(
         [(1, "A", "A"), (5, "B", "B"), (4, "C", "C")], DUP_SCHEMA
     )
-    assert_df_equality(table.toDF().select("pkey", "c1", "c2"), expected)
+    assert_df_equality(table.to_df().select("pkey", "c1", "c2"), expected)
 
 
 def test_drop_duplicates_pkey_validations(spark, tmp_path):
-    table = make_table(spark, tmp_path / "ddp", [(1, "A", "A")], DUP_SCHEMA)
+    table = make_delta(spark, tmp_path / "ddp", [(1, "A", "A")], DUP_SCHEMA)
     with pytest.raises(TypeError, match="primary key"):
         mk.drop_duplicates_pkey(table, "", ["c1"])
     with pytest.raises(TypeError, match="duplication column"):
@@ -243,15 +251,15 @@ def test_drop_duplicates_pkey_validations(spark, tmp_path):
 def test_drop_duplicates_overwrite(spark, tmp_path):
     # Arbitrary survivor over identical rows (reference tests:449-471).
     data = [(1, "A", "A"), (1, "A", "A"), (2, "B", "B")]
-    table = make_table(spark, tmp_path / "dd", data, DUP_SCHEMA)
+    table = make_delta(spark, tmp_path / "dd", data, DUP_SCHEMA)
     mk.drop_duplicates(table, ["pkey", "c1"])
     expected = spark.createDataFrame([(1, "A", "A"), (2, "B", "B")], DUP_SCHEMA)
-    assert_df_equality(table.toDF().select("pkey", "c1", "c2"), expected)
+    assert_df_equality(table.to_df().select("pkey", "c1", "c2"), expected)
 
 
 def test_append_without_duplicates(spark, tmp_path):
     # Insert-only-new-keys + in-batch dedup (reference mack/__init__.py:383-412).
-    table = make_table(spark, tmp_path / "awd", [(1, "A", "A"), (2, "B", "B")], DUP_SCHEMA)
+    table = make_delta(spark, tmp_path / "awd", [(1, "A", "A"), (2, "B", "B")], DUP_SCHEMA)
     append = spark.createDataFrame(
         [(2, "R", "R"), (3, "C", "C"), (3, "C", "C"), (4, "D", "D")], DUP_SCHEMA
     )
@@ -259,26 +267,26 @@ def test_append_without_duplicates(spark, tmp_path):
     expected = spark.createDataFrame(
         [(1, "A", "A"), (2, "B", "B"), (3, "C", "C"), (4, "D", "D")], DUP_SCHEMA
     )
-    assert_df_equality(table.toDF().select("pkey", "c1", "c2"), expected)
+    assert_df_equality(table.to_df().select("pkey", "c1", "c2"), expected)
 
 
 # ---------------------------------------------------------------- appends
 def test_validate_append_allows_optional(spark, tmp_path):
     # reference mack/__init__.py:328-380, tests:541-614.
-    table = make_table(spark, tmp_path / "va", [(1, "A", "A")], DUP_SCHEMA)
+    table = make_delta(spark, tmp_path / "va", [(1, "A", "A")], DUP_SCHEMA)
     append = spark.createDataFrame(
         [(2, "B", "B", "extra")],
         StructType(DUP_SCHEMA.fields + [StructField("opt", StringType(), True)]),
     )
     mk.validate_append(table, append, required_cols=["pkey", "c1"], optional_cols=["opt"])
-    out = table.toDF()
+    out = table.to_df()
     assert sorted(out.columns) == ["c1", "c2", "opt", "pkey"]
     assert out.count() == 2
     assert out.filter(F.col("opt") == "extra").count() == 1
 
 
 def test_validate_append_rejects_unknown_and_missing(spark, tmp_path):
-    table = make_table(spark, tmp_path / "va", [(1, "A", "A")], DUP_SCHEMA)
+    table = make_delta(spark, tmp_path / "va", [(1, "A", "A")], DUP_SCHEMA)
     bad = spark.createDataFrame(
         [(2, "B", "B", "x")],
         StructType(DUP_SCHEMA.fields + [StructField("rogue", StringType(), True)]),
@@ -298,15 +306,15 @@ def test_constraint_append_check_and_notnull(spark, tmp_path):
             StructField("amount", DoubleType(), True),
         ]
     )
-    table = ManagedTable.create(
+    table = DeltaProtocolTable.create(
         spark,
         str(tmp_path / "tgt"),
-        df=spark.createDataFrame([], schema),
-        schema=schema,
-        constraints={"amount_pos": "amount > 0"},
+        spark.createDataFrame([], schema),
+        properties={"delta.constraints.amount_pos": "amount > 0"},
     )
-    quarantine = ManagedTable.create(
-        spark, str(tmp_path / "q"), df=spark.createDataFrame([], schema), schema=schema
+    # the quarantine takes NOT NULL violators, so its id is nullable
+    quarantine = DeltaProtocolTable.create(
+        spark, str(tmp_path / "q"), spark.createDataFrame([], "id int, amount double")
     )
     append = spark.createDataFrame(
         [(1, 5.0), (2, -3.0), (3, None), (None, 7.0)], schema=StructType(
@@ -317,8 +325,8 @@ def test_constraint_append_check_and_notnull(spark, tmp_path):
         )
     )
     mk.constraint_append(table, append, quarantine)
-    good = [tuple(r) for r in table.toDF().collect()]
-    bad = [tuple(r) for r in quarantine.toDF().collect()]
+    good = [tuple(r) for r in table.to_df().collect()]
+    bad = [tuple(r) for r in quarantine.to_df().collect()]
     assert sorted(good, key=repr) == [(1, 5.0)]
     # (2,-3.0) fails check -> quarantine; (None,7.0) fails NOT NULL -> quarantine;
     # (3, None): check is NULL -> neither table (three-valued logic, SURVEY §2c.6)
@@ -326,21 +334,21 @@ def test_constraint_append_check_and_notnull(spark, tmp_path):
 
 
 def test_constraint_append_requires_constraints(spark, tmp_path):
-    table = make_table(spark, tmp_path / "nc", [(1, "A", "A")], DUP_SCHEMA)
+    table = make_delta(spark, tmp_path / "nc", [(1, "A", "A")], DUP_SCHEMA)
     with pytest.raises(TypeError, match="no constraints"):
-        mk.constraint_append(table, table.toDF(), None)
+        mk.constraint_append(table, table.to_df(), None)
 
 
 def test_constraint_append_none_quarantine_drops(spark, tmp_path):
     schema = StructType([StructField("id", IntegerType(), True)])
-    table = ManagedTable.create(
+    table = DeltaProtocolTable.create(
         spark,
         str(tmp_path / "t"),
-        df=spark.createDataFrame([], schema),
-        constraints={"pos": "id > 0"},
+        spark.createDataFrame([], schema),
+        properties={"delta.constraints.pos": "id > 0"},
     )
     mk.constraint_append(table, spark.createDataFrame([(1,), (-5,)], schema), None)
-    assert [r["id"] for r in table.toDF().collect()] == [1]
+    assert [r["id"] for r in table.to_df().collect()] == [1]
 
 
 # ---------------------------------------------------------------- keys

@@ -1,18 +1,18 @@
-"""Provenance-explicit keyed file merge (_merge_keyed_files): Delta
-MERGE's two-phase shape on the parquet ManagedTable. On UNCLUSTERED
-layouts — where the interval rewrite's range-overlap closure collapses
-to a full overwrite — the exact key scan must still rewrite only the
-files containing matched keys, hard-link the rest, and produce exactly
-the same table contents as a full rewrite."""
+"""Keyed MERGE on the Delta-protocol table (``DeltaProtocolTable.merge``)
+as mack's functions drive it: on any layout the result equals the same
+mutation on a single-file twin, files whose key range misses every
+source key stay live and unchanged, NULL keys follow the condition's
+three-valued logic, and an ambiguous source raises before anything
+commits."""
 
-import os
 import random
 
 import pytest
 from pyspark.sql import functions as F
 
 import mack_spark as mk
-from mack_spark.tables import KeyedMerge, ManagedTable
+from mack_spark.sources.delta_log import DeltaProtocolTable
+from mack_spark.tables import KeyedMerge
 
 from conftest import assert_df_equality
 
@@ -22,18 +22,13 @@ SCD = (
 )
 
 
-def _snapshot_inodes(table):
-    snap = table._snapshot_dir()
-    return {
-        n: os.stat(os.path.join(snap, n)).st_ino
-        for n in os.listdir(snap)
-        if n.endswith(".parquet") and not n.startswith(("_", "."))
-    }
+def _live_files(table):
+    return set(table.snapshot().files)
 
 
 def _unclustered_scd_table(spark, path, n=100, files=4):
     """Hash-partitioned layout: every file's key range overlaps every
-    other, so the interval closure degrades to full rewrite."""
+    other."""
     df = (
         spark.createDataFrame(
             [(i, f"v{i}", True, None, None) for i in range(n)], SCD
@@ -41,7 +36,7 @@ def _unclustered_scd_table(spark, path, n=100, files=4):
         .withColumn("effective_time", F.to_timestamp(F.lit("2020-01-01")))
         .repartition(files)
     )
-    return ManagedTable.create(spark, str(path), df)
+    return DeltaProtocolTable.create(spark, str(path), df)
 
 
 def _ups(spark, rows):
@@ -50,33 +45,13 @@ def _ups(spark, rows):
     ).withColumn("effective_time", F.to_timestamp(F.lit("2021-06-01")))
 
 
-def test_scd2_unclustered_links_untouched_files(spark, tmp_path):
-    table = _unclustered_scd_table(spark, tmp_path / "t")
-    before = _snapshot_inodes(table)
-    assert len(before) == 4
-
-    mk.type_2_scd_generic_upsert(
-        table, _ups(spark, [(5, "A2", None)]), "pkey", ["attr"],
-        "is_current", "effective_time", "end_time",
-    )
-
-    after = _snapshot_inodes(table)
-    shared = set(before.values()) & set(after.values())
-    # key 5 lives in exactly one hash file; the other three hard-link
-    assert len(shared) == 3, (before, after)
-    out = table.toDF()
-    assert out.count() == 101
-    s = {(r["attr"], r["is_current"]) for r in out.filter("pkey = 5").collect()}
-    assert s == {("v5", False), ("A2", True)}
-
-
 def test_scd2_unclustered_matches_single_file_twin(spark, tmp_path):
     rows = [(i, f"v{i}", True, None, None) for i in range(60)]
     base = spark.createDataFrame(rows, SCD).withColumn(
         "effective_time", F.to_timestamp(F.lit("2020-01-01"))
     )
-    keyed = ManagedTable.create(spark, str(tmp_path / "k"), base.repartition(5))
-    twin = ManagedTable.create(spark, str(tmp_path / "f"), base.coalesce(1))
+    keyed = DeltaProtocolTable.create(spark, str(tmp_path / "k"), base.repartition(5))
+    twin = DeltaProtocolTable.create(spark, str(tmp_path / "f"), base.coalesce(1))
 
     ups = _ups(spark, [(3, "X", None), (44, "Y", None), (99, "NEW", None)])
     for t in (keyed, twin):
@@ -84,7 +59,7 @@ def test_scd2_unclustered_matches_single_file_twin(spark, tmp_path):
             t, ups, "pkey", ["attr"],
             "is_current", "effective_time", "end_time",
         )
-    assert_df_equality(keyed.toDF(), twin.toDF())
+    assert_df_equality(keyed.to_df(), twin.to_df())
 
 
 def test_drop_duplicates_pkey_unclustered(spark, tmp_path):
@@ -96,22 +71,21 @@ def test_drop_duplicates_pkey_unclustered(spark, tmp_path):
         )
         .repartition(5)
     )
-    table = ManagedTable.create(spark, str(tmp_path / "d"), df)
+    table = DeltaProtocolTable.create(spark, str(tmp_path / "d"), df)
     # induce dups in exactly two groups via an append
     table.append(
         spark.createDataFrame(
             [(1000, 3, "g3"), (1001, 7, "g7")], "pk int, grp int, val string"
         )
     )
-    before = _snapshot_inodes(table)
+    before = _live_files(table)
     mk.drop_duplicates_pkey(table, "pk", ["grp", "val"])
-    after = _snapshot_inodes(table)
     # losers (pk 1000/1001, higher than survivors 3/7) live only in the
-    # appended file(s); the five original hash files hold only survivors
-    # and must ride through as hard links
-    shared = set(before.values()) & set(after.values())
-    assert len(shared) >= 5, (len(before), len(after), len(shared))
-    out = table.toDF()
+    # appended file; the five original hash files hold only survivors
+    # and their pk ranges miss the losers, so they stay live untouched
+    shared = before & _live_files(table)
+    assert len(shared) >= 5, (len(before), len(shared))
+    out = table.to_df()
     assert out.count() == 100
     assert out.filter("pk >= 1000").count() == 0
 
@@ -124,9 +98,9 @@ def test_kill_duplicates_keeps_null_groups(spark, tmp_path):
         [(1, None, "a"), (2, None, "a"), (3, 5, "b"), (4, 6, "c"), (5, 6, "c")],
         "pk int, grp int, val string",
     ).repartition(3)
-    table = ManagedTable.create(spark, str(tmp_path / "n"), df)
+    table = DeltaProtocolTable.create(spark, str(tmp_path / "n"), df)
     mk.kill_duplicates(table, ["grp", "val"])
-    out = sorted(r["pk"] for r in table.toDF().collect())
+    out = sorted(r["pk"] for r in table.to_df().collect())
     assert out == [1, 2, 3]
 
 
@@ -134,100 +108,84 @@ def test_null_safe_keyed_merge_deletes_null_group(spark, tmp_path):
     """The raw KeyedMerge surface DOES support null-safe conditions
     (Delta `<=>`): a NULL source key must match NULL target keys and
     delete them, which exercises the null-candidate file selection."""
-    from pyspark.sql import Window
-
     rows = [(i, 100 + i, f"u{i}") for i in range(30)]
     rows += [(900, None, "a"), (901, None, "a"), (902, 6, "c"), (903, 6, "c")]
     df = spark.createDataFrame(rows, "pk int, grp int, val string").repartition(4)
-    table = ManagedTable.create(spark, str(tmp_path / "ns"), df)
+    table = DeltaProtocolTable.create(spark, str(tmp_path / "ns"), df)
     dup_keys = (
-        table.toDF()
+        table.to_df()
         .groupBy("grp", "val")
         .count()
         .filter(F.col("count") > 1)
         .drop("count")
     )
-    post = (
-        table.toDF()
-        .withColumn("__n", F.count("*").over(Window.partitionBy("grp", "val")))
-        .filter(F.col("__n") == 1)
-        .drop("__n")
-    )
-    table.merge_overwrite(
-        post,
-        operation="MERGE-DELETE",
-        keyed_merge=KeyedMerge(
+    table.merge(
+        KeyedMerge(
             source=dup_keys,
             condition="t.`grp` <=> s.`grp` AND t.`val` <=> s.`val`",
             matched_delete=True,
             target_key_col="grp",
             source_key_col="grp",
             null_safe=True,
-        ),
+        )
     )
-    out = sorted(r["pk"] for r in table.toDF().collect())
+    out = sorted(r["pk"] for r in table.to_df().collect())
     assert out == list(range(30))
 
 
 def test_insert_only_merge_links_everything(spark, tmp_path):
     table = _unclustered_scd_table(spark, tmp_path / "i", n=50, files=3)
-    before = _snapshot_inodes(table)
+    before = _live_files(table)
     mk.type_2_scd_generic_upsert(
         table, _ups(spark, [(200, "N1", None), (201, "N2", None)]),
         "pkey", ["attr"], "is_current", "effective_time", "end_time",
     )
-    after = _snapshot_inodes(table)
-    shared = set(before.values()) & set(after.values())
-    assert len(shared) == 3  # no existing file contains the new keys
-    assert table.toDF().count() == 52
-    news = {r["attr"] for r in table.toDF().filter("pkey >= 200").collect()}
+    # no existing file contains the new keys: every file stays live
+    assert before <= _live_files(table)
+    assert table.to_df().count() == 52
+    news = {r["attr"] for r in table.to_df().filter("pkey >= 200").collect()}
     assert news == {"N1", "N2"}
 
 
 def test_ambiguous_merge_raises(spark, tmp_path):
     table = _unclustered_scd_table(spark, tmp_path / "a", n=30, files=3)
+    v0 = table.snapshot().version
     dup_ups = _ups(spark, [(5, "X", None), (5, "Y", None)])
     with pytest.raises(Exception, match="(?i)ambiguous|multiple"):
         mk.type_2_scd_generic_upsert(
             table, dup_ups, "pkey", ["attr"],
             "is_current", "effective_time", "end_time",
         )
+    assert table.snapshot().version == v0
 
 
-def test_keyless_file_stays_untouched(spark, tmp_path):
-    """A physical file written before the key column existed reads as
-    key=NULL under the declared schema: it can match no equality key,
-    so the keyed path must hard-link it and keep all its rows (the
-    interval path refuses outright on its missing stats)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    df = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(20)], "pkey int, attr string"
-    ).repartition(2)
-    table = ManagedTable.create(spark, str(tmp_path / "kl"), df)
-    snap = table._snapshot_dir()
-    planted = pa.table({"attr": pa.array([f"old{i}" for i in range(5)])})
-    pq.write_table(planted, os.path.join(snap, "part-prekey.parquet"))
-    assert table.toDF().count() == 25
+def test_keyless_file_rows_survive(spark, tmp_path):
+    """A file written before the key column existed reads as key=NULL:
+    it can match no equality key, and it has no key statistics, so the
+    merge must read it as a candidate and keep all its rows."""
+    table = DeltaProtocolTable.create(
+        spark, str(tmp_path / "kl"),
+        spark.createDataFrame([(f"old{i}",) for i in range(5)], "attr string"),
+    )
+    table.append(
+        spark.createDataFrame(
+            [(i, f"v{i}") for i in range(20)], "pkey int, attr string"
+        ).repartition(2),
+        merge_schema=True,
+    )
+    assert table.to_df().count() == 25
 
     doomed = spark.createDataFrame([(3,)], "pkey int")
-    before = _snapshot_inodes(table)
-    table.merge_overwrite(
-        table.toDF().join(doomed, "pkey", "left_anti"),
-        operation="MERGE-DELETE",
-        touched_keys=("pkey", doomed),
-        keyed_merge=KeyedMerge(
+    table.merge(
+        KeyedMerge(
             source=doomed,
             condition="t.`pkey` = s.`pkey`",
             matched_delete=True,
             target_key_col="pkey",
             source_key_col="pkey",
-        ),
+        )
     )
-    after = _snapshot_inodes(table)
-    assert before["part-prekey.parquet"] == after["part-prekey.parquet"]
-    out = table.toDF()
+    out = table.to_df()
     assert out.count() == 24
     assert out.filter("pkey = 3").count() == 0
     assert out.filter("pkey is null").count() == 5
@@ -237,8 +195,7 @@ def test_keyless_file_stays_untouched(spark, tmp_path):
 @pytest.mark.slow
 def test_randomized_keyed_vs_full_rewrite(spark, tmp_path):
     """Property: on arbitrary layouts and update batches, the keyed
-    file merge must equal the same upsert on a single-file twin (which
-    takes the plain full-overwrite path)."""
+    file merge must equal the same upsert on a single-file twin."""
     rng = random.Random(74)
     for round_i in range(4):
         n = rng.randint(10, 60)
@@ -248,10 +205,10 @@ def test_randomized_keyed_vs_full_rewrite(spark, tmp_path):
             "effective_time", F.to_timestamp(F.lit("2020-01-01"))
         )
         files = rng.randint(2, 6)
-        keyed = ManagedTable.create(
+        keyed = DeltaProtocolTable.create(
             spark, str(tmp_path / f"rk{round_i}"), base.repartition(files)
         )
-        twin = ManagedTable.create(
+        twin = DeltaProtocolTable.create(
             spark, str(tmp_path / f"rf{round_i}"), base.coalesce(1)
         )
         upd_keys = rng.sample(range(250), rng.randint(1, 12))
@@ -261,7 +218,7 @@ def test_randomized_keyed_vs_full_rewrite(spark, tmp_path):
                 t, ups, "pkey", ["attr"],
                 "is_current", "effective_time", "end_time",
             )
-        assert_df_equality(keyed.toDF(), twin.toDF())
+        assert_df_equality(keyed.to_df(), twin.to_df())
 
 
 # ---- DeltaProtocolTable.merge: source uniqueness skips the probe ----
@@ -285,8 +242,6 @@ def probe_spy(monkeypatch):
 
 
 def _protocol_table(spark, path, rows, schema):
-    from mack_spark.sources.delta_log import DeltaProtocolTable
-
     return DeltaProtocolTable.create(
         spark, str(path), spark.createDataFrame(rows, schema)
     )

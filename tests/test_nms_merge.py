@@ -4,8 +4,7 @@
 Key pruning is invalid for these merges (unmatched rows live in every
 file), so the touched set is the full live file list and any
 interleaved concurrent append conflicts — both delta-spark's own
-behavior. The ManagedTable keyed fast path falls back to post-state;
-the clause compiler emits whenNotMatchedBySourceUpdate/Delete.
+behavior.
 """
 
 import pytest
@@ -15,7 +14,7 @@ from mack_spark.sources.delta_log import (
     DeltaProtocolError,
     DeltaProtocolTable,
 )
-from mack_spark.tables import KeyedMerge, apply_keyed_merge
+from mack_spark.tables import KeyedMerge
 
 SCHEMA = "pkey int, status string, v int"
 
@@ -147,37 +146,6 @@ class TestNmsSemantics:
 
 
 class TestNmsCompilerAndSeam:
-    def test_apply_keyed_merge_emits_builder_calls(self, spark):
-        calls = []
-
-        class FakeBuilder:
-            def __getattr__(self, name):
-                def rec(*a, **kw):
-                    calls.append((name, kw))
-                    return self
-                return rec
-
-        class FakeDt:
-            def alias(self, a):
-                return FakeBuilder()
-
-        src = spark.createDataFrame([(1, "a", 1)], SCHEMA)
-        apply_keyed_merge(FakeDt(), _km(
-            src,
-            matched_update={"status": "s.status"},
-            not_matched_by_source_update={"status": "'stale'"},
-            not_matched_by_source_update_condition="t.v = 1",
-            not_matched_by_source_delete="t.v = 2",
-        ))
-        names = [n for n, _ in calls]
-        assert "whenNotMatchedBySourceUpdate" in names
-        assert "whenNotMatchedBySourceDelete" in names
-        kw = dict(calls)[
-            "whenNotMatchedBySourceUpdate"
-        ]
-        assert kw == {"condition": "t.v = 1",
-                      "set": {"status": "'stale'"}}
-
     def test_concurrent_append_conflicts(self, spark, tmp_path):
         from mack_spark.tables import ConcurrentModificationError
 
@@ -401,33 +369,6 @@ class TestMergeUpdateAll:
         assert after == before
         rows = {r["pkey"]: r["status"] for r in t.to_df().collect()}
         assert rows[0] == "m"
-
-    def test_clause_compiler_update_all(self):
-        from mack_spark.tables import apply_keyed_merge
-
-        class Rec:
-            def __init__(self):
-                self.calls = []
-
-            def __getattr__(self, name):
-                def f(*a, **k):
-                    self.calls.append((name, k))
-                    return self
-                return f
-
-        class FakeSrc:
-            def alias(self, a):
-                return self
-
-        rec = Rec()
-        km = KeyedMerge(
-            source=FakeSrc(), condition="t.k = s.k",
-            matched_update="*",
-        )
-        apply_keyed_merge(rec, km)
-        names = [n for n, _ in rec.calls]
-        assert "whenMatchedUpdateAll" in names
-        assert "whenMatchedUpdate" not in names
 
 
 class TestMergeEvolutionMapped:

@@ -1,5 +1,5 @@
 """End-to-end incremental corpus ingestion: the full curation chain
-composed over the versioned ManagedTable substrate.
+composed over the Delta-protocol table substrate.
 
 Three raw batches (overlapping keys, intra-batch duplicates, quality
 failures) flow through quality gating → idempotent keyed append →
@@ -16,7 +16,7 @@ from mack_spark.dedup import append_without_duplicates
 from mack_spark.operators.mixing import apply_mix, mix_allocation
 from mack_spark.operators.quality import gopher_quality_flags
 from mack_spark.operators.shard import shard_manifest
-from mack_spark.tables import ManagedTable
+from mack_spark.sources.delta_log import DeltaProtocolTable
 
 
 def _batch(spark, ids, source, good=True):
@@ -31,7 +31,7 @@ def _batch(spark, ids, source, good=True):
 def corpus(spark, tmp_path):
     path = str(tmp_path / "corpus")
     schema = _batch(spark, [0], "s0").schema
-    return ManagedTable.create(spark, path, schema=schema)
+    return DeltaProtocolTable.create(spark, path, spark.createDataFrame([], schema))
 
 
 def _ingest(table, batch, min_words=20):
@@ -49,31 +49,30 @@ class TestIncrementalPipeline:
         b3 = _batch(spark, range(70, 90), "s0")
 
         _ingest(corpus, b1)
-        assert corpus.toDF().count() == 40
+        assert corpus.to_df().count() == 40
         _ingest(corpus, b2)
         # 30 new keys from b2 (30..69 minus 30..39 already present);
         # the 10 bad docs never enter; the duplicated 35 stays single
-        assert corpus.toDF().count() == 70
+        assert corpus.to_df().count() == 70
         _ingest(corpus, b3)
-        assert corpus.toDF().count() == 90
-        assert corpus.toDF().select("doc_id").distinct().count() == 90
+        assert corpus.to_df().count() == 90
+        assert corpus.to_df().select("doc_id").distinct().count() == 90
 
         # replay batch 2 (crash-recovery re-run): byte-for-byte no-op
-        before = sorted(map(tuple, corpus.toDF().collect()))
+        before = sorted(map(tuple, corpus.to_df().collect()))
         _ingest(corpus, b2)
-        after = sorted(map(tuple, corpus.toDF().collect()))
+        after = sorted(map(tuple, corpus.to_df().collect()))
         assert before == after
 
-        # history advanced once per ingest (including the no-op append)
-        versions = [h["version"] for h in corpus.history()]
-        assert max(versions) >= 3
+        # history advanced once per ingest
+        assert corpus.snapshot().version >= 3
 
     def test_downstream_is_rederivation_stable(self, spark, corpus):
         _ingest(corpus, _batch(spark, range(0, 50), "s0"))
         _ingest(corpus, _batch(spark, range(50, 100), "s1"))
 
         weights = {"s0": 1.0, "s1": 1.0}
-        df = corpus.toDF()
+        df = corpus.to_df()
         plan = mix_allocation(df, weights, budget_fraction=0.5)
         kept1 = sorted(
             r["doc_id"] for r in apply_mix(df, plan, ["doc_id"]).collect()
@@ -95,6 +94,6 @@ class TestIncrementalPipeline:
     def test_time_travel_sees_each_ingest(self, spark, corpus):
         _ingest(corpus, _batch(spark, range(0, 10), "s0"))
         _ingest(corpus, _batch(spark, range(10, 30), "s1"))
-        v_latest = max(h["version"] for h in corpus.history())
-        assert corpus.toDF(version=v_latest - 1).count() == 10
-        assert corpus.toDF(version=v_latest).count() == 30
+        v_latest = corpus.snapshot().version
+        assert corpus.to_df(version_as_of=v_latest - 1).count() == 10
+        assert corpus.to_df(version_as_of=v_latest).count() == 30

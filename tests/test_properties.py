@@ -121,10 +121,10 @@ def test_salted_left_join_keeps_unmatched_once(spark):
 
 
 # ---------------------------------------------------------- pruned merge
-# The file-pruned merge (tables.py _merge_file_pruned) must be
-# result-equivalent to a full-snapshot rewrite for ANY physical layout:
-# random clustering (overlapping file ranges -> closure degrades toward
-# full rewrite), range clustering, NULL keys, out-of-range inserts.
+# The file-pruned MERGE (DeltaProtocolTable.merge via
+# drop_duplicates_pkey) must be result-equivalent to a full rewrite for
+# ANY physical layout: random clustering (overlapping file ranges ->
+# every file touched), range clustering, NULL duplication keys.
 
 
 @given(st.integers(min_value=0, max_value=10**6))
@@ -136,8 +136,8 @@ def test_file_pruned_merge_equals_full_rewrite(seed):
 
     from pyspark.sql import SparkSession
 
-    from mack_spark.dedup import drop_duplicates_pkey_post
-    from mack_spark.tables import ManagedTable
+    from mack_spark.dedup import drop_duplicates_pkey, drop_duplicates_pkey_post
+    from mack_spark.sources.delta_log import DeltaProtocolTable
 
     spark = SparkSession.getActiveSession() or SparkSession.builder.master(
         "local[4]"
@@ -159,19 +159,12 @@ def test_file_pruned_merge_equals_full_rewrite(seed):
         df = df.repartition(rng.randint(2, 5))
 
     with tempfile.TemporaryDirectory() as d:
-        pruned = ManagedTable.create(spark, d + "/p", df=df)
-        full = ManagedTable.create(spark, d + "/f", df=df)
-        dup_keys = (
-            df.groupBy("c1").count().filter(F.col("count") > 1).drop("count")
-        )
-        post_p = drop_duplicates_pkey_post(pruned.toDF(), ["pkey"], ["c1"])
-        post_f = drop_duplicates_pkey_post(full.toDF(), ["pkey"], ["c1"])
-        pruned.merge_overwrite(
-            post_p, operation="MERGE-DELETE", touched_keys=("c1", dup_keys)
-        )
-        full.merge_overwrite(post_f, operation="MERGE-DELETE")
-        a = sorted(tuple(r) for r in pruned.toDF().collect())
-        e = sorted(tuple(r) for r in full.toDF().collect())
+        pruned = DeltaProtocolTable.create(spark, d + "/p", df)
+        full = DeltaProtocolTable.create(spark, d + "/f", df)
+        drop_duplicates_pkey(pruned, "pkey", ["c1"])
+        full.overwrite(drop_duplicates_pkey_post(full.to_df(), ["pkey"], ["c1"]))
+        a = sorted(tuple(r) for r in pruned.to_df().collect())
+        e = sorted(tuple(r) for r in full.to_df().collect())
         assert a == e, f"seed={seed} layout={layout}: {a} != {e}"
 
 
@@ -219,7 +212,7 @@ def test_scd2_random_batches_match_model(seed):
     from pyspark.sql import SparkSession
 
     import mack_spark as mk
-    from mack_spark.tables import ManagedTable
+    from mack_spark.sources.delta_log import DeltaProtocolTable
 
     spark = SparkSession.getActiveSession() or SparkSession.builder.master(
         "local[4]"
@@ -242,8 +235,8 @@ def test_scd2_random_batches_match_model(seed):
     schema = ("pkey int, attr string, is_current boolean, "
               "effective_time timestamp, end_time timestamp")
     with tempfile.TemporaryDirectory() as d:
-        t = ManagedTable.create(
-            spark, d + "/t", df=spark.createDataFrame(
+        t = DeltaProtocolTable.create(
+            spark, d + "/t", spark.createDataFrame(
                 [tuple(r.values()) for r in base_rows], schema)
         )
         mk.type_2_scd_generic_upsert(
@@ -256,7 +249,7 @@ def test_scd2_random_batches_match_model(seed):
         )
         got = sorted(
             (r.pkey, r.attr, r.is_current, r.effective_time, r.end_time)
-            for r in t.toDF().collect()
+            for r in t.to_df().collect()
         )
         want = sorted(
             (r["pkey"], r["attr"], r["is_current"], r["effective_time"], r["end_time"])

@@ -1,14 +1,13 @@
-"""Partition-pruned merge: merge_overwrite(touched_partitions=...) must
-rewrite ONLY the touched partitions (untouched partition files are
-hard-linked from the previous snapshot, byte-identical and job-free)
-while producing exactly the same table contents as a full rewrite."""
-
-import os
+"""Pruned merge: mack's MERGE-based mutations on a Delta-protocol table
+rewrite ONLY the files (or partitions) a source key can touch — every
+other file stays live, unchanged, in the next version — while producing
+exactly the same table contents as a full rewrite."""
 
 from pyspark.sql import functions as F
 
 import mack_spark as mk
-from mack_spark.tables import ManagedTable
+from mack_spark.sources.delta_log import DeltaProtocolTable
+from mack_spark.tables import KeyedMerge
 
 from conftest import assert_df_equality
 
@@ -16,13 +15,7 @@ SCHEMA = "pkey int, attr string, seg string, is_current boolean, effective_time 
 
 
 def _partition_files(table, seg):
-    snap = table._snapshot_dir()
-    d = os.path.join(snap, f"seg={seg}")
-    return sorted(
-        (n, os.stat(os.path.join(d, n)).st_ino)
-        for n in os.listdir(d)
-        if n.endswith(".parquet")
-    )
+    return sorted(p for p in table.snapshot().files if p.startswith(f"seg={seg}/"))
 
 
 def _base_rows(spark):
@@ -37,8 +30,8 @@ def _base_rows(spark):
 
 
 def test_pruned_merge_links_untouched_partitions(spark, tmp_path):
-    table = ManagedTable.create(
-        spark, str(tmp_path / "dim"), df=_base_rows(spark), partition_by=["seg"]
+    table = DeltaProtocolTable.create(
+        spark, str(tmp_path / "dim"), _base_rows(spark), partition_by=["seg"]
     )
     before_s2 = _partition_files(table, "s2")
     before_s3 = _partition_files(table, "s3")
@@ -52,12 +45,12 @@ def test_pruned_merge_links_untouched_partitions(spark, tmp_path):
         "is_current", "effective_time", "end_time",
     )
 
-    # Untouched partitions survived as the same files (hard links, not a
-    # rewrite — Spark generates fresh random file names on any rewrite).
+    # Untouched partitions survived as the same live files (a rewrite
+    # would add freshly named files and remove these).
     assert _partition_files(table, "s2") == before_s2
     assert _partition_files(table, "s3") == before_s3
 
-    out = table.toDF()
+    out = table.to_df()
     assert out.count() == 4  # closed v1 + new current + 2 untouched
     s1 = {(r["attr"], r["is_current"]) for r in out.filter("seg = 's1'").collect()}
     assert s1 == {("A", False), ("A2", True)}
@@ -65,8 +58,8 @@ def test_pruned_merge_links_untouched_partitions(spark, tmp_path):
 
 def test_pruned_merge_matches_full_rewrite(spark, tmp_path):
     df = _base_rows(spark)
-    pruned = ManagedTable.create(spark, str(tmp_path / "p"), df=df, partition_by=["seg"])
-    full = ManagedTable.create(spark, str(tmp_path / "f"), df=df, partition_by=["seg"])
+    pruned = DeltaProtocolTable.create(spark, str(tmp_path / "p"), df, partition_by=["seg"])
+    full = DeltaProtocolTable.create(spark, str(tmp_path / "f"), df, partition_by=["seg"])
 
     updates = spark.createDataFrame(
         [(2, "B2", "s2", None), (9, "NEW", "s9", None)],
@@ -77,99 +70,84 @@ def test_pruned_merge_matches_full_rewrite(spark, tmp_path):
         pruned, updates, "pkey", ["attr", "seg"],
         "is_current", "effective_time", "end_time",
     )
-    # Same post-state committed without the pruning hint.
+    # Same post-state committed as a full rewrite.
     from mack_spark.scd import scd2_post_state
 
     post = scd2_post_state(
-        full.toDF(), updates, "pkey", ["attr", "seg"],
+        full.to_df(), updates, "pkey", ["attr", "seg"],
         "is_current", "effective_time", "end_time",
     )
-    full.merge_overwrite(post, operation="MERGE")
+    full.overwrite(post)
 
     cols = ["pkey", "attr", "seg", "is_current", "effective_time", "end_time"]
     assert_df_equality(
-        pruned.toDF().select(*cols).orderBy("pkey", "is_current"),
-        full.toDF().select(*cols).orderBy("pkey", "is_current"),
+        pruned.to_df().select(*cols).orderBy("pkey", "is_current"),
+        full.to_df().select(*cols).orderBy("pkey", "is_current"),
     )
 
 
 def test_pruned_merge_handles_deleted_partition(spark, tmp_path):
     # A touched partition whose post-state has no rows simply vanishes.
-    t = ManagedTable.create(
+    t = DeltaProtocolTable.create(
         spark,
         str(tmp_path / "d"),
-        df=spark.createDataFrame([(1, "s1"), (2, "s2")], "id int, seg string"),
+        spark.createDataFrame([(1, "s1"), (2, "s2")], "id int, seg string"),
         partition_by=["seg"],
     )
-    post = t.toDF().filter("seg <> 's1'")
-    t.merge_overwrite(post, operation="DELETE", touched_partitions=[{"seg": "s1"}])
-    assert [r["seg"] for r in t.toDF().collect()] == ["s2"]
+    t.merge(KeyedMerge(
+        source=spark.createDataFrame([(1,)], "id int"),
+        condition="t.id = s.id",
+        matched_delete=True,
+        target_key_col="id", source_key_col="id",
+    ))
+    assert [r["seg"] for r in t.to_df().collect()] == ["s2"]
+    assert _partition_files(t, "s1") == []
 
 
 # ---------------------------------------------------------------- file-pruned
-# merge_overwrite(touched_keys=...) on UNPARTITIONED tables: per-file
-# min/max footer stats pick the files a touched key can live in; the
-# rest are hard-linked (same inode) into the new snapshot.
+# On UNPARTITIONED tables the per-file min/max key statistics in the
+# log pick the files a source key can live in; the rest stay live.
 
 
-def _snapshot_files(table):
-    snap = table._snapshot_dir()
-    return {
-        n: os.stat(os.path.join(snap, n)).st_ino
-        for n in os.listdir(snap)
-        if n.endswith(".parquet") and not n.startswith(("_", "."))
-    }
-
-
-def _ranged_table(spark, path, n=100, files=4):
-    df = (
-        spark.range(n)
-        .select(
-            F.col("id").cast("int").alias("pkey"),
-            F.concat(F.lit("v"), F.col("id")).alias("attr"),
-        )
-        .repartitionByRange(files, "pkey")
-        .sortWithinPartitions("pkey")
+def _ranged_table(spark, path, n=100, files=4, scd=False):
+    df = spark.range(n).select(
+        F.col("id").cast("int").alias("pkey"),
+        F.concat(F.lit("v"), F.col("id")).alias("attr"),
     )
-    return ManagedTable.create(spark, str(path), df=df)
+    if scd:
+        df = df.select(
+            "pkey", "attr",
+            F.lit(True).alias("is_current"),
+            F.to_timestamp(F.lit("2020-01-01")).alias("effective_time"),
+            F.lit(None).cast("timestamp").alias("end_time"),
+        )
+    df = df.repartitionByRange(files, "pkey").sortWithinPartitions("pkey")
+    return DeltaProtocolTable.create(spark, str(path), df)
+
+
+def _live_files(table):
+    return set(table.snapshot().files)
 
 
 def test_file_pruned_scd2_links_untouched_files(spark, tmp_path):
-    table = _ranged_table(spark, tmp_path / "t")
-    before = _snapshot_files(table)
+    table = _ranged_table(spark, tmp_path / "t", scd=True)
+    before = _live_files(table)
     assert len(before) == 4
 
     updates = spark.createDataFrame(
         [(5, "A2", None)], "pkey int, attr string, effective_time timestamp"
     ).withColumn("effective_time", F.to_timestamp(F.lit("2021-06-01")))
-    base = table.toDF().select(
-        "pkey", "attr",
-        F.lit(True).alias("is_current"),
-        F.to_timestamp(F.lit("2020-01-01")).alias("effective_time"),
-        F.lit(None).cast("timestamp").alias("end_time"),
-    )
-    table.overwrite(base, operation="WRITE")
-    # overwrite rewrote everything; re-cluster by key so file ranges are
-    # disjoint again, then snapshot inodes
-    table.overwrite(
-        table.toDF().repartitionByRange(4, "pkey").sortWithinPartitions("pkey"),
-        operation="WRITE",
-    )
-    before = _snapshot_files(table)
-    assert len(before) == 4
-
     mk.type_2_scd_generic_upsert(
         table, updates, "pkey", ["attr"],
         "is_current", "effective_time", "end_time",
     )
 
-    after = _snapshot_files(table)
-    shared = set(before.values()) & set(after.values())
     # key 5 lives in exactly one of the four range files: the other
-    # three must be hard links of the previous snapshot's files
-    assert len(shared) == 3, (before, after)
+    # three must stay live unchanged
+    shared = before & _live_files(table)
+    assert len(shared) == 3, (before, _live_files(table))
 
-    out = table.toDF()
+    out = table.to_df()
     assert out.count() == 101  # 100 rows + one closed version
     s = {(r["attr"], r["is_current"]) for r in out.filter("pkey = 5").collect()}
     assert s == {("v5", False), ("A2", True)}
@@ -185,32 +163,24 @@ def test_file_pruned_drop_duplicates_pkey(spark, tmp_path):
     )
     # duplicate c1 groups: each c1 value appears twice (pkey k and k+50)
     clustered = df.repartitionByRange(4, "c1").sortWithinPartitions("c1")
-    table = ManagedTable.create(spark, str(tmp_path / "dd"), df=clustered)
-    before = _snapshot_files(table)
+    table = DeltaProtocolTable.create(spark, str(tmp_path / "dd"), clustered)
 
     mk.drop_duplicates_pkey(table, "pkey", ["c1"])
 
-    out = table.toDF()
+    out = table.to_df()
     assert out.count() == 50
     assert out.agg(F.max("pkey")).collect()[0][0] == 49  # min-pkey survivors
     # every file had duplicates (c1 values repeat everywhere), so this
     # asserts only correctness; the pruning assertion is the disjoint
-    # case below
+    # case above
 
 
 def test_file_pruned_out_of_range_insert_survives(spark, tmp_path):
-    table = _ranged_table(spark, tmp_path / "oor")
-    base = table.toDF().select(
-        "pkey", "attr",
-        F.lit(True).alias("is_current"),
-        F.to_timestamp(F.lit("2020-01-01")).alias("effective_time"),
-        F.lit(None).cast("timestamp").alias("end_time"),
-    ).repartitionByRange(4, "pkey").sortWithinPartitions("pkey")
-    table.overwrite(base, operation="WRITE")
-    before = _snapshot_files(table)
+    table = _ranged_table(spark, tmp_path / "oor", scd=True)
+    before = _live_files(table)
 
-    # key 1000 is beyond every file's max: the insert must land in the
-    # rewrite region even though no existing file range contains it
+    # key 1000 is beyond every file's max: the insert must land even
+    # though no existing file range contains it
     updates = spark.createDataFrame(
         [(1000, "NEW", None)], "pkey int, attr string, effective_time timestamp"
     ).withColumn("effective_time", F.to_timestamp(F.lit("2021-06-01")))
@@ -218,12 +188,11 @@ def test_file_pruned_out_of_range_insert_survives(spark, tmp_path):
         table, updates, "pkey", ["attr"],
         "is_current", "effective_time", "end_time",
     )
-    out = table.toDF()
+    out = table.to_df()
     assert out.count() == 101
     assert out.filter("pkey = 1000").count() == 1
-    # no base file contained key 1000 -> ALL base files stay hard-linked
-    after = _snapshot_files(table)
-    assert set(before.values()) <= set(after.values())
+    # no base file contained key 1000 -> ALL base files stay live
+    assert before <= _live_files(table)
 
 
 def test_file_pruned_matches_full_rewrite(spark, tmp_path):
@@ -237,22 +206,19 @@ def test_file_pruned_matches_full_rewrite(spark, tmp_path):
         )
         .repartitionByRange(3, "pkey")
     )
-    pruned = ManagedTable.create(spark, str(tmp_path / "fp"), df=df)
-    full = ManagedTable.create(spark, str(tmp_path / "ff"), df=df)
+    pruned = DeltaProtocolTable.create(spark, str(tmp_path / "fp"), df)
+    full = DeltaProtocolTable.create(spark, str(tmp_path / "ff"), df)
 
     mk.drop_duplicates_pkey(pruned, "pkey", ["c1"])
-    full.merge_overwrite(
-        drop_duplicates_pkey_post(full.toDF(), ["pkey"], ["c1"]),
-        operation="MERGE-DELETE",
-    )
+    full.overwrite(drop_duplicates_pkey_post(full.to_df(), ["pkey"], ["c1"]))
     assert_df_equality(
-        pruned.toDF().orderBy("pkey"), full.toDF().orderBy("pkey")
+        pruned.to_df().orderBy("pkey"), full.to_df().orderBy("pkey")
     )
 
 
 def test_file_pruned_merge_string_key(spark, tmp_path):
-    """String-typed merge keys: footer min/max are strings; range
-    pruning and the rewrite filter must behave identically."""
+    """String-typed merge keys: min/max stats are strings; range
+    pruning must behave identically to a full rewrite."""
     df = (
         spark.range(90)
         .select(
@@ -263,74 +229,23 @@ def test_file_pruned_merge_string_key(spark, tmp_path):
         .repartitionByRange(3, "ckey")
         .sortWithinPartitions("ckey")
     )
-    pruned = ManagedTable.create(spark, str(tmp_path / "sp"), df=df)
-    full = ManagedTable.create(spark, str(tmp_path / "sf"), df=df)
+    pruned = DeltaProtocolTable.create(spark, str(tmp_path / "sp"), df)
+    full = DeltaProtocolTable.create(spark, str(tmp_path / "sf"), df)
 
     # delete the rows of three specific string keys
     doomed = spark.createDataFrame(
         [("cust-0003",), ("cust-0004",), ("cust-0088",)], "ckey string"
     )
-    post_p = pruned.toDF().join(doomed, "ckey", "left_anti")
-    post_f = full.toDF().join(doomed, "ckey", "left_anti")
-    before = _snapshot_files(pruned)
-    pruned.merge_overwrite(
-        post_p, operation="MERGE-DELETE", touched_keys=("ckey", doomed)
-    )
-    full.merge_overwrite(post_f, operation="MERGE-DELETE")
+    before = _live_files(pruned)
+    pruned.merge(KeyedMerge(
+        source=doomed,
+        condition="t.ckey = s.ckey",
+        matched_delete=True,
+        target_key_col="ckey", source_key_col="ckey",
+    ))
+    full.overwrite(full.to_df().join(doomed, "ckey", "left_anti"))
     assert_df_equality(
-        pruned.toDF().orderBy("ckey"), full.toDF().orderBy("ckey")
+        pruned.to_df().orderBy("ckey"), full.to_df().orderBy("ckey")
     )
-    # keys hit files 1 and 3 of 3; the middle file must be hard-linked
-    after = _snapshot_files(pruned)
-    assert len(set(before.values()) & set(after.values())) == 1
-
-
-def test_file_pruned_refuses_statless_file(spark, tmp_path):
-    """A file with suppressed footer stats voids the disjointness
-    closure: pruning must fall back to the full overwrite instead of
-    silently dropping that file's rows whose keys sit inside an
-    untouched file's [min,max] interval."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    df = (
-        spark.createDataFrame(
-            [(i, f"v{i}") for i in list(range(10)) + list(range(15, 36))],
-            "pkey int, attr string",
-        )
-        .repartitionByRange(2, "pkey")
-        .sortWithinPartitions("pkey")
-    )
-    table = ManagedTable.create(spark, str(tmp_path / "nostat"), df=df)
-
-    # plant a file whose keys (20-29) sit INSIDE the second spark file's
-    # [15,35] range but whose footer carries no statistics
-    snap = table._snapshot_dir()
-    planted = pa.table(
-        {
-            "pkey": pa.array(range(20, 30), pa.int32()),
-            "attr": pa.array([f"x{i}" for i in range(20, 30)]),
-        }
-    )
-    pq.write_table(
-        planted,
-        os.path.join(snap, "part-nostats.parquet"),
-        write_statistics=False,
-    )
-    assert table.toDF().count() == 41
-
-    # touch key 0 only: broken pruning would mark the planted file
-    # "touched" rangelessly and its 10 rows would vanish from the
-    # rewrite region while never being hard-linked
-    doomed = spark.createDataFrame([(0,)], "pkey int")
-    post = table.toDF().join(doomed, "pkey", "left_anti")
-    before = _snapshot_files(table)
-    table.merge_overwrite(
-        post, operation="MERGE-DELETE", touched_keys=("pkey", doomed)
-    )
-    out = table.toDF()
-    assert out.count() == 40
-    assert out.filter(F.col("pkey").between(20, 29)).count() == 20
-    # the fallback is a full rewrite: no previous-snapshot hard links
-    after = _snapshot_files(table)
-    assert not (set(before.values()) & set(after.values()))
+    # keys hit files 1 and 3 of 3; the middle file must stay live
+    assert len(before & _live_files(pruned)) == 1

@@ -1,5 +1,6 @@
-"""Incremental rollup maintenance (mack_spark/rollup.py) and the in-era
-version reconstruction (append manifests) that powers its change feed."""
+"""Incremental rollup maintenance (mack_spark/rollup.py) over the
+Delta-protocol Change Data Feed, and ManagedTable's in-era version
+reconstruction (append manifests)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,11 +11,21 @@ from mack_spark.rollup import (
     refresh_rollup_incremental,
     rollup_as_view,
 )
-from mack_spark.tables import ManagedTable, table_changes
+from mack_spark.sources.delta_log import DeltaProtocolTable
+from mack_spark.tables import ManagedTable
+
+from conftest import assert_df_equality
 
 
 def _events(spark, rows):
     return spark.createDataFrame(rows, "grp string, value double")
+
+
+def _cdf_source(spark, path, rows):
+    return DeltaProtocolTable.create(
+        spark, str(path), _events(spark, rows),
+        properties={"delta.enableChangeDataFeed": "true"},
+    )
 
 
 def _expected(spark, rows):
@@ -45,11 +56,9 @@ class TestInEraVersions:
         assert {r["grp"] for r in t.toDF().collect()} == {"a", "b", "c"}
 
     def test_changes_across_append(self, spark, tmp_path):
-        t = ManagedTable.create(
-            spark, str(tmp_path / "c"), _events(spark, [("a", 1.0)])
-        )
+        t = _cdf_source(spark, tmp_path / "c", [("a", 1.0)])
         t.append(_events(spark, [("b", 2.0)]))
-        ch = table_changes(t, 0).collect()
+        ch = t.table_changes(1).collect()
         assert [(r["grp"], r["_change_type"]) for r in ch] == [("b", "insert")]
 
     def test_overwrite_breaks_era_but_retention_covers(self, spark, tmp_path):
@@ -69,8 +78,7 @@ class TestInEraVersions:
 class TestIncrementalRollup:
     def test_follows_appends_and_deletes(self, spark, tmp_path):
         rows1 = [("a", 1.5), ("a", 2.0), ("b", 3.0)]
-        t = ManagedTable.create(spark, str(tmp_path / "src"), _events(spark, rows1))
-        t.set_properties({"mack.retain_snapshots": "8"})
+        t = _cdf_source(spark, tmp_path / "src", rows1)
         rollup = create_rollup(t, str(tmp_path / "r"), ["grp"])
 
         # append: new group + growth of existing
@@ -78,25 +86,20 @@ class TestIncrementalRollup:
         t.append(_events(spark, rows2))
         refresh_rollup_incremental(rollup, t, ["grp"])
         got = rollup_as_view(rollup, ["grp"])
-        from conftest import assert_df_equality
-
         assert_df_equality(got, _expected(spark, rows1 + rows2))
 
         # delete group a entirely and one b row
-        t.overwrite(
-            t.toDF().filter("grp <> 'a' and value <> 1.0"), schema_change=False
-        )
+        t.delete_where("grp = 'a' OR value = 1.0")
         refresh_rollup_incremental(rollup, t, ["grp"])
         assert_df_equality(
             rollup_as_view(rollup, ["grp"]),
             _expected(spark, [("b", 3.0), ("c", 4.0)]),
         )
         # group 'a' row is GONE, not zeroed
-        assert rollup.toDF().filter("grp = 'a'").count() == 0
+        assert rollup.to_df().filter("grp = 'a'").count() == 0
 
     def test_refresh_is_idempotent_noop_when_current(self, spark, tmp_path):
-        t = ManagedTable.create(spark, str(tmp_path / "s2"), _events(spark, [("a", 1.0)]))
-        t.set_properties({"mack.retain_snapshots": "4"})
+        t = _cdf_source(spark, tmp_path / "s2", [("a", 1.0)])
         rollup = create_rollup(t, str(tmp_path / "r2"), ["grp"])
         v1 = refresh_rollup_incremental(rollup, t, ["grp"])
         v2 = refresh_rollup_incremental(rollup, t, ["grp"])
@@ -104,8 +107,8 @@ class TestIncrementalRollup:
         assert int(rollup.detail()["properties"][SOURCE_VERSION_PROP]) == v2
 
     def test_missing_watermark_raises(self, spark, tmp_path):
-        t = ManagedTable.create(spark, str(tmp_path / "s3"), _events(spark, [("a", 1.0)]))
-        bare = ManagedTable.create(
+        t = _cdf_source(spark, tmp_path / "s3", [("a", 1.0)])
+        bare = DeltaProtocolTable.create(
             spark, str(tmp_path / "r3"),
             spark.createDataFrame([], "grp string, n_events long, value_fp decimal(38,0)"),
         )
@@ -114,12 +117,11 @@ class TestIncrementalRollup:
 
     def test_null_group_maintained(self, spark, tmp_path):
         rows = [(None, 1.0), ("x", 2.0)]
-        t = ManagedTable.create(spark, str(tmp_path / "s4"), _events(spark, rows))
-        t.set_properties({"mack.retain_snapshots": "4"})
+        t = _cdf_source(spark, tmp_path / "s4", rows)
         rollup = create_rollup(t, str(tmp_path / "r4"), ["grp"])
         t.append(_events(spark, [(None, 3.0)]))
         refresh_rollup_incremental(rollup, t, ["grp"])
-        got = {r["grp"]: r["n_events"] for r in rollup.toDF().collect()}
+        got = {r["grp"]: r["n_events"] for r in rollup.to_df().collect()}
         assert got == {None: 2, "x": 1}
 
 
@@ -141,23 +143,12 @@ class TestProtocolRollup:
     Feed — updates arrive as pre/post pairs and net to exact deltas."""
 
     def _mk(self, spark, tmp_path, rows):
-        from mack_spark.sources.delta_log import DeltaProtocolTable
-
-        return DeltaProtocolTable.create(
-            spark, str(tmp_path / "src"), _events(spark, rows),
-            properties={"delta.enableChangeDataFeed": "true"},
-        )
+        return _cdf_source(spark, tmp_path / "src", rows)
 
     def test_follows_merge_update_delete(self, spark, tmp_path):
-        from mack_spark.rollup import (
-            create_rollup_protocol,
-            refresh_rollup_incremental_protocol,
-        )
-        from mack_spark.tables import KeyedMerge
-
         rows = [("a", 1.5), ("a", 2.5), ("b", 10.0), ("c", 3.0)]
         src = self._mk(spark, tmp_path, rows)
-        rollup = create_rollup_protocol(
+        rollup = create_rollup(
             src, str(tmp_path / "r"), ["grp"], "value"
         )
         # v: append
@@ -166,12 +157,10 @@ class TestProtocolRollup:
         src.update_where("grp = 'a'", {"value": "value + 100"})
         # v: delete a whole group
         src.delete_where("grp = 'c'")
-        refresh_rollup_incremental_protocol(rollup, src, ["grp"], "value")
+        refresh_rollup_incremental(rollup, src, ["grp"], "value")
         got = rollup_as_view(rollup, ["grp"]).orderBy("grp")
         final = [("a", 101.5), ("a", 102.5), ("b", 10.0), ("b", 5.0),
                  ("d", 7.0)]
-        from conftest import assert_df_equality
-
         assert_df_equality(
             got,
             _expected(spark, final).orderBy("grp"),
@@ -180,18 +169,13 @@ class TestProtocolRollup:
         assert rollup.to_df().where(F.col("grp") == "c").count() == 0
 
     def test_second_refresh_is_noop(self, spark, tmp_path):
-        from mack_spark.rollup import (
-            create_rollup_protocol,
-            refresh_rollup_incremental_protocol,
-        )
-
         src = self._mk(spark, tmp_path, [("a", 1.0)])
-        rollup = create_rollup_protocol(
+        rollup = create_rollup(
             src, str(tmp_path / "r"), ["grp"], "value"
         )
         src.append(_events(spark, [("b", 2.0)]))
-        v1 = refresh_rollup_incremental_protocol(rollup, src, ["grp"], "value")
+        v1 = refresh_rollup_incremental(rollup, src, ["grp"], "value")
         ver_before = rollup.snapshot().version
-        v2 = refresh_rollup_incremental_protocol(rollup, src, ["grp"], "value")
+        v2 = refresh_rollup_incremental(rollup, src, ["grp"], "value")
         assert v1 == v2
         assert rollup.snapshot().version == ver_before  # no commit

@@ -12,9 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from mack_spark.sources.delta_log import DeltaProtocolTable
-from mack_spark.streaming import foreach_batch_scd2_cdf
+from mack_spark.streaming import STREAMING_EPOCH_PROP, foreach_batch_scd2_cdf
 from mack_spark.streaming.delta_source import register
-from mack_spark.tables import ManagedTable
 
 CDF = {"delta.enableChangeDataFeed": "true"}
 SCHEMA = "pkey int, attr string, effective_time timestamp"
@@ -32,7 +31,11 @@ def _dim(spark, tmp_path):
         .withColumn("is_current", F.lit(True))
         .withColumn("end_time", F.lit(None).cast("timestamp"))
     )
-    return ManagedTable.create(spark, str(tmp_path / "dim"), base)
+    return DeltaProtocolTable.create(spark, str(tmp_path / "dim"), base)
+
+
+def _recorded_epoch(dim):
+    return int(dim.detail()["properties"][STREAMING_EPOCH_PROP])
 
 
 def _drain(spark, src_path, dim, ckpt):
@@ -62,10 +65,16 @@ class TestScd2FromChangeFeed:
         )  # v0 create: CDF insert rows for pkey 2 (changed) and 9 (new)
         ckpt = str(tmp_path / "ck")
         _drain(spark, src.path, dim, ckpt)
+        # one microbatch = one commit holding the merged rows AND the epoch
+        assert dim.snapshot().version == 1
+        actions = dim._commit_actions(1)
+        meta = next(a["metaData"] for a in actions if "metaData" in a)
+        assert meta["configuration"][STREAMING_EPOCH_PROP] == "0"
+        assert any("add" in a for a in actions)
 
         rows = {
             (r["pkey"], bool(r["is_current"])): r
-            for r in dim.toDF().collect()
+            for r in dim.to_df().collect()
         }
         # pkey 2: old row closed at the new effective time, new current
         assert (2, False) in rows and (2, True) in rows
@@ -84,7 +93,7 @@ class TestScd2FromChangeFeed:
         _drain(spark, src.path, dim, ckpt)
         rows = {
             (r["pkey"], bool(r["is_current"])): r["attr"]
-            for r in dim.toDF().collect()
+            for r in dim.to_df().collect()
         }
         assert rows[(9, True)] == "new2"
         assert rows[(9, False)] == "new"
@@ -92,7 +101,7 @@ class TestScd2FromChangeFeed:
         # upstream DELETE: history closes, no new row opens
         src.delete_where("pkey = 2")
         _drain(spark, src.path, dim, ckpt)
-        two = [r for r in dim.toDF().where("pkey = 2").collect()]
+        two = [r for r in dim.to_df().where("pkey = 2").collect()]
         assert len(two) == 2
         assert all(not r["is_current"] for r in two)
         assert all(r["end_time"] is not None for r in two)
@@ -110,22 +119,17 @@ class TestScd2FromChangeFeed:
         )
         ckpt = str(tmp_path / "ck")
         _drain(spark, src.path, dim, ckpt)
-        state1 = sorted(map(tuple, dim.toDF().collect()))
-        n_hist = len(dim.history())
+        state1 = sorted(map(tuple, dim.to_df().collect()))
+        version1 = dim.snapshot().version
         # no new upstream data: restart must be a no-op
         _drain(spark, src.path, dim, ckpt)
-        assert sorted(map(tuple, dim.toDF().collect())) == state1
+        assert sorted(map(tuple, dim.to_df().collect())) == state1
         # a manual replay of the same epoch is skipped (txn pattern)
         apply = foreach_batch_scd2_cdf(dim, "pkey", ["attr"])
         batch = src.table_changes(0, 0)
-        epoch_used = next(
-            h["streaming_epoch"]
-            for h in dim.history()
-            if h.get("streaming_epoch") is not None
-        )
-        apply(batch, epoch_used)
-        assert sorted(map(tuple, dim.toDF().collect())) == state1
-        assert len(dim.history()) == len(dim.history())
+        apply(batch, _recorded_epoch(dim))
+        assert sorted(map(tuple, dim.to_df().collect())) == state1
+        assert dim.snapshot().version == version1
 
     def test_latest_commit_wins_within_batch(self, spark, tmp_path):
         """A key changed in several upstream commits drained in ONE
@@ -145,6 +149,6 @@ class TestScd2FromChangeFeed:
         _drain(spark, src.path, dim, ckpt)
         cur = {
             r["pkey"]: r["attr"]
-            for r in dim.toDF().where("is_current").collect()
+            for r in dim.to_df().where("is_current").collect()
         }
         assert cur[1] == "second"

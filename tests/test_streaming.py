@@ -14,8 +14,12 @@ from pyspark.sql.types import (
 )
 
 from mack_spark.scd import scd2_post_state
-from mack_spark.streaming import foreach_batch_scd2, run_stream_to_batch
-from mack_spark.tables import ManagedTable
+from mack_spark.sources.delta_log import DeltaProtocolTable
+from mack_spark.streaming import (
+    STREAMING_EPOCH_PROP,
+    foreach_batch_scd2,
+    run_stream_to_batch,
+)
 
 from conftest import assert_df_equality
 
@@ -50,11 +54,23 @@ def _updates(spark):
     )
 
 
+def assert_epoch_commit(table, version_before, epoch_id):
+    """The sink committed exactly one version, and that one commit holds
+    both the merged rows and the recorded epoch."""
+    version = table.snapshot().version
+    assert version == version_before + 1
+    actions = table._commit_actions(version)
+    meta = next(a["metaData"] for a in actions if "metaData" in a)
+    assert meta["configuration"][STREAMING_EPOCH_PROP] == str(epoch_id)
+    assert any("add" in a for a in actions)
+
+
 def test_foreach_batch_scd2_applies_and_is_epoch_idempotent(spark, tmp_path):
-    table = ManagedTable.create(spark, str(tmp_path / "scd"), _base(spark))
+    table = DeltaProtocolTable.create(spark, str(tmp_path / "scd"), _base(spark))
     apply_batch = foreach_batch_scd2(table, "pkey", ["attr"])
 
     apply_batch(_updates(spark), epoch_id=0)
+    assert_epoch_commit(table, 0, 0)
     expected = spark.createDataFrame(
         [
             (1, "A", True, T0, None),
@@ -64,16 +80,16 @@ def test_foreach_batch_scd2_applies_and_is_epoch_idempotent(spark, tmp_path):
         SCHEMA,
     )
     assert_df_equality(
-        table.toDF().select("pkey", "attr", "is_current", "effective_time", "end_time"),
+        table.to_df().select("pkey", "attr", "is_current", "effective_time", "end_time"),
         expected,
     )
 
     # Replayed microbatch (same epoch id) must be a no-op.
-    versions_before = len(table.history())
+    versions_before = table.snapshot().version
     apply_batch(_updates(spark), epoch_id=0)
-    assert len(table.history()) == versions_before
+    assert table.snapshot().version == versions_before
     assert_df_equality(
-        table.toDF().select("pkey", "attr", "is_current", "effective_time", "end_time"),
+        table.to_df().select("pkey", "attr", "is_current", "effective_time", "end_time"),
         expected,
     )
 
@@ -81,7 +97,7 @@ def test_foreach_batch_scd2_applies_and_is_epoch_idempotent(spark, tmp_path):
     # SCD2 no-op on the data, but the epoch must be recorded/applied).
     apply_batch(_updates(spark), epoch_id=1)
     assert_df_equality(
-        table.toDF().select("pkey", "attr", "is_current", "effective_time", "end_time"),
+        table.to_df().select("pkey", "attr", "is_current", "effective_time", "end_time"),
         expected,
     )
 
@@ -89,7 +105,7 @@ def test_foreach_batch_scd2_applies_and_is_epoch_idempotent(spark, tmp_path):
 def test_foreach_batch_scd2_real_stream(spark, tmp_path):
     src = str(tmp_path / "src")
     _updates(spark).write.parquet(src)
-    table = ManagedTable.create(spark, str(tmp_path / "scd_stream"), _base(spark))
+    table = DeltaProtocolTable.create(spark, str(tmp_path / "scd_stream"), _base(spark))
 
     stream = spark.readStream.schema(SCHEMA).parquet(src)
     q = (
@@ -105,7 +121,7 @@ def test_foreach_batch_scd2_real_stream(spark, tmp_path):
         "is_current", "effective_time", "end_time",
     )
     assert_df_equality(
-        table.toDF().select(*[f.name for f in SCHEMA.fields]),
+        table.to_df().select(*[f.name for f in SCHEMA.fields]),
         post.select(*[f.name for f in SCHEMA.fields]),
     )
 
@@ -137,12 +153,11 @@ def test_foreach_batch_rollup_incremental_and_idempotent(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from mack_spark.streaming import foreach_batch_rollup
-    from mack_spark.tables import ManagedTable
 
     empty = spark.createDataFrame(
         [], "g string, n_events bigint, value_fp decimal(38,0)"
     )
-    table = ManagedTable.create(spark, str(tmp_path / "rollup"), empty)
+    table = DeltaProtocolTable.create(spark, str(tmp_path / "rollup"), empty)
     apply_batch = foreach_batch_rollup(table, ["g"])
 
     b1 = spark.createDataFrame(
@@ -152,21 +167,24 @@ def test_foreach_batch_rollup_incremental_and_idempotent(spark, tmp_path):
         [("a", 0.25), ("c", -3.0)], "g string, value double"
     )
     apply_batch(b1, 0)
+    assert_epoch_commit(table, 0, 0)
     apply_batch(b2, 1)
+    assert_epoch_commit(table, 1, 1)
     apply_batch(b2, 1)  # replayed epoch must be a no-op
+    apply_batch(b1, 0)  # so is any epoch below the recorded one
 
     got = {
         r["g"]: (r["n_events"], float(r["value_fp"]) / 10000.0)
-        for r in table.toDF().collect()
+        for r in table.to_df().collect()
     }
     assert got == {"a": (3, 4.25), "b": (1, 10.0), "c": (1, -3.0)}
-    # exactly two applied epochs in history
-    epochs = [
-        h["streaming_epoch"]
-        for h in table.history()
-        if h.get("streaming_epoch") is not None
-    ]
-    assert epochs == [0, 1]
+    # exactly two applied epochs: the replays committed nothing
+    assert table.snapshot().version == 2
+    # an empty microbatch records its epoch and changes no row
+    apply_batch(b1.limit(0), 2)
+    assert table.snapshot().version == 3
+    assert table.detail()["properties"][STREAMING_EPOCH_PROP] == "2"
+    assert table.to_df().count() == 3
 
 
 def test_streaming_sessionize_matches_batch_under_late_data(spark, tmp_path):
@@ -293,15 +311,15 @@ def test_streaming_scd2_crash_restart_exactly_once(spark, tmp_path):
     """Kill the SCD2 stream mid-run (AFTER an epoch's merge applied but
     before its checkpoint committed), restart from the same checkpoint,
     and verify the final table equals the batch post-state — the epoch
-    ledger must absorb the replayed microbatch instead of double-
-    applying it."""
+    recorded in the merge commit must absorb the replayed microbatch
+    instead of double-applying it."""
     import pytest as _pytest
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     base = spark.createDataFrame(
         [(k, "v0", True, T0, None) for k in range(1, 13)], SCHEMA
     )
-    table = ManagedTable.create(spark, str(tmp_path / "scd_cr"), base)
+    table = DeltaProtocolTable.create(spark, str(tmp_path / "scd_cr"), base)
 
     # four single-file chunks with DISJOINT keys (order-commutative)
     src = str(tmp_path / "src")
@@ -346,11 +364,11 @@ def test_streaming_scd2_crash_restart_exactly_once(spark, tmp_path):
         "is_current", "effective_time", "end_time",
     )
     assert_df_equality(
-        table.toDF().select(*[f.name for f in SCHEMA.fields]),
+        table.to_df().select(*[f.name for f in SCHEMA.fields]),
         post.select(*[f.name for f in SCHEMA.fields]),
     )
     # every key closed exactly one old row and holds exactly one current
-    cur = table.toDF().filter("is_current").groupBy("pkey").count().collect()
+    cur = table.to_df().filter("is_current").groupBy("pkey").count().collect()
     assert all(r["count"] == 1 for r in cur) and len(cur) == 12
 
 
@@ -366,7 +384,7 @@ def test_streaming_rollup_crash_restart_exactly_once(spark, tmp_path):
     empty = spark.createDataFrame(
         [], "g string, n_events bigint, value_fp decimal(38,0)"
     )
-    table = ManagedTable.create(spark, str(tmp_path / "rollup_cr"), empty)
+    table = DeltaProtocolTable.create(spark, str(tmp_path / "rollup_cr"), empty)
 
     src = str(tmp_path / "src")
     chunks = [
@@ -408,6 +426,6 @@ def test_streaming_rollup_crash_restart_exactly_once(spark, tmp_path):
 
     got = {
         r["g"]: (r["n_events"], float(r["value_fp"]) / 10000.0)
-        for r in table.toDF().collect()
+        for r in table.to_df().collect()
     }
     assert got == {"a": (3, 11.0), "b": (2, 7.0), "c": (2, 10.0)}

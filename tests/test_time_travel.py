@@ -61,16 +61,17 @@ def test_restore_commits_forward(spark, tmp_path):
 
 
 def test_merge_paths_respect_retention(spark, tmp_path):
+    """A MERGE-based mutation keeps the replaced version readable (the
+    protocol table's log retains every version until VACUUM)."""
+    from mack_spark.sources.delta_log import DeltaProtocolTable
+
     df = spark.createDataFrame(
         [(1, "a"), (2, "a"), (3, "b")], "pkey int, c1 string"
     )
-    t = ManagedTable.create(
-        spark, str(tmp_path / "mr"), df,
-        properties={"mack.retain_snapshots": "2"},
-    )
+    t = DeltaProtocolTable.create(spark, str(tmp_path / "mr"), df)
     mk.kill_duplicates(t, ["c1"])
-    assert t.toDF().count() == 1
-    assert t.toDF(version=0).count() == 3
+    assert t.to_df().count() == 1
+    assert t.to_df(version_as_of=0).count() == 3
 
 
 def test_compact_sort_by_clusters_for_pruning(spark, tmp_path):
@@ -84,9 +85,9 @@ def test_compact_sort_by_clusters_for_pruning(spark, tmp_path):
     out = optimize_compact(t, target_file_bytes=1, sort_by=["pkey"])
     assert out["files_after"] >= 2
     # footer ranges must now be disjoint: per-file min/max don't overlap
-    stats = t._file_key_stats(t._data_files(), "pkey")
-    ivs = sorted(v[:2] for v in stats.values() if v is not None)
-    assert len(ivs) == len(stats)
+    from conftest import footer_key_ranges
+
+    ivs = sorted(footer_key_ranges(t._data_files(), "pkey"))
     for (alo, ahi), (blo, bhi) in zip(ivs, ivs[1:]):
         assert ahi < blo, ivs
 
@@ -136,45 +137,58 @@ def test_shallow_clone_is_zero_copy_and_independent(spark, tmp_path):
     assert mk.latest_version(clone) == 0
     # independence: mutate the clone, source unchanged; delete source,
     # clone still readable (inode refcounting keeps shared bytes alive)
-    mk.kill_duplicates(clone, ["v"])  # no dups -> no-op content, new version
+    clone.overwrite(clone.toDF().filter("id < 5"))
     clone.append(spark.createDataFrame([(99, "new")], "id int, v string"))
     assert src.toDF().count() == 10
     import shutil as _sh
     _sh.rmtree(src.path)
-    assert clone.toDF().count() == 11
+    assert clone.toDF().count() == 6
 
 
 def test_table_changes_insert_delete(spark, tmp_path):
-    t = _mk(spark, tmp_path, retain=3)
-    t.overwrite(spark.createDataFrame([(1, "v0"), (2, "x")], "id int, v string"))
-    t.overwrite(spark.createDataFrame([(2, "x"), (3, "y")], "id int, v string"))
-    ch = mk.table_changes(t, from_version=1).orderBy("id", "_change_type")
+    """Row-level changes between versions come from the Delta-protocol
+    table's Change Data Feed (``table_changes``)."""
+    from mack_spark.sources.delta_log import DeltaProtocolTable
+
+    t = DeltaProtocolTable.create(
+        spark, str(tmp_path / "cdf"),
+        spark.createDataFrame([(1, "v0")], "id int, v string"),
+        properties={"delta.enableChangeDataFeed": "true"},
+    )
+    t.append(spark.createDataFrame([(2, "x")], "id int, v string"))  # v1
+    t.delete_where("id = 1")  # v2
+    t.append(spark.createDataFrame([(3, "y")], "id int, v string"))  # v3
+    ch = t.table_changes(2).orderBy("id", "_change_type")
     rows = [(r.id, r.v, r._change_type) for r in ch.collect()]
     assert rows == [(1, "v0", "delete"), (3, "y", "insert")]
-    # explicit endpoints: v0 [(1,v0)] -> v1 [(1,v0),(2,x)] = one insert
-    ch2 = mk.table_changes(t, from_version=0, to_version=1)
+    ch2 = t.table_changes(1, 1)
     got = {(r.id, r.v, r._change_type) for r in ch2.collect()}
     assert got == {(2, "x", "insert")}
 
 
 def test_partitioned_pruned_merge_respects_retention(spark, tmp_path):
-    """The partition-pruned merge path routes through the same retention
-    planner: the replaced snapshot stays readable, and its hard-linked
-    untouched partitions are intact in both versions."""
-    from pyspark.sql import functions as F
+    """A merge on a partitioned table rewrites only the touched
+    partition: the replaced version stays readable, and the untouched
+    partition's file is the same live file in both versions."""
+    from mack_spark.sources.delta_log import DeltaProtocolTable
+    from mack_spark.tables import KeyedMerge
 
     df = spark.createDataFrame(
         [(1, "A", "s1"), (2, "B", "s2")], "pkey int, attr string, seg string"
     )
-    t = ManagedTable.create(
-        spark, str(tmp_path / "pr"), df, partition_by=["seg"],
-        properties={"mack.retain_snapshots": "2"},
+    t = DeltaProtocolTable.create(
+        spark, str(tmp_path / "pr"), df, partition_by=["seg"]
     )
-    post = t.toDF().withColumn(
-        "attr", F.when(F.col("seg") == "s1", F.lit("A2")).otherwise(F.col("attr"))
-    )
-    t.merge_overwrite(post, operation="MERGE", touched_partitions=[{"seg": "s1"}])
-    assert {(r.pkey, r.attr) for r in t.toDF().collect()} == {(1, "A2"), (2, "B")}
-    assert {(r.pkey, r.attr) for r in t.toDF(version=0).collect()} == {
+    before = set(t.snapshot().files)
+    t.merge(KeyedMerge(
+        source=spark.createDataFrame([(1, "A2")], "pkey int, attr string"),
+        condition="t.pkey = s.pkey",
+        matched_update={"attr": "s.attr"},
+        target_key_col="pkey", source_key_col="pkey",
+    ))
+    assert {(r.pkey, r.attr) for r in t.to_df().collect()} == {(1, "A2"), (2, "B")}
+    assert {(r.pkey, r.attr) for r in t.to_df(version_as_of=0).collect()} == {
         (1, "A"), (2, "B"),
     }
+    kept = before & set(t.snapshot().files)
+    assert [p.split("/")[0] for p in kept] == ["seg=s2"]
