@@ -63,13 +63,20 @@ def rollup_keyed_merge(delta: DataFrame, group_cols: List[str]) -> KeyedMerge:
     groups add the delta, groups whose count reaches zero delete, new
     groups with a positive count insert. Group keys compare
     null-safely — ``groupBy`` puts NULL keys in one group, and that
-    group must update in place, not insert a twin."""
+    group must update in place, not insert a twin. The sum adds with
+    SUM's NULL rule: a NULL side is ignored, so a group whose changed
+    values are all NULL keeps its sum and a group whose sum is NULL
+    (only NULL values so far) takes the first non-NULL delta. Without
+    a count of non-NULL values, a group whose last non-NULL value is
+    deleted keeps a sum of 0 where a full aggregate gives NULL."""
     return KeyedMerge(
         source=delta,
         condition=" AND ".join(f"t.`{g}` <=> s.`{g}`" for g in group_cols),
         matched_update={
             "n_events": "t.`n_events` + s.`d_n`",
-            "value_fp": "t.`value_fp` + s.`d_fp`",
+            "value_fp": (
+                "coalesce(t.`value_fp` + s.`d_fp`, t.`value_fp`, s.`d_fp`)"
+            ),
         },
         matched_update_condition="t.`n_events` + s.`d_n` > 0",
         matched_delete=True,

@@ -6977,8 +6977,7 @@ class DeltaProtocolTable:
         }
 
     def delete_where(self, condition: str) -> dict:
-        """``DELETE FROM table WHERE condition`` as one Delta commit —
-        the protocol twin of :func:`mack_spark.tables.delete_where`
+        """``DELETE FROM table WHERE condition`` as one Delta commit
         (Delta's ``DeltaTable.delete``; the reference composes it inside
         kill_duplicates via MERGE, mack/__init__.py:190-192).
 
@@ -7153,12 +7152,10 @@ class DeltaProtocolTable:
 
     def update_where(self, condition: str, assignments: Dict[str, str]) -> dict:
         """``UPDATE table SET col = expr, ... WHERE condition`` as one
-        Delta commit — the protocol twin of
-        :func:`mack_spark.tables.update_where` (Delta's
-        ``DeltaTable.update``). Assignments evaluate against the
-        pre-update row, all simultaneously, cast back to the column's
-        declared type; FALSE/NULL-condition rows are untouched. Same
-        file pruning as :meth:`delete_where`.
+        Delta commit (Delta's ``DeltaTable.update``). Assignments
+        evaluate against the pre-update row, all simultaneously, cast
+        back to the column's declared type; FALSE/NULL-condition rows
+        are untouched. Same file pruning as :meth:`delete_where`.
 
         With ``delta.enableDeletionVectors=true`` the update marks the
         PRE-update rows deleted via deletion vectors and writes only

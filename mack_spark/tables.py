@@ -16,8 +16,8 @@ keeps the metadata surface those users consume:
 
 * a version counter + operation history  (→ ``latest_version``,
   reference mack/__init__.py:616-627)
-* table properties incl. check constraints
-* declared column nullability
+* table properties
+* the declared schema, the read schema of every snapshot
 * partition columns + file statistics      (→ ``copy_table`` /
   ``delta_file_sizes``, reference mack/__init__.py:310, :469)
 
@@ -322,13 +322,9 @@ class ManagedTable:
         schema: Optional[StructType] = None,
         partition_by: Optional[List[str]] = None,
         properties: Optional[Dict[str, str]] = None,
-        constraints: Optional[Dict[str, str]] = None,
     ) -> "ManagedTable":
         """Create a managed table from a DataFrame (or empty, from a schema).
 
-        ``constraints`` maps name → SQL check expression; stored as
-        ``delta.constraints.<name>`` properties for parity with how the
-        reference harvests them (reference mack/__init__.py:658-661).
         Column nullability is captured from the declared ``schema`` (or
         the DataFrame's schema) — parquet round-trips lose nullability,
         so it must be recorded at declaration time.
@@ -341,8 +337,6 @@ class ManagedTable:
         if declared is None:
             raise ValueError("create() needs a df or a schema")
         props = dict(properties or {})
-        for name, expr in (constraints or {}).items():
-            props[f"delta.constraints.{name}"] = expr
         snapshot = "v=0"
         snap_dir = os.path.join(path, snapshot)
         if df is not None:
@@ -686,10 +680,6 @@ class ManagedTable:
         meta = self._read_meta()
         meta["properties"].update(props)
         self._commit(meta, "SET TBLPROPERTIES")
-
-    def add_constraint(self, name: str, expression: str) -> None:
-        """Mirrors ``ALTER TABLE … ADD CONSTRAINT`` (reference tests:890-895)."""
-        self.set_properties({f"delta.constraints.{name}": expression})
 
 
 def _to_df(source: Union[ManagedTable, DataFrame]) -> DataFrame:

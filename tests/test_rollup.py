@@ -29,8 +29,12 @@ def _cdf_source(spark, path, rows):
 
 
 def _expected(spark, rows):
+    return _aggregate(_events(spark, rows))
+
+
+def _aggregate(events):
     return (
-        _events(spark, rows)
+        events
         .groupBy("grp")
         .agg(
             F.count("*").cast("long").alias("n_events"),
@@ -123,6 +127,32 @@ class TestIncrementalRollup:
         refresh_rollup_incremental(rollup, t, ["grp"])
         got = {r["grp"]: r["n_events"] for r in rollup.to_df().collect()}
         assert got == {None: 2, "x": 1}
+
+    def test_null_values_match_direct_aggregation(self, spark, tmp_path):
+        """SUM ignores NULL values: a change range whose values are all
+        NULL keeps the group's sum, and a group whose sum is NULL takes
+        its first non-NULL value. Each refresh equals aggregating the
+        source directly."""
+        t = _cdf_source(
+            spark, tmp_path / "s5", [("a", 1.0), ("a", None), ("n", None)]
+        )
+        rollup = create_rollup(t, str(tmp_path / "r5"), ["grp"])
+        assert_df_equality(rollup_as_view(rollup, ["grp"]), _aggregate(t.to_df()))
+        steps = [
+            # only NULL values: existing sum kept, NULL sum stays NULL,
+            # a new all-NULL group inserts with a NULL sum
+            lambda: t.append(_events(spark, [("a", None), ("n", None), ("m", None)])),
+            # first non-NULL value of the NULL-sum groups
+            lambda: t.append(_events(spark, [("n", 2.5), ("m", None), ("m", -1.0)])),
+            lambda: t.update_where("grp = 'a' AND value = 1.0", {"value": "4.0"}),
+            lambda: t.delete_where("value IS NULL"),
+        ]
+        for step in steps:
+            step()
+            refresh_rollup_incremental(rollup, t, ["grp"])
+            assert_df_equality(
+                rollup_as_view(rollup, ["grp"]), _aggregate(t.to_df())
+            )
 
 
 class TestInEraRestore:

@@ -187,6 +187,43 @@ def test_foreach_batch_rollup_incremental_and_idempotent(spark, tmp_path):
     assert table.to_df().count() == 3
 
 
+def test_foreach_batch_rollup_null_values_match_direct_aggregation(
+    spark, tmp_path
+):
+    """NULL event values follow SUM's rule in the running sum: an
+    all-NULL batch keeps a group's sum, and a group whose sum is NULL
+    takes its first non-NULL value."""
+    from pyspark.sql import functions as F
+
+    from mack_spark.streaming import foreach_batch_rollup
+
+    empty = spark.createDataFrame(
+        [], "g string, n_events bigint, value_fp decimal(38,0)"
+    )
+    table = DeltaProtocolTable.create(spark, str(tmp_path / "rollup"), empty)
+    apply_batch = foreach_batch_rollup(table, ["g"])
+    batches = [
+        [("a", 1.5), ("a", None), ("n", None)],
+        [("a", None), ("n", None), ("m", None)],
+        [("n", 2.0), ("m", None), ("a", 0.5)],
+    ]
+    seen = []
+    for epoch, rows in enumerate(batches):
+        apply_batch(spark.createDataFrame(rows, "g string, value double"), epoch)
+        seen += rows
+        expected = (
+            spark.createDataFrame(seen, "g string, value double")
+            .groupBy("g")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.sum(
+                    F.floor(F.col("value") * 10000.0).cast("decimal(38,0)")
+                ).alias("value_fp"),
+            )
+        )
+        assert_df_equality(table.to_df(), expected)
+
+
 def test_streaming_sessionize_matches_batch_under_late_data(spark, tmp_path):
     """Property: a real Structured Streaming run of session_counts over
     randomly SHUFFLED arrival order (late data, multiple microbatches
