@@ -22,9 +22,12 @@ implemented in round 1). An IVF variant (k-means coarse quantizer via
 Spark ML, then in-cell brute force) is the natural next step; the
 bucket-join skeleton here is identical.
 
-No Python UDFs: dot products are ``zip_with`` + ``aggregate`` folds —
-JVM-side, codegen'd. For very high dims a pandas_udf with numpy BLAS
-would win; at dim=64 the expression path avoids Arrow transfer cost.
+Most operators here score with ``mf.dot`` / ``mf.l2_norm``: ``zip_with``
++ ``aggregate`` folds, which Spark evaluates interpreted (higher-order
+functions have no codegen), so every scored pair folds ``dim`` products
+through interpreted lambdas. :func:`embedding_near_dup_pairs` instead
+scores in numpy inside Arrow-batched pandas UDFs, with the same left
+fold and therefore bit-identical results.
 """
 
 from __future__ import annotations
@@ -353,6 +356,11 @@ def near_dup_bits_for(n_rows: int, target_bucket_rows: int = 256) -> int:
     return max(1, math.ceil(math.log2(n_rows / float(target_bucket_rows))))
 
 
+# Cells of one temporary score matrix in embedding_near_dup_pairs' pair
+# scoring (8 MiB of float64); bounds its memory at any bucket size.
+_SCORE_BLOCK_CELLS = 1 << 20
+
+
 def embedding_near_dup_pairs(
     corpus: DataFrame,
     threshold: float = 0.95,
@@ -371,9 +379,9 @@ def embedding_near_dup_pairs(
     pair is still generated at most once).
 
     The scale path for near-dup dedup over embeddings (reference has no
-    equivalent; LLM-pipeline extension per SURVEY §7 phase 5): the
-    self-join is bucket-local — each of the 2^bits buckets joins only
-    with itself, never the full O(n²) cross product.
+    equivalent; LLM-pipeline extension per SURVEY §7 phase 5): pairs are
+    scored bucket-local — each of the 2^bits buckets is scored only
+    against itself, never the full O(n²) cross product.
 
     ``bits=None`` (default) is SCALE-AWARE: one corpus count derives
     ``bits`` via :func:`near_dup_bits_for`, holding buckets at
@@ -384,49 +392,138 @@ def embedding_near_dup_pairs(
     4 hyperplanes). Recall at angle θ is (1 - θ/π)^bits per table —
     buy recall back with ``n_probe``, not fewer bits.
 
-    Returns ``(id_a, id_b, cos_sim)``.
+    Kernel: ``select(id, vec) → mapInPandas → groupBy(bucket)
+    .applyInPandas → round``, all arithmetic in numpy.
+
+    * The map step gives each row its norm and its home bucket (bit
+      ``b`` set when the dot with hyperplane ``b`` is ≥ 0, the
+      :func:`lsh_bucket_int` layout), and with ``n_probe > 1`` one
+      visitor row per flipped bucket, flipped in ascending
+      ``(|margin|, b)`` order as :func:`lsh_probe_buckets` does.
+    * The grouped step scores, per bucket, every row ``a`` against
+      every home row ``b`` with ``a.id < b.id`` and keeps
+      ``cos = dot(a, b) / (‖a‖·‖b‖) ≥ threshold``.
+    * Every dot is the left fold of :func:`mack_spark.functions.dot`
+      (``acc + double(x_j)·double(y_j)``, j = 0…dim-1), so buckets,
+      scores and the threshold test are bit-identical to the Spark
+      expressions ``mf.dot`` / ``mf.l2_norm`` would give.
+
+    Row contract: a row takes part only when its id is non-NULL and its
+    embedding is non-NULL, has exactly ``dim`` elements, none of them
+    NULL or non-finite (NaN, ±inf), and a non-zero norm. Any other row
+    yields no pairs. Rows sharing an id never pair with each other.
+
+    Memory: one bucket's rows (with their visitors) are scored in one
+    Python worker, so a bucket must fit in one worker's memory —
+    ``bits=None`` keeps buckets near ``target_bucket_rows`` rows. Pairs
+    are scored in row blocks of at most ``_SCORE_BLOCK_CELLS`` cells,
+    which bounds the temporary score matrices at any bucket size.
+
+    Returns ``(id_a, id_b, cos_sim)``, ``cos_sim`` rounded to
+    ``round_scores`` digits.
     """
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import (
+        BooleanType,
+        DoubleType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
     if bits is None:
         bits = near_dup_bits_for(corpus.count(), target_bucket_rows)
-    if n_probe > 1:
-        bucketed = corpus.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            mf.l2_norm(F.col(vec_col)).alias("nrm"),
-            lsh_bucket_int(F.col(vec_col), bits, dim).alias("bucket"),
+    # planes_t[j, b]: component j of hyperplane b (exactly ±1.0).
+    planes_t = np.array(
+        [hyperplane_components(b, dim) for b in range(bits)]
+    ).reshape(bits, dim).T
+    n_flip = min(max(0, n_probe - 1), bits)
+
+    def fold(x, y):
+        # mf.dot's left fold over the leading axis, broadcast over the rest.
+        acc = np.zeros(np.broadcast_shapes(x.shape[1:], y.shape[1:]))
+        for xj, yj in zip(x, y):
+            acc += xj * yj
+        return acc
+
+    def place(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            x = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+            nrm = np.sqrt(fold(x.T, x.T))
+            ok = np.isfinite(x).all(axis=1) & (nrm > 0)
+            if not ok.any():
+                continue
+            xt, nrm = np.ascontiguousarray(x[ok].T), nrm[ok]
+            margins = fold(xt[:, :, None], planes_t[:, None, :])
+            home = ((margins >= 0) << np.arange(bits)).sum(axis=1)
+            flips = np.argsort(np.abs(margins), axis=1, kind="stable")
+            buckets = np.concatenate(
+                [home[:, None], home[:, None] ^ (1 << flips[:, :n_flip])],
+                axis=1,
+            )
+            rows = np.repeat(np.flatnonzero(ok), 1 + n_flip)
+            yield pd.DataFrame({
+                "bucket": buckets.ravel(),
+                "id": pdf["id"].to_numpy()[rows],
+                "vec": pdf["vec"].to_numpy()[rows],
+                "nrm": np.repeat(nrm, 1 + n_flip),
+                "home": np.tile([True] + [False] * n_flip, len(nrm)),
+            })
+
+    def score(pdf):
+        ids = pdf["id"].to_numpy()
+        xt = np.ascontiguousarray(
+            np.stack(pdf["vec"].to_numpy()).astype(np.float64).T
         )
-        probing = corpus.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            mf.l2_norm(F.col(vec_col)).alias("nrm"),
-            F.explode(
-                lsh_probe_buckets(F.col(vec_col), bits, dim, n_probe)
-            ).alias("bucket"),
-        )
-        a, b = probing.alias("a"), bucketed.alias("b")
-    else:
-        bucketed = corpus.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            mf.l2_norm(F.col(vec_col)).alias("nrm"),
-            lsh_bucket(F.col(vec_col), bits, dim).alias("bucket"),
-        )
-        a, b = bucketed.alias("a"), bucketed.alias("b")
+        nrm = pdf["nrm"].to_numpy()
+        home = pdf["home"].to_numpy(dtype=bool)
+        h_ids, h_xt, h_nrm = ids[home], xt[:, home], nrm[home]
+        step = max(1, _SCORE_BLOCK_CELLS // max(1, len(h_ids)))
+        out_a, out_b, out_cos = [], [], []
+        for s in range(0, len(ids), step):
+            a = slice(s, s + step)
+            cos = fold(xt[:, a, None], h_xt[:, None, :]) / (
+                nrm[a, None] * h_nrm[None, :]
+            )
+            ia, ib = np.nonzero(
+                (ids[a, None] < h_ids[None, :]) & (cos >= threshold)
+            )
+            out_a.append(ids[a][ia])
+            out_b.append(h_ids[ib])
+            out_cos.append(cos[ia, ib])
+        return pd.DataFrame({
+            "id_a": np.concatenate(out_a),
+            "id_b": np.concatenate(out_b),
+            "cos": np.concatenate(out_cos),
+        })
+
+    rows = corpus.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
+    ).where(F.col("id").isNotNull() & (F.size("vec") == dim))
+    id_type = rows.schema["id"].dataType
+    placed = rows.mapInPandas(
+        place,
+        StructType([
+            StructField("bucket", LongType()),
+            StructField("id", id_type),
+            StructField("vec", rows.schema["vec"].dataType),
+            StructField("nrm", DoubleType()),
+            StructField("home", BooleanType()),
+        ]),
+    )
     return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
+        placed.groupBy("bucket")
+        .applyInPandas(
+            score,
+            StructType([
+                StructField("id_a", id_type),
+                StructField("id_b", id_type),
+                StructField("cos", DoubleType()),
+            ]),
         )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            (
-                mf.dot(F.col("a.vec"), F.col("b.vec"))
-                / (F.col("a.nrm") * F.col("b.nrm"))
-            ).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", F.round("cos", round_scores).alias("cos_sim"))
     )
 

@@ -1,7 +1,9 @@
 """Fast DuckDB-oracle gate for the queries that run mack's mutating
 functions on a Delta-protocol table (rollups, foreachBatch sinks,
-constraint_append, kill_duplicates). The full 190-query sweep is the
-slow tests/test_oracle.py; this subset runs by default."""
+constraint_append, kill_duplicates) and for the two embedding near-dup
+queries scored by the numpy kernel of ``embedding_near_dup_pairs``
+(pinned ``bits=4`` and scale-aware ``bits=None``). The full 190-query
+sweep is the slow tests/test_oracle.py; this subset runs by default."""
 
 import os
 import subprocess
@@ -17,6 +19,8 @@ MIGRATED = [
     "streaming_scd2_cdf",
     "delta_constraint_append",
     "delta_kill_duplicates",
+    "dedup_embedding_cosine",
+    "dedup_embedding_scaled",
 ]
 
 
