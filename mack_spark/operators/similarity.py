@@ -464,11 +464,11 @@ def embedding_near_dup_pairs(
                 [home[:, None], home[:, None] ^ (1 << flips[:, :n_flip])],
                 axis=1,
             )
-            rows = np.repeat(np.flatnonzero(ok), 1 + n_flip)
+            src = np.repeat(np.flatnonzero(ok), 1 + n_flip)
             yield pd.DataFrame({
                 "bucket": buckets.ravel(),
-                "id": pdf["id"].to_numpy()[rows],
-                "vec": pdf["vec"].to_numpy()[rows],
+                "id": pdf["id"].to_numpy()[src],
+                "vec": pdf["vec"].to_numpy()[src],
                 "nrm": np.repeat(nrm, 1 + n_flip),
                 "home": np.tile([True] + [False] * n_flip, len(nrm)),
             })
