@@ -1165,17 +1165,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         import tempfile
 
         from mack_spark.operators import build_neardup_components
-        from mack_spark.tables import ManagedTable
+        from mack_spark.sources.delta_log import DeltaProtocolTable
 
         key = (spark.sparkContext.applicationId, sf_dir)
         path = _neardup_cache.get(key)
-        if path is None or not ManagedTable.is_managed(path):
+        if path is None or not DeltaProtocolTable.is_delta(path):
             path = tempfile.mkdtemp(prefix="mack-neardup-") + "/index"
             build_neardup_components(
                 _t(spark, sf_dir, "documents"), path, min_est_jaccard=0.5
             )
             _neardup_cache[key] = path
-        return ManagedTable.for_path(spark, path)
+        return DeltaProtocolTable(spark, path)
 
     def q_clusters(spark, sf_dir):
         from mack_spark.operators import clusters_from_components
@@ -1578,17 +1578,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         import tempfile
 
         from mack_spark.operators import build_ivf_index, ivf_topk_from_index
-        from mack_spark.tables import ManagedTable
+        from mack_spark.sources.delta_log import DeltaProtocolTable
 
         emb = _t(spark, sf_dir, "embeddings")
         key = (spark.sparkContext.applicationId, sf_dir)
         path = _ivf_index_cache.get(key)
-        if path is None or not ManagedTable.is_managed(path):
+        if path is None or not DeltaProtocolTable.is_delta(path):
             path = tempfile.mkdtemp(prefix="mack-ivf-") + "/index"
             build_ivf_index(emb, path, n_cells=16, centroids="lloyd")
             _ivf_index_cache[key] = path
         return ivf_topk_from_index(
-            ManagedTable.for_path(spark, path),
+            DeltaProtocolTable(spark, path),
             emb.filter(F.col("vec_id") < 10),
             k=5,
             n_probe=4,
@@ -1633,12 +1633,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         from mack_spark.operators import build_ivf_index
         from mack_spark.operators.pq import ivfpq_topk
-        from mack_spark.tables import ManagedTable
+        from mack_spark.sources.delta_log import DeltaProtocolTable
 
         emb = _t(spark, sf_dir, "embeddings")
         key = (spark.sparkContext.applicationId, sf_dir)
         path = _ivfpq_index_cache.get(key)
-        if path is None or not ManagedTable.is_managed(path):
+        if path is None or not DeltaProtocolTable.is_delta(path):
             path = tempfile.mkdtemp(prefix="mack-ivfpq-") + "/index"
             build_ivf_index(
                 emb, path, n_cells=16, centroids="lloyd", pq_m=16, pq_k=16,
@@ -1646,7 +1646,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             _ivfpq_index_cache[key] = path
         return ivfpq_topk(
-            ManagedTable.for_path(spark, path),
+            DeltaProtocolTable(spark, path),
             emb.filter(F.col("vec_id") < 10),
             k=5,
             n_probe=8,
@@ -1665,17 +1665,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         import tempfile
 
         from mack_spark.operators import build_ivf_index, ivf_topk_from_index
-        from mack_spark.tables import ManagedTable
+        from mack_spark.sources.delta_log import DeltaProtocolTable
 
         emb = _t(spark, sf_dir, "embeddings")
         key = (spark.sparkContext.applicationId, sf_dir, "first")
         path = _ivf_index_cache.get(key)
-        if path is None or not ManagedTable.is_managed(path):
+        if path is None or not DeltaProtocolTable.is_delta(path):
             path = tempfile.mkdtemp(prefix="mack-ivff-") + "/index"
             build_ivf_index(emb, path, n_cells=8, centroids="first")
             _ivf_index_cache[key] = path
         return ivf_topk_from_index(
-            ManagedTable.for_path(spark, path),
+            DeltaProtocolTable(spark, path),
             emb.filter(F.col("vec_id") < 10),
             k=5,
             n_probe=2,
@@ -2531,11 +2531,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         import tempfile
 
         from mack_spark.operators import build_semantic_components
-        from mack_spark.tables import ManagedTable
+        from mack_spark.sources.delta_log import DeltaProtocolTable
 
         key = (spark.sparkContext.applicationId, sf_dir)
         path = _semantic_cache.get(key)
-        if path is None or not ManagedTable.is_managed(path):
+        if path is None or not DeltaProtocolTable.is_delta(path):
             path = tempfile.mkdtemp(prefix="mack-semdedup-") + "/index"
             build_semantic_components(
                 _t(spark, sf_dir, "embeddings"),
@@ -2545,7 +2545,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 bits_per_table=6,
             )
             _semantic_cache[key] = path
-        return ManagedTable.for_path(spark, path)
+        return DeltaProtocolTable(spark, path)
 
     def q_semantic_dedup_report(spark, sf_dir):
         # SemDeDup-style per-label removal profile over the banded
@@ -2645,16 +2645,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             build_lsh_index,
             lsh_pairs_against_index,
         )
-        from mack_spark.tables import ManagedTable
+        from mack_spark.sources.delta_log import DeltaProtocolTable
 
         docs = _t(spark, sf_dir, "documents")
         key = (spark.sparkContext.applicationId, sf_dir, "lsh")
         path = _lsh_index_cache.get(key)
-        if path is None or not ManagedTable.is_managed(path):
+        if path is None or not DeltaProtocolTable.is_delta(path):
             path = tempfile.mkdtemp(prefix="mack-lshi-") + "/index"
             build_lsh_index(docs.filter(F.col("doc_id") % 5 != 0), path)
             _lsh_index_cache[key] = path
-        index = ManagedTable(spark, path)
+        index = DeltaProtocolTable(spark, path)
         return lsh_pairs_against_index(
             index, docs.filter(F.col("doc_id") % 5 == 0), min_est_jaccard=0.25
         )

@@ -11,9 +11,10 @@ This engine implements the Delta log protocol itself
 (:class:`DeltaProtocolTable`, :mod:`mack_spark.sources.delta_log`), and
 every row-level mutation of mack's functions is a call on it: ``merge``
 of a :class:`~mack_spark.tables.KeyedMerge` (file-pruned rewrite),
-``append`` or ``overwrite``. :class:`ManagedTable` is a versioned
-parquet layout that stores the engine's index tables (IVF, LSH,
-near-dup) and backs the copy, clone, vacuum and size helpers.
+``append`` or ``overwrite``. It is the only table type: the engine's
+index tables (IVF, LSH, near-dup) are protocol tables too, and the
+copy, rename, version and size helpers take one. Time travel, VACUUM,
+SHALLOW CLONE and OPTIMIZE are its methods.
 
 Beyond the reference surface, :mod:`mack_spark.operators` adds the
 LLM-data-pipeline layer (exact/near dedup, similarity search, text
@@ -26,15 +27,11 @@ from mack_spark.fmt import humanize_bytes, humanize_bytes_binary
 from mack_spark.sources.delta_log import DeltaProtocolTable
 from mack_spark.tables import (
     ConcurrentModificationError,
-    ManagedTable,
     copy_table,
     rename_table,
     rename_catalog_table,
     latest_version,
     file_sizes,
-    optimize_compact,
-    vacuum,
-    shallow_clone,
     show_file_sizes,
     delta_file_sizes,
     show_delta_file_sizes,
@@ -68,7 +65,6 @@ __version__ = "0.1.0"
 
 __all__ = [
     "ConcurrentModificationError",
-    "ManagedTable",
     "DeltaProtocolTable",
     "type_2_scd_upsert",
     "type_2_scd_generic_upsert",
@@ -86,9 +82,6 @@ __all__ = [
     "rename_catalog_table",
     "latest_version",
     "file_sizes",
-    "optimize_compact",
-    "vacuum",
-    "shallow_clone",
     "show_file_sizes",
     "delta_file_sizes",
     "show_delta_file_sizes",

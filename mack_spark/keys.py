@@ -20,11 +20,12 @@ from typing import List, Optional, Union
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mack_spark.tables import ManagedTable, _to_df
+from mack_spark.sources.delta_log import DeltaProtocolTable
+from mack_spark.tables import _to_df
 
 
 def is_composite_key_candidate(
-    source: Union[ManagedTable, DataFrame], cols: List[str]
+    source: Union[DeltaProtocolTable, DataFrame], cols: List[str]
 ) -> bool:
     """Are these columns jointly unique in the table?
 
@@ -74,7 +75,7 @@ def _distinct_count_approx(df: DataFrame, combos: List[tuple], rsd: float) -> di
 
 
 def find_composite_key_candidates(
-    source: Union[ManagedTable, DataFrame], exclude_cols: Optional[List[str]] = None
+    source: Union[DeltaProtocolTable, DataFrame], exclude_cols: Optional[List[str]] = None
 ) -> List[str]:
     """Smallest column combination that uniquely identifies every row.
 
@@ -128,7 +129,7 @@ def find_composite_key_candidates(
 
 
 def with_md5_cols(
-    source: Union[ManagedTable, DataFrame],
+    source: Union[DeltaProtocolTable, DataFrame],
     cols: List[str],
     output_col_name: Optional[str] = None,
 ) -> DataFrame:

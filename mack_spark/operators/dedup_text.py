@@ -840,7 +840,7 @@ def build_lsh_index(
     """Persist banded-MinHash dedup state at INGEST time (the text-dedup
     twin of :func:`~mack_spark.operators.similarity.build_ivf_index`):
     one row per (doc, band) holding the band bucket key AND the full
-    signature, written as a ManagedTable range-clustered on
+    signature, written as a Delta-protocol table range-clustered on
     ``(band, band_key)`` with the LSH parameters in table properties.
 
     Why this shape scales: an incremental ingest batch only ever joins
@@ -854,7 +854,7 @@ def build_lsh_index(
     for the Jaccard estimate).  Re-run after large appends, like
     OPTIMIZE.
     """
-    from mack_spark.tables import ManagedTable
+    from mack_spark.sources.delta_log import DeltaProtocolTable
 
     r = num_hashes // bands
     assert r * bands == num_hashes, "num_hashes must divide evenly into bands"
@@ -870,7 +870,9 @@ def build_lsh_index(
         "mack.lsh.bands": str(bands),
         "mack.lsh.shingle_size": str(shingle_size),
     }
-    return ManagedTable.create(corpus.sparkSession, path, df=clustered, properties=props)
+    return DeltaProtocolTable.create(
+        corpus.sparkSession, path, df=clustered, properties=props
+    )
 
 
 def lsh_pairs_against_index(
@@ -906,7 +908,7 @@ def lsh_pairs_against_index(
         "band_key",
         *[F.col(f"mh{i}").alias(f"amh{i}") for i in range(num_hashes)],
     )
-    old_rows = index.toDF().select(
+    old_rows = index.to_df().select(
         F.col(id_col).alias("old_id"),
         "band",
         "band_key",

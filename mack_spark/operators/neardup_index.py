@@ -11,8 +11,9 @@ overnight job and four.
 
 These builders are the content twins of
 :func:`mack_spark.operators.similarity.build_ivf_index`: run once at
-ingest, persist the labeling as a :class:`~mack_spark.tables.ManagedTable`
-(parameters recorded in table properties), and let every consumer read
+ingest, persist the labeling as a Delta-protocol table
+(:class:`~mack_spark.sources.delta_log.DeltaProtocolTable`, parameters
+recorded in table properties), and let every consumer read
 it. Re-run after large appends, exactly like ``OPTIMIZE`` after ingest
 (for incremental maintenance of the PAIR side see
 ``append_to_lsh_index``; components must be re-derived after the pair
@@ -56,10 +57,11 @@ def build_neardup_components(
     joins against an id-clustered corpus prune files via parquet footer
     stats.
 
-    Returns the created :class:`~mack_spark.tables.ManagedTable`.
+    Returns the created
+    :class:`~mack_spark.sources.delta_log.DeltaProtocolTable`.
     """
     from mack_spark.operators.dedup_text import lsh_candidate_pairs
-    from mack_spark.tables import ManagedTable
+    from mack_spark.sources.delta_log import DeltaProtocolTable
 
     spark = df.sparkSession
     pairs = lsh_candidate_pairs(
@@ -85,7 +87,7 @@ def build_neardup_components(
         "mack.neardup.bands": str(bands),
         "mack.neardup.shingle_size": str(shingle_size),
     }
-    return ManagedTable.create(spark, path, df=clustered, properties=props)
+    return DeltaProtocolTable.create(spark, path, df=clustered, properties=props)
 
 
 def build_semantic_components(
@@ -102,13 +104,14 @@ def build_semantic_components(
     cosine pairs ≥ ``threshold`` → connected components, persisted as
     ``(id_col, cluster_id)`` for every clustered vector.
 
-    Returns the created :class:`~mack_spark.tables.ManagedTable`.
+    Returns the created
+    :class:`~mack_spark.sources.delta_log.DeltaProtocolTable`.
     """
     from mack_spark.operators.similarity import (
         embedding_near_dup_pairs_banded,
         near_dup_bits_for,
     )
-    from mack_spark.tables import ManagedTable
+    from mack_spark.sources.delta_log import DeltaProtocolTable
 
     spark = corpus.sparkSession
     # Resolve scale-derived bits BEFORE building so the layout actually
@@ -143,7 +146,7 @@ def build_semantic_components(
         "mack.neardup.bits_per_table": str(resolved_bits),
         "mack.neardup.bits_per_table_requested": str(bits_per_table),
     }
-    return ManagedTable.create(spark, path, df=clustered, properties=props)
+    return DeltaProtocolTable.create(spark, path, df=clustered, properties=props)
 
 
 def components_id_col(index) -> str:
@@ -155,7 +158,7 @@ def clusters_from_components(index) -> DataFrame:
     """The persisted ``(id, cluster_id)`` labeling — same contract as
     :func:`mack_spark.operators.cluster.near_dup_clusters`, read instead
     of recomputed."""
-    return index.toDF()
+    return index.to_df()
 
 
 def drop_near_duplicates_from_components(
@@ -173,7 +176,7 @@ def drop_near_duplicates_from_components(
     from mack_spark.operators.cluster import drop_with_clusters
 
     id_col = id_col or components_id_col(index)
-    return drop_with_clusters(df, index.toDF(), id_col)
+    return drop_with_clusters(df, index.to_df(), id_col)
 
 
 def cluster_sizes_from_components(index) -> DataFrame:
@@ -181,7 +184,7 @@ def cluster_sizes_from_components(index) -> DataFrame:
     contract as :func:`mack_spark.operators.cluster.near_dup_cluster_sizes`."""
     from mack_spark.operators.cluster import clusters_to_sizes
 
-    return clusters_to_sizes(index.toDF())
+    return clusters_to_sizes(index.to_df())
 
 
 def semantic_report_from_components(
@@ -196,4 +199,4 @@ def semantic_report_from_components(
     from mack_spark.operators.cluster import semantic_report_from_labels
 
     id_col = id_col or components_id_col(index)
-    return semantic_report_from_labels(corpus, index.toDF(), group_col, id_col)
+    return semantic_report_from_labels(corpus, index.to_df(), group_col, id_col)

@@ -416,7 +416,7 @@ def ivfpq_topk(
             )
 
     cand_scan = (
-        index.toDF()
+        index.to_df()
         .filter(F.col("cell").isin([int(c) for c in cells]))
         .select(idx_id_col, "codes", "cell")
     )
@@ -432,7 +432,7 @@ def ivfpq_topk(
         .select("query_id", "neighbor_id")
     )
     cvec = (
-        index.toDF()
+        index.to_df()
         .filter(F.col("cell").isin([int(c) for c in cells]))
         .select(F.col(idx_id_col).alias("neighbor_id"), F.col("vec").alias("__cv"))
     )

@@ -926,8 +926,8 @@ def build_ivf_index(
     """Persist IVF state at INGEST time instead of refitting per query
     batch: fit/choose the coarse quantizer once, assign every corpus
     vector its cell, and write ``(id, vec, nrm, cell)`` as a
-    ManagedTable range-clustered on ``cell`` with the centroids stored
-    in table properties.
+    Delta-protocol table range-clustered on ``cell`` with the centroids
+    stored in table properties.
 
     The clustering is what makes probing cheap at 100 TB: files carry
     disjoint cell ranges, so a probe's ``cell IN (...)`` predicate
@@ -935,11 +935,12 @@ def build_ivf_index(
     the same mechanism Delta data-skipping uses). Re-run after large
     appends, exactly like ``OPTIMIZE`` after ingest.
 
-    Returns the created :class:`mack_spark.tables.ManagedTable`.
+    Returns the created
+    :class:`~mack_spark.sources.delta_log.DeltaProtocolTable`.
     """
     import json as _json
 
-    from mack_spark.tables import ManagedTable
+    from mack_spark.sources.delta_log import DeltaProtocolTable
 
     spark = corpus.sparkSession
     cents = _ivf_centroids(
@@ -987,7 +988,7 @@ def build_ivf_index(
         props["mack.pq.normalize"] = str(pq_normalize)
     files = n_files or min(n_cells, 16)
     clustered = lists.repartitionByRange(files, "cell").sortWithinPartitions("cell")
-    return ManagedTable.create(spark, path, df=clustered, properties=props)
+    return DeltaProtocolTable.create(spark, path, df=clustered, properties=props)
 
 
 def ivf_topk_from_index(
@@ -1026,7 +1027,7 @@ def ivf_topk_from_index(
     # and partition pruning both understand.
     cells = sorted(r["cell"] for r in probes.select("cell").distinct().collect())
     lists = (
-        index.toDF()
+        index.to_df()
         .filter(F.col("cell").isin(cells))
         .select(
             F.col(idx_id_col).alias("neighbor_id"),

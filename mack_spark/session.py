@@ -15,25 +15,6 @@ import os
 from pyspark.sql import SparkSession
 
 
-def _delta_configs(builder: SparkSession.Builder) -> SparkSession.Builder:
-    """Attach Delta Lake extensions when delta-spark is importable.
-
-    Gated behind an import-try: the engine's table layer falls back to
-    versioned parquet when Delta is absent (see mack_spark.tables).
-    """
-    try:
-        import delta  # noqa: F401
-
-        return builder.config(
-            "spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension"
-        ).config(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
-    except ImportError:
-        return builder
-
-
 def get_session(app_name: str = "mack_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Create (or reuse) a SparkSession configured for this engine.
 
@@ -57,14 +38,12 @@ def get_session(app_name: str = "mack_spark", shuffle_partitions: int | None = N
         os.environ["PYTHONPATH"] = (
             pkg_root + (os.pathsep + existing if existing else "")
         )
-    # Optimized writes (opt guide §6 file sizing): protocol/managed
+    # Optimized writes (opt guide §6 file sizing): protocol table
     # writes derive their file count from estimated bytes instead of
     # inheriting the incoming partitioning — see
     # mack_spark.layout.optimize_write_partitions. Session-level
     # default like delta-spark's optimizeWrite; per-table
-    # delta.autoOptimize.optimizeWrite overrides. MACK_OPTIMIZE_WRITE=0
-    # restores legacy behavior.
-    ow = os.environ.get("MACK_OPTIMIZE_WRITE", "true")
+    # delta.autoOptimize.optimizeWrite overrides.
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -72,7 +51,7 @@ def get_session(app_name: str = "mack_spark", shuffle_partitions: int | None = N
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.mack.delta.optimizeWrite.enabled", ow)
+        .config("spark.mack.delta.optimizeWrite.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
@@ -80,9 +59,8 @@ def get_session(app_name: str = "mack_spark", shuffle_partitions: int | None = N
         # INT64 micros, not the deprecated INT96: INT96 carries no
         # parquet min/max statistics, which silently defeats footer-
         # stats file pruning on timestamp keys (merge/delete/update
-        # skipping in sources/delta_log.py and tables.py). Delta and
+        # skipping in sources/delta_log.py). Delta and
         # Iceberg write INT64 for the same reason.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     )
-    builder = _delta_configs(builder)
     return builder.getOrCreate()

@@ -42,9 +42,7 @@ _SPREAD_KEYS = {
 
 # Files smaller than this never get the repartition treatment — the
 # exchange would cost more than the single-task scan it replaces.
-_PARALLELIZE_MIN_BYTES = int(
-    os.environ.get("MACK_PARALLELIZE_MIN_BYTES", str(256 * 1024))
-)
+_PARALLELIZE_MIN_BYTES = 256 * 1024
 
 # (path, mtime, size) -> row-group count; footer reads are cheap but
 # load_table runs once per query per table, so don't repeat them.

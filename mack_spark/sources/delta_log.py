@@ -2593,8 +2593,20 @@ class DeltaProtocolTable:
         return True
 
     def history(self) -> List[dict]:
-        """commitInfo rows, newest first (DESCRIBE HISTORY shape)."""
-        return list(reversed(self.snapshot().history))
+        """commitInfo rows of every commit JSON still in the log, up to
+        the current version, newest first (DESCRIBE HISTORY shape).
+        Read from the commit files rather than the replay state: a
+        replay that starts at a checkpoint never applies the commits
+        the checkpoint summarises, yet Delta keeps those in history
+        until log cleanup removes their JSONs."""
+        head = self.snapshot().version
+        return [
+            dict(a["commitInfo"], version=v)
+            for v in reversed(self._log_versions())
+            if v <= head
+            for a in self._commit_actions(v)
+            if "commitInfo" in a
+        ]
 
     def _commit_actions(self, version: int) -> List[dict]:
         """Parsed actions of one commit JSON, cached by stat signature

@@ -29,8 +29,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod
 from mack_spark.session import get_session
 
-# execute-on-construction queries: real streaming runs or ManagedTable
-# mutation pipelines — their final DataFrame is a memory/result table,
+# execute-on-construction queries: real streaming runs, table mutation
+# pipelines or index builds — their final DataFrame is a memory/result table,
 # so a plan dump would audit the wrong thing.
 EXECUTING_PREFIXES = ("streaming_",)
 EXECUTING_NAMES = {

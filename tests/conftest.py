@@ -42,15 +42,10 @@ def assert_df_equality(actual, expected, ignore_row_order=True, ignore_nullable=
     assert a == e, f"rows differ:\n actual={a}\n expected={e}"
 
 
-def footer_key_ranges(files, col):
-    """Per-file ``(min, max)`` of ``col`` across all row groups, read
-    from the parquet footers."""
-    import pyarrow.parquet as pq
-
-    out = []
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        idx = md.schema.names.index(col)
-        st = [md.row_group(g).column(idx).statistics for g in range(md.num_row_groups)]
-        out.append((min(s.min for s in st), max(s.max for s in st)))
-    return out
+def log_key_ranges(table, col):
+    """Per-file ``(min, max)`` of ``col`` from the table's log stats."""
+    snap = table.snapshot()
+    return [
+        (st["minValues"][col], st["maxValues"][col])
+        for st in map(snap.file_stats, snap.files)
+    ]

@@ -1,8 +1,9 @@
-"""The mutation seam: mack's table functions (dedup, appends, SCD2,
-rollups, the foreachBatch sinks) change rows ONLY through
-:class:`~mack_spark.sources.delta_log.DeltaProtocolTable`'s ``append``,
-``merge`` and ``overwrite`` — one substrate, one commit protocol
-(reference substrate mack/__init__.py:125-139, :190-192)."""
+"""The mutation seam: :class:`~mack_spark.sources.delta_log.DeltaProtocolTable`
+is the package's only table type, and mack's table functions (dedup,
+appends, SCD2, rollups, the foreachBatch sinks) change rows ONLY
+through its ``append``, ``merge`` and ``overwrite`` — one substrate,
+one commit protocol (reference substrate mack/__init__.py:125-139,
+:190-192)."""
 
 import ast
 import os
@@ -16,7 +17,8 @@ from mack_spark.sources.delta_log import DeltaProtocolTable
 PKG_DIR = os.path.dirname(mack_spark.__file__)
 
 # Modules allowed to issue raw DataFrame writes:
-#  - tables.py IS the ManagedTable storage layer (index tables);
+#  - tables.py holds the reference's catalog writes: ``saveAsTable`` in
+#    copy_table(target_table=) and rename_delta_table;
 #  - sources/ is the user-facing sink module (writes plain files the
 #    user asked for, not managed-table mutations);
 #  - sources/delta_log.py IS the mutation substrate (the open-protocol
@@ -34,6 +36,23 @@ def _py_sources():
             if n.endswith(".py"):
                 full = os.path.join(root, n)
                 yield os.path.relpath(full, PKG_DIR), open(full).read()
+
+
+def test_one_table_substrate():
+    """No module of the package, nor the driver entry point, names the
+    retired versioned-parquet table or its metadata files."""
+    entry = os.path.join(os.path.dirname(PKG_DIR), "__spark_entry__.py")
+    sources = [*_py_sources(), ("__spark_entry__.py", open(entry).read())]
+    retired = re.compile(r"\bManagedTable\b|_mack_meta\.json|\b_commits\b")
+    offenders = [
+        f"{rel}:{i}: {line.strip()}"
+        for rel, src in sources
+        for i, line in enumerate(src.splitlines(), 1)
+        if retired.search(line)
+    ]
+    assert offenders == [], "\n".join(offenders)
+    # VACUUM, SHALLOW CLONE and OPTIMIZE are table methods, not functions
+    assert not {"vacuum", "shallow_clone", "optimize_compact"} & set(mack_spark.__all__)
 
 
 def test_no_raw_writes_outside_backend_and_sinks():
@@ -63,8 +82,7 @@ _READS = {"to_df", "snapshot", "detail", "table_changes", "create"}
 def test_mutations_route_through_append_or_merge_overwrite_only():
     """Enumerate every call of a DeltaProtocolTable method name in the
     mutating modules: each is ``append``/``merge``/``overwrite`` or a
-    read — never ``delete_where``/``update_where``/``set_properties``,
-    a ManagedTable method, or meta-file surgery."""
+    read — never ``delete_where``/``update_where``/``set_properties``."""
     table_methods = {
         n for n in dir(DeltaProtocolTable) if not n.startswith("__")
     }
@@ -78,9 +96,7 @@ def test_mutations_route_through_append_or_merge_overwrite_only():
             ):
                 continue
             name = node.func.attr
-            if name in ("toDF", "merge_overwrite", "_read_meta", "_write_meta"):
-                offenders.append(f"{rel}:{node.lineno}: .{name}(")
-            elif name in table_methods:
+            if name in table_methods:
                 seen.add(name)
                 if name not in _MUTATIONS | _READS:
                     offenders.append(f"{rel}:{node.lineno}: .{name}(")

@@ -96,22 +96,22 @@ class TestEncoding:
 
 class TestPersistence:
     def test_store_load_roundtrip(self, spark, tmp_path):
-        from mack_spark.tables import ManagedTable
+        from mack_spark.sources.delta_log import DeltaProtocolTable
 
         texts = ["pack these tokens", "pack those tokens"]
         df = spark.createDataFrame(
             [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
         )
-        t = ManagedTable.create(spark, str(tmp_path / "t"), df)
+        t = DeltaProtocolTable.create(spark, str(tmp_path / "t"), df)
         merges = train_bpe_merges(df, n_merges=8)
         store_bpe_tokenizer(t, merges)
         assert load_bpe_tokenizer(t) == merges
 
     def test_load_without_training_raises(self, spark, tmp_path):
-        from mack_spark.tables import ManagedTable
+        from mack_spark.sources.delta_log import DeltaProtocolTable
 
         df = spark.createDataFrame([(1, "x")], "doc_id int, text string")
-        t = ManagedTable.create(spark, str(tmp_path / "t"), df)
+        t = DeltaProtocolTable.create(spark, str(tmp_path / "t"), df)
         with pytest.raises(KeyError, match="mack.bpe.merges"):
             load_bpe_tokenizer(t)
 

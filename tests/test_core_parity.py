@@ -1,7 +1,7 @@
 """End-to-end golden tests for the reference operator surface.
 
 Modeled on the reference test strategy (SURVEY §5): literal fixture →
-managed table under tmp_path → one operator call → order-insensitive
+Delta-protocol table under tmp_path → one operator call → order-insensitive
 full-frame equality against a literal expected frame. Fixtures are our
 own; semantics asserted are the reference's (file:line cited per test).
 """
@@ -22,17 +22,11 @@ from pyspark.sql.types import (
 
 import mack_spark as mk
 from mack_spark.sources.delta_log import DeltaProtocolTable
-from mack_spark.tables import ManagedTable
 from tests.conftest import assert_df_equality
 
 
-def make_table(spark, path, data, schema, **kw):
-    df = spark.createDataFrame(data, schema)
-    return ManagedTable.create(spark, str(path), df=df, **kw)
-
-
 def make_delta(spark, path, data, schema, **kw):
-    """The table mack's mutating functions take."""
+    """The table every mack function takes."""
     return DeltaProtocolTable.create(
         spark, str(path), spark.createDataFrame(data, schema), **kw
     )
@@ -355,7 +349,7 @@ def test_constraint_append_none_quarantine_drops(spark, tmp_path):
 def test_is_composite_key_candidate(spark, tmp_path):
     # reference tests:655-670
     data = [(1, "A", "x"), (2, "A", "y"), (3, "B", "x")]
-    table = make_table(spark, tmp_path / "k", data, DUP_SCHEMA)
+    table = make_delta(spark, tmp_path / "k", data, DUP_SCHEMA)
     assert not mk.is_composite_key_candidate(table, ["c1"])
     assert mk.is_composite_key_candidate(table, ["c1", "c2"])
     with pytest.raises(TypeError, match="required"):
@@ -378,7 +372,7 @@ def test_find_composite_key_candidates(spark, tmp_path):
         (2, "b", "x"),
         (2, "b", "y"),
     ]
-    table = make_table(spark, tmp_path / "fk", data, schema)
+    table = make_delta(spark, tmp_path / "fk", data, schema)
     assert mk.find_composite_key_candidates(table) == ["col1", "col3"]
 
 
@@ -391,7 +385,7 @@ def test_find_composite_key_candidates_value_error(spark, tmp_path):
         ]
     )
     data = [(1, "a"), (1, "b"), (2, "a")]
-    table = make_table(spark, tmp_path / "fke", data, schema)
+    table = make_delta(spark, tmp_path / "fke", data, schema)
     with pytest.raises(ValueError, match="No composite key candidates"):
         mk.find_composite_key_candidates(table)
 
@@ -411,7 +405,7 @@ def test_with_md5_cols_null_quirk(spark):
 def test_copy_table_preserves_metadata(spark, tmp_path):
     # Clone data + partitioning + properties, NOT history (reference tests:474-500).
     df = spark.createDataFrame([(1, "A", "x"), (2, "B", "y")], DUP_SCHEMA)
-    table = ManagedTable.create(
+    table = DeltaProtocolTable.create(
         spark,
         str(tmp_path / "src"),
         df=df,
@@ -423,14 +417,14 @@ def test_copy_table_preserves_metadata(spark, tmp_path):
     assert clone.detail()["partitionColumns"] == ["c1"]
     assert clone.detail()["properties"]["owner"] == "tests"
     assert mk.latest_version(clone) == 0  # fresh history
-    assert clone.toDF().count() == 3
+    assert clone.to_df().count() == 3
 
 
 def test_copy_table_to_metastore_table(spark, tmp_path):
     # target_table variant: saveAsTable into the session catalog with the
     # source's partitioning (reference mack/__init__.py:312-318).
     df = spark.createDataFrame([(1, "A", "x"), (2, "B", "y")], DUP_SCHEMA)
-    table = ManagedTable.create(
+    table = DeltaProtocolTable.create(
         spark, str(tmp_path / "src_meta"), df=df, partition_by=["c1"]
     )
     spark.sql("DROP TABLE IF EXISTS mack_copy_test")
@@ -453,14 +447,14 @@ def test_copy_table_to_metastore_table(spark, tmp_path):
 
 
 def test_rename_table(spark, tmp_path):
-    table = make_table(spark, tmp_path / "old", [(1, "A", "x")], DUP_SCHEMA)
+    table = make_delta(spark, tmp_path / "old", [(1, "A", "x")], DUP_SCHEMA)
     renamed = mk.rename_table(table, str(tmp_path / "new"))
-    assert renamed.toDF().count() == 1
-    assert not ManagedTable.is_managed(str(tmp_path / "old"))
+    assert renamed.to_df().count() == 1
+    assert not DeltaProtocolTable.is_delta(str(tmp_path / "old"))
 
 
 def test_latest_version_and_file_sizes(spark, tmp_path):
-    table = make_table(spark, tmp_path / "v", [(1, "A", "x")], DUP_SCHEMA)
+    table = make_delta(spark, tmp_path / "v", [(1, "A", "x")], DUP_SCHEMA)
     table.append(spark.createDataFrame([(2, "B", "y")], DUP_SCHEMA))
     table.append(spark.createDataFrame([(3, "C", "z")], DUP_SCHEMA))
     assert mk.latest_version(table) == 2
@@ -473,7 +467,7 @@ def test_latest_version_and_file_sizes(spark, tmp_path):
 
 
 def test_show_file_sizes(spark, tmp_path, capfd):
-    table = make_table(spark, tmp_path / "s", [(1, "A", "x")], DUP_SCHEMA)
+    table = make_delta(spark, tmp_path / "s", [(1, "A", "x")], DUP_SCHEMA)
     mk.show_file_sizes(table)
     out = capfd.readouterr().out
     assert "The delta table contains" in out and "average file size" in out
@@ -505,7 +499,7 @@ def test_rename_delta_table_reference_shape(spark, tmp_path):
     """The reference's flag-shaped rename (mack/__init__.py:696-738):
     same parameters, same TypeError contracts, both dispatch branches."""
     df = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"])
-    table = ManagedTable.create(spark, str(tmp_path / "rdt_src"), df)
+    table = DeltaProtocolTable.create(spark, str(tmp_path / "rdt_src"), df)
 
     # reference error contract, verbatim conditions
     with pytest.raises(TypeError, match="existing delta table"):

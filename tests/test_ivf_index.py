@@ -1,14 +1,17 @@
 """Persisted IVF index (build_ivf_index / ivf_topk_from_index): the
 ingest-time state must reproduce ivf_topk exactly, the probe scan must
 push a literal cell IN (...) filter to parquet, and the cell-clustered
-files must carry disjoint cell ranges (the property that makes footer
-stats prune unprobed cells)."""
+files must carry disjoint cell ranges in their log stats (the property
+that lets file stats prune unprobed cells)."""
 
 import random
 
 from pyspark.sql import functions as F
 
 from mack_spark.operators import build_ivf_index, ivf_topk, ivf_topk_from_index
+from mack_spark.sources.delta_log import DeltaProtocolTable
+
+from conftest import log_key_ranges
 
 
 def _embeddings(spark, n=400, dim=8, seed=3):
@@ -54,11 +57,10 @@ def test_index_files_have_disjoint_cell_ranges(spark, tmp_path):
     idx = build_ivf_index(
         emb, str(tmp_path / "idx"), n_cells=8, centroids="first", n_files=4
     )
-    from conftest import footer_key_ranges
-
-    ivs = sorted(footer_key_ranges(idx._data_files(), "cell"))
+    assert isinstance(idx, DeltaProtocolTable)
+    ivs = sorted(log_key_ranges(idx, "cell"))
     assert len(ivs) >= 2  # actually clustered into multiple files
     for (lo1, hi1), (lo2, hi2) in zip(ivs, ivs[1:]):
-        assert hi1 <= lo2, f"overlapping cell ranges: {ivs}"
+        assert hi1 < lo2, f"overlapping cell ranges: {ivs}"
     props = idx.detail()["properties"]
     assert props["mack.ivf.n_cells"] == "8"

@@ -1,5 +1,7 @@
 """Persisted banded-MinHash index: build_lsh_index / lsh_pairs_against_index."""
 
+import random
+
 from pyspark.sql import functions as F
 
 from mack_spark.operators.dedup_text import (
@@ -7,7 +9,9 @@ from mack_spark.operators.dedup_text import (
     lsh_candidate_pairs,
     lsh_pairs_against_index,
 )
-from mack_spark.tables import ManagedTable
+from mack_spark.sources.delta_log import DeltaProtocolTable
+
+from conftest import log_key_ranges
 
 
 def _docs(spark, rows):
@@ -37,6 +41,25 @@ def test_index_probe_finds_exact_copy(spark, tmp_path):
     assert all(nid != 102 and nid != 103 for nid, _ in matches)
 
 
+def test_index_files_have_disjoint_bucket_ranges(spark, tmp_path):
+    """Files are range-clustered on (band, band_key): their band ranges
+    never cross, and files within one band hold disjoint key ranges."""
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(40)]
+    docs = [(i, " ".join(rng.choice(vocab) for _ in range(12))) for i in range(60)]
+    idx = build_lsh_index(_docs(spark, docs), str(tmp_path / "idx"), n_files=8)
+    assert isinstance(idx, DeltaProtocolTable)
+    files = sorted(zip(log_key_ranges(idx, "band"), log_key_ranges(idx, "band_key")))
+    assert len(files) >= 2
+    same_band = 0
+    for ((b_lo, b_hi), (_, k_hi)), ((c_lo, c_hi), (k_lo, _)) in zip(files, files[1:]):
+        assert b_hi <= c_lo, files
+        if b_lo == b_hi == c_lo == c_hi:
+            same_band += 1
+            assert k_hi < k_lo, files
+    assert same_band, files
+
+
 def test_index_properties_round_trip(spark, tmp_path):
     idx = build_lsh_index(
         _docs(spark, CORPUS), str(tmp_path / "idx"), num_hashes=8, bands=2
@@ -44,7 +67,7 @@ def test_index_properties_round_trip(spark, tmp_path):
     props = idx.detail()["properties"]
     assert props["mack.lsh.num_hashes"] == "8"
     assert props["mack.lsh.bands"] == "2"
-    reopened = ManagedTable(spark, str(tmp_path / "idx"))
+    reopened = DeltaProtocolTable(spark, str(tmp_path / "idx"))
     out = lsh_pairs_against_index(reopened, _docs(spark, BATCH))
     assert out.filter("new_id = 101 AND old_id = 1").count() == 1
 

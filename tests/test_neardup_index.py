@@ -94,7 +94,7 @@ def test_index_records_parameters(text_index, sem_index):
 
 def test_index_stores_only_clustered_docs(docs, text_index):
     n_docs = docs.count()
-    labeling = text_index.toDF()
+    labeling = text_index.to_df()
     assert labeling.count() < n_docs  # absence == unclustered
     # every cluster_id is a member of its own cluster (min-id survivor)
     roots = labeling.select(F.col("cluster_id").alias("doc_id")).distinct()

@@ -113,6 +113,22 @@ class TestInvalidation:
         assert snap.version == 1  # checkpoint carries version 1 state
         assert len(snap.files) == len(head.files)
 
+    def test_cold_replay_keeps_history_below_checkpoint(self, spark, tmp_path):
+        """A replay that starts at a checkpoint still lists the commits
+        the checkpoint summarises while their JSONs are in the log."""
+        import mack_spark as mk
+
+        t = _mk(spark, tmp_path)
+        t.append(spark.createDataFrame([(50, "x")], "pkey int, attr string"))
+        t.checkpoint()
+        clear_replay_cache(t.path)
+        cold = DeltaProtocolTable(spark, t.path)
+        assert [h["version"] for h in cold.history()] == [1, 0]
+        assert [h["operation"] for h in cold.history()] == [
+            "WRITE", "CREATE TABLE AS SELECT",
+        ]
+        assert mk.latest_version(cold) == 1
+
     def test_clear_replay_cache_scoped(self, spark, tmp_path):
         ta = _mk(spark, tmp_path, name="a")
         tb = _mk(spark, tmp_path, name="b")

@@ -1,6 +1,6 @@
 """Incremental rollup maintenance (mack_spark/rollup.py) over the
-Delta-protocol Change Data Feed, and ManagedTable's in-era version
-reconstruction (append manifests)."""
+Delta-protocol Change Data Feed, and the versioned reads a refresh
+relies on: time travel and RESTORE across appends and overwrites."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,7 +12,6 @@ from mack_spark.rollup import (
     rollup_as_view,
 )
 from mack_spark.sources.delta_log import DeltaProtocolTable
-from mack_spark.tables import ManagedTable
 
 from conftest import assert_df_equality
 
@@ -50,14 +49,14 @@ def _aggregate(events):
 
 class TestInEraVersions:
     def test_toDF_version_across_appends_without_retention(self, spark, tmp_path):
-        t = ManagedTable.create(
+        t = DeltaProtocolTable.create(
             spark, str(tmp_path / "t"), _events(spark, [("a", 1.0)])
         )
         t.append(_events(spark, [("b", 2.0)]))
         t.append(_events(spark, [("c", 3.0)]))
-        assert {r["grp"] for r in t.toDF(version=0).collect()} == {"a"}
-        assert {r["grp"] for r in t.toDF(version=1).collect()} == {"a", "b"}
-        assert {r["grp"] for r in t.toDF().collect()} == {"a", "b", "c"}
+        assert {r["grp"] for r in t.to_df(version_as_of=0).collect()} == {"a"}
+        assert {r["grp"] for r in t.to_df(version_as_of=1).collect()} == {"a", "b"}
+        assert {r["grp"] for r in t.to_df().collect()} == {"a", "b", "c"}
 
     def test_changes_across_append(self, spark, tmp_path):
         t = _cdf_source(spark, tmp_path / "c", [("a", 1.0)])
@@ -66,17 +65,14 @@ class TestInEraVersions:
         assert [(r["grp"], r["_change_type"]) for r in ch] == [("b", "insert")]
 
     def test_overwrite_breaks_era_but_retention_covers(self, spark, tmp_path):
-        t = ManagedTable.create(
+        t = DeltaProtocolTable.create(
             spark, str(tmp_path / "o"), _events(spark, [("a", 1.0)])
         )
-        t.set_properties({"mack.retain_snapshots": "4"})
         t.append(_events(spark, [("b", 2.0)]))
-        t.overwrite(_events(spark, [("z", 9.0)]), schema_change=False)
-        # v2 (pre-overwrite) comes from the retained snapshot; but the
-        # retained dir holds BOTH appends, so in-era math applies within
-        # the old era only via retained resolution
-        assert {r["grp"] for r in t.toDF(version=2).collect()} == {"a", "b"}
-        assert {r["grp"] for r in t.toDF().collect()} == {"z"}
+        t.overwrite(_events(spark, [("z", 9.0)]))
+        # the pre-overwrite version stays readable until VACUUM
+        assert {r["grp"] for r in t.to_df(version_as_of=1).collect()} == {"a", "b"}
+        assert {r["grp"] for r in t.to_df().collect()} == {"z"}
 
 
 class TestIncrementalRollup:
@@ -157,15 +153,15 @@ class TestIncrementalRollup:
 
 class TestInEraRestore:
     def test_restore_to_pre_append_version(self, spark, tmp_path):
-        t = ManagedTable.create(
+        t = DeltaProtocolTable.create(
             spark, str(tmp_path / "re"), _events(spark, [("a", 1.0)])
         )
         t.append(_events(spark, [("b", 2.0)]))
         t.append(_events(spark, [("c", 3.0)]))
-        t.restore(1)  # back to {a, b} without any retention configured
-        assert {r["grp"] for r in t.toDF().collect()} == {"a", "b"}
+        t.restore(1)  # back to {a, b}
+        assert {r["grp"] for r in t.to_df().collect()} == {"a", "b"}
         # restore is a forward commit, not an undo
-        assert t._read_meta()["version"] == 3
+        assert t.snapshot().version == 3
 
 
 class TestProtocolRollup:

@@ -1,8 +1,7 @@
-"""Deterministic sampling invariants and OPTIMIZE-style compaction."""
+"""Deterministic sampling invariants and OPTIMIZE compaction."""
 
-from mack_spark import optimize_compact
 from mack_spark.operators import deterministic_sample, stratified_sample
-from mack_spark.tables import ManagedTable
+from mack_spark.sources.delta_log import DeltaProtocolTable
 
 from conftest import assert_df_equality
 
@@ -52,14 +51,14 @@ def test_stratified_sample_quota(spark):
 
 def test_optimize_compact_reduces_files(spark, tmp_path):
     df = _docs(spark).repartition(16)
-    t = ManagedTable.create(spark, str(tmp_path / "t"), df)
+    t = DeltaProtocolTable.create(spark, str(tmp_path / "t"), df)
     before = t.detail()
     assert before["numFiles"] >= 8
-    stats = optimize_compact(t, target_file_bytes=10**9)
+    stats = t.optimize(target_file_bytes=10**9)
     assert stats["files_after"] < stats["files_before"]
     assert stats["files_after"] == 1
-    assert t.toDF().count() == 200
-    assert t.history()[-1]["operation"] == "OPTIMIZE"
+    assert t.to_df().count() == 200
+    assert t.history()[0]["operation"] == "OPTIMIZE"
 
 
 def test_hash_split_deterministic_and_partition_independent(spark):
@@ -112,13 +111,10 @@ def test_hash_split_is_map_only(spark):
 
 def test_selective_compact_links_big_files(spark, tmp_path):
     """OPTIMIZE contract: only the small-file tail is rewritten; files
-    already at target size ride through as hard links."""
-    import os
-
-    from mack_spark.tables import ManagedTable, optimize_compact
-
+    already at target size stay live, untouched."""
     big = spark.range(0, 20000).selectExpr("id", "repeat('x', 64) as pad").coalesce(1)
-    t = ManagedTable.create(spark, str(tmp_path / "sel"), big)
+    t = DeltaProtocolTable.create(spark, str(tmp_path / "sel"), big)
+    big_files = set(t.snapshot().files)
     # append a tail of tiny files
     for i in range(4):
         t.append(
@@ -126,40 +122,22 @@ def test_selective_compact_links_big_files(spark, tmp_path):
             .selectExpr("id", "repeat('y', 8) as pad")
             .coalesce(1)
         )
-    snap = t._snapshot_dir()
-    inodes = {
-        n: os.stat(os.path.join(snap, n)).st_ino
-        for n in os.listdir(snap)
-        if n.endswith(".parquet")
-    }
-    sizes = {
-        n: os.path.getsize(os.path.join(snap, n)) for n in inodes
-    }
-    big_files = {n for n, s in sizes.items() if s == max(sizes.values())}
-    n_before = t.toDF().count()
+    n_before = t.to_df().count()
 
-    stats = optimize_compact(
-        t, target_file_bytes=1 << 20, selective=True, min_file_bytes=10000
-    )
+    stats = t.optimize(target_file_bytes=1 << 20, min_file_bytes=10000)
     assert stats["files_before"] == 5
     assert stats["files_after"] < 5
-    snap2 = t._snapshot_dir()
-    after = {
-        n: os.stat(os.path.join(snap2, n)).st_ino
-        for n in os.listdir(snap2)
-        if n.endswith(".parquet")
-    }
-    # the big file survived as a hard link; the four tiny ones merged
-    for n in big_files:
-        assert after.get(n) == inodes[n], (n, inodes, after)
-    assert t.toDF().count() == n_before
+    # the big file is still live; the four tiny ones merged
+    assert big_files <= set(t.snapshot().files)
+    assert t.to_df().count() == n_before
 
 
 def test_selective_compact_falls_back_when_unhelpful(spark, tmp_path):
-    from mack_spark.tables import ManagedTable, optimize_compact
-
+    """A lone small file has nothing to bin with: OPTIMIZE commits
+    nothing."""
     df = spark.range(100).coalesce(1)
-    t = ManagedTable.create(spark, str(tmp_path / "fb"), df)
-    stats = optimize_compact(t, selective=True)  # single file: full path
-    assert stats["files_after"] >= 1
-    assert t.toDF().count() == 100
+    t = DeltaProtocolTable.create(spark, str(tmp_path / "fb"), df)
+    stats = t.optimize()
+    assert stats["files_after"] == 1 and stats["rewritten"] == 0
+    assert t.snapshot().version == 0
+    assert t.to_df().count() == 100
