@@ -137,11 +137,17 @@ def copy_table(
     if not target_path and not target_table:
         raise TypeError("Either target_path or target_table must be specified.")
     details = table.detail()
+    # The copy's files are written under logical column names, so the
+    # source's column mapping (ids, physical names) does not carry over.
+    props = {
+        k: v for k, v in details["properties"].items()
+        if not k.startswith("delta.columnMapping.")
+    }
     if target_table:
         (
             table.to_df()
             .write.partitionBy(details["partitionColumns"])
-            .options(**details["properties"])
+            .options(**props)
             .saveAsTable(target_table)
         )
         return None
@@ -150,7 +156,7 @@ def copy_table(
         target_path,
         df=table.to_df(),
         partition_by=details["partitionColumns"],
-        properties=details["properties"],
+        properties=props,
     )
 
 

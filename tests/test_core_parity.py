@@ -420,6 +420,18 @@ def test_copy_table_preserves_metadata(spark, tmp_path):
     assert clone.to_df().count() == 3
 
 
+def test_copy_table_of_column_mapped_table(spark, tmp_path):
+    # The copy is written under logical names: it must not inherit the
+    # source's column mapping, or a later rename reads NULLs.
+    table = make_delta(spark, tmp_path / "cm", [(1, "a")], "id int, v string")
+    table.enable_column_mapping()
+    table.rename_column("v", "w")
+    clone = mk.copy_table(table, str(tmp_path / "cm_dst"))
+    assert not any(k.startswith("delta.columnMapping.") for k in clone.detail()["properties"])
+    clone.rename_column("w", "z")
+    assert [tuple(r) for r in clone.to_df().collect()] == [(1, "a")]
+
+
 def test_copy_table_to_metastore_table(spark, tmp_path):
     # target_table variant: saveAsTable into the session catalog with the
     # source's partitioning (reference mack/__init__.py:312-318).
