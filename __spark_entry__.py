@@ -3960,11 +3960,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .start()
         )
         sq.awaitTermination()
-        snap = dst.snapshot()
-        assert snap.txns, "sink committed no SetTransaction watermark"
+        assert dst.snapshot().txns, (
+            "sink committed no SetTransaction watermark"
+        )
         assert any(
             h.get("operation") == "STREAMING UPDATE"
-            for h in snap.history
+            for h in dst.history()
         )
         return dst.to_df()
 

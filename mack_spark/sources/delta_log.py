@@ -31,7 +31,11 @@ and every commit this module writes is a REAL Delta transaction:
 * **reads** resolve a snapshot (latest or ``version_as_of`` — time
   travel) and hand Spark ONLY the active files, with
   ``basePath``-anchored partition-directory recovery and stats-based
-  file skipping for key-range predicates;
+  file skipping for key-range predicates. Every parquet scan of table
+  data — plain reads, deletion-vector filtering, row-id reads, the
+  change feed, DELETE/UPDATE file matching — is built by one scan
+  builder (``_scan``), and a scanned row names its log entry through
+  one file key (``_file_key``, Spark's rendering of the file URI);
 * **merge** executes a :class:`~mack_spark.tables.KeyedMerge`
   two-phase, the way Delta's own MERGE does: phase 1 prunes to the
   files whose stats overlap the source key range (everything else is
@@ -54,7 +58,8 @@ small batch into O(touched files), not O(table). Interop surface:
 deletion vectors are READ (executor-side bitmap decode in the scan)
 and WRITTEN (``delta.enableDeletionVectors=true`` turns DELETE/UPDATE
 into bitmap commits instead of file rewrites — Delta's 100-TB delete
-path); column mapping mode ``name`` is read-supported. Reader/writer
+path); column mapping modes ``name`` and ``id`` are read and written
+(``id`` resolves parquet columns by field id). Reader/writer
 requirements beyond the implemented feature sets raise loudly instead
 of misreading data or violating a foreign table's contract.
 """
@@ -769,84 +774,6 @@ def _z85_decode(s: str) -> bytes:
     return bytes(out)
 
 
-def _decode_roaring32(buf: bytes, pos: int):
-    """One 32-bit roaring bitmap (RoaringFormatSpec) → (values, pos)."""
-    import struct
-
-    cookie = struct.unpack_from("<I", buf, pos)[0]
-    if (cookie & 0xFFFF) == _SERIAL_COOKIE:
-        n = (cookie >> 16) + 1
-        pos += 4
-        nrb = (n + 7) // 8
-        run_flags = buf[pos:pos + nrb]
-        pos += nrb
-        has_run = True
-    elif cookie == _SERIAL_COOKIE_NO_RUN:
-        pos += 4
-        n = struct.unpack_from("<I", buf, pos)[0]
-        pos += 4
-        run_flags = b"\x00" * ((n + 7) // 8)
-        has_run = False
-    else:
-        raise DeltaProtocolError(f"bad roaring cookie {cookie}")
-    headers = []
-    for _ in range(n):
-        k = struct.unpack_from("<H", buf, pos)[0]
-        c = struct.unpack_from("<H", buf, pos + 2)[0] + 1
-        headers.append((k, c))
-        pos += 4
-    if (not has_run) or n >= 4:
-        pos += 4 * n  # offset header — sequential decode doesn't need it
-    vals: List[int] = []
-    for i, (k, c) in enumerate(headers):
-        base = k << 16
-        if run_flags[i // 8] & (1 << (i % 8)):
-            n_runs = struct.unpack_from("<H", buf, pos)[0]
-            pos += 2
-            for _ in range(n_runs):
-                start = struct.unpack_from("<H", buf, pos)[0]
-                length = struct.unpack_from("<H", buf, pos + 2)[0]
-                pos += 4
-                vals.extend(range(base + start, base + start + length + 1))
-        elif c > 4096:
-            words = struct.unpack_from("<1024Q", buf, pos)
-            pos += 8192
-            for wi, w in enumerate(words):
-                wb = base + wi * 64
-                while w:
-                    b = (w & -w).bit_length() - 1
-                    vals.append(wb + b)
-                    w &= w - 1
-        else:
-            arr = struct.unpack_from("<%dH" % c, buf, pos)
-            pos += 2 * c
-            vals.extend(base + v for v in arr)
-    return vals, pos
-
-
-def _decode_dv_bitmap(data: bytes) -> List[int]:
-    """Serialized 64-bit RoaringBitmapArray → sorted row positions."""
-    import struct
-
-    if len(data) < 12:
-        raise DeltaProtocolError("deletion vector bitmap too short")
-    magic = struct.unpack_from("<i", data, 0)[0]
-    if magic != _ROARING_MAGIC:
-        raise DeltaProtocolError(
-            f"bad deletion vector magic {magic} (expected {_ROARING_MAGIC})"
-        )
-    n_maps = struct.unpack_from("<q", data, 4)[0]
-    pos = 12
-    out: List[int] = []
-    for _ in range(n_maps):
-        key = struct.unpack_from("<I", data, pos)[0]
-        pos += 4
-        vals, pos = _decode_roaring32(data, pos)
-        hi = key << 32
-        out.extend(hi | v for v in vals)
-    return sorted(out)
-
-
 def _dv_file_path(table_path: str, dv: dict) -> str:
     """On-disk path of a 'u'/'p' deletion vector (spec naming: the
     'u' payload is [optional random prefix +] z85(16-byte UUID), and
@@ -901,11 +828,11 @@ def _dv_payload(table_path: str, dv: dict) -> bytes:
 
 
 def _decode_roaring32_np(buf: bytes, pos: int):
-    """One 32-bit roaring bitmap → (np.int64 values, new pos), fully
-    vectorized — the executor-side decode path. Byte layout mirrors
-    :func:`_decode_roaring32` (the pure-Python reference the tests
-    cross-check against); numpy keeps a 10⁷-position container family
-    at array speed instead of a Python loop."""
+    """One 32-bit roaring bitmap (RoaringFormatSpec) → (np.int64
+    values, new pos), fully vectorized — the executor-side decode path
+    (tests cross-check it against a pure-Python reference decoder);
+    numpy keeps a 10⁷-position container family at array speed instead
+    of a Python loop."""
     import struct
 
     import numpy as np
@@ -1103,6 +1030,17 @@ def _write_dv_file(table_path: str, positions) -> dict:
     }
 
 
+# columns the scan builder adds on request: a row's position in its
+# parquet file and its file's key (DeltaProtocolTable._file_key)
+_ROW_INDEX = "__mack_row_index"
+_FILE_KEY = "__mack_file_key"
+# the ASCII characters java.net.URI leaves unquoted in a path
+_URI_PATH_SAFE = frozenset(
+    "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
+    "-_.!~*'()" ":@&=+$,;/"
+)
+
+
 def _partition_lit(raw: Optional[str]):
     """A ``partitionValues`` entry as the literal Spark should cast to
     the declared type (spec: values are stored as strings; NULL is a
@@ -1116,14 +1054,13 @@ class DeltaSnapshot:
     """An immutable view of the table at one log version."""
 
     def __init__(self, version: int, metadata: dict, protocol: dict,
-                 files: Dict[str, dict], history: List[dict],
+                 files: Dict[str, dict],
                  txns: Optional[Dict[str, int]] = None,
                  domains: Optional[Dict[str, dict]] = None):
         self.version = version
         self.metadata = metadata
         self.protocol = protocol
         self.files = files  # path -> add action
-        self.history = history
         # appId -> highest committed SetTransaction version (spec §
         # Transaction Identifiers — the idempotent-writer watermark)
         self.txns: Dict[str, int] = txns or {}
@@ -1181,19 +1118,18 @@ class _ReplayState:
     """
 
     __slots__ = ("cp_key", "applied", "anchor", "files", "metadata",
-                 "protocol", "history", "txns", "domains", "snaps")
+                 "protocol", "txns", "domains", "snaps")
 
     SNAP_KEEP = 8
 
     def __init__(self, cp_key, applied, anchor, files, metadata,
-                 protocol, history, txns, domains):
+                 protocol, txns, domains):
         self.cp_key = cp_key          # (version, parts) of checkpoint base
         self.applied = applied        # highest replayed version
         self.anchor = anchor          # (path, ino, mtime_ns, size)
         self.files = files
         self.metadata = metadata
         self.protocol = protocol
-        self.history = history
         self.txns = txns
         self.domains = domains
         self.snaps: Dict[int, "DeltaSnapshot"] = {}
@@ -1214,7 +1150,7 @@ class _ReplayState:
         (O(n) once per new version, O(1) on every warm hit)."""
         snap = DeltaSnapshot(
             version, self.metadata, self.protocol, dict(self.files),
-            list(self.history), txns=dict(self.txns),
+            txns=dict(self.txns),
             domains=dict(self.domains),
         )
         self.snaps[version] = snap
@@ -1522,7 +1458,7 @@ class DeltaProtocolTable:
         s = os.stat(vf)
         return (vf, s.st_ino, s.st_mtime_ns, s.st_size)
 
-    def _apply_version_file(self, v: int, files, history, txns, domains):
+    def _apply_version_file(self, v: int, files, txns, domains):
         """Apply one commit JSON into the accumulators; returns the
         (metadata, protocol) actions it carried, if any."""
         metadata = protocol = None
@@ -1532,8 +1468,7 @@ class DeltaProtocolTable:
                 if not line:
                     continue
                 action = json.loads(line)
-                self._apply(action, files, history, version=v,
-                            txns=txns, domains=domains)
+                self._apply(action, files, txns=txns, domains=domains)
                 metadata = action.get("metaData") or metadata
                 protocol = action.get("protocol") or protocol
         return metadata, protocol
@@ -1581,17 +1516,16 @@ class DeltaProtocolTable:
                     try:
                         for v in tail:
                             m, p = self._apply_version_file(
-                                v, st.files, st.history, st.txns,
-                                st.domains,
+                                v, st.files, st.txns, st.domains,
                             )
                             st.metadata = m or st.metadata
                             st.protocol = p or st.protocol
                     except Exception:
                         # a partially applied tail (transient IO error,
                         # commit file read mid-write) would leave the
-                        # accumulator half-advanced — e.g. a duplicate
-                        # history entry on retry. Drop the entry; the
-                        # next call replays cleanly from disk.
+                        # accumulator half-advanced (files applied
+                        # past metadata). Drop the entry; the next
+                        # call replays cleanly from disk.
                         with _REPLAY_LOCK:
                             _REPLAY_CACHE.pop(self.path, None)
                         raise
@@ -1609,7 +1543,6 @@ class DeltaProtocolTable:
         files: Dict[str, dict] = {}
         metadata: Optional[dict] = None
         protocol: Optional[dict] = None
-        history: List[dict] = []
         txns: Dict[str, int] = {}
         domains: Dict[str, dict] = {}
 
@@ -1621,8 +1554,7 @@ class DeltaProtocolTable:
             for action in self._checkpoint_actions(
                 cp["version"], cp["parts"]
             ):
-                self._apply(action, files, history, txns=txns,
-                            domains=domains)
+                self._apply(action, files, txns=txns, domains=domains)
                 metadata = action.get("metaData") or metadata
                 protocol = action.get("protocol") or protocol
             start, last = cp["version"] + 1, cp["version"]
@@ -1650,7 +1582,7 @@ class DeltaProtocolTable:
                         if not line:
                             continue
                         action = json.loads(line)
-                        self._apply(action, files, history, txns=txns,
+                        self._apply(action, files, txns=txns,
                                     domains=domains)
                         metadata = action.get("metaData") or metadata
                         protocol = action.get("protocol") or protocol
@@ -1659,7 +1591,7 @@ class DeltaProtocolTable:
                 continue
             if expected in vset:
                 m, p = self._apply_version_file(
-                    expected, files, history, txns, domains
+                    expected, files, txns, domains
                 )
                 metadata = m or metadata
                 protocol = p or protocol
@@ -1698,7 +1630,7 @@ class DeltaProtocolTable:
             prev = _REPLAY_CACHE.get(self.path)
         if prev is None or last >= prev.applied:
             st = _ReplayState(cp_key, last, self._anchor_sig(last), files,
-                              metadata, protocol, history, txns, domains)
+                              metadata, protocol, txns, domains)
             if prev is not None:
                 st.snaps.update(prev.snaps)
             with _REPLAY_LOCK:
@@ -1711,7 +1643,7 @@ class DeltaProtocolTable:
         # accumulator state. Bounded like take_snapshot's cache — CDF
         # derived-remove reads call snapshot(v-1) per version in range,
         # and each old snapshot pins an O(n_files) dict
-        snap = DeltaSnapshot(last, metadata, protocol, files, history,
+        snap = DeltaSnapshot(last, metadata, protocol, files,
                              txns=txns, domains=domains)
         prev.snaps[last] = snap
         while len(prev.snaps) > _ReplayState.SNAP_KEEP:
@@ -1762,8 +1694,8 @@ class DeltaProtocolTable:
         # parquet columns by each field's delta.columnMapping.physicalName;
         # mode 'id' (converted-Iceberg tables, Databricks rename/drop
         # defaults) resolves by PARQUET FIELD ID — Spark's native
-        # fieldId reader does the matching JVM-side
-        # (_read_files_field_id). Anything else is refused.
+        # fieldId reader does the matching JVM-side (_mapped_read).
+        # Anything else is refused.
         cmap = (metadata.get("configuration") or {}).get(
             "delta.columnMapping.mode", "none"
         )
@@ -1774,8 +1706,7 @@ class DeltaProtocolTable:
             )
 
     @staticmethod
-    def _apply(action: dict, files: Dict[str, dict], history: List[dict],
-               version: Optional[int] = None,
+    def _apply(action: dict, files: Dict[str, dict],
                txns: Optional[Dict[str, int]] = None,
                domains: Optional[Dict[str, dict]] = None) -> None:
         if "add" in action:
@@ -1801,8 +1732,6 @@ class DeltaProtocolTable:
                         "configuration": dm.get("configuration"),
                         "removed": False,
                     }
-        elif "commitInfo" in action and version is not None:
-            history.append(dict(action["commitInfo"], version=version))
 
     # ------------------------------------------------------------------
     # reads
@@ -1921,6 +1850,282 @@ class DeltaProtocolTable:
             ),
         )
 
+    # ------------------------------------------------------------------
+    # the scan builder: every parquet scan of table data files is built
+    # by _scan (through _read_files for live rows); a scanned row names
+    # its file by _file_key, and _attach_per_file joins per-file
+    # constants (row-id bases, commit versions) on that key
+    # ------------------------------------------------------------------
+
+    def _file_key(self, path: str) -> str:
+        """The name Spark gives a scanned file in
+        ``_metadata.file_path``, for a snapshot key (table-relative, or
+        absolute for shallow clones): Hadoop's
+        ``Path.toUri().toString()`` of the local path. That is
+        java.net.URI path quoting — UTF-8 ``%XX`` for every ASCII
+        character outside the path's legal set and for non-ASCII
+        spaces and controls; other non-ASCII characters stay raw — so a
+        table under ``/data/my dir`` or a partition value ``a b`` keys
+        as ``file:/data/my%20dir/.../p=a%20b/...``."""
+        import unicodedata
+
+        out = []
+        for ch in os.path.abspath(os.path.join(self.path, path)):
+            if ch in _URI_PATH_SAFE or (
+                ord(ch) > 127
+                and unicodedata.category(ch) not in ("Zs", "Zl", "Zp", "Cc")
+            ):
+                out.append(ch)
+            else:
+                out.extend("%%%02X" % b for b in ch.encode("utf-8"))
+        return "file:" + "".join(out)
+
+    def _mapped_read(self, snap: DeltaSnapshot, fields, extra=()):
+        """``(session, read schema, select columns)`` that read the
+        logical ``fields`` from ``snap``'s data files under its column
+        mapping mode: ``none`` reads them by name; ``name`` reads each
+        field's ``delta.columnMapping.physicalName`` and aliases it
+        back; ``id`` resolves by parquet FIELD ID (converted-Iceberg
+        files carry arbitrary column names) in the conf-isolated
+        :func:`_field_id_session`, where a file without matching ids
+        fails loudly instead of reading NULLs. ``extra`` fields
+        (hidden physical columns: row tracking's materialized ids,
+        CDF's ``_change_type``) are read by their literal name in every
+        mode and selected as-is. Explicit schemas keep the scan free of
+        footer inference and NULL-fill files written before a column
+        was added."""
+        from pyspark.sql.types import StructField
+
+        mode = snap.column_mapping_mode
+        cols = [f.name for f in fields]
+        session = self.spark
+        if mode == "name":
+            phys = snap.physical_names()
+            fields = [
+                StructField(phys[f.name], f.dataType, True) for f in fields
+            ]
+            cols = [
+                F.col(f"`{f.name}`").alias(c) for f, c in zip(fields, cols)
+            ]
+        elif mode == "id":
+            ided = []
+            for f in fields:
+                fid = (f.metadata or {}).get("delta.columnMapping.id")
+                if fid is None:
+                    raise DeltaProtocolError(
+                        f"column mapping mode 'id' but field {f.name!r}"
+                        " has no delta.columnMapping.id — cannot resolve"
+                        " it"
+                    )
+                ided.append(StructField(
+                    f.name, f.dataType, True, {"parquet.field.id": int(fid)}
+                ))
+            fields = ided
+            session = _field_id_session(self.spark)
+        extra = list(extra)
+        cols += [F.col(f"`{f.name}`") for f in extra]
+        return session, StructType(list(fields) + extra), cols
+
+    @staticmethod
+    def _partition_groups(
+        snap: DeltaSnapshot, paths: List[str]
+    ) -> Dict[tuple, List[str]]:
+        """``paths`` grouped by their partition-value tuple (in
+        partition-column order, as :func:`_partition_lit` literals).
+        ``partitionValues`` are physical-keyed on a column-mapped table
+        (logical keys from nonconforming writers are tolerated)."""
+        pcols = snap.partition_columns
+        phys = (
+            snap.physical_names()
+            if snap.column_mapping_mode != "none" else {}
+        )
+        groups: Dict[tuple, List[str]] = {}
+        for p in paths:
+            pv = snap.files[p].get("partitionValues") or {}
+            key = tuple(
+                _partition_lit(pv.get(phys.get(c, c), pv.get(c)))
+                for c in pcols
+            )
+            groups.setdefault(key, []).append(p)
+        return groups
+
+    def _scan(
+        self,
+        snap: DeltaSnapshot,
+        paths: List[str],
+        extra=(),
+        row_index: bool = False,
+        file_key: bool = False,
+    ) -> DataFrame:
+        """One parquet scan of ``paths`` (deletion vectors NOT applied;
+        see :meth:`_read_files`) as the table's logical columns, then
+        the ``extra`` physical columns, then — on request — each row's
+        position in its file (``_ROW_INDEX``) and its file's
+        :meth:`_file_key` (``_FILE_KEY``).
+
+        Partition values: the add actions' ``partitionValues`` are the
+        spec's authority. When the table is unmapped and every file's
+        directory round-trips those values (always true for tables this
+        writer produced), Spark's ``basePath`` discovery reconstructs
+        them in ONE relation. Otherwise — a foreign writer need not use
+        ``col=value`` directories, and a mapped table's directories use
+        physical names — the files group by partition tuple
+        (:meth:`_partition_groups`) and each group's values attach as
+        typed literals from the log."""
+        from functools import reduce
+
+        schema = snap.schema
+        pcols = snap.partition_columns
+        names = [f.name for f in schema.fields]
+        discover = snap.column_mapping_mode == "none" and (
+            not pcols or all(
+                self._dir_matches_partition_values(p, snap.files[p], pcols)
+                for p in paths
+            )
+        )
+        fields = [
+            f for f in schema.fields if discover or f.name not in pcols
+        ]
+        session, read_schema, cols = self._mapped_read(snap, fields, extra)
+        meta = {}
+        if row_index:
+            meta[_ROW_INDEX] = F.col("_metadata.row_index")
+        if file_key:
+            meta[_FILE_KEY] = F.col("_metadata.file_path")
+        groups = (
+            {(): list(paths)} if discover
+            else self._partition_groups(snap, paths)
+        )
+        tail = [f.name for f in extra] + list(meta)
+        types = {f.name: f.dataType for f in schema.fields}
+        parts = []
+        for key, grp in groups.items():
+            reader = session.read.schema(read_schema)
+            if discover and pcols:
+                reader = reader.option("basePath", self.path)
+            df = reader.parquet(
+                *[os.path.join(self.path, p) for p in grp]
+            ).select(*cols, *[c.alias(n) for n, c in meta.items()])
+            if key:
+                df = df.withColumns({
+                    c: F.lit(raw).cast(types[c])
+                    for c, raw in zip(pcols, key)
+                }).select(*names, *[F.col(f"`{c}`") for c in tail])
+            parts.append(df)
+        return reduce(lambda a, b: a.unionByName(b), parts)
+
+    def _read_files(
+        self,
+        snap: DeltaSnapshot,
+        paths: List[str],
+        extra=(),
+        row_index: bool = False,
+        file_key: bool = False,
+    ) -> DataFrame:
+        """The LIVE rows of ``paths``: files without a deletion vector
+        scan directly (:meth:`_scan`), DV'd files through
+        :meth:`_drop_deleted`; same columns and options as
+        :meth:`_scan`."""
+        if not paths:
+            return self.spark.createDataFrame([], snap.schema)
+        dv_paths = [p for p in paths if snap.files[p].get("deletionVector")]
+        if not dv_paths:
+            return self._scan(snap, paths, extra, row_index, file_key)
+        live = self._drop_deleted(snap, dv_paths, extra, row_index, file_key)
+        plain = [
+            p for p in paths if not snap.files[p].get("deletionVector")
+        ]
+        if not plain:
+            return live
+        return self._scan(
+            snap, plain, extra, row_index, file_key
+        ).unionByName(live)
+
+    def _drop_deleted(
+        self,
+        snap: DeltaSnapshot,
+        paths: List[str],
+        extra=(),
+        row_index: bool = False,
+        file_key: bool = False,
+    ) -> DataFrame:
+        """DV'd files minus their deleted rows, decoded EXECUTOR-side:
+        one :meth:`_scan` carries each row's position and file key, and
+        an Arrow-batched ``mapInPandas`` filters each batch against the
+        owning file's roaring bitmap — decoded vectorized (numpy) inside
+        the task from the DV bytes on shared storage (executors read DV
+        files from the same store as data files, Delta's own model).
+        Deleted POSITIONS are never materialized on the driver and
+        never broadcast, so a DV with 10⁷–10⁸ deleted rows costs its
+        bitmap bytes per task, not a driver list. Only the per-file
+        DESCRIPTOR map (file key → ~200-byte dict) ships with the
+        closure.
+
+        TRADEOFF (measured in BENCH_LOCAL): mapInPandas is a
+        predicate-pushdown barrier, so filters above a DV'd read do not
+        reach the parquet row groups of DV'd files — the price of never
+        materializing positions on the driver. DV'd files are a small,
+        transient fraction of a healthy table (OPTIMIZE/REORG compacts
+        them away, delete-heavy files collapse to removes), and the
+        alternative (distributed positions anti-join) would shuffle
+        O(deleted rows) instead of streaming them through one map
+        stage."""
+        dv_by_key = {
+            self._file_key(p): snap.files[p]["deletionVector"] for p in paths
+        }
+        scan = self._scan(snap, paths, extra, row_index=True, file_key=True)
+        out = StructType([
+            f for f in scan.schema.fields
+            if (f.name != _ROW_INDEX or row_index)
+            and (f.name != _FILE_KEY or file_key)
+        ])
+        out_names = out.fieldNames()
+        table_path = self.path
+
+        def drop_deleted(batches):
+            import numpy as np
+
+            cache: Dict[str, object] = {}
+
+            def positions_for(key: str):
+                if key not in cache:
+                    if len(cache) >= 2:  # scans pack few files per task;
+                        cache.clear()    # bound resident bitmap memory
+                    cache[key] = _dv_positions_np(table_path, dv_by_key[key])
+                return cache[key]
+
+            for pdf in batches:
+                keys = pdf[_FILE_KEY]
+                ri = pdf[_ROW_INDEX].to_numpy()
+                keep = np.ones(len(pdf), dtype=bool)
+                # a batch rarely spans files; group positionally
+                starts = np.flatnonzero(keys.ne(keys.shift()).to_numpy())
+                bounds = list(starts) + [len(pdf)]
+                for i in range(len(bounds) - 1):
+                    lo, hi = bounds[i], bounds[i + 1]
+                    pos = positions_for(keys.iat[lo])
+                    seg = ri[lo:hi]
+                    idx = np.searchsorted(pos, seg)
+                    hit = idx < pos.size
+                    hit[hit] = pos[idx[hit]] == seg[hit]
+                    keep[lo:hi] = ~hit
+                yield pdf.loc[keep, out_names]
+
+        return scan.mapInPandas(drop_deleted, schema=out)
+
+    def _attach_per_file(
+        self, scan: DataFrame, rows, ddl: str
+    ) -> DataFrame:
+        """Join per-file constants onto ``scan`` (which carries
+        ``_FILE_KEY``): ``rows`` are ``(snapshot key, *values)`` tuples
+        shaped by ``ddl``. One row per file, so the join is a
+        broadcast — never a shuffle of the scanned data."""
+        consts = self.spark.createDataFrame(
+            [(self._file_key(p), *vals) for p, *vals in rows],
+            f"{_FILE_KEY} string, {ddl}",
+        )
+        return scan.join(F.broadcast(consts), _FILE_KEY)
+
     def _read_files_with_row_ids(
         self, snap: DeltaSnapshot, paths: List[str]
     ) -> DataFrame:
@@ -1933,192 +2138,54 @@ class DeltaProtocolTable:
         (OPTIMIZE/REORG/UPDATE/DELETE rewrites persist preserved ids
         into the materialized columns; see
         :meth:`_rewrite_with_preserved_row_ids`). Executor-side
-        throughout: the scan carries parquet ``_metadata.row_index``,
-        and the per-FILE bases join in via a broadcast (one row per
-        file — the same cardinality the driver already holds as the
-        snapshot's file list). Works on column-mapped tables: data
-        columns resolve by physical name (mode ``name``) or parquet
-        field id (mode ``id``); the materialized columns always resolve
-        by their configured physical name (they are hidden physical
-        columns, not mapped table columns)."""
+        throughout: the scan carries each row's position, and the
+        per-FILE bases join in via :meth:`_attach_per_file`. The
+        materialized columns are hidden physical columns, read by their
+        configured name in every column mapping mode."""
+        from pyspark.sql.types import LongType, StructField
+
         cfg = snap.metadata.get("configuration") or {}
         if str(cfg.get("delta.enableRowTracking", "false")).lower() != "true":
             raise DeltaProtocolError(
                 "with_row_ids=True requires delta.enableRowTracking=true"
             )
         mid, mcv = self._row_tracking_phys_cols(snap)
-        mat_cols = [c for c in (mid, mcv) if c]
         schema = snap.schema
-        out_names = [f.name for f in schema.fields] + [
-            "_row_id", "_row_commit_version",
-        ]
-        from pyspark.sql.types import LongType, StructField
-
-        out_schema = StructType(
-            list(schema.fields)
-            + [StructField("_row_id", LongType(), False),
-               StructField("_row_commit_version", LongType(), True)]
-        )
         if not paths:
-            return self.spark.createDataFrame([], out_schema)
-
-        def base_row(key: str, p: str):
+            return self.spark.createDataFrame([], StructType(
+                list(schema.fields)
+                + [StructField("_row_id", LongType(), False),
+                   StructField("_row_commit_version", LongType(), True)]
+            ))
+        bases = []
+        for p in paths:
             a = snap.files[p]
             if a.get("baseRowId") is None:
                 raise DeltaProtocolError(
                     f"file {p!r} has no baseRowId — the table enables"
                     " row tracking but this file predates the backfill"
                 )
-            return (key, int(a["baseRowId"]),
-                    a.get("defaultRowCommitVersion"))
-
-        def attach(scan: DataFrame, base_rows) -> DataFrame:
-            base_df = self.spark.createDataFrame(
-                base_rows, "__fk string, __base long, __dcv long",
+            bases.append(
+                (p, int(a["baseRowId"]), a.get("defaultRowCommitVersion"))
             )
-            j = scan.join(F.broadcast(base_df), "__fk")
-            rid = F.col("__base") + F.col("__ri")
-            rcv = F.col("__dcv")
-            if mid:
-                rid = F.coalesce(F.col(f"`{mid}`"), rid)
-            if mcv:
-                rcv = F.coalesce(F.col(f"`{mcv}`"), rcv)
-            return (
-                j.withColumn("_row_id", rid)
-                .withColumn("_row_commit_version", rcv)
-                .select(*out_names)
-            )
-
-        pcols = snap.partition_columns
-        cmode = snap.column_mapping_mode
-        dv_paths = [p for p in paths if snap.files[p].get("deletionVector")]
-        plain = [
-            p for p in paths if snap.files[p].get("deletionVector") is None
-        ]
-        from functools import reduce
-
-        parts = []
-        if plain and cmode == "none":
-            if pcols and not all(
-                self._dir_matches_partition_values(p, snap.files[p], pcols)
-                for p in plain
-            ):
-                raise DeltaProtocolError(
-                    "with_row_ids reads need col=value partition"
-                    " directories (foreign layouts: read without row ids)"
-                )
-            abs_paths = [os.path.join(self.path, p) for p in plain]
-            read_schema = StructType(
-                list(schema.fields)
-                + [StructField(c, LongType(), True) for c in mat_cols]
-            )
-            reader = self.spark.read.schema(read_schema)
-            if pcols:
-                reader = reader.option("basePath", self.path)
-            # plain files key by full file URI — partitioned writes
-            # REUSE part filenames across partition dirs, so basenames
-            # are not unique here
-            scan = reader.parquet(*abs_paths).select(
-                *[f.name for f in schema.fields],
-                *[F.col(f"`{c}`") for c in mat_cols],
-                F.col("_metadata.file_path").alias("__fk"),
-                F.col("_metadata.row_index").alias("__ri"),
-            )
-            # Spark renders local metadata paths as "file:/abs/path"
-            parts.append(attach(scan, [
-                base_row(
-                    "file:" + os.path.abspath(os.path.join(self.path, p)),
-                    p,
-                )
-                for p in plain
-            ]))
-        elif plain:
-            # column-mapped: physical/field-id data schema; partition
-            # values attach as typed literals from the log (directory
-            # layout uses physical names and is not trusted)
-            phys = snap.physical_names()
-            types = {f.name: f.dataType for f in schema.fields}
-            data_fields = [f for f in schema.fields if f.name not in pcols]
-            if cmode == "id":
-                fids = {}
-                for f in data_fields:
-                    fid = (f.metadata or {}).get("delta.columnMapping.id")
-                    if fid is None:
-                        raise DeltaProtocolError(
-                            f"column mapping mode 'id' but field"
-                            f" {f.name!r} has no delta.columnMapping.id"
-                        )
-                    fids[f.name] = int(fid)
-                data_schema = StructType(
-                    [StructField(f.name, f.dataType, True,
-                                 {"parquet.field.id": fids[f.name]})
-                     for f in data_fields]
-                    + [StructField(c, LongType(), True) for c in mat_cols]
-                )
-                sess = _field_id_session(self.spark)
-                sel = [F.col(f"`{f.name}`") for f in data_fields]
-            else:
-                data_schema = StructType(
-                    [StructField(phys[f.name], f.dataType, True)
-                     for f in data_fields]
-                    + [StructField(c, LongType(), True) for c in mat_cols]
-                )
-                sess = self.spark
-                sel = [
-                    F.col(f"`{phys[f.name]}`").alias(f.name)
-                    for f in data_fields
-                ]
-            groups: Dict[tuple, List[str]] = {}
-            for p in plain:
-                pv = snap.files[p].get("partitionValues") or {}
-                key = tuple(
-                    _partition_lit(pv.get(phys[c], pv.get(c)))
-                    for c in pcols
-                )
-                groups.setdefault(key, []).append(p)
-            gparts = []
-            for key, grp in groups.items():
-                df = (
-                    sess.read.schema(data_schema)
-                    .parquet(*[os.path.join(self.path, p) for p in grp])
-                    .select(
-                        *sel,
-                        *[F.col(f"`{c}`") for c in mat_cols],
-                        F.col("_metadata.file_path").alias("__fk"),
-                        F.col("_metadata.row_index").alias("__ri"),
-                    )
-                )
-                for c, raw in zip(pcols, key):
-                    df = df.withColumn(c, F.lit(raw).cast(types[c]))
-                gparts.append(df.select(
-                    *[f.name for f in schema.fields], *mat_cols,
-                    "__fk", "__ri",
-                ))
-            scan = reduce(lambda a, b: a.unionByName(b), gparts)
-            parts.append(attach(scan, [
-                base_row(
-                    "file:" + os.path.abspath(os.path.join(self.path, p)),
-                    p,
-                )
-                for p in plain
-            ]))
-        if dv_paths:
-            # DV'd files key by basename (what the DV scan carries);
-            # _read_dv_files already fails loudly on colliding basenames
-            dv_df = self._read_dv_files(
-                snap, dv_paths, keep_meta=True, extra_long_cols=mat_cols,
-            )
-            scan = dv_df.select(
-                *[f.name for f in schema.fields],
-                *[F.col(f"`{c}`") for c in mat_cols],
-                F.col("__mack_dv_file").alias("__fk"),
-                F.col("__mack_dv_pos").alias("__ri"),
-            )
-            parts.append(attach(
-                scan,
-                [base_row(os.path.basename(p), p) for p in dv_paths],
-            ))
-        return reduce(lambda a, b: a.unionByName(b), parts)
+        scan = self._read_files(
+            snap, paths,
+            extra=[StructField(c, LongType(), True) for c in (mid, mcv) if c],
+            row_index=True, file_key=True,
+        )
+        rid = F.col("__base") + F.col(_ROW_INDEX)
+        rcv = F.col("__dcv")
+        if mid:
+            rid = F.coalesce(F.col(f"`{mid}`"), rid)
+        if mcv:
+            rcv = F.coalesce(F.col(f"`{mcv}`"), rcv)
+        return self._attach_per_file(
+            scan, bases, "__base long, __dcv long"
+        ).select(
+            *schema.fieldNames(),
+            rid.alias("_row_id"),
+            rcv.alias("_row_commit_version"),
+        )
 
     def _rewrite_with_preserved_row_ids(
         self, snap: DeltaSnapshot, paths: List[str]
@@ -2133,433 +2200,19 @@ class DeltaProtocolTable:
         not configured (pre-r13 tables), or a file predates the
         baseRowId backfill."""
         cfg = snap.metadata.get("configuration") or {}
-        if str(cfg.get("delta.enableRowTracking", "false")).lower() != "true":
-            return self._read_files(snap, paths), False
         mid, mcv = self._row_tracking_phys_cols(snap)
-        if not mid or not mcv:
-            return self._read_files(snap, paths), False
-        if any(snap.files[p].get("baseRowId") is None for p in paths):
-            return self._read_files(snap, paths), False
-        try:
-            df = self._read_files_with_row_ids(snap, paths)
-        except DeltaProtocolError:
-            # a layout the row-id read refuses (foreign partition
-            # directories) — fall back to the pre-materialization
-            # behavior: plain read, fresh ids, rather than failing the
-            # whole rewrite
+        if (
+            str(cfg.get("delta.enableRowTracking", "false")).lower() != "true"
+            or not mid or not mcv
+            or any(snap.files[p].get("baseRowId") is None for p in paths)
+        ):
             return self._read_files(snap, paths), False
         return (
-            df.withColumnRenamed("_row_id", mid)
+            self._read_files_with_row_ids(snap, paths)
+            .withColumnRenamed("_row_id", mid)
             .withColumnRenamed("_row_commit_version", mcv),
             True,
         )
-
-    def _read_files(self, snap: DeltaSnapshot, paths: List[str]) -> DataFrame:
-        schema = snap.schema
-        if not paths:
-            return self.spark.createDataFrame([], schema)
-        dv_paths = [
-            p for p in paths if snap.files[p].get("deletionVector")
-        ]
-        if dv_paths:
-            plain = [p for p in paths if p not in set(dv_paths)]
-            dv_df = self._read_dv_files(snap, dv_paths)
-            if not plain:
-                return dv_df
-            return self._read_files(snap, plain).unionByName(dv_df)
-        if snap.column_mapping_mode == "name":
-            return self._read_files_column_mapped(snap, paths)
-        if snap.column_mapping_mode == "id":
-            return self._read_files_field_id(snap, paths)
-        abs_paths = [os.path.join(self.path, p) for p in paths]
-        pcols = snap.partition_columns
-        out_names = [f.name for f in schema.fields]
-        if not pcols:
-            # explicit schema: no footer-merge inference job, and files
-            # committed before a mergeSchema evolution read their
-            # missing columns as NULL (parquet reader fills them)
-            return (
-                self.spark.read.schema(schema).parquet(*abs_paths)
-                .select(*out_names)
-            )
-        # partition values: the add actions' ``partitionValues`` are the
-        # spec's authoritative source. When every file's directory
-        # layout round-trips those values (always true for tables this
-        # writer produced), Spark's basePath discovery reconstructs them
-        # scalably — one relation, no per-partition plan nodes. A
-        # foreign writer is NOT required to use col=value directories,
-        # so any mismatch falls back to attaching the log's values as
-        # literals per partition group.
-        if all(
-            self._dir_matches_partition_values(p, snap.files[p], pcols)
-            for p in paths
-        ):
-            df = (
-                self.spark.read.schema(schema)
-                .option("basePath", self.path)
-                .parquet(*abs_paths)
-            )
-            return df.select(*out_names)
-        from functools import reduce
-
-        data_schema = StructType(
-            [f for f in schema.fields if f.name not in pcols]
-        )
-        types = {f.name: f.dataType for f in schema.fields}
-        groups: Dict[tuple, List[str]] = {}
-        for p in paths:
-            pv = snap.files[p].get("partitionValues") or {}
-            key = tuple(_partition_lit(pv.get(c)) for c in pcols)
-            groups.setdefault(key, []).append(os.path.join(self.path, p))
-        parts = []
-        for key, grp in groups.items():
-            df = self.spark.read.schema(data_schema).parquet(*grp)
-            for c, raw in zip(pcols, key):
-                df = df.withColumn(c, F.lit(raw).cast(types[c]))
-            parts.append(df.select(*out_names))
-        return reduce(lambda a, b: a.unionByName(b), parts)
-
-    def _read_dv_files(
-        self,
-        snap: DeltaSnapshot,
-        paths: List[str],
-        keep_meta: bool = False,
-        extra_long_cols: Optional[List[str]] = None,
-    ) -> DataFrame:
-        """Data files minus their deletion vectors, decoded EXECUTOR-
-        side: one grouped scan attaches parquet ``_metadata.row_index``
-        + ``_metadata.file_path``, and an Arrow-batched ``mapInPandas``
-        filters each batch against the owning file's roaring bitmap —
-        decoded vectorized (numpy) inside the task from the DV bytes on
-        shared storage (executors read DV files from the same store as
-        data files, Delta's own model). Deleted POSITIONS are never
-        materialized on the driver and never broadcast, so a DV with
-        10⁷–10⁸ deleted rows costs its bitmap bytes per task, not a
-        driver list — the r10 scale flag this replaces. Only the tiny
-        per-file DESCRIPTOR map (path → ~200-byte dict) ships with the
-        closure, the same metadata the plan already carries.
-
-        Physical column names are translated when the table is
-        column-mapped; partition values attach as typed literals per
-        partition group (directory layout is not trusted for DV'd
-        foreign files).
-
-        TRADEOFF (documented, measured in BENCH_LOCAL): mapInPandas is
-        a predicate-pushdown barrier, so filters above a DV'd read do
-        not reach the parquet row groups of DV'd files — the price of
-        never materializing positions on the driver. DV'd files are a
-        small, transient fraction of a healthy table (OPTIMIZE/REORG
-        compacts them away, delete-heavy files collapse to removes),
-        and the alternative (distributed positions anti-join) would
-        shuffle O(deleted rows) instead of streaming them through one
-        map stage.
-
-        ``keep_meta`` keeps ``__mack_dv_file`` (file basename) and
-        ``__mack_dv_pos`` (row position) in the output — the write
-        paths (delete/update with DVs, file matching) need to know
-        which LIVE rows sit where; ``input_file_name()`` does not
-        survive the mapInPandas boundary, so the scan's own metadata
-        columns carry that identity through.
-
-        ``extra_long_cols`` names additional nullable ``bigint``
-        PHYSICAL columns to read by name regardless of the mapping
-        mode (row tracking's materialized id columns) — files without
-        them read NULL."""
-        from functools import reduce
-
-        from pyspark.sql.types import LongType, StringType, StructField
-
-        schema = snap.schema
-        pcols = snap.partition_columns
-        phys = (
-            snap.physical_names()
-            if snap.column_mapping_mode != "none"
-            else {f.name: f.name for f in schema.fields}
-        )
-        types = {f.name: f.dataType for f in schema.fields}
-        data_fields = [f for f in schema.fields if f.name not in pcols]
-        extras = list(extra_long_cols or [])
-        extra_fields = [StructField(c, LongType(), True) for c in extras]
-        if snap.column_mapping_mode == "id":
-            # id-mode files may carry ARBITRARY parquet column names
-            # (converted Iceberg) — resolve by field id in the scoped
-            # field-id session; the read schema already surfaces
-            # logical names, so no alias-back is needed
-            ids = {}
-            for f in data_fields:
-                fid = (f.metadata or {}).get("delta.columnMapping.id")
-                if fid is None:
-                    raise DeltaProtocolError(
-                        f"column mapping mode 'id' but field {f.name!r}"
-                        " has no delta.columnMapping.id — cannot"
-                        " resolve DV'd data"
-                    )
-                ids[f.name] = int(fid)
-            data_schema = StructType(
-                [
-                    StructField(f.name, f.dataType, True,
-                                {"parquet.field.id": ids[f.name]})
-                    for f in data_fields
-                ]
-                + extra_fields
-            )
-            scan_session = _field_id_session(self.spark)
-            scan_cols = [F.col(f"`{f.name}`") for f in data_fields]
-        else:
-            data_schema = StructType(
-                [StructField(phys[f.name], f.dataType, True)
-                 for f in data_fields]
-                + extra_fields
-            )
-            scan_session = self.spark
-            scan_cols = [
-                F.col(f"`{phys[f.name]}`").alias(f.name)
-                for f in data_fields
-            ]
-        scan_cols += [F.col(f"`{c}`") for c in extras]
-        out_names = [f.name for f in schema.fields]
-
-        # file basename → DV descriptor (None for files WITHOUT a DV —
-        # the write paths scan mixed sets): basenames are unique in any
-        # Delta table this writer or delta-spark produces (UUID-named
-        # parts); a pathological foreign log with colliding basenames
-        # fails loudly rather than mis-assigning bitmaps
-        dv_by_base: Dict[str, Optional[dict]] = {}
-        for p in paths:
-            base = os.path.basename(p)
-            if base in dv_by_base:
-                raise DeltaProtocolError(
-                    f"duplicate data-file basename {base!r} among DV'd"
-                    " files — cannot key deletion vectors by file"
-                )
-            dv_by_base[base] = snap.files[p].get("deletionVector")
-        table_path = self.path
-
-        def drop_deleted(batches):
-            import numpy as np
-
-            cache: Dict[str, object] = {}
-
-            def positions_for(fname: str):
-                if fname not in cache:
-                    if len(cache) >= 2:  # scans pack few files per task;
-                        cache.clear()    # bound resident bitmap memory
-                    dv = dv_by_base[fname]
-                    cache[fname] = (
-                        np.empty(0, np.int64)
-                        if dv is None
-                        else _dv_positions_np(table_path, dv)
-                    )
-                return cache[fname]
-
-            for pdf in batches:
-                fnames = pdf["__mack_dv_file"]
-                ri = pdf["__mack_dv_pos"].to_numpy()
-                keep = np.ones(len(pdf), dtype=bool)
-                # a batch rarely spans files; group positionally
-                starts = np.flatnonzero(
-                    fnames.ne(fnames.shift()).to_numpy()
-                )
-                bounds = list(starts) + [len(pdf)]
-                for i in range(len(bounds) - 1):
-                    lo, hi = bounds[i], bounds[i + 1]
-                    pos = positions_for(fnames.iat[lo])
-                    if pos.size == 0:
-                        continue
-                    seg = ri[lo:hi]
-                    idx = np.searchsorted(pos, seg)
-                    hit = idx < pos.size
-                    hit[hit] = pos[idx[hit]] == seg[hit]
-                    keep[lo:hi] = ~hit
-                yield pdf.loc[keep, mapped_names]
-
-        def scan(group_paths: List[str], pv: dict) -> DataFrame:
-            df = (
-                scan_session.read.schema(data_schema)
-                .parquet(*[os.path.join(self.path, p) for p in group_paths])
-                .select(
-                    *scan_cols,
-                    F.col("_metadata.row_index").alias("__mack_dv_pos"),
-                    F.element_at(
-                        F.split(F.col("_metadata.file_path"), "/"), -1
-                    ).alias("__mack_dv_file"),
-                )
-            )
-            for c in pcols:
-                raw = _partition_lit(pv.get(phys[c], pv.get(c)))
-                df = df.withColumn(c, F.lit(raw).cast(types[c]))
-            return df
-
-        # one scan per partition-value tuple (DV'd files in the same
-        # partition share a relation; unpartitioned tables get ONE scan
-        # for all DV'd files)
-        groups: Dict[tuple, List[str]] = {}
-        for p in paths:
-            pv = snap.files[p].get("partitionValues") or {}
-            key = tuple(
-                _partition_lit(pv.get(phys[c], pv.get(c))) for c in pcols
-            )
-            groups.setdefault(key, []).append(p)
-        parts = []
-        for key, grp in groups.items():
-            pv = dict(snap.files[grp[0]].get("partitionValues") or {})
-            parts.append(scan(grp, pv))
-        union = reduce(lambda a, b: a.unionByName(b), parts)
-        ordered = union.select(
-            *out_names, *extras, "__mack_dv_pos", "__mack_dv_file"
-        )
-        if keep_meta:
-            mapped_names = out_names + extras + [
-                "__mack_dv_pos", "__mack_dv_file",
-            ]
-            out_schema = StructType(
-                list(schema.fields)
-                + extra_fields
-                + [
-                    StructField("__mack_dv_pos", LongType(), True),
-                    StructField("__mack_dv_file", StringType(), True),
-                ]
-            )
-        else:
-            mapped_names = out_names + extras
-            out_schema = StructType(list(schema.fields) + extra_fields)
-        return ordered.mapInPandas(drop_deleted, schema=out_schema).select(
-            *mapped_names
-        )
-
-    def _read_files_column_mapped(
-        self, snap: DeltaSnapshot, paths: List[str]
-    ) -> DataFrame:
-        """Read a ``delta.columnMapping.mode=name`` table: parquet
-        columns live under each field's physical name
-        (``col-<uuid>``), ``partitionValues`` are keyed by physical
-        name too — read with the physical schema, alias back to the
-        logical names, attach partition values as typed literals from
-        the log (directory layout also uses physical names, so
-        basePath discovery would surface the wrong column names).
-        Explicit physical schemas keep the scan one-footer-free and
-        NULL-fill pre-evolution files, same as the unmapped path."""
-        from functools import reduce
-
-        from pyspark.sql.types import StructField
-
-        schema = snap.schema
-        pcols = snap.partition_columns
-        phys = snap.physical_names()
-        out_names = [f.name for f in schema.fields]
-        types = {f.name: f.dataType for f in schema.fields}
-        data_schema = StructType(
-            [
-                StructField(phys[f.name], f.dataType, True)
-                for f in schema.fields
-                if f.name not in pcols
-            ]
-        )
-        groups: Dict[tuple, List[str]] = {}
-        for p in paths:
-            pv = snap.files[p].get("partitionValues") or {}
-            # partitionValues SHOULD be physical-keyed; tolerate
-            # logical keys from nonconforming writers
-            key = tuple(
-                _partition_lit(
-                    pv.get(phys[c]) if phys[c] in pv else pv.get(c)
-                )
-                for c in pcols
-            )
-            groups.setdefault(key, []).append(os.path.join(self.path, p))
-        parts = []
-        for key, grp in groups.items():
-            df = self.spark.read.schema(data_schema).parquet(*grp)
-            df = df.select(
-                *[
-                    F.col(f"`{phys[f.name]}`").alias(f.name)
-                    for f in schema.fields
-                    if f.name not in pcols
-                ]
-            )
-            for c, raw in zip(pcols, key):
-                df = df.withColumn(c, F.lit(raw).cast(types[c]))
-            parts.append(df.select(*out_names))
-        return reduce(lambda a, b: a.unionByName(b), parts)
-
-    def _read_files_field_id(
-        self, snap: DeltaSnapshot, paths: List[str]
-    ) -> DataFrame:
-        """Read a ``delta.columnMapping.mode=id`` table: parquet columns
-        are resolved by FIELD ID (each table field's
-        ``delta.columnMapping.id`` matches the parquet schema's
-        field_id — the rule for converted-Iceberg tables, whose
-        physical column names are arbitrary). Spark's native fieldId
-        reader does the matching JVM-side: the read schema carries
-        ``parquet.field.id`` metadata per field, so resolution stays
-        inside the scan (no per-file footer walking on the driver, no
-        Python in the row path). A file whose parquet schema carries NO
-        matching field ids fails LOUDLY (``ignoreMissing`` stays false)
-        — silently NULL-filling every column would misread a mislabeled
-        foreign table.
-
-        ``partitionValues`` are physical-keyed per the spec (id-mode
-        tables still assign physicalName); logical keys from
-        nonconforming writers are tolerated.
-
-        The ``spark.sql.parquet.fieldId.read.enabled`` flag is SCOPED:
-        it is set on a cached ``newSession()`` CLONE (same
-        SparkContext, private SQLConf) and the scan is built there —
-        Spark's parquet reader consults the conf of the session that
-        CREATED the relation, so the returned frame resolves by id
-        wherever it is later composed or executed, while the caller's
-        session conf is never mutated (a session-global flag would
-        change resolution for every other parquet read whose files
-        carry field-id metadata)."""
-        from functools import reduce
-
-        from pyspark.sql.types import StructField
-
-        schema = snap.schema
-        pcols = snap.partition_columns
-        phys = snap.physical_names()
-        out_names = [f.name for f in schema.fields]
-        types = {f.name: f.dataType for f in schema.fields}
-        ids: Dict[str, int] = {}
-        for f in schema.fields:
-            fid = (f.metadata or {}).get("delta.columnMapping.id")
-            if fid is None:
-                raise DeltaProtocolError(
-                    f"column mapping mode 'id' but field {f.name!r} has"
-                    " no delta.columnMapping.id — cannot resolve it"
-                )
-            ids[f.name] = int(fid)
-        # field-id resolution happens in a conf-isolated session clone
-        # (see docstring). ignoreMissing stays at its false default —
-        # missing ids error instead of blanking columns.
-        reader_session = _field_id_session(self.spark)
-        data_schema = StructType(
-            [
-                StructField(
-                    f.name, f.dataType, True,
-                    {"parquet.field.id": ids[f.name]},
-                )
-                for f in schema.fields
-                if f.name not in pcols
-            ]
-        )
-        groups: Dict[tuple, List[str]] = {}
-        for p in paths:
-            pv = snap.files[p].get("partitionValues") or {}
-            key = tuple(
-                _partition_lit(
-                    pv.get(phys[c]) if phys[c] in pv else pv.get(c)
-                )
-                for c in pcols
-            )
-            groups.setdefault(key, []).append(os.path.join(self.path, p))
-        parts = []
-        for key, grp in groups.items():
-            df = reader_session.read.schema(data_schema).parquet(*grp)
-            for c, raw in zip(pcols, key):
-                df = df.withColumn(c, F.lit(raw).cast(types[c]))
-            parts.append(df.select(*out_names))
-        return reduce(lambda a, b: a.unionByName(b), parts)
 
     @staticmethod
     def _dir_matches_partition_values(
@@ -2749,7 +2402,7 @@ class DeltaProtocolTable:
                 " or later"
             )
         end_schema = end_snap.schema
-        out_names = [f.name for f in end_schema.fields]
+        out_names = end_schema.fieldNames()
         full_schema = StructType(
             list(end_schema.fields)
             + [
@@ -2758,100 +2411,18 @@ class DeltaProtocolTable:
                 StructField("_commit_timestamp", TimestampType(), True),
             ]
         )
-        # change files are keyed like data files: logical names on an
-        # unmapped table; PHYSICAL names (+ field ids) under column
-        # mapping — reading a mapped table's cdc with an explicit
-        # logical schema would silently NULL-fill every data column.
-        # ``_change_type`` always keeps its literal name (CDF metadata,
-        # not a mapped table column).
-        cmode = end_snap.column_mapping_mode
-        if cmode == "none":
-            cdc_schema = StructType(
-                list(end_schema.fields)
-                + [StructField("_change_type", StringType(), True)]
-            )
-            cdc_session = self.spark
-            cdc_select = out_names + ["_change_type"]
-        elif cmode == "name":
-            phys = end_snap.physical_names()
-            cdc_schema = StructType(
-                [
-                    StructField(phys[f.name], f.dataType, True)
-                    for f in end_schema.fields
-                ]
-                + [StructField("_change_type", StringType(), True)]
-            )
-            cdc_session = self.spark
-            cdc_select = [
-                F.col(f"`{phys[n]}`").alias(n) for n in out_names
-            ] + [F.col("`_change_type`")]
-        else:  # id mode: resolve data columns by parquet field id
-            fids = {
-                f.name: (f.metadata or {}).get("delta.columnMapping.id")
-                for f in end_schema.fields
-            }
-            missing = [n for n, v in fids.items() if v is None]
-            if missing:
-                raise DeltaProtocolError(
-                    "column mapping mode 'id' but fields"
-                    f" {missing} have no delta.columnMapping.id —"
-                    " cannot resolve change data"
-                )
-            cdc_schema = StructType(
-                [
-                    StructField(
-                        f.name, f.dataType, True,
-                        {"parquet.field.id": int(fids[f.name])},
-                    )
-                    for f in end_schema.fields
-                ]
-                + [StructField("_change_type", StringType(), True)]
-            )
-            cdc_session = _field_id_session(self.spark)
-            cdc_select = out_names + ["_change_type"]
         # PLAN SHAPE AT SCALE: a long catch-up range (thousands of
         # commits) must not become a thousands-legged union plan —
-        # driver planning blows up long before execution does. CDC
-        # files and plain derived-insert files instead group into ONE
-        # scan each, with per-file (_commit_version, _commit_timestamp)
-        # attached through a broadcast of the file→commit map (the same
-        # metadata the driver already holds; same pattern as the
-        # row-tracking reader). Only the rare shapes — derived deletes
-        # (need the previous snapshot), DV'd or column-mapped derived
-        # inserts, re-added paths — keep a per-version frame.
-        frames: List[DataFrame] = []
-        cdc_units: List[tuple] = []    # (abs_path, version, ts_ms)
-        plain_adds: List[tuple] = []   # (add_action, version, ts_ms)
-
-        def stamp(df: DataFrame, v: int, ts: int) -> DataFrame:
-            # in-commit timestamps take precedence over the file-
-            # mtime-style commitInfo.timestamp when present (spec
-            # §In-Commit Timestamps: the ICT is THE commit time)
-            return (
-                df.withColumn("_commit_version", F.lit(v).cast("long"))
-                .withColumn(
-                    "_commit_timestamp", F.timestamp_millis(F.lit(ts))
-                )
-                .select(
-                    *out_names,
-                    "_change_type",
-                    "_commit_version",
-                    "_commit_timestamp",
-                )
-            )
-
-        def attach_meta(scan: DataFrame, meta_rows, select_cols):
-            mdf = self.spark.createDataFrame(
-                meta_rows, "__fk string, __v long, __ts long"
-            )
-            return scan.join(F.broadcast(mdf), "__fk").select(
-                *select_cols,
-                F.col("__v").alias("_commit_version"),
-                F.timestamp_millis(F.col("__ts")).alias(
-                    "_commit_timestamp"
-                ),
-            )
-
+        # driver planning blows up long before execution does. Change
+        # files, and files whose rows are derived as inserts/deletes,
+        # each read through ONE scan, with per-file (_commit_version,
+        # _commit_timestamp[, _change_type]) attached through a
+        # broadcast of the file→commit map (the same metadata the
+        # driver already holds). A path derived more than once in range
+        # (re-added, or added then removed) is read once per
+        # occurrence, in successive scans.
+        cdc_units: List[tuple] = []    # (cdc action, version, ts_ms)
+        units: List[tuple] = []        # (add action, version, ts_ms, type)
         for v in self._log_versions():
             if v < starting_version or v > end_snap.version:
                 continue
@@ -2871,15 +2442,15 @@ class DeltaProtocolTable:
                 for a in actions
                 if "remove" in a and a["remove"].get("dataChange", True)
             ]
+            # in-commit timestamps take precedence over the file-
+            # mtime-style commitInfo.timestamp when present (spec
+            # §In-Commit Timestamps: the ICT is THE commit time)
             ts = int(
                 ci.get("inCommitTimestamp")
                 or ci.get("timestamp", _now_ms())
             )
             if cdc:
-                cdc_units.extend(
-                    (os.path.join(self.path, c["path"]), v, ts)
-                    for c in cdc
-                )
+                cdc_units.extend((c, v, ts) for c in cdc)
                 continue
             if removes and adds and op not in _CDF_EXACT_REWRITE_OPS:
                 # deriving add/remove pairs as whole-file
@@ -2898,25 +2469,9 @@ class DeltaProtocolTable:
                     " derived exactly; query changes from a later"
                     " version"
                 )
-            if adds:
-                if cmode == "none" and all(
-                    a.get("deletionVector") is None for a in adds
-                ):
-                    plain_adds.extend((a, v, ts) for a in adds)
-                else:
-                    pseudo = DeltaSnapshot(
-                        v, end_snap.metadata, end_snap.protocol,
-                        {a["path"]: a for a in adds}, [],
-                    )
-                    frames.append(stamp(
-                        self._read_files(
-                            pseudo, [a["path"] for a in adds]
-                        ).withColumn("_change_type", F.lit("insert")),
-                        v, ts,
-                    ))
+            units.extend((a, v, ts, "insert") for a in adds)
             if removes:
                 prev = self.snapshot(version_as_of=v - 1)
-                rfiles: Dict[str, dict] = {}
                 for r in removes:
                     a = prev.files.get(r["path"])
                     if a is None:
@@ -2925,82 +2480,51 @@ class DeltaProtocolTable:
                             f" version {v - 1} does not contain —"
                             " cannot derive its deleted rows"
                         )
-                    rfiles[r["path"]] = a
-                pseudo = DeltaSnapshot(
-                    v, end_snap.metadata, end_snap.protocol, rfiles, []
-                )
-                frames.append(stamp(
-                    self._read_files(pseudo, list(rfiles)).withColumn(
-                        "_change_type", F.lit("delete")
-                    ),
-                    v, ts,
-                ))
-        if cdc_units:
-            # ONE scan over every change file in range
-            scan = (
-                cdc_session.read.schema(cdc_schema)
-                .parquet(*[p for p, _v, _t in cdc_units])
-                .select(
-                    *cdc_select,
-                    F.col("_metadata.file_path").alias("__fk"),
-                )
+                    units.append((a, v, ts, "delete"))
+
+        def changes(scan: DataFrame, rows, ddl: str) -> DataFrame:
+            return self._attach_per_file(scan, rows, ddl).select(
+                *out_names,
+                "_change_type",
+                F.col("__v").alias("_commit_version"),
+                F.timestamp_millis(F.col("__ts")).alias("_commit_timestamp"),
             )
-            frames.append(attach_meta(
-                scan,
-                [("file:" + os.path.abspath(p), v, ts)
-                 for p, v, ts in cdc_units],
-                out_names + ["_change_type"],
+
+        frames: List[DataFrame] = []
+        if cdc_units:
+            # change files hold every table column (written
+            # unpartitioned) plus the literal ``_change_type``
+            cdc_snap = DeltaSnapshot(
+                end_snap.version,
+                dict(end_snap.metadata, partitionColumns=[]),
+                end_snap.protocol, {c["path"]: c for c, _v, _t in cdc_units},
+            )
+            frames.append(changes(
+                self._scan(
+                    cdc_snap, list(cdc_snap.files),
+                    extra=[StructField("_change_type", StringType(), True)],
+                    file_key=True,
+                ),
+                [(c["path"], v, ts) for c, v, ts in cdc_units],
+                "__v long, __ts long",
             ))
-        if plain_adds:
-            pcols = end_snap.partition_columns
-            from collections import Counter as _Counter
-
-            path_count = _Counter(a["path"] for a, _v, _t in plain_adds)
-
-            def groupable(a: dict) -> bool:
-                # a path re-added in several commits in range would
-                # duplicate through a shared scan; foreign partition
-                # layouts need the literal-attach read
-                return path_count[a["path"]] == 1 and (
-                    not pcols
-                    or self._dir_matches_partition_values(
-                        a["path"], a, pcols
-                    )
-                )
-
-            grouped = [u for u in plain_adds if groupable(u[0])]
-            for a, v, ts in (u for u in plain_adds if not groupable(u[0])):
-                pseudo = DeltaSnapshot(
-                    v, end_snap.metadata, end_snap.protocol,
-                    {a["path"]: a}, [],
-                )
-                frames.append(stamp(
-                    self._read_files(pseudo, [a["path"]]).withColumn(
-                        "_change_type", F.lit("insert")
-                    ),
-                    v, ts,
-                ))
-            if grouped:
-                reader = self.spark.read.schema(end_schema)
-                if pcols:
-                    reader = reader.option("basePath", self.path)
-                scan = reader.parquet(
-                    *[os.path.join(self.path, a["path"])
-                      for a, _v, _t in grouped]
-                ).select(
-                    *out_names,
-                    F.col("_metadata.file_path").alias("__fk"),
-                ).withColumn("_change_type", F.lit("insert"))
-                frames.append(attach_meta(
-                    scan,
-                    [(
-                        "file:" + os.path.abspath(
-                            os.path.join(self.path, a["path"])
-                        ),
-                        v, ts,
-                    ) for a, v, ts in grouped],
-                    out_names + ["_change_type"],
-                ))
+        rounds: List[Dict[str, tuple]] = []
+        for u in units:
+            rnd = next((r for r in rounds if u[0]["path"] not in r), None)
+            if rnd is None:
+                rnd = {}
+                rounds.append(rnd)
+            rnd[u[0]["path"]] = u
+        for rnd in rounds:
+            snap = DeltaSnapshot(
+                end_snap.version, end_snap.metadata, end_snap.protocol,
+                {p: u[0] for p, u in rnd.items()},
+            )
+            frames.append(changes(
+                self._read_files(snap, list(rnd), file_key=True),
+                [(p, v, ts, ct) for p, (_a, v, ts, ct) in rnd.items()],
+                "__v long, __ts long, _change_type string",
+            ))
         if not frames:
             return self.spark.createDataFrame([], full_schema)
         return reduce(lambda a, b: a.unionByName(b), frames)
@@ -6082,7 +5606,7 @@ class DeltaProtocolTable:
             meta["configuration"] = config
         return {"metaData": meta}, DeltaSnapshot(
             snap.version, meta, snap.protocol, snap.files,
-            snap.history, txns=snap.txns, domains=snap.domains,
+            txns=snap.txns, domains=snap.domains,
         )
 
     def _merge_impl(
@@ -6631,61 +6155,27 @@ class DeltaProtocolTable:
         ``condition`` is TRUE — Delta DELETE/UPDATE's phase 1, as ONE
         Spark scan: the predicate pushes down to the parquet reader
         (row-group stats skip non-matching files at scan level) and
-        ``input_file_name`` surfaces which files actually matched.
-        ``paths`` restricts the scan to a subset of the snapshot's
-        files (the concurrency checker probes only interleaved
-        adds)."""
-        from urllib.parse import unquote, urlparse
-
+        each matching row's file key names its file. ``paths``
+        restricts the scan to a subset of the snapshot's files (the
+        concurrency checker probes only interleaved adds)."""
         paths = list(snap.files) if paths is None else list(paths)
         if not paths:
             return []
-        dv_paths = [p for p in paths if snap.files[p].get("deletionVector")]
-        plain = [p for p in paths if p not in set(dv_paths)]
-        # resolve matched scan paths back to SNAPSHOT KEYS by absolute
-        # path — keys may themselves be absolute (shallow clones
-        # reference the source's files), where relpath would never match
-        abs_to_key = {
-            os.path.normpath(os.path.abspath(os.path.join(self.path, p))): p
-            for p in paths
+        by_key = {self._file_key(p): p for p in paths}
+        hits = {
+            by_key[k]
+            for (k,) in self._read_files(snap, paths, file_key=True)
+            .where(F.coalesce(F.expr(condition), F.lit(False)))
+            .select(_FILE_KEY)
+            .distinct()
+            .collect()
         }
-        rel = set()
-        if plain:
-            hits = (
-                self._read_files(snap, plain)
-                .where(F.coalesce(F.expr(condition), F.lit(False)))
-                .select(F.input_file_name().alias("f"))
-                .distinct()
-                .collect()
-            )
-            for (f,) in hits:
-                local = (
-                    unquote(urlparse(f).path)
-                    if "://" in f or f.startswith("file:")
-                    else f
-                )
-                key = abs_to_key.get(os.path.normpath(local))
-                if key is not None:
-                    rel.add(key)
-        if dv_paths:
-            # input_file_name() does not survive the DV scan's
-            # mapInPandas — the scan's own __mack_dv_file column
-            # carries file identity for LIVE rows instead
-            base_to_rel = {os.path.basename(p): p for p in dv_paths}
-            hits = (
-                self._read_dv_files(snap, dv_paths, keep_meta=True)
-                .where(F.coalesce(F.expr(condition), F.lit(False)))
-                .select("__mack_dv_file")
-                .distinct()
-                .collect()
-            )
-            rel.update(base_to_rel[b] for (b,) in hits)
-        return [p for p in paths if p in rel]
+        return [p for p in paths if p in hits]
 
     def _build_dvs_for(self, snap: DeltaSnapshot, matched: DataFrame,
                        touched: List[str]) -> Dict[str, dict]:
         """Write one deletion-vector file PER touched data file from
-        the matched rows' ``(__mack_dv_file, __mack_dv_pos)`` pairs —
+        the matched rows' file keys and row positions —
         EXECUTOR-side: each applyInPandas group task unions the file's
         new positions with its existing DV (if any), serializes the
         roaring bitmap, writes ``deletion_vector_<uuid>.bin``, and
@@ -6696,7 +6186,7 @@ class DeltaProtocolTable:
         (reference's substrate, delta-spark 3.2, reference
         pyproject.toml:13-14)."""
         old_dvs = {
-            os.path.basename(p): snap.files[p].get("deletionVector")
+            self._file_key(p): snap.files[p].get("deletionVector")
             for p in touched
         }
         table_path = self.path
@@ -6706,9 +6196,7 @@ class DeltaProtocolTable:
             import pandas as pd
 
             fname = key[0]
-            pos = np.unique(
-                pdf["__mack_dv_pos"].to_numpy().astype(np.int64)
-            )
+            pos = np.unique(pdf[_ROW_INDEX].to_numpy().astype(np.int64))
             old = old_dvs.get(fname)
             if old is not None:
                 pos = np.union1d(pos, _dv_positions_np(table_path, old))
@@ -6718,8 +6206,8 @@ class DeltaProtocolTable:
             )
 
         rows = (
-            matched.select("__mack_dv_file", "__mack_dv_pos")
-            .groupBy("__mack_dv_file")
+            matched.select(_FILE_KEY, _ROW_INDEX)
+            .groupBy(_FILE_KEY)
             .applyInPandas(build_dv, "file string, dv_json string")
             .collect()  # bounded: ONE descriptor row per touched file
         )
@@ -6741,7 +6229,7 @@ class DeltaProtocolTable:
         removes, adds, fully_removed = [], [], 0
         now = _now_ms()
         for p in touched:
-            desc = new_dvs.get(os.path.basename(p))
+            desc = new_dvs.get(self._file_key(p))
             if desc is None:
                 continue  # defensive: no live row of p matched
             add = snap.files[p]
@@ -6940,9 +6428,9 @@ class DeltaProtocolTable:
         positions. The inode-level no-rewrite guarantee is pinned in
         tests/test_dv_writes.py."""
         cond = F.coalesce(F.expr(condition), F.lit(False))
-        matched = self._read_dv_files(snap, touched, keep_meta=True).where(
-            cond
-        )
+        matched = self._read_files(
+            snap, touched, row_index=True, file_key=True
+        ).where(cond)
         cdf = self._cdf_enabled(snap)
         if cdf:
             # one computation feeds the DV build AND the change feed
@@ -7086,9 +6574,9 @@ class DeltaProtocolTable:
         types = {f.name: f.dataType for f in schema.fields}
         out_names = [f.name for f in schema.fields]
         cond = F.coalesce(F.expr(condition), F.lit(False))
-        matched = self._read_dv_files(snap, touched, keep_meta=True).where(
-            cond
-        ).persist()  # feeds DV build + post-rows + change feed
+        matched = self._read_files(
+            snap, touched, row_index=True, file_key=True
+        ).where(cond).persist()  # feeds DV build + post-rows + change feed
         try:
             new_dvs = self._build_dvs_for(snap, matched, touched)
             pre = matched.select(*out_names)

@@ -1043,7 +1043,7 @@ class DeltaProtocolStreamWriter(DataSourceStreamArrowWriter):
 
                     pseudo = DeltaSnapshot(
                         snap.version, snap.metadata, snap.protocol,
-                        {a["path"]: a for a in adds}, [],
+                        {a["path"]: a for a in adds},
                     )
                     staged = t._read_files(
                         pseudo, [a["path"] for a in adds]

@@ -69,6 +69,37 @@ def test_no_raw_writes_outside_backend_and_sinks():
     )
 
 
+# Functions of sources/delta_log.py that open a Spark DataFrameReader.
+# Table data files are scanned only by the scan builder (_scan); the
+# other two read parquet that is not (yet) table data: COPY INTO's
+# source files and the files CONVERT TO DELTA adopts.
+_READERS_ALLOWED = {"_scan", "copy_into", "convert_from_parquet"}
+
+
+def test_table_data_scans_only_in_the_scan_builder():
+    """Every read path of the protocol table (plain, deletion vectors,
+    row ids, change feed, DELETE/UPDATE file matching) composes
+    ``_scan``: one place maps the column-mapping mode, groups files by
+    partition and names each scanned file."""
+    src = open(os.path.join(PKG_DIR, "sources", "delta_log.py")).read()
+    tree = ast.parse(src)
+    funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+    called = {
+        id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)
+    }
+    readers = {
+        max(
+            (f for f in funcs if f.lineno <= node.lineno <= f.end_lineno),
+            key=lambda f: f.lineno,
+        ).name
+        for node in ast.walk(tree)
+        # ``x.read`` as a value (a DataFrameReader), not ``fh.read()``
+        if isinstance(node, ast.Attribute) and node.attr == "read"
+        and id(node) not in called
+    }
+    assert readers == _READERS_ALLOWED
+
+
 # mack's mutating modules, and the DeltaProtocolTable methods they may
 # call: the three mutations plus reads and CREATE.
 _MUTATING_MODULES = [

@@ -18,9 +18,9 @@ import pytest
 from mack_spark.sources.delta_log import (
     DeltaProtocolError,
     DeltaProtocolTable,
-    _decode_dv_bitmap,
     _z85_decode,
 )
+from roaring_reference import decode_dv_bitmap, decode_roaring32
 
 _Z85 = (
     "0123456789abcdefghijklmnopqrstuvwxyz"
@@ -154,21 +154,21 @@ def _mk(spark, tmp_path, n=20):
 class TestBitmapDecode:
     def test_array_container_roundtrip(self):
         pos = [0, 1, 5, 100, 65535, 65536, 70000]
-        assert _decode_dv_bitmap(encode_dv_bitmap(pos)) == sorted(pos)
+        assert decode_dv_bitmap(encode_dv_bitmap(pos)) == sorted(pos)
 
     def test_bitset_container_roundtrip(self):
         pos = list(range(0, 10000, 2))  # 5000 values -> bitset
-        assert _decode_dv_bitmap(encode_dv_bitmap(pos)) == pos
+        assert decode_dv_bitmap(encode_dv_bitmap(pos)) == pos
 
     def test_run_container_roundtrip(self):
         pos = list(range(10, 50)) + list(range(100, 200))
-        assert _decode_dv_bitmap(
+        assert decode_dv_bitmap(
             encode_dv_bitmap(pos, force_run=True)
         ) == pos
 
     def test_high_32bit_buckets(self):
         pos = [3, (1 << 32) + 7, (1 << 32) + 8, (5 << 32) + 123456]
-        assert _decode_dv_bitmap(encode_dv_bitmap(pos)) == sorted(pos)
+        assert decode_dv_bitmap(encode_dv_bitmap(pos)) == sorted(pos)
 
     def test_z85_roundtrip(self):
         raw = uuid.uuid4().bytes
@@ -314,7 +314,10 @@ class TestExecutorSideDecode:
     def test_numpy_decoder_matches_python_reference(self):
         import random
 
-        from mack_spark.sources.delta_log import _dv_positions_np
+        from mack_spark.sources.delta_log import (
+            _decode_roaring32_np,
+            _dv_positions_np,
+        )
 
         rng = random.Random(11)
         cases = [
@@ -334,7 +337,11 @@ class TestExecutorSideDecode:
                 if dv["pathOrInlineDv"] is None:
                     continue
                 # python reference decoder on the same bytes
-                assert _decode_dv_bitmap(data) == pos
+                assert decode_dv_bitmap(data) == pos
+                # first 32-bit map (after magic, map count, map key)
+                ref, ref_end = decode_roaring32(data, 16)
+                got32, got_end = _decode_roaring32_np(data, 16)
+                assert got32.tolist() == ref and got_end == ref_end
                 got = _dv_positions_np("/nonexistent", dv)
                 assert got.tolist() == pos
 

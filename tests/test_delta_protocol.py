@@ -265,7 +265,6 @@ class TestMergeMetrics:
                 "a": {"size": 1000, "stats": json.dumps({"numRecords": 10})},
                 "b": {"size": 5000},
             },
-            [],
         )
         hint = DeltaProtocolTable._rewrite_size_hint
         assert hint(None, snap, ["a", "b"], extra_rows=10) == 7000

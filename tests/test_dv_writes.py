@@ -23,12 +23,12 @@ from pyspark.sql import functions as F
 from mack_spark.sources.delta_log import (
     DeltaProtocolError,
     DeltaProtocolTable,
-    _decode_dv_bitmap,
     _dv_file_path,
     _encode_dv_bitmap_np,
     _z85_decode,
     _z85_encode,
 )
+from roaring_reference import decode_dv_bitmap
 
 DV_ON = {"delta.enableDeletionVectors": "true"}
 
@@ -63,7 +63,7 @@ class TestEncoder:
         ]
         for pos in cases:
             arr = np.array(sorted(pos), dtype=np.int64)
-            assert _decode_dv_bitmap(_encode_dv_bitmap_np(arr)) == sorted(pos)
+            assert decode_dv_bitmap(_encode_dv_bitmap_np(arr)) == sorted(pos)
 
     def test_z85_encode_matches_decode(self):
         import uuid

@@ -298,6 +298,20 @@ def test_protocol_read_pushdown_and_pruning(spark, tmp_path):
     ) == {"c_custkey", "c_name"}  # column-pruned scan
 
 
+def test_plain_protocol_read_is_one_bare_scan(spark, tmp_path):
+    """An unpartitioned, unmapped ``to_df()`` (every perfbench read) is
+    exactly one parquet scan: the row-id, deletion-vector and change
+    feed machinery adds nothing to it."""
+    from mack_spark.sources.delta_log import DeltaProtocolTable
+
+    df = spark.read.parquet(f"{SF_DIR}/nation.parquet").repartition(2)
+    t = DeltaProtocolTable.create(spark, str(tmp_path / "plain"), df)
+    plan = t.to_df()._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1
+    for node in ("Join", "Union", "_metadata", "Python", "Pandas"):
+        assert node not in plan, node
+
+
 def test_row_tracking_read_plan(spark, tmp_path):
     """with_row_ids must stay scan-shaped: per-file bases join in via
     BROADCAST (one row per file), zero data shuffles, and user filters

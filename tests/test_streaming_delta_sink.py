@@ -69,7 +69,7 @@ class TestSinkEndToEnd:
         snap = dst.snapshot()
         # one SetTransaction per query, watermarked at the last batch
         assert len(snap.txns) == 1
-        assert snap.history[-1]["operation"] == "STREAMING UPDATE"
+        assert dst.history()[0]["operation"] == "STREAMING UPDATE"
 
     def test_restart_resumes_without_duplicates(self, spark, tmp_path):
         src = _mk(spark, tmp_path, "src", spark.createDataFrame(
