@@ -6974,12 +6974,7 @@ class DeltaProtocolTable:
             for f in snap.schema.fields
             if f.name in pcols
         }
-        by_tuple: Dict[tuple, List[str]] = {}
-        for p, a in snap.files.items():
-            pv = a.get("partitionValues") or {}
-            by_tuple.setdefault(
-                tuple(pv.get(c) for c in pcols), []
-            ).append(p)
+        by_tuple = self._partition_groups(snap, list(snap.files))
         from pyspark.sql.types import (
             IntegerType,
             StringType,
@@ -7153,16 +7148,11 @@ class DeltaProtocolTable:
             min_file_bytes = target_file_bytes // 2
         # group candidates by partition tuple: compaction is partition-
         # local (rows must stay in their partition's directory/values)
-        groups: Dict[tuple, List[str]] = {}
-        pcols = snap.partition_columns
-        for p, a in snap.files.items():
-            if scope is not None and p not in scope:
-                continue
-            if a.get("size", target_file_bytes) < min_file_bytes:
-                pv = a.get("partitionValues") or {}
-                groups.setdefault(
-                    tuple(pv.get(c) for c in pcols), []
-                ).append(p)
+        groups = self._partition_groups(snap, [
+            p for p, a in snap.files.items()
+            if (scope is None or p in scope)
+            and a.get("size", target_file_bytes) < min_file_bytes
+        ])
         doomed = [p for grp in groups.values() if len(grp) > 1 for p in grp]
         if not doomed:
             return {
@@ -7174,6 +7164,7 @@ class DeltaProtocolTable:
         small_bytes = sum(snap.files[p].get("size", 0) for p in doomed)
         n = max(1, math.ceil(small_bytes / target_file_bytes))
         df, _rt = self._rewrite_with_preserved_row_ids(snap, doomed)
+        pcols = snap.partition_columns
         if sort_by:
             df = df.repartitionByRange(n, *sort_by).sortWithinPartitions(
                 *sort_by

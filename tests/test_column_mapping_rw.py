@@ -242,6 +242,32 @@ class TestColumnMappingNameWrites:
         assert rows[100] == "merged" and rows[101] == "hj"
         assert rows[200] == "far"
 
+    def test_optimize_groups_by_physical_partition_values(
+        self, spark, tmp_path
+    ):
+        """OPTIMIZE reads a mapped table's physical-keyed
+        partitionValues: ``WHERE`` scopes by the logical partition
+        column, and compaction stays partition-local."""
+        t, phys = _mk_name_mode_rw(spark, tmp_path, partitioned=True)
+        for p in ("p1", "p2"):
+            t.append(spark.createDataFrame(
+                [(10, "a", p)], "k int, v string, p string"
+            ).coalesce(1))
+        before = t.snapshot().files
+        in_p1 = {
+            p for p, a in before.items()
+            if a["partitionValues"] == {phys["p"]: "p1"}
+        }
+        assert len(in_p1) >= 2
+        res = t.optimize(where="p = 'p1'")
+        assert res["rewritten"] == len(in_p1)
+        after = t.snapshot().files
+        assert set(before) - in_p1 <= set(after)
+        assert sorted(map(tuple, t.to_df().collect())) == [
+            (1, "x", "p1"), (2, "y", "p1"), (3, "z", "p2"),
+            (10, "a", "p1"), (10, "a", "p2"),
+        ]
+
     def test_dv_writes_on_mapped_table(self, spark, tmp_path):
         """Deletion vectors compose with name-mode writes: enabling DVs
         on a mapped table makes deletes bitmap-only."""
