@@ -1144,7 +1144,7 @@ class _ReplayState:
 
     def take_snapshot(self, version: int) -> "DeltaSnapshot":
         """A snapshot of the CURRENT accumulator state, cached per
-        version. Shallow dict/list copies: action dicts are never
+        version. Shallow dict copies: action dicts are never
         mutated after apply (adds are replaced wholesale), so sharing
         the entries across snapshots is safe; the copy is pointer-only
         (O(n) once per new version, O(1) on every warm hit)."""
