@@ -126,6 +126,21 @@ def _now_ms() -> int:
     return int(time.time() * 1000)
 
 
+def _remove_action(add: dict, data_change: bool = True) -> dict:
+    """The ``remove`` action for the live ``add`` — the one place a
+    commit builds one. It carries the add's deletion vector: the spec
+    keys file actions by (path, DV unique id), so a remove without the
+    DV leaves a DV'd add live for a spec reader."""
+    rm = {
+        "path": add["path"],
+        "deletionTimestamp": _now_ms(),
+        "dataChange": data_change,
+    }
+    if add.get("deletionVector"):
+        rm["deletionVector"] = add["deletionVector"]
+    return {"remove": rm}
+
+
 # one conf-isolated reader clone per real SparkSession (weak keys: a
 # stopped/replaced session must not pin its clone alive)
 _FIELD_ID_SESSIONS: "weakref.WeakKeyDictionary" = None  # type: ignore
@@ -2127,7 +2142,8 @@ class DeltaProtocolTable:
         return scan.join(F.broadcast(consts), _FILE_KEY)
 
     def _read_files_with_row_ids(
-        self, snap: DeltaSnapshot, paths: List[str]
+        self, snap: DeltaSnapshot, paths: List[str],
+        row_index: bool = False, file_key: bool = False,
     ) -> DataFrame:
         """Row-tracking read (spec §Row Tracking: Row IDs): every row
         gets ``_row_id = coalesce(materialized row id column,
@@ -2141,7 +2157,9 @@ class DeltaProtocolTable:
         throughout: the scan carries each row's position, and the
         per-FILE bases join in via :meth:`_attach_per_file`. The
         materialized columns are hidden physical columns, read by their
-        configured name in every column mapping mode."""
+        configured name in every column mapping mode. ``row_index`` /
+        ``file_key`` keep the scan's position columns, as in
+        :meth:`_scan`."""
         from pyspark.sql.types import LongType, StructField
 
         cfg = snap.metadata.get("configuration") or {}
@@ -2185,10 +2203,13 @@ class DeltaProtocolTable:
             *schema.fieldNames(),
             rid.alias("_row_id"),
             rcv.alias("_row_commit_version"),
+            *([_ROW_INDEX] if row_index else []),
+            *([_FILE_KEY] if file_key else []),
         )
 
     def _rewrite_with_preserved_row_ids(
-        self, snap: DeltaSnapshot, paths: List[str]
+        self, snap: DeltaSnapshot, paths: List[str],
+        row_index: bool = False, file_key: bool = False,
     ):
         """Read ``paths`` for a REWRITE (OPTIMIZE/REORG/UPDATE/DELETE),
         carrying each row's stable id into the table's MATERIALIZED
@@ -2198,7 +2219,8 @@ class DeltaProtocolTable:
         ``(df, preserved)``; falls back to a plain read (fresh ids)
         when row tracking is off, the materialized column names are
         not configured (pre-r13 tables), or a file predates the
-        baseRowId backfill."""
+        baseRowId backfill. ``row_index`` / ``file_key`` as in
+        :meth:`_scan`."""
         cfg = snap.metadata.get("configuration") or {}
         mid, mcv = self._row_tracking_phys_cols(snap)
         if (
@@ -2206,9 +2228,11 @@ class DeltaProtocolTable:
             or not mid or not mcv
             or any(snap.files[p].get("baseRowId") is None for p in paths)
         ):
-            return self._read_files(snap, paths), False
+            return self._read_files(
+                snap, paths, row_index=row_index, file_key=file_key
+            ), False
         return (
-            self._read_files_with_row_ids(snap, paths)
+            self._read_files_with_row_ids(snap, paths, row_index, file_key)
             .withColumnRenamed("_row_id", mid)
             .withColumnRenamed("_row_commit_version", mcv),
             True,
@@ -5272,11 +5296,7 @@ class DeltaProtocolTable:
         if new_meta is not None:
             actions.append({"metaData": new_meta})
         actions += (
-            [
-                {"remove": {"path": p, "deletionTimestamp": _now_ms(),
-                            "dataChange": True}}
-                for p in snap.files
-            ]
+            [_remove_action(a) for a in snap.files.values()]
             + [{"add": a} for a in adds]
         )
         self._commit(snap.version + 1, actions, snap=snap)
@@ -5370,11 +5390,7 @@ class DeltaProtocolTable:
             actions.append({"metaData": meta})
         actions += (
             [{"cdc": c} for c in cdc]
-            + [
-                {"remove": {"path": p, "deletionTimestamp": _now_ms(),
-                            "dataChange": True}}
-                for p in touched
-            ]
+            + [_remove_action(snap.files[p]) for p in touched]
             + [{"add": a} for a in kept_adds]
             + [{"add": a} for a in new_adds]
         )
@@ -6101,11 +6117,7 @@ class DeltaProtocolTable:
             ]
             + meta_actions
             + [{"cdc": c} for c in cdc]
-            + [
-                {"remove": {"path": p, "deletionTimestamp": _now_ms(),
-                            "dataChange": True}}
-                for p in touched
-            ]
+            + [_remove_action(snap.files[p]) for p in touched]
             + [{"add": a} for a in adds]
         )
 
@@ -6217,9 +6229,10 @@ class DeltaProtocolTable:
         self, snap: DeltaSnapshot, touched: List[str],
         new_dvs: Dict[str, dict],
     ):
-        """remove+add action pairs re-adding each touched file under
-        its new DV descriptor; files whose DV covers every physical
-        row are removed outright (full-file delete).
+        """``(removes, adds, fully_removed)``: remove+add action pairs
+        re-adding each touched file under its new DV descriptor; files
+        whose DV covers every physical row are removed outright
+        (full-file delete).
 
         Per the spec, an add with a deletion vector must mark its
         stats ``"tightBounds": false`` — min/max/nullCount still
@@ -6233,10 +6246,7 @@ class DeltaProtocolTable:
             if desc is None:
                 continue  # defensive: no live row of p matched
             add = snap.files[p]
-            rm = {"path": p, "deletionTimestamp": now, "dataChange": True}
-            if add.get("deletionVector"):
-                rm["deletionVector"] = add["deletionVector"]
-            removes.append(rm)
+            removes.append(_remove_action(add))
             stats = snap.file_stats(p)
             num = (stats or {}).get("numRecords")
             if num is not None and int(desc["cardinality"]) >= int(num):
@@ -6251,7 +6261,7 @@ class DeltaProtocolTable:
                     dict(stats, tightBounds=False),
                     separators=(",", ":"),
                 )
-            adds.append(new_add)
+            adds.append({"add": new_add})
         return removes, adds, fully_removed
 
     def _commit_mutation(
@@ -6420,62 +6430,6 @@ class DeltaProtocolTable:
             " races"
         )
 
-    def _delete_with_dvs(
-        self, snap: DeltaSnapshot, condition: str, touched: List[str]
-    ) -> dict:
-        """DELETE via deletion vectors: no data file is rewritten —
-        touched files are re-added with a bitmap marking the deleted
-        positions. The inode-level no-rewrite guarantee is pinned in
-        tests/test_dv_writes.py."""
-        cond = F.coalesce(F.expr(condition), F.lit(False))
-        matched = self._read_files(
-            snap, touched, row_index=True, file_key=True
-        ).where(cond)
-        cdf = self._cdf_enabled(snap)
-        if cdf:
-            # one computation feeds the DV build AND the change feed
-            matched = matched.persist()
-        new_dvs = self._build_dvs_for(snap, matched, touched)
-        cdc: List[dict] = []
-        if cdf:
-            out_names = [f.name for f in snap.schema.fields]
-            cdc = self._write_cdc_files(
-                matched.select(*out_names).withColumn(
-                    "_change_type", F.lit("delete")
-                ),
-                snap=snap,
-                size_hint=self._rewrite_size_hint(snap, touched),
-            )
-            matched.unpersist(blocking=False)
-        removes, adds, fully_removed = self._dv_remove_add_actions(
-            snap, touched, new_dvs
-        )
-        actions = (
-            [
-                {"commitInfo": {
-                    "timestamp": _now_ms(), "operation": "DELETE",
-                    "operationParameters": {"predicate": condition},
-                    "operationMetrics": {
-                        "numRemovedFiles": fully_removed,
-                        "numDeletionVectorsAdded": len(adds),
-                        "numAddedFiles": 0,
-                    },
-                }}
-            ]
-            + self._dv_protocol_actions(snap)
-            + [{"cdc": c} for c in cdc]
-            + [{"remove": r} for r in removes]
-            + [{"add": a} for a in adds]
-        )
-        v = self._commit_mutation(snap, actions, condition)
-        return {
-            "touched_files": len(touched),
-            "total_files": len(snap.files),
-            "version": v,
-            "deletion_vectors": len(adds),
-            "rewritten_files": 0,
-        }
-
     def delete_where(self, condition: str) -> dict:
         """``DELETE FROM table WHERE condition`` as one Delta commit
         (Delta's ``DeltaTable.delete``; the reference composes it inside
@@ -6496,159 +6450,7 @@ class DeltaProtocolTable:
         snap = self.snapshot()
         self._assert_writable(snap)
         self._assert_not_append_only(snap, "DELETE")
-        touched = self._files_matching(snap, condition)
-        if not touched:
-            return {
-                "touched_files": 0,
-                "total_files": len(snap.files),
-                "version": snap.version,
-            }
-        if self._dv_write_enabled(snap):
-            return self._delete_with_dvs(snap, condition, touched)
-        cdf = self._cdf_enabled(snap)
-        # row-tracked tables read with preserved ids so the survivors'
-        # _row_id stays stable through the rewrite
-        touched_df, _rt = self._rewrite_with_preserved_row_ids(
-            snap, touched
-        )
-        if cdf:
-            # the touched read feeds BOTH the kept-rows rewrite and the
-            # deleted-rows change feed — compute it once
-            touched_df = touched_df.persist()
-        cond = F.coalesce(F.expr(condition), F.lit(False))
-        kept = touched_df.filter(~cond)
-        del_hint = self._rewrite_size_hint(snap, touched)
-        adds = self._write_data_files(
-            kept, snap.partition_columns, snap=snap, size_hint=del_hint
-        )
-        cdc: List[dict] = []
-        if cdf:
-            cdc = self._write_cdc_files(
-                touched_df.filter(cond).select(
-                    *[f.name for f in snap.schema.fields]
-                ).withColumn(
-                    "_change_type", F.lit("delete")
-                ),
-                size_hint=del_hint,
-                snap=snap,
-            )
-            touched_df.unpersist(blocking=False)
-        actions = (
-            [
-                {"commitInfo": {
-                    "timestamp": _now_ms(), "operation": "DELETE",
-                    "operationParameters": {"predicate": condition},
-                    "operationMetrics": {
-                        "numRemovedFiles": len(touched),
-                        "numAddedFiles": len(adds),
-                    },
-                }}
-            ]
-            + [{"cdc": c} for c in cdc]
-            + [
-                {"remove": {"path": p, "deletionTimestamp": _now_ms(),
-                            "dataChange": True}}
-                for p in touched
-            ]
-            + [{"add": a} for a in adds]
-        )
-        v = self._commit_mutation(snap, actions, condition)
-        return {
-            "touched_files": len(touched),
-            "total_files": len(snap.files),
-            "version": v,
-        }
-
-    def _update_with_dvs(
-        self,
-        snap: DeltaSnapshot,
-        condition: str,
-        assignments: Dict[str, str],
-        touched: List[str],
-        gen: Dict[str, str],
-    ) -> dict:
-        """UPDATE via deletion vectors: pre-update rows are DV'd out of
-        their files (no rewrite), post-update rows land as NEW files —
-        the write cost is O(matched rows), not O(touched files)."""
-        schema = snap.schema
-        types = {f.name: f.dataType for f in schema.fields}
-        out_names = [f.name for f in schema.fields]
-        cond = F.coalesce(F.expr(condition), F.lit(False))
-        matched = self._read_files(
-            snap, touched, row_index=True, file_key=True
-        ).where(cond).persist()  # feeds DV build + post-rows + change feed
-        try:
-            new_dvs = self._build_dvs_for(snap, matched, touched)
-            pre = matched.select(*out_names)
-            post = pre.select(
-                *[
-                    F.expr(assignments[c]).cast(types[c]).alias(c)
-                    if c in assignments
-                    else F.col(c)
-                    for c in out_names
-                ]
-            )
-            if gen:
-                post = post.select(
-                    *[
-                        F.expr(gen[c]).cast(types[c]).alias(c)
-                        if c in gen
-                        else F.col(c)
-                        for c in out_names
-                    ]
-                )
-            self._enforce_constraints(snap, post)
-            dvu_hint = self._rewrite_size_hint(snap, touched)
-            adds_new = self._write_data_files(
-                post, snap.partition_columns, snap=snap,
-                size_hint=dvu_hint,
-            )
-            cdc: List[dict] = []
-            if self._cdf_enabled(snap):
-                cdc = self._write_cdc_files(
-                    pre.withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    ).unionByName(
-                        post.withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        )
-                    ),
-                    snap=snap,
-                    size_hint=(
-                        2 * dvu_hint if dvu_hint is not None else None
-                    ),
-                )
-        finally:
-            matched.unpersist(blocking=False)
-        removes, adds_dv, fully_removed = self._dv_remove_add_actions(
-            snap, touched, new_dvs
-        )
-        actions = (
-            [
-                {"commitInfo": {
-                    "timestamp": _now_ms(), "operation": "UPDATE",
-                    "operationParameters": {"predicate": condition},
-                    "operationMetrics": {
-                        "numRemovedFiles": fully_removed,
-                        "numDeletionVectorsAdded": len(adds_dv),
-                        "numAddedFiles": len(adds_new),
-                    },
-                }}
-            ]
-            + self._dv_protocol_actions(snap)
-            + [{"cdc": c} for c in cdc]
-            + [{"remove": r} for r in removes]
-            + [{"add": a} for a in adds_dv]
-            + [{"add": a} for a in adds_new]
-        )
-        v = self._commit_mutation(snap, actions, condition)
-        return {
-            "touched_files": len(touched),
-            "total_files": len(snap.files),
-            "version": v,
-            "deletion_vectors": len(adds_dv),
-            "rewritten_files": len(adds_new),
-        }
+        return self._delete_or_update(snap, condition)
 
     def update_where(self, condition: str, assignments: Dict[str, str]) -> dict:
         """``UPDATE table SET col = expr, ... WHERE condition`` as one
@@ -6660,7 +6462,9 @@ class DeltaProtocolTable:
         With ``delta.enableDeletionVectors=true`` the update marks the
         PRE-update rows deleted via deletion vectors and writes only
         the POST-update rows as new files — O(matched rows) written,
-        not O(touched files), delta-spark 3.x's UPDATE path."""
+        not O(touched files), delta-spark 3.x's UPDATE path. On a
+        row-tracked table updated rows keep their ``_row_id`` and take
+        the new commit version in both modes."""
         snap = self.snapshot()
         self._assert_writable(snap)
         self._assert_not_append_only(snap, "UPDATE")
@@ -6683,6 +6487,73 @@ class DeltaProtocolTable:
                 f"cannot assign identity columns {id_assigned}; their"
                 " values are writer-assigned and immutable"
             )
+        return self._delete_or_update(snap, condition, assignments)
+
+    def _post_image(
+        self, snap: DeltaSnapshot, df: DataFrame,
+        assignments: Dict[str, str], where=None,
+    ) -> DataFrame:
+        """UPDATE's post-image of ``df``: the assignments (against the
+        pre-update row, cast to the column's type; only on rows where
+        ``where`` holds, when given), then the generated columns
+        recomputed from the assigned values, then — when ``df`` carries
+        the materialized row-tracking columns — ``_row_id`` kept and the
+        commit version set NULL on updated rows, so they read back the
+        new file's ``defaultRowCommitVersion`` (spec §Row Tracking).
+        Scan-side columns (row index, file key) are dropped."""
+        types = {f.name: f.dataType for f in snap.schema.fields}
+
+        def updated(new, old):
+            return new if where is None else F.when(where, new).otherwise(old)
+
+        cols = [
+            updated(F.expr(assignments[c]).cast(types[c]), F.col(c)).alias(c)
+            if c in assignments
+            else F.col(c)
+            for c in types
+        ]
+        mid, mcv = self._row_tracking_phys_cols(snap)
+        if mid and mid in df.columns:
+            cols += [
+                F.col(f"`{mid}`"),
+                updated(F.lit(None).cast("long"), F.col(f"`{mcv}`"))
+                .alias(mcv),
+            ]
+        out = df.select(*cols)
+        gen = _generated_columns(snap.schema)
+        if gen:
+            # after the assignments (their dependencies may have
+            # changed); deterministic generation expressions make this
+            # an identity on rows the update leaves alone
+            out = out.select(
+                *[
+                    F.expr(gen[c]).cast(types[c]).alias(c)
+                    if c in gen
+                    else F.col(c)
+                    for c in types
+                ],
+                *[F.col(f"`{c}`") for c in out.columns if c not in types],
+            )
+        return out
+
+    def _delete_or_update(
+        self, snap: DeltaSnapshot, condition: str,
+        assignments: Optional[Dict[str, str]] = None,
+    ) -> dict:
+        """The one body of DELETE (``assignments`` None) and UPDATE:
+        match the touched files, read, build the post-image, write the
+        data files and the change feed, commit.
+
+        Deletion-vector mode (``delta.enableDeletionVectors``) reads
+        only the matched rows with their file key and position, marks
+        them deleted in one DV per touched file (no data file is
+        rewritten; the inode-level guarantee is pinned in
+        tests/test_dv_writes.py) and writes only UPDATE's post-image
+        as new files. Rewrite mode reads every row of the touched
+        files and writes them back: DELETE keeps the rows the
+        condition does not match, UPDATE applies the assignments where
+        it does. Row-tracked tables read with preserved row ids in
+        both modes, so surviving and updated rows keep ``_row_id``."""
         touched = self._files_matching(snap, condition)
         if not touched:
             return {
@@ -6690,122 +6561,99 @@ class DeltaProtocolTable:
                 "total_files": len(snap.files),
                 "version": snap.version,
             }
-        if self._dv_write_enabled(snap):
-            return self._update_with_dvs(
-                snap, condition, assignments, touched, gen
-            )
-        cond = F.coalesce(F.expr(condition), F.lit(False))
-        types = {f.name: f.dataType for f in schema.fields}
-        cols = [
-            F.when(cond, F.expr(assignments[c]).cast(types[c]))
-            .otherwise(F.col(c))
-            .alias(c)
-            if c in assignments
-            else F.col(c)
-            for c in (f.name for f in schema.fields)
-        ]
+        update = assignments is not None
+        dv = self._dv_write_enabled(snap)
         cdf = self._cdf_enabled(snap)
-        touched_df, rt_preserved = self._rewrite_with_preserved_row_ids(
-            snap, touched
+        cond = F.coalesce(F.expr(condition), F.lit(False))
+        rows, _rt = self._rewrite_with_preserved_row_ids(
+            snap, touched, row_index=dv, file_key=dv
         )
-        mat_passthrough = []
-        if rt_preserved:
-            # spec §Row Tracking: updated rows KEEP their _row_id but
-            # take the NEW commit version (materialized CV goes NULL so
-            # the read falls back to the new file's
-            # defaultRowCommitVersion); untouched rows keep both
-            mid, mcv = self._row_tracking_phys_cols(snap)
-            mat_passthrough = [
-                F.col(f"`{mid}`"),
-                F.when(cond, F.lit(None).cast("long"))
-                .otherwise(F.col(f"`{mcv}`"))
-                .alias(mcv),
-            ]
-        if cdf:
-            touched_df = touched_df.persist()
-        rewritten = touched_df.select(*cols, *mat_passthrough)
-        if gen:
-            # recompute generated columns AFTER the assignments (their
-            # dependencies may have changed); deterministic generation
-            # expressions make this an identity on untouched rows
-            rewritten = rewritten.select(
-                *[
-                    F.expr(gen[c]).cast(types[c]).alias(c)
-                    if c in gen
-                    else F.col(c)
-                    for c in (f.name for f in schema.fields)
-                ],
-                *(
-                    [F.col(f"`{c}`") for c in rewritten.columns
-                     if c not in types]
-                ),
-            )
-        self._enforce_constraints(snap, rewritten)
-        upd_hint = self._rewrite_size_hint(snap, touched)
-        adds = self._write_data_files(
-            rewritten, snap.partition_columns, snap=snap,
-            size_hint=upd_hint,
-        )
-        cdc: List[dict] = []
-        if cdf:
-            pre = touched_df.filter(cond).select(
-                *[f.name for f in schema.fields]
-            )
-            post = pre.select(
-                *[
-                    F.expr(assignments[c]).cast(types[c]).alias(c)
-                    if c in assignments
-                    else F.col(c)
-                    for c in (f.name for f in schema.fields)
-                ]
-            )
-            if gen:
-                post = post.select(
-                    *[
-                        F.expr(gen[c]).cast(types[c]).alias(c)
-                        if c in gen
-                        else F.col(c)
-                        for c in (f.name for f in schema.fields)
-                    ]
+        if dv:
+            rows = rows.where(cond)
+        # compute the read once when it feeds more than one write
+        shared = cdf or (dv and update)
+        if shared:
+            rows = rows.persist()
+        hint = self._rewrite_size_hint(snap, touched)
+        try:
+            out = None if dv else rows.filter(~cond)
+            if update:
+                out = self._post_image(
+                    snap, rows, assignments, None if dv else cond
                 )
-            cdc = self._write_cdc_files(
-                pre.withColumn("_change_type", F.lit("update_preimage"))
-                .unionByName(
-                    post.withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                ),
-                snap=snap,
-                size_hint=(
-                    2 * upd_hint if upd_hint is not None else None
-                ),
+                # before any file is written: a refused UPDATE leaves
+                # no deletion vector behind
+                self._enforce_constraints(snap, out)
+            new_dvs = self._build_dvs_for(snap, rows, touched) if dv else {}
+            adds = [] if out is None else self._write_data_files(
+                out, snap.partition_columns, snap=snap, size_hint=hint
             )
-            touched_df.unpersist(blocking=False)
+            cdc: List[dict] = []
+            if cdf:
+                pre = (rows if dv else rows.filter(cond)).select(
+                    *snap.schema.fieldNames()
+                )
+                if update:
+                    changes = pre.withColumn(
+                        "_change_type", F.lit("update_preimage")
+                    ).unionByName(
+                        self._post_image(snap, pre, assignments).withColumn(
+                            "_change_type", F.lit("update_postimage")
+                        )
+                    )
+                else:
+                    changes = pre.withColumn("_change_type", F.lit("delete"))
+                cdc = self._write_cdc_files(
+                    changes, snap=snap,
+                    size_hint=(
+                        (2 if update else 1) * hint
+                        if hint is not None else None
+                    ),
+                )
+        finally:
+            if shared:
+                rows.unpersist(blocking=False)
+        if dv:
+            removes, dv_adds, fully_removed = self._dv_remove_add_actions(
+                snap, touched, new_dvs
+            )
+            metrics = {
+                "numRemovedFiles": fully_removed,
+                "numDeletionVectorsAdded": len(dv_adds),
+                "numAddedFiles": len(adds),
+            }
+        else:
+            removes = [_remove_action(snap.files[p]) for p in touched]
+            dv_adds = []
+            metrics = {
+                "numRemovedFiles": len(touched),
+                "numAddedFiles": len(adds),
+            }
         actions = (
             [
                 {"commitInfo": {
-                    "timestamp": _now_ms(), "operation": "UPDATE",
+                    "timestamp": _now_ms(),
+                    "operation": "UPDATE" if update else "DELETE",
                     "operationParameters": {"predicate": condition},
-                    "operationMetrics": {
-                        "numRemovedFiles": len(touched),
-                        "numAddedFiles": len(adds),
-                    },
+                    "operationMetrics": metrics,
                 }}
             ]
+            + (self._dv_protocol_actions(snap) if dv else [])
             + [{"cdc": c} for c in cdc]
-            + [
-                {"remove": {"path": p, "deletionTimestamp": _now_ms(),
-                            "dataChange": True}}
-                for p in touched
-            ]
+            + removes
+            + dv_adds
             + [{"add": a} for a in adds]
         )
-        v = self._commit_mutation(snap, actions, condition)
-        return {
+        result = {
             "touched_files": len(touched),
             "total_files": len(snap.files),
-            "version": v,
+            "version": self._commit_mutation(snap, actions, condition),
         }
+        if dv:
+            result.update(
+                deletion_vectors=len(dv_adds), rewritten_files=len(adds)
+            )
+        return result
 
     def restore(self, version: int) -> dict:
         """``RESTORE TABLE ... TO VERSION AS OF`` — rewind the LIVE
@@ -6837,10 +6685,10 @@ class DeltaProtocolTable:
                 f"{missing[0]})"
             )
         to_remove = [p for p in snap_now.files if p not in snap_then.files]
-        # a path present in BOTH versions but under a different add
-        # action (e.g. its deletion vector changed between the two) is
-        # re-added with the target version's action — the log's
-        # latest-add-per-path reconstruction rule makes that a replace
+        # a path present in BOTH versions but under a different deletion
+        # vector is replaced: removed under its current DV (file actions
+        # are keyed by path and DV) and re-added with the target
+        # version's action
         to_add = [
             a
             for p, a in snap_then.files.items()
@@ -6849,6 +6697,7 @@ class DeltaProtocolTable:
                 "deletionVector"
             )
         ]
+        replaced = [a["path"] for a in to_add if a["path"] in snap_now.files]
         actions = (
             [
                 {"commitInfo": {
@@ -6862,9 +6711,8 @@ class DeltaProtocolTable:
                 {"metaData": snap_then.metadata},
             ]
             + [
-                {"remove": {"path": p, "deletionTimestamp": _now_ms(),
-                            "dataChange": True}}
-                for p in to_remove
+                _remove_action(snap_now.files[p])
+                for p in to_remove + replaced
             ]
             + [{"add": a} for a in to_add]
         )
@@ -6925,17 +6773,10 @@ class DeltaProtocolTable:
         adds = self._write_data_files(
             df, snap.partition_columns, data_change=False, snap=snap
         )
-        now = _now_ms()
-        removes = []
-        for p in targets:
-            rm = {"path": p, "deletionTimestamp": now, "dataChange": False}
-            if snap.files[p].get("deletionVector"):
-                rm["deletionVector"] = snap.files[p]["deletionVector"]
-            removes.append(rm)
         actions = (
             [
                 {"commitInfo": {
-                    "timestamp": now, "operation": "REORG",
+                    "timestamp": _now_ms(), "operation": "REORG",
                     "operationParameters": {"applyPurge": True},
                     "operationMetrics": {
                         "numRemovedFiles": len(targets),
@@ -6943,7 +6784,7 @@ class DeltaProtocolTable:
                     },
                 }}
             ]
-            + [{"remove": r} for r in removes]
+            + [_remove_action(snap.files[p], False) for p in targets]
             + [{"add": a} for a in adds]
         )
         self._commit(snap.version + 1, actions, snap=snap)
@@ -7130,11 +6971,7 @@ class DeltaProtocolTable:
                         },
                     }}
                 ]
-                + [
-                    {"remove": {"path": p, "deletionTimestamp": _now_ms(),
-                                "dataChange": False}}
-                    for p in doomed
-                ]
+                + [_remove_action(snap.files[p], False) for p in doomed]
                 + [{"add": a} for a in adds]
             )
             v = self._commit_rewrite(snap, actions)
@@ -7187,11 +7024,7 @@ class DeltaProtocolTable:
                     },
                 }}
             ]
-            + [
-                {"remove": {"path": p, "deletionTimestamp": _now_ms(),
-                            "dataChange": False}}
-                for p in doomed
-            ]
+            + [_remove_action(snap.files[p], False) for p in doomed]
             + [{"add": a} for a in adds]
         )
         v = self._commit_rewrite(snap, actions)
@@ -7536,11 +7369,7 @@ class DeltaProtocolTable:
                 "timestamp": _now_ms(), "operation": "FSCK",
                 "operationParameters": {"numRemovedFiles": len(missing)},
             }}
-        ] + [
-            {"remove": {"path": p, "deletionTimestamp": _now_ms(),
-                        "dataChange": True}}
-            for p in missing
-        ]
+        ] + [_remove_action(snap.files[p]) for p in missing]
         self._commit(snap.version + 1, actions, snap=snap)
         return missing
 
@@ -7578,7 +7407,7 @@ class DeltaProtocolTable:
                 elif "remove" in a:
                     p = a["remove"]["path"]
                     files_in.pop(p, None)
-                    removed[p] = a["remove"]
+                    removed[p] = a
                 elif "metaData" in a:
                     metadata = a["metaData"]
                 elif "protocol" in a:
@@ -7602,7 +7431,7 @@ class DeltaProtocolTable:
                   for app, ver in sorted(txns.items())]
         lines += [{"domainMetadata": dm}
                   for _d, dm in sorted(domains.items())]
-        lines += [{"remove": r} for _p, r in sorted(removed.items())]
+        lines += [a for _p, a in sorted(removed.items())]
         lines += [{"add": a} for _p, a in sorted(files_in.items())]
         fn = "%020d.%020d.compacted.json" % (start, end)
         with open(os.path.join(_log_dir(self.path), fn), "w") as fh:

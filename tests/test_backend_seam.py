@@ -76,28 +76,59 @@ def test_no_raw_writes_outside_backend_and_sinks():
 _READERS_ALLOWED = {"_scan", "copy_into", "convert_from_parquet"}
 
 
+def _delta_log_tree():
+    return ast.parse(
+        open(os.path.join(PKG_DIR, "sources", "delta_log.py")).read()
+    )
+
+
+def _enclosing_functions(tree, nodes):
+    """Names of the innermost functions of ``tree`` holding ``nodes``."""
+    funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+    return {
+        max(
+            (f for f in funcs if f.lineno <= node.lineno <= f.end_lineno),
+            key=lambda f: f.lineno,
+        ).name
+        for node in nodes
+    }
+
+
 def test_table_data_scans_only_in_the_scan_builder():
     """Every read path of the protocol table (plain, deletion vectors,
     row ids, change feed, DELETE/UPDATE file matching) composes
     ``_scan``: one place maps the column-mapping mode, groups files by
     partition and names each scanned file."""
-    src = open(os.path.join(PKG_DIR, "sources", "delta_log.py")).read()
-    tree = ast.parse(src)
-    funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+    tree = _delta_log_tree()
     called = {
         id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)
     }
-    readers = {
-        max(
-            (f for f in funcs if f.lineno <= node.lineno <= f.end_lineno),
-            key=lambda f: f.lineno,
-        ).name
-        for node in ast.walk(tree)
+    readers = _enclosing_functions(tree, (
+        node for node in ast.walk(tree)
         # ``x.read`` as a value (a DataFrameReader), not ``fh.read()``
         if isinstance(node, ast.Attribute) and node.attr == "read"
         and id(node) not in called
-    }
+    ))
     assert readers == _READERS_ALLOWED
+
+
+def test_remove_actions_built_only_by_the_remove_builder():
+    """Every commit path builds its ``remove`` actions with
+    ``_remove_action``, which carries the removed add's deletion
+    vector. A ``{"remove": ...}`` action dict, or a dict with a
+    ``deletionTimestamp`` field, built anywhere else could drop it."""
+    tree = _delta_log_tree()
+
+    def keys(node):
+        return [k.value for k in node.keys if isinstance(k, ast.Constant)]
+
+    builders = _enclosing_functions(tree, (
+        node for node in ast.walk(tree)
+        if isinstance(node, ast.Dict) and (
+            keys(node) == ["remove"] or "deletionTimestamp" in keys(node)
+        )
+    ))
+    assert builders == {"_remove_action"}
 
 
 # mack's mutating modules, and the DeltaProtocolTable methods they may

@@ -302,6 +302,53 @@ class TestDvLifecycle:
         got = sorted(r["pkey"] for r in t.to_df().collect())
         assert got == list(range(1, 40, 2))
 
+    def test_removes_carry_the_dv_of_the_add(self, spark, tmp_path):
+        # the protocol keys file actions by (path, DV unique id): a
+        # remove that drops the add's DV leaves that add live for a
+        # spec reader, which then shows its rows twice
+        from mack_spark.tables import KeyedMerge
+
+        t = _mk(spark, str(tmp_path / "rm"), n=20, files=2)
+
+        def check(v):
+            live = t.snapshot(version_as_of=v - 1).files
+            acts = t._commit_actions(v)
+            dvd = {
+                a[k]["path"] for a in acts for k in ("add", "remove")
+                if k in a and live.get(a[k]["path"], {}).get("deletionVector")
+            }
+            assert dvd, f"version {v} touched no DV'd file"
+            removes = [a["remove"] for a in acts if "remove" in a]
+            for p in dvd:
+                assert any(
+                    r["path"] == p
+                    and r.get("deletionVector") == live[p]["deletionVector"]
+                    for r in removes
+                ), f"version {v} has no remove of {p} under its DV"
+
+        t.delete_where("pkey % 2 = 0")
+        check(t.optimize(target_file_bytes=1 << 20)["version"])
+        t.delete_where("pkey = 1")
+        check(t.merge(KeyedMerge(
+            source=spark.createDataFrame([(5, "m")], "pkey int, attr string"),
+            condition="t.pkey = s.pkey",
+            matched_update={"attr": "s.attr"},
+            target_key_col="pkey",
+            source_key_col="pkey",
+        ))["version"])
+        t.delete_where("pkey = 3")
+        t.overwrite(
+            spark.createDataFrame(
+                [(50, "a"), (51, "b"), (52, "c")], "pkey int, attr string"
+            ).coalesce(1),
+            replace_where="pkey >= 0",
+        )
+        check(t.snapshot().version)
+        v_full = t.snapshot().version
+        t.delete_where("pkey = 50")
+        check(t.restore(v_full)["version"])
+        assert sorted(r["pkey"] for r in t.to_df().collect()) == [50, 51, 52]
+
 
 class TestAppendOnly:
     def test_append_only_blocks_mutations(self, spark, tmp_path):

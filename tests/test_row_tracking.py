@@ -84,6 +84,18 @@ class TestRowIdAssignment:
         for pk in after:
             assert after[pk] == before[pk], "DV delete moved a row id"
 
+    def test_dv_update_keeps_updated_row_id(self, spark, tmp_path):
+        # spec §Row Tracking: an updated row keeps its _row_id and
+        # takes the update's commit version, also when the update
+        # marks the old row in a DV and writes the new one elsewhere
+        t = _mk(spark, tmp_path, n=10, dv=True)
+        before = _id_map(t)
+        v = t.update_where("pk = 3", {"name": "'changed'"})["version"]
+        after = _id_map(t)
+        assert after[3] == (before[3][0], v)
+        for pk in set(before) - {3}:
+            assert after[pk] == before[pk], "DV update moved a row id"
+
     def test_rewrite_assigns_fresh_ids(self, spark, tmp_path):
         # no DVs → update_where rewrites files → fresh, still-unique ids
         t = _mk(spark, tmp_path, n=6)
