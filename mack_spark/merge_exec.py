@@ -35,6 +35,9 @@ Execution shape mirrors Delta's real MERGE two-phase plan:
   the same single projection. The projection is SQL text applied by
   one ``selectExpr`` (:class:`_ClauseSql`): one parse on the JVM
   instead of a py4j round trip per ``Column`` call.
+* **insert-only merges** skip both: :func:`keyed_merge_inserts`
+  anti-joins the source against the target and projects the insert
+  clause, so no target row is rewritten.
 
 Two consumers: tests/test_backend_seam.py verifies that interpreting
 ``scd2_keyed_merge`` equals ``scd2_post_state`` on arbitrary inputs,
@@ -236,6 +239,25 @@ def interpret_keyed_merge(
         (cs.update, cs.kept, cs.nms_update, cs.nms_kept, cs.insert)
     )
     return _join(base, km).where(keep).selectExpr(*exprs)
+
+
+def keyed_merge_inserts(base: DataFrame, km) -> DataFrame:
+    """The rows an INSERT-ONLY :class:`KeyedMerge` adds to ``base``:
+    source rows no target row matches (one anti join — matched target
+    rows stay as they are, so nothing of ``base`` is rewritten) that
+    the insert clause takes, projected by the clause onto ``base``'s
+    columns and cast to their types, as :func:`interpret_keyed_merge`
+    projects inserted rows."""
+    cs = _ClauseSql(km)
+    return km.source.alias(km.source_alias).join(
+        base.alias(km.target_alias), F.expr(km.condition), "left_anti"
+    ).where(
+        _applies(True, getattr(km, "not_matched_condition", None))
+    ).selectExpr(*[
+        f"CAST({cs.ins(f.name)} AS {_sql_type(f.dataType)})"
+        f" AS {quote_ident(f.name)}"
+        for f in base.schema.fields
+    ])
 
 
 def merge_changes(base: DataFrame, km, change_type_col: str = "_change_type") -> DataFrame:

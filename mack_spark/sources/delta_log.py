@@ -670,24 +670,6 @@ def _has_ntz(dt) -> bool:
 _IDENTITY_PID_COL = "__mack_identity_pid"
 
 
-class _CheckpointHandle:
-    """Release handle for an eagerly local-checkpointed frame.
-    ``DataFrame.unpersist`` only uncaches CacheManager plans, not a
-    checkpointed RDD's storage blocks — this best-effort reaches the
-    underlying RDD so identity generation's materialized insert set is
-    freed deterministically instead of waiting on the ContextCleaner's
-    GC cycle. Failure is harmless (the cleaner reclaims eventually)."""
-
-    def __init__(self, df):
-        self._df = df
-
-    def unpersist(self, blocking: bool = False) -> None:
-        try:
-            self._df._jdf.queryExecution().toRdd().unpersist(blocking)
-        except Exception:  # noqa: BLE001 — advisory cleanup only
-            pass
-
-
 def _identity_gen_fn(bc_offsets, name: str, next_val: int, step: int,
                      pid_col: str):
     """Arrow-batched stamper for one identity column: each partition
@@ -734,6 +716,52 @@ def _patch_identity_hwm(meta: dict, hwms: Dict[str, int]) -> dict:
                 "delta.identity.highWaterMark"
             ] = hwms[f["name"]]
     return dict(meta, schemaString=json.dumps(schema_d))
+
+
+class _IdentityWrite:
+    """The identity step of every write that adds rows (CREATE,
+    append, overwrite, replaceWhere, MERGE): ``df`` is the frame with
+    its identity values (:meth:`DeltaProtocolTable._generate_identity`),
+    held until the ``with`` block exits — after the data files and the
+    change files that read it are written. ``sizing`` is the
+    optimized-write sizing method for writing ``df``: Arrow stamping
+    pays a per-partition Python round trip, and coalesce-sizing would
+    chain every source partition through ONE sequential worker
+    (measured 4.7 s vs 0.5 s on a 32-partition 15k-row frame), so a
+    stamped frame sizes through a real exchange. On a table without
+    identity columns ``df`` is the input frame and no Spark job runs."""
+
+    def __init__(self, table: "DeltaProtocolTable", schema: StructType,
+                 df: DataFrame):
+        self.df, self._hwms, self._ckpt = table._generate_identity(
+            schema, df
+        )
+        self.sizing = "coalesce" if self._ckpt is None else "repartition"
+
+    def __enter__(self) -> "_IdentityWrite":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        # DataFrame.unpersist only uncaches CacheManager plans, not a
+        # checkpointed RDD's storage blocks: reach the RDD, so the
+        # stamped rows are freed now instead of at the ContextCleaner's
+        # GC cycle. Advisory — the cleaner reclaims them anyway.
+        if self._ckpt is not None:
+            try:
+                self._ckpt._jdf.queryExecution().toRdd().unpersist(False)
+            except Exception:  # noqa: BLE001 — advisory cleanup only
+                pass
+
+    def meta(self, meta: Optional[dict],
+             current: Optional[dict] = None) -> Optional[dict]:
+        """The ``metaData`` the write commits: ``meta`` (or, when the
+        write changes no metadata itself, ``current``) with the new
+        high-water marks — they move atomically with the rows that
+        consumed them, so a concurrent identity write conflicts on the
+        schema instead of allocating the same values."""
+        if not self._hwms:
+            return meta
+        return _patch_identity_hwm(meta or current, self._hwms)
 
 
 # ----------------------------------------------------------------------
@@ -1476,16 +1504,32 @@ class DeltaProtocolTable:
     def _apply_version_file(self, v: int, files, txns, domains):
         """Apply one commit JSON into the accumulators; returns the
         (metadata, protocol) actions it carried, if any."""
-        metadata = protocol = None
         with open(_version_file(self.path, v)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                self._apply(action, files, txns=txns, domains=domains)
-                metadata = action.get("metaData") or metadata
-                protocol = action.get("protocol") or protocol
+            return self._apply_all(
+                (json.loads(line) for line in fh if line.strip()),
+                files, txns, domains,
+            )
+
+    @classmethod
+    def _apply_all(cls, actions, files, txns, domains):
+        """Apply one commit's actions (or a checkpoint's, or a
+        compaction file's) into the accumulators, every ``remove``
+        before any ``add``: the spec does not order actions within a
+        commit, and a DV rewrite of ``p`` removes ``p`` under its old
+        deletion vector and adds it under the new one, in either
+        order. Returns the (metadata, protocol) actions carried, if
+        any."""
+        metadata = protocol = None
+        adds = []
+        for action in actions:
+            if "add" in action:
+                adds.append(action["add"])
+                continue
+            cls._apply(action, files, txns=txns, domains=domains)
+            metadata = action.get("metaData") or metadata
+            protocol = action.get("protocol") or protocol
+        for add in adds:
+            files[add["path"]] = add
         return metadata, protocol
 
     def _snapshot_locked(self, version_as_of: Optional[int]) -> DeltaSnapshot:
@@ -1566,12 +1610,10 @@ class DeltaProtocolTable:
         if cp is not None and (
             version_as_of is None or cp["version"] <= version_as_of
         ):
-            for action in self._checkpoint_actions(
-                cp["version"], cp["parts"]
-            ):
-                self._apply(action, files, txns=txns, domains=domains)
-                metadata = action.get("metaData") or metadata
-                protocol = action.get("protocol") or protocol
+            metadata, protocol = self._apply_all(
+                self._checkpoint_actions(cp["version"], cp["parts"]),
+                files, txns, domains,
+            )
             start, last = cp["version"] + 1, cp["version"]
             cp_key = (cp["version"], cp["parts"])
         expected = start
@@ -1592,15 +1634,12 @@ class DeltaProtocolTable:
                     _log_dir(self.path), compacted[(expected, span)]
                 )
                 with open(cf) as fh:
-                    for line in fh:
-                        line = line.strip()
-                        if not line:
-                            continue
-                        action = json.loads(line)
-                        self._apply(action, files, txns=txns,
-                                    domains=domains)
-                        metadata = action.get("metaData") or metadata
-                        protocol = action.get("protocol") or protocol
+                    m, p = self._apply_all(
+                        (json.loads(line) for line in fh if line.strip()),
+                        files, txns, domains,
+                    )
+                metadata = m or metadata
+                protocol = p or protocol
                 last = span
                 expected = span + 1
                 continue
@@ -2658,24 +2697,12 @@ class DeltaProtocolTable:
                 if name not in df.columns
             ]
             table_schema = StructType(fields)
-        df, id_hwms, id_persisted = t._generate_identity(table_schema, df)
-        try:
-            df = df.select(*[f.name for f in table_schema.fields])
+        with _IdentityWrite(t, table_schema, df) as stamped:
             adds = t._write_data_files(
-                df, partition_by, config=properties,
-                # Arrow identity stamping pays a per-partition Python
-                # round-trip; coalesce-sizing would chain every source
-                # partition through ONE sequential worker (measured
-                # 4.7 s vs 0.5 s on a 32-partition 15k-row frame) —
-                # size through a real exchange instead
-                sizing_method=(
-                    "repartition" if id_persisted is not None
-                    else "coalesce"
-                ),
+                stamped.df.select(*[f.name for f in table_schema.fields]),
+                partition_by, config=properties,
+                sizing_method=stamped.sizing,
             )
-        finally:
-            if id_persisted is not None:
-                id_persisted.unpersist()
         schema_json = table_schema.json()
         meta = {
             "id": str(uuid.uuid4()),
@@ -2685,8 +2712,7 @@ class DeltaProtocolTable:
             "configuration": dict(properties or {}),
             "createdTime": _now_ms(),
         }
-        if id_hwms:
-            meta = _patch_identity_hwm(meta, id_hwms)
+        meta = stamped.meta(meta)
         cfg = meta["configuration"]
         if str(cfg.get("delta.enableRowTracking", "false")).lower() == "true":
             # spec §Row Tracking: the MATERIALIZED row id / commit
@@ -2783,26 +2809,7 @@ class DeltaProtocolTable:
                 )
             a["dataChange"] = True
             adds.append(a)
-        meta = dict(
-            snap.metadata, id=str(uuid.uuid4()), createdTime=_now_ms()
-        )
-        actions = (
-            [
-                {"commitInfo": {
-                    "timestamp": _now_ms(), "operation": "CLONE",
-                    "operationParameters": {
-                        "source": src.path, "isShallow": True,
-                    },
-                }},
-                {"protocol": snap.protocol},
-                {"metaData": meta},
-            ]
-            + [{"domainMetadata": dm}
-               for _d, dm in sorted(snap.domains.items())]
-            + [{"add": a} for a in adds]
-        )
-        t._commit(0, actions)
-        return t
+        return t._commit_clone(src, snap, adds, shallow=True)
 
     @classmethod
     def deep_clone(
@@ -2896,15 +2903,24 @@ class DeltaProtocolTable:
                     raise DeltaProtocolError(
                         f"deep clone copy did not produce {d}"
                     )
+        return t._commit_clone(src, snap, adds, shallow=False)
+
+    def _commit_clone(
+        self, src: "DeltaProtocolTable", snap: DeltaSnapshot,
+        adds: List[dict], shallow: bool,
+    ) -> "DeltaProtocolTable":
+        """Version 0 of a clone of ``src`` at ``snap``: ``adds`` under
+        the source's protocol, metadata (with a fresh table id) and
+        domains."""
         meta = dict(
             snap.metadata, id=str(uuid.uuid4()), createdTime=_now_ms()
         )
-        actions = (
+        self._commit(0, (
             [
                 {"commitInfo": {
                     "timestamp": _now_ms(), "operation": "CLONE",
                     "operationParameters": {
-                        "source": src.path, "isShallow": False,
+                        "source": src.path, "isShallow": shallow,
                     },
                 }},
                 {"protocol": snap.protocol},
@@ -2913,9 +2929,8 @@ class DeltaProtocolTable:
             + [{"domainMetadata": dm}
                for _d, dm in sorted(snap.domains.items())]
             + [{"add": a} for a in adds]
-        )
-        t._commit(0, actions)
-        return t
+        ))
+        return self
 
     def _rewrite_size_hint(
         self, snap: "DeltaSnapshot", paths: List[str],
@@ -2953,6 +2968,30 @@ class DeltaProtocolTable:
             est += int(extra_rows * (row_bytes / rows))
         return est or None
 
+    @staticmethod
+    def _physical_columns(snap: DeltaSnapshot, df: DataFrame) -> DataFrame:
+        """``df`` for a file of a COLUMN-MAPPED table: table columns
+        renamed logical→``delta.columnMapping.physicalName`` and tagged
+        with their ``delta.columnMapping.id`` as ``parquet.field.id``
+        metadata, so the file carries BOTH resolution keys (name- and
+        id-mode readers both work). Other columns (``_change_type``,
+        materialized row-id columns) keep their names."""
+        phys = snap.physical_names()
+        fids = {
+            f.name: (f.metadata or {}).get("delta.columnMapping.id")
+            for f in snap.schema.fields
+        }
+        return df.select(*[
+            F.col(f"`{c}`").alias(
+                phys.get(c, c),
+                metadata=(
+                    None if fids.get(c) is None
+                    else {"parquet.field.id": int(fids[c])}
+                ),
+            )
+            for c in df.columns
+        ])
+
     def _write_data_files(
         self, df: DataFrame, partition_by: List[str],
         data_change: bool = True,
@@ -2969,32 +3008,15 @@ class DeltaProtocolTable:
         values in ``partitionValues`` (the files themselves do not
         contain partition columns, per the spec).
 
-        When ``snap`` is a COLUMN-MAPPED snapshot, columns are renamed
-        logical→``delta.columnMapping.physicalName`` and tagged with
-        their ``delta.columnMapping.id`` as ``parquet.field.id``
-        metadata before writing, so the files carry BOTH resolution
-        keys (name- and id-mode readers both work) and
+        When ``snap`` is a COLUMN-MAPPED snapshot, columns are written
+        under their physical names (:meth:`_physical_columns`), so
         ``partitionValues``/stats come out physical-keyed, as the spec
         requires of mapped tables."""
         from urllib.parse import unquote
 
         if snap is not None and snap.column_mapping_mode != "none":
+            df = self._physical_columns(snap, df)
             phys = snap.physical_names()
-            fids = {
-                f.name: (f.metadata or {}).get("delta.columnMapping.id")
-                for f in snap.schema.fields
-            }
-            cols = []
-            for c in df.columns:
-                fid = fids.get(c)
-                if fid is not None:
-                    cols.append(F.col(f"`{c}`").alias(
-                        phys.get(c, c),
-                        metadata={"parquet.field.id": int(fid)},
-                    ))
-                else:
-                    cols.append(F.col(f"`{c}`").alias(phys.get(c, c)))
-            df = df.select(*cols)
             partition_by = [phys.get(c, c) for c in partition_by]
 
         staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
@@ -4727,28 +4749,12 @@ class DeltaProtocolTable:
         On a COLUMN-MAPPED snapshot the spec keys change-data files by
         ``physicalName`` exactly like data files (delta-spark reads
         CDF through the same mapped-parquet path), so table columns
-        are renamed logical→physical and tagged with their
-        ``delta.columnMapping.id`` before writing; the ``_change_type``
-        column keeps its literal spec name (it is CDF metadata, not a
-        mapped table column)."""
+        are written under their physical names
+        (:meth:`_physical_columns`); the ``_change_type`` column keeps
+        its literal spec name (it is CDF metadata, not a mapped table
+        column)."""
         if snap is not None and snap.column_mapping_mode != "none":
-            phys = snap.physical_names()
-            fids = {
-                f.name: (f.metadata or {}).get("delta.columnMapping.id")
-                for f in snap.schema.fields
-            }
-            cols = []
-            for c in changes.columns:
-                if c == "_change_type":
-                    cols.append(F.col("`_change_type`"))
-                elif fids.get(c) is not None:
-                    cols.append(F.col(f"`{c}`").alias(
-                        phys.get(c, c),
-                        metadata={"parquet.field.id": int(fids[c])},
-                    ))
-                else:
-                    cols.append(F.col(f"`{c}`").alias(phys.get(c, c)))
-            changes = changes.select(*cols)
+            changes = self._physical_columns(snap, changes)
         staging = os.path.join(self.path, f"_staging_{uuid.uuid4().hex}")
         from mack_spark.layout import optimize_write_partitions
 
@@ -4799,11 +4805,11 @@ class DeltaProtocolTable:
         high-water mark past the explicit values (one bounded
         aggregate job).
 
-        Returns ``(frame, hwms, persisted)``: the frame with identity
+        Returns ``(frame, hwms, checkpoint)``: the frame with identity
         values, the new high-water mark per touched column (commit a
-        patched metaData with them), and the persisted handle to
-        unpersist after the data files are written (both passes must
-        see one partitioning)."""
+        patched metaData with them), and the checkpointed frame (both
+        passes must see one partitioning) that :class:`_IdentityWrite`
+        releases after the files are written, or None."""
         ids = _identity_columns(schema)
         if not ids:
             return df, {}, None
@@ -4811,7 +4817,7 @@ class DeltaProtocolTable:
 
         provided = set(df.columns)
         hwms: Dict[str, int] = {}
-        persisted = None
+        ckpt = None
         for name, spec in ids.items():
             start, step, hwm = spec["start"], spec["step"], spec["hwm"]
             if name in provided:
@@ -4830,7 +4836,7 @@ class DeltaProtocolTable:
                         max(base, int(m)) if step > 0 else min(base, int(m))
                     )
                 continue
-            if persisted is None:
+            if ckpt is None:
                 # MATERIALIZE the partition id as a column, then
                 # localCheckpoint (NOT persist): the two passes — the
                 # per-partition count and the range stamp — must agree
@@ -4841,11 +4847,9 @@ class DeltaProtocolTable:
                 # that. A column written into checkpointed data cannot
                 # drift; the eager checkpoint also pins the
                 # partitioning so within-partition row order is stable.
-                ckpt = df.withColumn(
+                df = ckpt = df.withColumn(
                     _IDENTITY_PID_COL, F.spark_partition_id()
                 ).localCheckpoint(eager=True)
-                persisted = _CheckpointHandle(ckpt)
-                df = ckpt
             counts = {
                 r["__pid"]: r["n"]
                 for r in df.groupBy(
@@ -4873,9 +4877,9 @@ class DeltaProtocolTable:
                 out_schema,
             )
             hwms[name] = next_val + step * (total - 1)
-        if persisted is not None and _IDENTITY_PID_COL in df.columns:
+        if ckpt is not None and _IDENTITY_PID_COL in df.columns:
             df = df.drop(_IDENTITY_PID_COL)
-        return df, hwms, persisted
+        return df, hwms, ckpt
 
     def _resolve_write_schema(
         self, snap: DeltaSnapshot, df: DataFrame, merge_schema: bool
@@ -5011,35 +5015,7 @@ class DeltaProtocolTable:
             txn_app_id, -1
         ) >= int(txn_version):
             return  # already applied — idempotent skip
-        df, id_hwms, id_persisted = self._generate_identity(
-            snap.schema, df
-        )
-        try:
-            aligned, new_meta = self._resolve_write_schema(
-                snap, df, merge_schema
-            )
-            self._enforce_constraints(
-                snap, aligned, self._gen_checks(snap, df)
-            )
-            adds = self._write_data_files(
-                aligned, snap.partition_columns, snap=snap,
-                sizing_method=(
-                    "repartition" if id_persisted is not None
-                    else "coalesce"
-                ),
-            )
-        finally:
-            if id_persisted is not None:
-                id_persisted.unpersist()
-        if id_hwms:
-            # the high-water mark moves atomically with the rows that
-            # consumed it — a concurrent identity append conflicts on
-            # schemaString below, never double-allocates
-            new_meta = _patch_identity_hwm(
-                new_meta or snap.metadata, id_hwms
-            )
-        from mack_spark.tables import ConcurrentModificationError
-
+        adds, new_meta = self._write_rows(snap, df, merge_schema)
         actions = [
             {"commitInfo": {"timestamp": _now_ms(), "operation": "WRITE",
                             "operationParameters": {"mode": "Append"}}}
@@ -5053,24 +5029,65 @@ class DeltaProtocolTable:
         if new_meta is not None:
             actions.append({"metaData": new_meta})
         actions += [{"add": a} for a in adds]
+        # a concurrent retry of the SAME batch may win the race
+        self._commit_blind_append(
+            snap, actions, max_retries, "append",
+            lambda head: txn_app_id is not None
+            and head.txns.get(txn_app_id, -1) >= int(txn_version),
+        )
+
+    def _write_rows(
+        self, snap: DeltaSnapshot, df: DataFrame, merge_schema: bool
+    ):
+        """The data half of a blind write (append, overwrite): identity
+        values stamped, the schema enforced (and evolved under
+        ``merge_schema``), constraints checked, the rows written.
+        Returns ``(adds, metaData to commit or None)``; identity
+        continues across OVERWRITE — the high-water mark never resets
+        (spec: monotonic for the table's lifetime)."""
+        with _IdentityWrite(self, snap.schema, df) as stamped:
+            aligned, new_meta = self._resolve_write_schema(
+                snap, stamped.df, merge_schema
+            )
+            self._enforce_constraints(
+                snap, aligned, self._gen_checks(snap, stamped.df)
+            )
+            adds = self._write_data_files(
+                aligned, snap.partition_columns, snap=snap,
+                sizing_method=stamped.sizing,
+            )
+        return adds, stamped.meta(new_meta, snap.metadata)
+
+    def _commit_blind_append(
+        self, snap: DeltaSnapshot, actions: List[dict], max_retries: int,
+        op: str, applied,
+    ) -> Optional[int]:
+        """Commit a blind append's ``actions`` at the newest head.
+        Appends commute, so a lost commit race retries against the new
+        head (Delta's blind-append rule) — unless the head's schema
+        moved under us, which is a real conflict and raises.
+        ``applied(head)`` is the SetTransaction check: True skips the
+        commit (returns None; the batch is already in), and it may
+        raise itself. Returns the committed version."""
+        from mack_spark.tables import ConcurrentModificationError
+
         for _ in range(max_retries + 1):
             head = self.snapshot()
             if head.metadata["schemaString"] != snap.metadata["schemaString"]:
                 raise ConcurrentModificationError(
                     f"schema of {self.path} changed concurrently with"
-                    " this append — re-validate and retry"
+                    f" this {op} — re-validate and retry"
                 )
-            if txn_app_id is not None and head.txns.get(
-                txn_app_id, -1
-            ) >= int(txn_version):
-                return  # a concurrent retry of the SAME batch won
+            if applied(head):
+                return None
             try:
                 self._commit(head.version + 1, actions, snap=head)
-                return
+                return head.version + 1
             except ConcurrentModificationError:
                 continue
         raise ConcurrentModificationError(
-            f"append to {self.path} lost {max_retries + 1} commit races"
+            f"{'append to' if op == 'append' else op} {self.path} lost"
+            f" {max_retries + 1} commit races"
         )
 
     def copy_into(
@@ -5205,16 +5222,8 @@ class DeltaProtocolTable:
                      "lastUpdated": _now_ms()}}
             for _p, app, mtime_ms in new_files
         ] + [{"add": a} for a in adds]
-        for _ in range(max_retries + 1):
-            head = self.snapshot()
-            if (
-                head.metadata["schemaString"]
-                != snap.metadata["schemaString"]
-            ):
-                raise ConcurrentModificationError(
-                    f"schema of {self.path} changed concurrently with"
-                    " this COPY INTO — re-validate and retry"
-                )
+
+        def overlap(head: DeltaSnapshot) -> bool:
             if not force and any(
                 head.txns.get(app, -1) >= m
                 for _p, app, m in new_files
@@ -5224,20 +5233,17 @@ class DeltaProtocolTable:
                     f" files into {self.path} — re-run to pick up the"
                     " remainder exactly once"
                 )
-            try:
-                self._commit(head.version + 1, actions, snap=head)
-                return {
-                    "num_affected_rows": n_rows,
-                    "num_inserted_rows": n_rows,
-                    "num_skipped_files": skipped,
-                    "num_loaded_files": len(new_files),
-                    "version": head.version + 1,
-                }
-            except ConcurrentModificationError:
-                continue
-        raise ConcurrentModificationError(
-            f"COPY INTO {self.path} lost {max_retries + 1} commit races"
-        )
+            return False
+
+        return {
+            "num_affected_rows": n_rows,
+            "num_inserted_rows": n_rows,
+            "num_skipped_files": skipped,
+            "num_loaded_files": len(new_files),
+            "version": self._commit_blind_append(
+                snap, actions, max_retries, "COPY INTO", overlap
+            ),
+        }
 
     def overwrite(
         self, df: DataFrame, merge_schema: bool = False,
@@ -5255,39 +5261,19 @@ class DeltaProtocolTable:
         Every incoming row must satisfy the predicate (Delta's
         replaceWhere constraint check — violating rows raise). This is
         the idiomatic 100-TB partition/date-range backfill: cost is
-        O(matching data), never O(table)."""
+        O(matching data), never O(table). The replaced rows are
+        deleted exactly as :meth:`delete_where` deletes them: with
+        ``delta.enableDeletionVectors=true`` they are marked in
+        deletion vectors instead of rewriting their files, and the
+        change data feed records them as deletes and the new rows as
+        inserts."""
         if replace_where is not None:
             self._overwrite_where(df, replace_where, merge_schema)
             return
         snap = self.snapshot()
         self._assert_writable(snap)
         self._assert_not_append_only(snap, "OVERWRITE")
-        df, id_hwms, id_persisted = self._generate_identity(
-            snap.schema, df
-        )
-        try:
-            aligned, new_meta = self._resolve_write_schema(
-                snap, df, merge_schema
-            )
-            self._enforce_constraints(
-                snap, aligned, self._gen_checks(snap, df)
-            )
-            adds = self._write_data_files(
-                aligned, snap.partition_columns, snap=snap,
-                sizing_method=(
-                    "repartition" if id_persisted is not None
-                    else "coalesce"
-                ),
-            )
-        finally:
-            if id_persisted is not None:
-                id_persisted.unpersist()
-        if id_hwms:
-            # identity continues across OVERWRITE — the watermark never
-            # resets (spec: monotonic for the table's lifetime)
-            new_meta = _patch_identity_hwm(
-                new_meta or snap.metadata, id_hwms
-            )
+        adds, new_meta = self._write_rows(snap, df, merge_schema)
         actions = [
             {"commitInfo": {"timestamp": _now_ms(), "operation": "WRITE",
                             "operationParameters": {"mode": "Overwrite"}}}
@@ -5304,12 +5290,11 @@ class DeltaProtocolTable:
     def _overwrite_where(
         self, df: DataFrame, condition: str, merge_schema: bool
     ) -> dict:
-        """``replaceWhere`` execution: one commit that removes the
-        predicate's files, re-adds their surviving rows, and adds the
-        new data. Kept rows carry preserved row ids on row-tracked
-        tables; CDF tables record the replaced rows as deletes and the
-        new rows as inserts (cdc actions — the rewritten survivors are
-        NOT changes, exactly the DELETE+append shape)."""
+        """``replaceWhere``: a DELETE of the predicate's rows plus the
+        new rows, in one commit (:meth:`_delete_or_update`). Here only
+        the incoming rows are checked: identity values stamped, the
+        schema resolved, every row matching the predicate, and the
+        constraints."""
         if merge_schema:
             raise DeltaProtocolError(
                 "replaceWhere with mergeSchema is not supported — evolve"
@@ -5318,88 +5303,23 @@ class DeltaProtocolTable:
         snap = self.snapshot()
         self._assert_writable(snap)
         self._assert_not_append_only(snap, "OVERWRITE")
-        df, id_hwms, id_persisted = self._generate_identity(
-            snap.schema, df
-        )
-        try:
-            aligned, _ = self._resolve_write_schema(snap, df, False)
-            cond = F.coalesce(F.expr(condition), F.lit(False))
+        with _IdentityWrite(self, snap.schema, df) as stamped:
+            aligned, _ = self._resolve_write_schema(snap, stamped.df, False)
             # Delta's replaceWhere constraint: every incoming row must
             # match the predicate, else the "replace" would silently
             # widen into an insert
+            cond = F.coalesce(F.expr(condition), F.lit(False))
             if not aligned.filter(~cond).isEmpty():
                 raise DeltaProtocolError(
                     f"replaceWhere {condition!r}: the new data contains"
                     " rows NOT matching the predicate"
                 )
             self._enforce_constraints(
-                snap, aligned, self._gen_checks(snap, df)
+                snap, aligned, self._gen_checks(snap, stamped.df)
             )
-            cdf = self._cdf_enabled(snap)
-            touched = self._files_matching(snap, condition)
-            kept_adds: List[dict] = []
-            cdc: List[dict] = []
-            touched_df = None
-            if touched:
-                touched_df, _rt = self._rewrite_with_preserved_row_ids(
-                    snap, touched
-                )
-                if cdf:
-                    touched_df = touched_df.persist()
-                kept = touched_df.filter(~cond)
-                kept_adds = self._write_data_files(
-                    kept, snap.partition_columns, snap=snap,
-                    size_hint=self._rewrite_size_hint(snap, touched),
-                )
-            new_adds = self._write_data_files(
-                aligned, snap.partition_columns, snap=snap
+            return self._delete_or_update(
+                snap, condition, inserts=aligned, stamped=stamped
             )
-            if cdf:
-                out_cols = [f.name for f in snap.schema.fields]
-                changes = aligned.select(*out_cols).withColumn(
-                    "_change_type", F.lit("insert")
-                )
-                if touched_df is not None:
-                    changes = touched_df.filter(cond).select(
-                        *out_cols
-                    ).withColumn(
-                        "_change_type", F.lit("delete")
-                    ).unionByName(changes)
-                cdc = self._write_cdc_files(changes, snap=snap)
-                if touched_df is not None:
-                    touched_df.unpersist(blocking=False)
-        finally:
-            if id_persisted is not None:
-                id_persisted.unpersist()
-        meta = None
-        if id_hwms:
-            meta = _patch_identity_hwm(snap.metadata, id_hwms)
-        actions = [
-            {"commitInfo": {
-                "timestamp": _now_ms(), "operation": "WRITE",
-                "operationParameters": {
-                    "mode": "Overwrite", "predicate": condition,
-                },
-                "operationMetrics": {
-                    "numRemovedFiles": len(touched),
-                    "numAddedFiles": len(kept_adds) + len(new_adds),
-                },
-            }}
-        ]
-        if meta is not None:
-            actions.append({"metaData": meta})
-        actions += (
-            [{"cdc": c} for c in cdc]
-            + [_remove_action(snap.files[p]) for p in touched]
-            + [{"add": a} for a in kept_adds]
-            + [{"add": a} for a in new_adds]
-        )
-        v = self._commit_mutation(snap, actions, condition)
-        return {
-            "touched_files": len(touched),
-            "total_files": len(snap.files),
-            "version": v,
-        }
 
     # ------------------------------------------------------------------
     # keyed MERGE — the two-phase, file-pruned execution
@@ -5635,19 +5555,12 @@ class DeltaProtocolTable:
         from mack_spark.merge_exec import (
             equi_source_columns,
             interpret_keyed_merge,
+            keyed_merge_inserts,
+            merge_changes,
             quote_ident,
             rows_unique,
         )
 
-        def _config_actions() -> List[dict]:
-            # extra_config (and schema evolution's metaData) ride the
-            # merge commit as ONE metaData update — snap.metadata is
-            # already the evolved shape when evolution applies
-            if not extra_config:
-                return [evolve_meta] if evolve_meta else []
-            config = dict(snap.metadata.get("configuration") or {})
-            config.update(extra_config)
-            return [{"metaData": dict(snap.metadata, configuration=config)}]
         insert_only = (
             km.matched_update is None
             and km.matched_delete is None
@@ -5746,15 +5659,10 @@ class DeltaProtocolTable:
             # watermark must advance even over an empty range).
             if extra_config:
                 self._update_config(snap, extra_config, "MERGE")
-                return {
-                    "touched_files": 0,
-                    "total_files": len(snap.files),
-                    "version": snap.version + 1,
-                }
             return {
                 "touched_files": 0,
                 "total_files": len(snap.files),
-                "version": snap.version,
+                "version": snap.version + bool(extra_config),
             }
         # whether NULL target keys can match (null-safe condition with
         # NULL source keys): min/max stats never cover NULLs, so such
@@ -5798,48 +5706,36 @@ class DeltaProtocolTable:
                 hit = True  # incomparable stats: don't prune
             if hit:
                 touched.append(p)
-        gen_ids: List[str] = []
-        full_ids: Dict[str, dict] = {}
+        # identity columns the insert clause omits are GENERATED for
+        # the inserted rows (gap-free, spec §Identity Columns): the
+        # clause leaves them NULL — which marks the inserted rows of a
+        # rewrite — and the identity step below stamps them; provided
+        # ones go through its allowExplicitInsert gate and hwm sync. A
+        # merge without an insert clause writes no identity value.
+        ins = km.not_matched_insert
+        id_schema = snap.schema if ins is not None else StructType([])
+        ids = _identity_columns(id_schema)
+        provided = set(km.source.columns) if ins == "*" else set(ins or ())
+        gen_ids = [c for c in ids if c not in provided]
+        cdf = not insert_only and self._cdf_enabled(snap)
+        persisted: List[DataFrame] = []
+        kept = None
         if insert_only:
+            # insert-only MERGE: matched target rows are kept verbatim,
+            # so NO file needs rewriting — the commit is add-only (the
+            # same optimization Delta's own MERGE applies), and needs
+            # no cdc actions even under CDF: every added row is an
+            # insert. The touched set still bounds the anti-join's
+            # target side: files whose key range misses every source
+            # key cannot absorb an insert candidate's match, so they
+            # are not even read.
+            removed: List[str] = []
             base = self._read_files(snap, touched)
+            rows = keyed_merge_inserts(base, km)
         else:
             import dataclasses as _dc
 
-            # identity columns omitted from the insert clause generate
-            # for the insert set AFTER the rewrite join (the clause
-            # stages NULL as a marker; _generate_identity fills the
-            # marked rows gap-free and the hwm lands in this commit).
-            # Must precede the row-tracking '*' expansion below, which
-            # would otherwise turn '*' into per-column source refs for
-            # identity columns the source does not carry.
-            full_ids = _identity_columns(snap.schema)
-            if full_ids and km.not_matched_insert is not None:
-                if km.not_matched_insert == "*":
-                    src_cols = set(km.source.columns)
-                    gen_ids = [c for c in full_ids if c not in src_cols]
-                    if gen_ids:
-                        ins = {
-                            f.name: (
-                                "CAST(NULL AS BIGINT)"
-                                if f.name in gen_ids
-                                else (
-                                    f"{km.source_alias}.`{f.name}`"
-                                    if f.name in src_cols else "NULL"
-                                )
-                            )
-                            for f in snap.schema.fields
-                        }
-                        km = _dc.replace(km, not_matched_insert=ins)
-                else:
-                    gen_ids = [
-                        c for c in full_ids
-                        if c not in km.not_matched_insert
-                    ]
-                    if gen_ids:
-                        ins = dict(km.not_matched_insert)
-                        for c in gen_ids:
-                            ins[c] = "CAST(NULL AS BIGINT)"
-                        km = _dc.replace(km, not_matched_insert=ins)
+            removed = touched
             # rewriting merge on a row-tracked table: read the touched
             # files with preserved ids as the materialized columns;
             # clause patches below keep kept/updated rows' _row_id
@@ -5850,274 +5746,141 @@ class DeltaProtocolTable:
             )
             if rt_preserved:
                 mid, mcv = self._row_tracking_phys_cols(snap)
-                upd = km.matched_update
-                if upd == "*":
-                    # expand UPDATE SET * so the row-tracking column
-                    # patch below can ride the same dict (identity
-                    # tables already refused SET * in merge())
-                    _sc = set(km.source.columns)
-                    upd = {
-                        f.name: f"{km.source_alias}.`{f.name}`"
-                        for f in snap.schema.fields if f.name in _sc
+                src = set(km.source.columns)
+                star = {
+                    f.name: f"{km.source_alias}.{quote_ident(f.name)}"
+                    for f in snap.schema.fields if f.name in src
+                }
+
+                def patch(clause, cols):
+                    # '*' expands so the row-tracking columns can ride
+                    # the same dict (identity tables already refused
+                    # SET * in merge())
+                    if clause is None:
+                        return None
+                    return {
+                        **(star if clause == "*" else clause),
+                        **dict.fromkeys(cols, "CAST(NULL AS BIGINT)"),
                     }
-                if upd is not None:
-                    upd = dict(upd)
-                    upd[mcv] = "CAST(NULL AS BIGINT)"
-                nupd = km.not_matched_by_source_update
-                if nupd is not None:
-                    nupd = dict(nupd)
-                    nupd[mcv] = "CAST(NULL AS BIGINT)"
-                    km = _dc.replace(
-                        km, not_matched_by_source_update=nupd
-                    )
-                ins = km.not_matched_insert
-                if ins == "*":
-                    _isc = set(km.source.columns)
-                    ins = {
-                        f.name: (
-                            f"{km.source_alias}.`{f.name}`"
-                            if f.name in _isc else "NULL"
-                        )
-                        for f in snap.schema.fields
-                    }
-                if ins is not None:
-                    ins = dict(ins)
-                    ins[mid] = "CAST(NULL AS BIGINT)"
-                    ins[mcv] = "CAST(NULL AS BIGINT)"
+
                 km = _dc.replace(
-                    km, matched_update=upd, not_matched_insert=ins
+                    km,
+                    matched_update=patch(km.matched_update, [mcv]),
+                    not_matched_by_source_update=patch(
+                        km.not_matched_by_source_update, [mcv]
+                    ),
+                    not_matched_insert=patch(ins, [mid, mcv]),
                 )
-        if insert_only:
-            # insert-only MERGE: matched target rows are kept verbatim,
-            # so NO file needs rewriting — the commit is add-only (the
-            # same optimization Delta's own MERGE applies). The touched
-            # set still bounds the anti-join's target side: files whose
-            # key range misses every source key cannot absorb an insert
-            # candidate's match, so they are not even read.
-            schema = snap.schema
-            ids = _identity_columns(schema)
-            new_src = km.source.alias(km.source_alias).join(
-                base.alias(km.target_alias), F.expr(km.condition), "left_anti"
+            if cdf:
+                # base feeds the rewrite join AND the change-feed join —
+                # read the touched files once
+                persisted.append(base.persist())
+                base = persisted[-1]
+            rows = interpret_keyed_merge(
+                base, km, assume_unambiguous=unambiguous
             )
-            cond = getattr(km, "not_matched_condition", None)
-            if cond:
-                new_src = new_src.where(
-                    F.coalesce(F.expr(cond), F.lit(False))
-                )
-            # identity columns omitted from the insert clause are
-            # GENERATED for the insert set (gap-free two-pass, spec
-            # §Identity Columns); provided ones go through
-            # _generate_identity's allowExplicitInsert gate + hwm sync
-            if km.not_matched_insert == "*":
-                src_cols = set(km.source.columns)
-                gen_ids = [c for c in ids if c not in src_cols]
-                inserts = new_src.select(
-                    *[
-                        (
-                            F.col(f"{km.source_alias}.`{f.name}`")
-                            if f.name in src_cols else F.lit(None)
-                        )
-                        .cast(f.dataType)
-                        .alias(f.name)
-                        for f in schema.fields
-                        if f.name not in gen_ids
-                    ]
-                )
-            else:
-                gen_ids = [c for c in ids if c not in km.not_matched_insert]
-                inserts = new_src.select(
-                    *[
-                        F.expr(km.not_matched_insert[f.name])
-                        .cast(f.dataType)
-                        .alias(f.name)
-                        for f in schema.fields
-                        if f.name not in gen_ids
-                    ]
-                )
-            id_hwms: Dict[str, int] = {}
-            id_persisted = None
             if ids:
-                inserts, id_hwms, id_persisted = self._generate_identity(
-                    schema, inserts
-                )
-                inserts = inserts.select(*[f.name for f in schema.fields])
-            try:
+                # the identity step and the file write must not each
+                # execute the full rewrite join
+                persisted.append(rows.persist())
+                rows = persisted[-1]
+            if gen_ids:
+                # matched and kept rows keep their non-null
+                # writer-assigned values; the NULL marker splits off
+                # the inserted rows exactly
+                marker = F.col(quote_ident(gen_ids[0]))
+                kept = rows.filter(marker.isNotNull())
+                rows = rows.filter(marker.isNull())
+        # the identity step runs over ``rows``: the inserted rows when
+        # it generates values, else every row to write
+        try:
+            with _IdentityWrite(
+                self, id_schema, rows.drop(*gen_ids) if gen_ids else rows,
+            ) as stamped:
+                out = stamped.df
+                if gen_ids:
+                    out = out.select(*rows.columns)
+                    inserted = out
+                    if kept is not None:
+                        out = kept.unionByName(out)
+                # MERGE validates generated columns rather than
+                # recomputing: clause expressions produce the full row,
+                # so a value that disagrees with the generation
+                # expression raises here instead of committing
+                # silently-wrong data
                 self._enforce_constraints(
-                    snap, inserts, self._gen_checks(snap, inserts)
+                    snap, out, self._gen_checks(snap, out)
+                )
+                # Write volume is known from the snapshot: the touched
+                # files' bytes (none for an add-only commit) plus at
+                # most every source row priced at the touched set's
+                # bytes/row. The plan probe would run a full optimizer
+                # pass over the merge join — and estimate it
+                # multiplicatively wrong anyway. Falls back to the
+                # probe when the source key collect was capped (source
+                # row count then unknown).
+                hint = (
+                    self._rewrite_size_hint(
+                        snap, touched, extra_rows=n_source,
+                        include_base=not insert_only,
+                    )
+                    if n_source is not None else None
                 )
                 adds = self._write_data_files(
-                    inserts, snap.partition_columns, snap=snap,
-                    sizing_method=(
-                        "repartition" if id_persisted is not None
-                        else "coalesce"
-                    ),
-                    # add-only commit: at most every source row lands,
-                    # priced at the touched files' bytes/row — skips
-                    # the plan probe over the anti-join
-                    size_hint=(
-                        self._rewrite_size_hint(
-                            snap, touched, extra_rows=n_source,
-                            include_base=False,
+                    out, snap.partition_columns, snap=snap,
+                    sizing_method=stamped.sizing, size_hint=hint,
+                )
+                cdc: List[dict] = []
+                if cdf:
+                    # change files carry TABLE columns only — strip the
+                    # materialized row-id passthrough columns when
+                    # present
+                    cols = snap.schema.fieldNames()
+                    changes = merge_changes(base, km).select(
+                        *cols, "_change_type"
+                    )
+                    if gen_ids:
+                        # the clause left NULL in the generated
+                        # columns, which is NOT the committed value —
+                        # inserted rows' change records come from the
+                        # stamped frame itself
+                        changes = changes.filter(
+                            F.col("_change_type") != "insert"
+                        ).unionByName(
+                            inserted.select(*cols).withColumn(
+                                "_change_type", F.lit("insert")
+                            )
                         )
-                        if n_source is not None else None
-                    ),
-                )
-            finally:
-                if id_persisted is not None:
-                    id_persisted.unpersist()
-            # no cdc actions needed even under CDF: an add-only commit
-            # derives exactly (every added row is an insert) — the same
-            # optimization Delta applies to insert-only merges
-            meta_actions = _config_actions()
-            if id_hwms:
-                # identity high-water mark advances ATOMICALLY with the
-                # inserted data (same commit) — same contract as append
-                if meta_actions:
-                    meta_actions = [{"metaData": _patch_identity_hwm(
-                        meta_actions[0]["metaData"], id_hwms
-                    )}]
-                else:
-                    meta_actions = [{"metaData": _patch_identity_hwm(
-                        snap.metadata, id_hwms
-                    )}]
-            actions = (
-                [
-                    {"commitInfo": {
-                        "timestamp": _now_ms(), "operation": "MERGE",
-                        "operationParameters": {"predicate": km.condition},
-                        "operationMetrics": {
-                            "numTargetFilesRemoved": 0,
-                            "numTargetFilesAdded": len(adds),
-                            **source_metrics,
-                        },
-                    }}
-                ]
-                + meta_actions
-                + [{"add": a} for a in adds]
-            )
-            self._commit(snap.version + 1, actions, snap=snap)
-            return {
-                "touched_files": 0,
-                "total_files": len(snap.files),
-                "version": snap.version + 1,
-            }
-        cdf = self._cdf_enabled(snap)
-        if cdf:
-            # base feeds the rewrite join AND the change-feed join —
-            # read the touched files once
-            base = base.persist()
-        merged = interpret_keyed_merge(
-            base, km, assume_unambiguous=unambiguous
-        )
-        id_hwms: Dict[str, int] = {}
-        id_persisted = None
-        merged_persist = None
-        gen_df = None
-        if gen_ids:
-            # inserted rows carry NULL in every to-generate identity
-            # column (staged by the clause patch above); matched/kept
-            # rows keep their non-null writer-assigned values — the
-            # NULL marker splits the two sets exactly
-            merged_persist = merged.persist()
-            marker = F.col(f"`{gen_ids[0]}`")
-            with_id = merged_persist.filter(marker.isNotNull())
-            need_id = merged_persist.filter(marker.isNull()).drop(*gen_ids)
-            gen_df, id_hwms, id_persisted = self._generate_identity(
-                snap.schema, need_id
-            )
-            gen_df = gen_df.select(*with_id.columns)
-            merged = with_id.unionByName(gen_df)
-        elif full_ids and km.not_matched_insert is not None:
-            # every identity value provided explicitly — validate the
-            # allowExplicitInsert gate and sync the hwm (target rows'
-            # existing ids are ≤ hwm already, so the max is safe).
-            # Persist first: the hwm aggregate and the file write must
-            # not each execute the full rewrite join
-            merged_persist = merged.persist()
-            merged = merged_persist
-            _df, id_hwms, id_persisted = self._generate_identity(
-                snap.schema, merged
-            )
-        # MERGE validates generated columns rather than recomputing:
-        # clause expressions produce the full row, so a value that
-        # disagrees with the generation expression raises here instead
-        # of committing silently-wrong data
-        self._enforce_constraints(snap, merged, self._gen_checks(snap, merged))
-        # Rewrite volume is known from the snapshot: the touched files'
-        # bytes plus (at most) every source row priced at the touched
-        # set's bytes/row. The plan probe would run a full optimizer
-        # pass over the merge join — and estimate it multiplicatively
-        # wrong anyway. Falls back to the probe when the source key
-        # collect was capped (source row count then unknown).
-        merge_hint = (
-            self._rewrite_size_hint(snap, touched, extra_rows=n_source)
-            if n_source is not None else None
-        )
-        adds = self._write_data_files(
-            merged, snap.partition_columns, snap=snap,
-            # same Arrow-stamping caveat as append: see sizing_method
-            sizing_method=(
-                "repartition" if id_persisted is not None else "coalesce"
-            ),
-            size_hint=merge_hint,
-        )
-        cdc: List[dict] = []
-        if cdf:
-            from mack_spark.merge_exec import merge_changes
-
-            # change files carry TABLE columns only — strip the
-            # materialized row-id passthrough columns when present
-            changes = merge_changes(base, km).select(
-                *[f.name for f in snap.schema.fields], "_change_type"
-            )
-            if gen_df is not None:
-                # the clause patch staged NULL as the generation
-                # marker, which is NOT the committed value — inserted
-                # rows' change records must carry the GENERATED ids,
-                # so they come from the generated frame itself
-                changes = changes.filter(
-                    F.col("_change_type") != "insert"
-                ).unionByName(
-                    gen_df.select(
-                        *[f.name for f in snap.schema.fields]
-                    ).withColumn("_change_type", F.lit("insert"))
-                )
-            cdc = self._write_cdc_files(
-                changes, snap=snap, size_hint=merge_hint
-            )
-            base.unpersist(blocking=False)
-        # unpersist only after BOTH consumers (data files + change
-        # files) have executed — gen_df's lineage runs through them
-        if id_persisted is not None:
-            id_persisted.unpersist()
-        if merged_persist is not None:
-            merged_persist.unpersist(blocking=False)
-        meta_actions = _config_actions()
-        if id_hwms:
-            # identity hwm advances atomically with the merged data
-            if meta_actions:
-                meta_actions = [{"metaData": _patch_identity_hwm(
-                    meta_actions[0]["metaData"], id_hwms
-                )}]
-            else:
-                meta_actions = [{"metaData": _patch_identity_hwm(
-                    snap.metadata, id_hwms
-                )}]
+                    cdc = self._write_cdc_files(
+                        changes, snap=snap, size_hint=hint
+                    )
+        finally:
+            for df in persisted:
+                df.unpersist(blocking=False)
+        # extra_config (and schema evolution's metaData) ride the merge
+        # commit as ONE metaData update — snap.metadata is already the
+        # evolved shape when evolution applies
+        meta = snap.metadata if evolve_meta else None
+        if extra_config:
+            meta = dict(snap.metadata, configuration=dict(
+                snap.metadata.get("configuration") or {}, **extra_config
+            ))
+        meta = stamped.meta(meta, snap.metadata)
         actions = (
             [
                 {"commitInfo": {
                     "timestamp": _now_ms(), "operation": "MERGE",
                     "operationParameters": {"predicate": km.condition},
                     "operationMetrics": {
-                        "numTargetFilesRemoved": len(touched),
+                        "numTargetFilesRemoved": len(removed),
                         "numTargetFilesAdded": len(adds),
                         **source_metrics,
                     },
                 }}
             ]
-            + meta_actions
+            + ([{"metaData": meta}] if meta is not None else [])
             + [{"cdc": c} for c in cdc]
-            + [_remove_action(snap.files[p]) for p in touched]
+            + [_remove_action(snap.files[p]) for p in removed]
             + [{"add": a} for a in adds]
         )
 
@@ -6150,7 +5913,7 @@ class DeltaProtocolTable:
 
         v = self._commit_mutation(snap, actions, _key_probe)
         return {
-            "touched_files": len(touched),
+            "touched_files": len(removed),
             "total_files": len(snap.files),
             "version": v,
         }
@@ -6539,10 +6302,13 @@ class DeltaProtocolTable:
     def _delete_or_update(
         self, snap: DeltaSnapshot, condition: str,
         assignments: Optional[Dict[str, str]] = None,
+        inserts: Optional[DataFrame] = None,
+        stamped: Optional[_IdentityWrite] = None,
     ) -> dict:
-        """The one body of DELETE (``assignments`` None) and UPDATE:
-        match the touched files, read, build the post-image, write the
-        data files and the change feed, commit.
+        """The one body of DELETE (``assignments`` None), UPDATE and
+        replaceWhere (a DELETE plus ``inserts``, the new rows, stamped
+        by ``stamped``): match the touched files, read, build the
+        post-image, write the data files and the change feed, commit.
 
         Deletion-vector mode (``delta.enableDeletionVectors``) reads
         only the matched rows with their file key and position, marks
@@ -6553,61 +6319,90 @@ class DeltaProtocolTable:
         files and writes them back: DELETE keeps the rows the
         condition does not match, UPDATE applies the assignments where
         it does. Row-tracked tables read with preserved row ids in
-        both modes, so surviving and updated rows keep ``_row_id``."""
+        both modes, so surviving and updated rows keep ``_row_id``.
+        ``inserts`` land as new files and as ``insert`` change rows,
+        and commit even when the condition touches no file."""
         touched = self._files_matching(snap, condition)
-        if not touched:
+        if not touched and inserts is None:
             return {
                 "touched_files": 0,
                 "total_files": len(snap.files),
                 "version": snap.version,
             }
         update = assignments is not None
-        dv = self._dv_write_enabled(snap)
+        dv = bool(touched) and self._dv_write_enabled(snap)
         cdf = self._cdf_enabled(snap)
         cond = F.coalesce(F.expr(condition), F.lit(False))
-        rows, _rt = self._rewrite_with_preserved_row_ids(
-            snap, touched, row_index=dv, file_key=dv
-        )
-        if dv:
-            rows = rows.where(cond)
+        hint = self._rewrite_size_hint(snap, touched)
+        new_dvs: Dict[str, dict] = {}
+        adds: List[dict] = []
+        changes: List[DataFrame] = []
+        rows = None
+        if touched:
+            rows, _rt = self._rewrite_with_preserved_row_ids(
+                snap, touched, row_index=dv, file_key=dv
+            )
+            if dv:
+                rows = rows.where(cond)
         # compute the read once when it feeds more than one write
-        shared = cdf or (dv and update)
+        shared = rows is not None and (cdf or (dv and update))
         if shared:
             rows = rows.persist()
-        hint = self._rewrite_size_hint(snap, touched)
         try:
-            out = None if dv else rows.filter(~cond)
-            if update:
-                out = self._post_image(
-                    snap, rows, assignments, None if dv else cond
-                )
-                # before any file is written: a refused UPDATE leaves
-                # no deletion vector behind
-                self._enforce_constraints(snap, out)
-            new_dvs = self._build_dvs_for(snap, rows, touched) if dv else {}
-            adds = [] if out is None else self._write_data_files(
-                out, snap.partition_columns, snap=snap, size_hint=hint
-            )
-            cdc: List[dict] = []
-            if cdf:
-                pre = (rows if dv else rows.filter(cond)).select(
-                    *snap.schema.fieldNames()
-                )
+            if rows is not None:
+                out = None if dv else rows.filter(~cond)
                 if update:
-                    changes = pre.withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    ).unionByName(
-                        self._post_image(snap, pre, assignments).withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        )
+                    out = self._post_image(
+                        snap, rows, assignments, None if dv else cond
                     )
-                else:
-                    changes = pre.withColumn("_change_type", F.lit("delete"))
+                    # before any file is written: a refused UPDATE
+                    # leaves no deletion vector behind
+                    self._enforce_constraints(snap, out)
+                if dv:
+                    new_dvs = self._build_dvs_for(snap, rows, touched)
+                if out is not None:
+                    adds = self._write_data_files(
+                        out, snap.partition_columns, snap=snap,
+                        size_hint=hint,
+                    )
+                if cdf:
+                    pre = (rows if dv else rows.filter(cond)).select(
+                        *snap.schema.fieldNames()
+                    )
+                    if update:
+                        changes += [
+                            pre.withColumn(
+                                "_change_type", F.lit("update_preimage")
+                            ),
+                            self._post_image(
+                                snap, pre, assignments
+                            ).withColumn(
+                                "_change_type", F.lit("update_postimage")
+                            ),
+                        ]
+                    else:
+                        changes.append(
+                            pre.withColumn("_change_type", F.lit("delete"))
+                        )
+            if inserts is not None:
+                adds += self._write_data_files(
+                    inserts, snap.partition_columns, snap=snap,
+                    sizing_method=stamped.sizing,
+                )
+                if cdf:
+                    changes.append(inserts.select(
+                        *snap.schema.fieldNames()
+                    ).withColumn("_change_type", F.lit("insert")))
+            cdc: List[dict] = []
+            if changes:
+                from functools import reduce
+
                 cdc = self._write_cdc_files(
-                    changes, snap=snap,
+                    reduce(DataFrame.unionByName, changes),
+                    snap=snap,
                     size_hint=(
-                        (2 if update else 1) * hint
-                        if hint is not None else None
+                        len(changes) * hint
+                        if hint is not None and inserts is None else None
                     ),
                 )
         finally:
@@ -6629,16 +6424,24 @@ class DeltaProtocolTable:
                 "numRemovedFiles": len(touched),
                 "numAddedFiles": len(adds),
             }
+        if inserts is None:
+            operation = "UPDATE" if update else "DELETE"
+            params = {"predicate": condition}
+        else:
+            operation = "WRITE"
+            params = {"mode": "Overwrite", "predicate": condition}
+        meta = None if stamped is None else stamped.meta(None, snap.metadata)
         actions = (
             [
                 {"commitInfo": {
                     "timestamp": _now_ms(),
-                    "operation": "UPDATE" if update else "DELETE",
-                    "operationParameters": {"predicate": condition},
+                    "operation": operation,
+                    "operationParameters": params,
                     "operationMetrics": metrics,
                 }}
             ]
             + (self._dv_protocol_actions(snap) if dv else [])
+            + ([{"metaData": meta}] if meta is not None else [])
             + [{"cdc": c} for c in cdc]
             + removes
             + dv_adds
@@ -7398,16 +7201,23 @@ class DeltaProtocolTable:
         protocol: Optional[dict] = None
         txns: Dict[str, int] = {}
         domains: Dict[str, dict] = {}
+        def key(f: dict) -> tuple:
+            # spec: a file action is keyed by path AND its DV's unique
+            # id, so an add cancels only the tombstone of the same
+            # (path, DV) — a DV rewrite's remove of the old DV stays
+            dv = f.get("deletionVector") or {}
+            return (f["path"], dv.get("storageType"),
+                    dv.get("pathOrInlineDv"), dv.get("offset"))
+
         for v in range(start, end + 1):
-            for a in self._commit_actions(v):
+            # removes before adds, as replay applies them
+            for a in sorted(self._commit_actions(v), key=lambda a: "add" in a):
                 if "add" in a:
-                    p = a["add"]["path"]
-                    files_in[p] = a["add"]
-                    removed.pop(p, None)
+                    files_in[a["add"]["path"]] = a["add"]
+                    removed.pop(key(a["add"]), None)
                 elif "remove" in a:
-                    p = a["remove"]["path"]
-                    files_in.pop(p, None)
-                    removed[p] = a
+                    files_in.pop(a["remove"]["path"], None)
+                    removed[key(a["remove"])] = a
                 elif "metaData" in a:
                     metadata = a["metaData"]
                 elif "protocol" in a:
@@ -7431,7 +7241,9 @@ class DeltaProtocolTable:
                   for app, ver in sorted(txns.items())]
         lines += [{"domainMetadata": dm}
                   for _d, dm in sorted(domains.items())]
-        lines += [a for _p, a in sorted(removed.items())]
+        lines += [a for _k, a in sorted(
+            removed.items(), key=lambda kv: tuple(map(str, kv[0]))
+        )]
         lines += [{"add": a} for _p, a in sorted(files_in.items())]
         fn = "%020d.%020d.compacted.json" % (start, end)
         with open(os.path.join(_log_dir(self.path), fn), "w") as fh:

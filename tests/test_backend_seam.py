@@ -82,16 +82,27 @@ def _delta_log_tree():
     )
 
 
-def _enclosing_functions(tree, nodes):
-    """Names of the innermost functions of ``tree`` holding ``nodes``."""
-    funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
-    return {
-        max(
-            (f for f in funcs if f.lineno <= node.lineno <= f.end_lineno),
-            key=lambda f: f.lineno,
-        ).name
-        for node in nodes
-    }
+def _enclosing(tree, nodes, kind=ast.FunctionDef):
+    """Names of the innermost functions (or classes, with ``kind``) of
+    ``tree`` holding ``nodes``; None for a node outside every one."""
+    scopes = [n for n in ast.walk(tree) if isinstance(n, kind)]
+    names = set()
+    for node in nodes:
+        inner = [
+            s for s in scopes if s.lineno <= node.lineno <= s.end_lineno
+        ]
+        names.add(max(inner, key=lambda s: s.lineno).name if inner else None)
+    return names
+
+
+def _calls(tree, name):
+    """Every call of ``name(...)`` or ``x.name(...)`` in ``tree``."""
+    return [
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and name in (
+            getattr(n.func, "attr", None), getattr(n.func, "id", None)
+        )
+    ]
 
 
 def test_table_data_scans_only_in_the_scan_builder():
@@ -103,7 +114,7 @@ def test_table_data_scans_only_in_the_scan_builder():
     called = {
         id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)
     }
-    readers = _enclosing_functions(tree, (
+    readers = _enclosing(tree, (
         node for node in ast.walk(tree)
         # ``x.read`` as a value (a DataFrameReader), not ``fh.read()``
         if isinstance(node, ast.Attribute) and node.attr == "read"
@@ -122,13 +133,32 @@ def test_remove_actions_built_only_by_the_remove_builder():
     def keys(node):
         return [k.value for k in node.keys if isinstance(k, ast.Constant)]
 
-    builders = _enclosing_functions(tree, (
+    builders = _enclosing(tree, (
         node for node in ast.walk(tree)
         if isinstance(node, ast.Dict) and (
             keys(node) == ["remove"] or "deletionTimestamp" in keys(node)
         )
     ))
     assert builders == {"_remove_action"}
+
+
+def test_identity_and_change_files_written_in_one_place():
+    """One identity step, ``_IdentityWrite``, stamps identity values and
+    moves their high-water mark for every write that adds rows (CREATE,
+    append, overwrite, replaceWhere, MERGE), and change-data files are
+    written by the two mutation bodies only: ``_delete_or_update``
+    (DELETE, UPDATE, replaceWhere) and MERGE's."""
+    tree = _delta_log_tree()
+    assert len(_calls(tree, "_generate_identity")) == 1
+    assert _enclosing(
+        tree,
+        _calls(tree, "_generate_identity")
+        + _calls(tree, "_patch_identity_hwm"),
+        kind=ast.ClassDef,
+    ) == {"_IdentityWrite"}
+    assert _enclosing(tree, _calls(tree, "_write_cdc_files")) == {
+        "_delete_or_update", "_merge_impl",
+    }
 
 
 # mack's mutating modules, and the DeltaProtocolTable methods they may

@@ -147,6 +147,31 @@ class TestConcurrentMutations:
         with pytest.raises(ConcurrentModificationError, match="matching"):
             t.merge(km)
 
+    def test_insert_only_merge_retries_over_nonmatching_append(
+        self, spark, tmp_path, monkeypatch, log_store
+    ):
+        # an insert-only MERGE reads its source keys like any MERGE: an
+        # append holding none of them commutes, one holding a key the
+        # merge would insert conflicts
+        from mack_spark.tables import KeyedMerge
+
+        def insert_only(rows):
+            return KeyedMerge(
+                source=spark.createDataFrame(rows, "pk int, attr string"),
+                condition="t.pk = s.pk", not_matched_insert="*",
+                target_key_col="pk", source_key_col="pk",
+            )
+
+        t = _mk(spark, tmp_path, log_store=log_store)
+        state = _inject_rival(monkeypatch, spark, [(500, "rival")])
+        t.merge(insert_only([(3, "dup"), (11, "inserted")]))
+        assert state["fired"]
+        rows = {r["pk"]: r["attr"] for r in t.to_df().collect()}
+        assert (rows[3], rows[11], rows[500]) == ("k3", "inserted", "rival")
+        _inject_rival(monkeypatch, spark, [(12, "rival")])
+        with pytest.raises(ConcurrentModificationError, match="matching"):
+            t.merge(insert_only([(12, "inserted")]))
+
     def test_row_tracking_append_commutes(
         self, spark, tmp_path, monkeypatch, log_store
     ):

@@ -349,6 +349,24 @@ class TestDvLifecycle:
         check(t.restore(v_full)["version"])
         assert sorted(r["pkey"] for r in t.to_df().collect()) == [50, 51, 52]
 
+    def test_replay_applies_removes_before_adds(self, spark, tmp_path):
+        # the protocol does not order the actions of a commit: a DV
+        # delete may list add(p, new DV) before remove(p, old DV), and
+        # p must stay live
+        from mack_spark.sources.delta_log import clear_replay_cache
+
+        t = _mk(spark, str(tmp_path / "order"), n=10, files=1)
+        t.delete_where("pkey = 0")
+        t.delete_where("pkey = 1")
+        vf = os.path.join(t.path, "_delta_log", "%020d.json" % 2)
+        lines = open(vf).read().splitlines()
+        assert any('"remove"' in ln for ln in lines)
+        lines.sort(key=lambda ln: "remove" in json.loads(ln))
+        with open(vf, "w") as fh:
+            fh.write("\n".join(lines) + "\n")
+        clear_replay_cache(t.path)
+        assert DeltaProtocolTable(spark, t.path).to_df().count() == 8
+
 
 class TestAppendOnly:
     def test_append_only_blocks_mutations(self, spark, tmp_path):

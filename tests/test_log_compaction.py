@@ -82,6 +82,36 @@ class TestCompactionWrite:
             map(tuple, DeltaProtocolTable(spark, t.path).to_df().collect())
         ) == want
 
+    def test_dv_rewrite_keeps_the_old_dv_tombstone(self, spark, tmp_path):
+        """A DV delete of an already-DV'd file removes it under the old
+        DV and adds it under the new one. The compaction must keep that
+        remove (tombstones are keyed by path AND DV), or a spec reader
+        replaying it over the previous version keeps both adds live."""
+        df = spark.range(10).selectExpr(
+            "cast(id as int) pkey", "concat('r', id) attr"
+        ).coalesce(1)
+        t = DeltaProtocolTable.create(
+            spark, str(tmp_path / "dv"), df,
+            properties={"delta.enableDeletionVectors": "true"},
+        )
+        t.delete_where("pkey = 0")
+        t.delete_where("pkey = 1")
+
+        def key(f):
+            dv = f.get("deletionVector") or {}
+            return (f["path"], dv.get("storageType"),
+                    dv.get("pathOrInlineDv"), dv.get("offset"))
+
+        live = {key(a) for a in t.snapshot(version_as_of=1).files.values()}
+        fn = t.compact_log(2, 2)
+        with open(os.path.join(t.path, "_delta_log", fn)) as fh:
+            lines = [json.loads(ln) for ln in fh if ln.strip()]
+        for a in lines:
+            if "remove" in a:
+                live.discard(key(a["remove"]))
+        live |= {key(a["add"]) for a in lines if "add" in a}
+        assert live == {key(a) for a in t.snapshot().files.values()}
+
     def test_reader_prefers_jsons_inside_range_for_time_travel(
         self, spark, tmp_path
     ):

@@ -336,7 +336,7 @@ def test_identity_generation_is_narrow(spark, tmp_path):
     """Identity assignment must add NO shuffle: one bounded
     per-partition count job, then a narrow Arrow stage stamping each
     partition's reserved range."""
-    from mack_spark.sources.delta_log import DeltaProtocolTable
+    from mack_spark.sources.delta_log import DeltaProtocolTable, _IdentityWrite
 
     df = spark.read.parquet(f"{SF_DIR}/customer.parquet").select(
         "c_custkey", "c_acctbal"
@@ -347,13 +347,7 @@ def test_identity_generation_is_narrow(spark, tmp_path):
     )
     # the written table reads back shuffle-free, and the generation
     # plan itself (re-run on a fresh frame) is scan → mapInPandas
-    gen_df, _hwms, persisted = t._generate_identity(
-        t.snapshot().schema, df
-    )
-    try:
-        plan = _plan(gen_df)
+    with _IdentityWrite(t, t.snapshot().schema, df) as stamped:
+        plan = _plan(stamped.df)
         assert "Exchange hashpartitioning" not in plan
         assert "MapInPandas" in plan
-    finally:
-        if persisted is not None:
-            persisted.unpersist()
